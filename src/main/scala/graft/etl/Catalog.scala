@@ -19,6 +19,14 @@ object Catalog {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Load guard for a parquet-directory table: present only once its
+    * writer committed the `_SUCCESS` marker. A load killed mid-write
+    * leaves a directory holding just `_temporary/`, which must read as
+    * absent so the next run loads the table instead of skipping it.
+    */
+  def committed(spark: SparkSession, path: String): Boolean =
+    pathExists(spark, s"$path/_SUCCESS")
+
   def deletePath(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -128,21 +128,19 @@ object Star {
     // cell conversion. Value-identical to dimCustomer/dimProduct/
     // dimStore's keys (rank by the same unique natural id; the oracle
     // CTEs rank over the bare source tables the same way).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val custF = Future(ScalableKeys.withRankByKey(
-      Tables.customer(spark, sfDir).select(col("c_custkey").as("customer_id")),
-      "customer_id", "customer_key"))
-    val prodF = Future(ScalableKeys.withRankByKey(
-      Tables.part(spark, sfDir).select(col("p_partkey").as("product_id")),
-      "product_id", "product_key"))
-    val storeF = Future(ScalableKeys.withRankByKey(
-      Tables.supplier(spark, sfDir).select(col("s_suppkey").as("store_id")),
-      "store_id", "store_key"))
-    val cust = Await.result(custF, Duration.Inf)
-    val prod = Await.result(prodF, Duration.Inf)
-    val store = Await.result(storeF, Duration.Inf)
+    val keySources = Seq(
+      ("customer", Tables.customer(spark, sfDir)
+        .select(col("c_custkey").as("customer_id")), "customer_id", "customer_key"),
+      ("product", Tables.part(spark, sfDir)
+        .select(col("p_partkey").as("product_id")), "product_id", "product_key"),
+      ("store", Tables.supplier(spark, sfDir)
+        .select(col("s_suppkey").as("store_id")), "store_id", "store_key"))
+    val pool = Tables.overlapPool(keySources.size)
+    val Seq(cust, prod, store) = try Tables.joinAll(keySources.map {
+      case (dim, df, id, key) =>
+        Tables.submitJob(pool, spark, s"fact_sales: rank $dim keys")(
+          ScalableKeys.withRankByKey(df, id, key))
+    }) finally pool.shutdown()
 
     // The rank-keyed dims pass through an RDD hop, so their own plans
     // carry no size statistics; each gate sizes on the dim's source

@@ -621,6 +621,21 @@ object Tables {
       }
     })
 
+  /** Wait for EVERY future, then rethrow the first failure in
+    * submission order (unwrapped from its `ExecutionException`), so no
+    * job submitted to an [[overlapPool]] is still running when the
+    * caller returns or throws. Returns the results in order.
+    */
+  def joinAll[T](futures: Seq[java.util.concurrent.Future[_ <: T]]): Seq[T] = {
+    val done = futures.map(f => scala.util.Try(f.get()))
+    done.collectFirst { case scala.util.Failure(e) => e }.foreach {
+      case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+        throw e.getCause
+      case e => throw e
+    }
+    done.map(_.get)
+  }
+
   /** Rows at or below which a presentation sort takes the
     * single-partition path. Measured round 12/13: a global orderBy
     * pays ~0.45 s of fixed range-exchange machinery (sampling pass +

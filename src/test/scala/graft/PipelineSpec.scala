@@ -29,6 +29,110 @@ class PipelineSpec extends SparkSpec {
       $"store_key".isNull || $"date_key".isNull).count() === 0)
     val dimC = spark.read.parquet(s"$base/warehouse/dim_customer")
     assert(dimC.count() === dimC.select("customer_key").distinct().count())
+    // every fact key resolves to a row of its dim
+    Seq("customer_key" -> "dim_customer", "product_key" -> "dim_product",
+      "store_key" -> "dim_store", "date_key" -> "dim_date").foreach {
+      case (key, dim) =>
+        val d = spark.read.parquet(s"$base/warehouse/$dim").select(key)
+        assert(fact.join(d, Seq(key), "left_anti").count() === 0,
+          s"fact_sales rows whose $key is missing from $dim")
+    }
+  }
+
+  test("a table whose load was killed mid-write (_temporary only) is reloaded") {
+    wh
+    val store = s"$base/warehouse/dim_store"
+    val nStores = spark.read.parquet(store).count()
+    Catalog.deletePath(spark, store)
+    Files.createDirectories(java.nio.file.Paths.get(store, "_temporary", "0"))
+    Pipeline.run(spark, s"$base/raw", s"$base/staging", s"$base/warehouse")
+    assert(Catalog.committed(spark, store))
+    assert(spark.read.parquet(store).count() === nStores)
+  }
+
+  test("Pipeline.run overlaps its sinks: jobs of at least two sinks run concurrently") {
+    wh
+    // the sinks are independent jobs on one overlap pool; a refactor
+    // that serializes them again shows up here as strictly disjoint
+    // job intervals of different sinks (one sink's own broadcast and
+    // cache-stage jobs may overlap each other on a single thread, so
+    // jobs are told apart by the sink's job description). Listener
+    // events are async — timestamps are taken at delivery, far finer
+    // than the sinks' overlap window.
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val intervals =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("etl: "))
+          .foreach(sink => starts.put(j.jobId, (sink, System.nanoTime)))
+      override def onJobEnd(
+          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        Option(starts.get(j.jobId))
+          .foreach { case (sink, s) => intervals.add((sink, s, System.nanoTime)) }
+    }
+    val out = s"$base/overlap"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, s"$base/raw", s"$out/staging", s"$out/warehouse")
+      // drain the async listener bus before reading the intervals
+      Thread.sleep(500)
+      import scala.jdk.CollectionConverters._
+      val iv = intervals.asScala.toSeq
+      assert(iv.nonEmpty, "no Pipeline.run sink job was seen")
+      val overlapping = iv.combinations(2).exists {
+        case Seq((k1, s1, e1), (k2, s2, e2)) => k1 != k2 && s1 < e2 && s2 < e1
+        case _ => false
+      }
+      assert(overlapping,
+        s"expected jobs of at least two Pipeline.run sinks to run " +
+          s"concurrently; saw ${iv.size} jobs, sinks strictly serial")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("failure path: run joins every sink before it throws, unpersists, leaves no pool thread") {
+    wh
+    import org.apache.commons.io.FileUtils
+    import org.apache.spark.storage.StorageLevel
+    def settled(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val live = Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-overlap")
+      live.foreach(_.join(2000)) // idle workers exit right after shutdown
+      assert(!live.exists(_.isAlive), "a graft-overlap thread outlived run")
+      val (c, p, st, sl) = Pipeline.extractAndClean(spark, s"$base/raw")
+      Seq(c, p, st, sl).foreach(df =>
+        assert(df.storageLevel === StorageLevel.NONE,
+          "a cleaned frame is still persisted"))
+    }
+
+    // (a) a raw dir missing `stores`: extraction fails, nothing runs
+    val partial = s"$base/raw_no_stores"
+    Seq("customers", "products", "sales").foreach(t =>
+      FileUtils.copyDirectory(new java.io.File(s"$base/raw/$t"),
+        new java.io.File(s"$partial/$t")))
+    val e1 = intercept[Exception](Pipeline.run(spark, partial,
+      s"$base/fail_a/staging", s"$base/fail_a/warehouse"))
+    assert(e1.getMessage.contains("stores"), e1.getMessage)
+    settled()
+
+    // (b) the staging sinks fail (the staging dir is a regular file)
+    // while the warehouse sinks succeed: run rethrows only after the
+    // loads have committed, so every table is complete when it throws
+    val out = s"$base/fail_b"
+    Files.createDirectories(java.nio.file.Paths.get(out))
+    Files.write(java.nio.file.Paths.get(out, "staging"), Array[Byte](1))
+    val e2 = intercept[Exception](Pipeline.run(spark, s"$base/raw",
+      s"$out/staging", s"$out/warehouse"))
+    assert(String.valueOf(e2.getMessage).contains(s"$out/staging"), e2)
+    Seq("dim_customer", "dim_product", "dim_store", "dim_date",
+      "fact_sales").foreach(t =>
+      assert(Catalog.committed(spark, s"$out/warehouse/$t"),
+        s"$t was not committed when run threw"))
+    settled()
   }
 
   test("staged CSVs are written and re-readable (A2 roundtrip)") {

@@ -362,10 +362,7 @@ object Corpus {
       .withColumn("coverage_ppm",
         floor(col("n_boiler_instances") * 1000000 /
           greatest(col("n_instances"), lit(1L))).cast("long"))
-      // one-task presentation sort (round-16): bounded by the SOURCE
-      // domain (a handful of rows), so the sampled range exchange that
-      // re-ran the source-grain agg tail was pure overhead
-      .coalesce(1).sortWithinPartitions("source")
+      .orderBy("source")
   }
 
   def boilerplateGramsSql(n: Int = 5): String =

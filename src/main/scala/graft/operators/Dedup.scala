@@ -298,7 +298,7 @@ object Dedup {
       seg0.unionByName(seg1), sh, threshold)
     // presentation sort (round-16): the global orderBy's range-sampling
     // pass re-executed the round-2 probe chain; presentationSorted
-    // checkpoints the (small) admission log and one-task-sorts it
+    // one-task-sorts the (small) admission log instead
     Tables.presentationSorted(
       dups1.withColumn("batch_round", lit(1L))
         .unionByName(dups2.withColumn("batch_round", lit(2L)))

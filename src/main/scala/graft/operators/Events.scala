@@ -979,10 +979,7 @@ object Events {
         sum(col("k").cast("long")).as("sum_k"),
         max(col("day")).as("max_day"),
         sum(when(col("q").isNull, 1L).otherwise(0L)).as("n_missing_q"))
-      // one-task presentation sort (round-16): bounded by the
-      // event-type domain (a handful of rows), so the sampled range
-      // exchange that re-ran the agg tail was pure overhead
-      .coalesce(1).sortWithinPartitions("v_type")
+      .orderBy("v_type")
   }
 
   /** q188 — RECENCY-DECAYED engagement score (half-life decay): the

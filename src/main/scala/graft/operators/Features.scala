@@ -317,9 +317,7 @@ object Features {
         ((col("nd") * col("sxyd") - col("sxd") * col("syd")) /
           (col("nd") * col("sxxd") - col("sxd") * col("sxd")))
           .as("beta_price_per_qty"))
-      // one-task presentation sort (round-16): bounded by the
-      // return-flag domain (3 rows) — no sampled range exchange
-      .coalesce(1).sortWithinPartitions("l_returnflag")
+      .orderBy("l_returnflag")
   }
 
   val exactCorrSql: String = {

@@ -140,8 +140,7 @@ object Graph {
     // per-iteration dangling-mass pass (~20% of the query at sf0.1).
     // presentationSorted (round-15): the bare orderBy's range-exchange
     // sampling re-executed the whole lazy 3-iteration chain a second
-    // time; the node-grain result checkpoints once and takes the
-    // one-task sort
+    // time; the node-grain result takes the one-task sort instead
     Tables.presentationSorted(
       pagerank(edges, iters, assumeNoDangling = true)
         .select(col("node").as("part"), col("r").as("rank_e12")),
@@ -288,8 +287,8 @@ object Graph {
       .groupBy("part").agg(count(lit(1)).as("tri_cnt"))
       // presentation sort (round-16): the global orderBy's
       // range-sampling pass re-executed the wedge-join tail a second
-      // time; presentationSorted checkpoints the node-grain counts
-      // (bounded by |parts|) and sorts without the sampling pass
+      // time; presentationSorted sorts the node-grain counts (bounded
+      // by |parts|) in one task without the sampling pass
       .transform(graft.sources.Tables.presentationSorted(_,
         desc("tri_cnt"), asc("part")))
   }

@@ -279,15 +279,10 @@ object Insights {
     percentileSummaryOn(
       Tables.lineitem(spark, sfDir)
         .select("l_returnflag", "l_quantity", "l_extendedprice"))
-      // one-task presentation sort (round-16, VERDICT item 8): the
-      // result is bounded by the return-flag DOMAIN (3 rows), so the
-      // former global orderBy's sampled range exchange was pure
-      // overhead; the sort lives HERE, not in percentileSummaryOn —
-      // q119/q136 consume the summary through joins, where Catalyst
-      // eliminated the old orderBy outright but could NOT eliminate a
-      // coalesce(1), so sorting inside the helper would bottleneck
-      // their exact paths
-      .coalesce(1).sortWithinPartitions("l_returnflag")
+      // result sort (3 return-flag rows; PresentationSort plans it as
+      // one task); it lives HERE, not in percentileSummaryOn, whose
+      // consumers (q119/q136) join the summary
+      .orderBy("l_returnflag")
 
   /** [[percentileSummary]] over an explicit (l_returnflag, l_quantity,
     * l_extendedprice) frame — so multi-consumer queries (q119's
@@ -416,9 +411,7 @@ object Insights {
           |) <= bound_ppm AS BIGINT)""".stripMargin))
       .select("l_returnflag", "median_qty", "p90_qty", "median_price",
         "bound_ppm", "est_within_bound")
-      // return-flag-domain bound (3 rows): one-task sort, no sampled
-      // range exchange (round-16, same argument as percentileSummary)
-      .coalesce(1).sortWithinPartitions("l_returnflag")
+      .orderBy("l_returnflag")
   }
 
   val approxPercentileCheckedSql: String = {

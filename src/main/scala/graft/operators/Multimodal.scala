@@ -101,7 +101,7 @@ object Multimodal {
   def mediaFeatures(spark: SparkSession, sfDir: String): DataFrame =
     // presentation sort (round-16): the global orderBy's range-sampling
     // pass re-executed the whole 3-branch codec union a second time;
-    // presentationSorted checkpoints the media-grain result first
+    // presentationSorted one-task-sorts the media-grain result
     graft.sources.Tables.presentationSorted(
       mediaFeaturesUnordered(spark, sfDir), col("media_id"))
 

@@ -206,7 +206,7 @@ object RetailBi {
           .as("lift"))
       // presentation sort (round-16): the global orderBy's
       // range-sampling pass re-executed the pair-generation tail;
-      // presentationSorted checkpoints the pair-grain result first
+      // presentationSorted one-task-sorts the pair-grain result
       .transform(Tables.presentationSorted(_,
         col("part_a"), col("part_b")))
   }

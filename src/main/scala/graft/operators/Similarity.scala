@@ -597,8 +597,8 @@ object Similarity {
         col("m.score").as("keep_score"),
         col("cluster_size"),
         (col("cluster_size") - 1).as("n_discarded"))
-      // cluster-grain presentation sort via the checkpoint-first path:
-      // the range sampling otherwise re-ran the gate-score kernel join
+      // cluster-grain presentation sort with no range-sampling pass
+      // re-running the gate-score kernel join
       .transform(df => graft.sources.Tables.presentationSorted(df,
         col("cluster_id")))
   }

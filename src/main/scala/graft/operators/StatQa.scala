@@ -194,7 +194,7 @@ object StatQa {
       .select("day", "revenue", "mean", "sd", "z", "is_anomaly")
       // presentation sort (round-16): the sampled range exchange
       // re-executed the day-grain whole-frame moment windows a second
-      // time; presentationSorted checkpoints the date-grain result
+      // time; presentationSorted one-task-sorts the date-grain result
       .transform(graft.sources.Tables.presentationSorted(_, col("day")))
   }
 
@@ -268,10 +268,10 @@ object StatQa {
           (col("n_parts").cast("double") *
             Features.decToDouble(col("sx"), 4)))
           .as("gini"))
-      // one-task presentation sort (round-16): bounded by the p_type
-      // domain (150 type strings) — no sampled range exchange
-      // re-running the ranked-revenue agg tail
-      .coalesce(1).sortWithinPartitions("p_type")
+      // result sort over the p_type domain: the rank window's stage is
+      // part-grain, so PresentationSort's one-task sort sits behind a
+      // shuffle and the window keeps its parallelism
+      .orderBy("p_type")
   }
 
   val revenueGiniSql: String =

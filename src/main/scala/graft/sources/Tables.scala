@@ -12,6 +12,12 @@ import org.apache.spark.sql.types._
   *
   * Covers SURVEY.md §2 A1 (CSV scan), A2 (CSV sink), A5 (table scan),
   * A6 (typed sink schema).
+  *
+  * Also the session contract: [[graftSession]] builds every graft
+  * session with the [[PresentationSort]] rule, so a result `orderBy`
+  * on a bounded frame plans as one task from static or AQE runtime row
+  * counts; [[presentationSorted]] covers the frames the rule gets no
+  * count for.
   */
 object Tables {
 
@@ -46,14 +52,30 @@ object Tables {
     "spark.ui.retainedStages" -> "200",
     "spark.ui.retainedTasks" -> "10000")
 
-  /** Apply [[graftConfigs]] to a builder and construct the session — the
-    * one way every graft entrypoint (Verify, Bench, RunPipeline, dev
+  /** Apply [[graftConfigs]] to a builder, inject the [[PresentationSort]]
+    * rule (static and AQE runtime optimizer) and construct the session —
+    * the one way every graft entrypoint (Verify, Bench, RunPipeline, dev
     * mains, tests) should build its SparkSession, so the [[events]]
-    * nanosAsLong invariant holds everywhere.
+    * nanosAsLong invariant and the result-sort planning hold everywhere.
+    * `getOrCreate` silently drops `withExtensions` when a session
+    * already exists, so a returned session without the rule fails here
+    * instead of planning every result sort as a range exchange.
     */
   def graftSession(builder: SparkSession.Builder): SparkSession = {
-    graftConfigs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    val spark = graftConfigs
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+      .withExtensions { e =>
+        e.injectOptimizerRule(_ => PresentationSort)
+        e.injectRuntimeOptimizerRule(_ => PresentationSort)
+      }
       .getOrCreate()
+    val state = spark.sessionState
+    require(
+      state.optimizer.extendedOperatorOptimizationRules.contains(PresentationSort) &&
+        state.adaptiveRulesHolder.runtimeOptimizerRules.contains(PresentationSort),
+      "graftSession: getOrCreate returned an existing SparkSession built " +
+        "without the PresentationSort rule; stop it before building a graft session")
+    spark
   }
 
   /** Drop every persisted / eager-localCheckpointed RDD block in the
@@ -164,30 +186,75 @@ object Tables {
     eventsSchema.fields.map(f =>
       if (f.name == "ts") f.copy(dataType = TimestampType) else f))
 
-  private val eventsTsKind =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Whether the events parquet at `path` stores `ts` as TIMESTAMP(NANOS)
-    * (inferred as LongType under nanosAsLong) rather than
-    * TIMESTAMP(MICROS). One footer read per distinct path+glob, memoized
-    * on (path, glob, mtime): the documented hazard is the driver
-    * REGENERATING testdata at the same path with a flipped encoding, so a
-    * JVM-lifetime key would silently apply the wrong ts branch (1970 or
-    * year-56k timestamps) after a regen. Including the file/dir mtime in
-    * the key makes a rewrite a cache miss; within one immutable layout it
-    * is still one footer read per path.
+  /** What an events source's parquet footers say: whether `ts` is
+    * stored as TIMESTAMP(NANOS), and the source's total row count.
     */
-  def eventsTsIsNanos(s: SparkSession, path: String,
-      glob: Option[String] = None): Boolean = {
+  private case class EventsFooters(tsIsNanos: Boolean, rows: Long)
+
+  private val eventsFooters =
+    new java.util.concurrent.ConcurrentHashMap[String, EventsFooters]()
+
+  /** One read of the events source's footers per distinct path+glob,
+    * memoized on (path, glob, mtime): the documented hazard is testdata
+    * REGENERATED at the same path with a flipped encoding, so a
+    * JVM-lifetime key would silently apply the wrong ts
+    * branch (1970 or year-56k timestamps) after a regen. Including the
+    * file/dir mtime in the key makes a rewrite a cache miss; within one
+    * immutable layout it is still one footer read per path.
+    */
+  private def eventsFootersOf(s: SparkSession, path: String,
+      glob: Option[String]): EventsFooters = {
     // local-path mtime fingerprint; 0 for non-local URIs (falls back to
     // per-JVM memoization, the pre-round-7 behavior)
     val mtime = try new java.io.File(path).lastModified catch { case _: Exception => 0L }
-    eventsTsKind.computeIfAbsent(s"$path#${glob.getOrElse("")}#$mtime", _ => {
+    eventsFooters.computeIfAbsent(s"$path#${glob.getOrElse("")}#$mtime", _ => {
       val r = s.read
       glob.foreach(g => r.option("pathGlobFilter", g))
-      Boolean.box(r.parquet(path).schema("ts").dataType == LongType)
-    }).booleanValue
+      EventsFooters(r.parquet(path).schema("ts").dataType == LongType,
+        parquetRows(s, path, glob))
+    })
   }
+
+  /** Row count of the parquet files at `path` (a file, or a directory
+    * filtered by `glob` at its top level), summed from their footers
+    * without a Spark job.
+    */
+  private def parquetRows(s: SparkSession, path: String,
+      glob: Option[String]): Long = {
+    import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
+    val conf = s.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(f: FileStatus) = !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+    def files(f: FileStatus): Seq[FileStatus] =
+      if (f.isFile) Seq(f)
+      else fs.listStatus(f.getPath).toSeq.filter(visible).flatMap(files)
+    val top = fs.getFileStatus(root)
+    val picked =
+      if (top.isFile) Seq(top)
+      else fs.listStatus(root).toSeq.filter(f => visible(f) &&
+        glob.forall(g => new GlobFilter(g).accept(f.getPath)))
+    picked.flatMap(files).map { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** Whether the events parquet at `path` stores `ts` as TIMESTAMP(NANOS)
+    * (inferred as LongType under nanosAsLong) rather than
+    * TIMESTAMP(MICROS). Footer-memoized ([[eventsFootersOf]]).
+    */
+  def eventsTsIsNanos(s: SparkSession, path: String,
+      glob: Option[String] = None): Boolean =
+    eventsFootersOf(s, path, glob).tsIsNanos
+
+  /** Rows of the events table under `sfDir`, from the same footer memo
+    * (and the same key) the event-stream readers use.
+    */
+  def eventsRows(s: SparkSession, sfDir: String): Long =
+    eventsFootersOf(s, sfDir, Some("events.parquet")).rows
 
   val documentsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -647,50 +714,31 @@ object Tables {
     */
   val PresentationSortMaxRows: Long = 262144L
 
-  /** Total sort of a RESULT frame for the deterministic Verify dump,
-    * with the strategy DERIVED from the frame's actual cardinality
-    * (round-12 verdict #6: the driver-sized-vs-stream-grain
-    * classification was a hand-audited list; the sweep itself caught a
-    * misclassification). ≤ [[PresentationSortMaxRows]] rows → one-task
-    * in-partition sort (identical total order, ~9× cheaper than the
-    * fixed range-exchange); above → the distributed range sort, which
-    * is the only shape that survives stream-scale results. The count
-    * is an extra action — callers hand this frame a materialized
-    * result (memory-sink table, localCheckpoint, artifact read), where
-    * it is a metadata-cheap job; both paths produce byte-identical
-    * output (PlanSpec pins the flip and the equality).
+  /** Total sort of a RESULT frame. Where [[PresentationSort]] gets a
+    * row count from the plan (a static bound, or the runtime count of a
+    * top aggregate's or window's shuffle stage) this is a plain
+    * `orderBy` and the rule picks the strategy with no extra job. Other
+    * frames (bare scans, read-backs, join-topped results) pay one count
+    * probe and take the one-task sort at or below
+    * [[PresentationSortMaxRows]] rows. A frame with a join, aggregate,
+    * window or generator is checkpointed first, so the probe and the
+    * sort do not both re-run it; blocks are reclaimed by
+    * [[freeTransientBlocks]].
     */
   def presentationSorted(df: DataFrame,
       keys: org.apache.spark.sql.Column*): DataFrame = {
-    // zero-job fast path: the optimizer carries a static row-count
-    // ceiling for LocalRelations (memory-sink tables — the most common
-    // caller) and LIMITed plans; only genuinely unbounded plans pay
-    // the count job
-    df.queryExecution.optimizedPlan.maxRows match {
-      case Some(m) if m <= PresentationSortMaxRows =>
-        df.coalesce(1).sortWithinPartitions(keys: _*)
-      case Some(_) => df.orderBy(keys: _*)
-      case None =>
-        // Unbounded plan: the cardinality probe is a full action, and
-        // a LAZY derived frame (join/aggregate DAG) would re-execute
-        // once for the count and again for the sort (round-14 ADVICE —
-        // errorClickLeftOuter's union-of-groupBy, interleavedSchedule's
-        // rank). Eagerly localCheckpoint first so both the count and
-        // the sort read materialized blocks. Cheap-to-recompute plans
-        // (bare scans / read-backs / already-checkpointed RDDs — no
-        // join, aggregate, window, or generator) skip the copy: their
-        // count is column-pruned and near-free, and materializing a
-        // stream-grain parquet read-back would cost more than the
-        // probe saves. Blocks are reclaimed by freeTransientBlocks.
-        import org.apache.spark.sql.catalyst.plans.logical._
-        val expensive = df.queryExecution.optimizedPlan.collectFirst {
-          case p @ (_: Join | _: Aggregate | _: Window | _: Generate) => p
-        }.isDefined
-        val materialized =
-          if (expensive) df.localCheckpoint(true) else df
-        if (materialized.count() <= PresentationSortMaxRows)
-          materialized.coalesce(1).sortWithinPartitions(keys: _*)
-        else materialized.orderBy(keys: _*)
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val plan = df.queryExecution.optimizedPlan
+    if (PresentationSort.plansOwnSort(plan)) df.orderBy(keys: _*)
+    else {
+      val expensive = plan.exists {
+        case _: Join | _: Aggregate | _: Window | _: Generate => true
+        case _ => false
+      }
+      val probed = if (expensive) df.localCheckpoint(true) else df
+      if (probed.count() <= PresentationSortMaxRows)
+        probed.coalesce(1).sortWithinPartitions(keys: _*)
+      else probed.orderBy(keys: _*)
     }
   }
 

@@ -222,26 +222,6 @@ class LifetimeProcessor extends org.apache.spark.sql.streaming.StatefulProcessor
 
 object EventStreams {
 
-  /** Total sort of a result frame — memory-sink tables, small sink
-    * parquet reads, and their folds. Since round 13 the strategy is
-    * DERIVED per call ([[graft.sources.Tables.presentationSorted]]):
-    * ≤ the measured row bound → one-task in-partition sort (the
-    * ~0.45 s fixed range-exchange saved on driver-sized frames);
-    * above → the distributed range sort (match-log-grain results,
-    * q133/q163/q170 at ~4.6M rows/sf1, flip automatically instead of
-    * by hand-audited list — the round-12 soak caught exactly one such
-    * misclassification). Identical total order either way; the sort
-    * exists for the deterministic Verify dump.
-    */
-  implicit private[streaming] class SmallSortOps(private val df: DataFrame)
-      extends AnyVal {
-    def smallSorted(c0: String, cs: String*): DataFrame =
-      graft.sources.Tables.presentationSorted(df, (c0 +: cs).map(col): _*)
-    def smallSorted(c0: org.apache.spark.sql.Column,
-        cs: org.apache.spark.sql.Column*): DataFrame =
-      graft.sources.Tables.presentationSorted(df, (c0 +: cs): _*)
-  }
-
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
     event_type: String, value: Double)
 
@@ -369,7 +349,7 @@ object EventStreams {
       sfDir: String): DataFrame = {
     import spark.implicits._
     val name = "graft_stream_stateful_" + runCounter.incrementAndGet()
-    withStatePartitions(spark, 8) {
+    withStatePartitions(spark, 8, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
@@ -380,7 +360,7 @@ object EventStreams {
         .start()
       q.awaitTermination()
     }
-    spark.table(name).smallSorted("user_id", "session_start")
+    spark.table(name).orderBy("user_id", "session_start")
   }
 
   /** Oracle for [[sessionizeStatefulAvailableNow]]: gap-sessionize
@@ -456,7 +436,7 @@ object EventStreams {
     val name = "graft_stream_dedup_" + runCounter.incrementAndGet()
     // first-sight emission: the finalization batch would only evict
     // state, never emit ([[withoutNoDataBatch]])
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8) {
+    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = dedupStream(ev.unionByName(ev))
         .writeStream.format("memory").queryName(name)
@@ -470,7 +450,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
           .as("sum_value"))
-      .smallSorted("event_type")
+      .orderBy("event_type")
   }
 
   /** Oracle for [[dedupStreamAvailableNow]]: the duplicated replay
@@ -542,7 +522,7 @@ object EventStreams {
     val sinkDir = streamSinkDir(spark, sfDir, "pairs")
     // INNER join: pairs emit when both rows are present; the
     // finalization batch would only evict join state, never emit
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 4) {
+    withoutNoDataBatch(spark) { withStatePartitions(spark, 4, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = errorClickPairsStream(ev)
         .select(col("error_id"), col("click_id"))
@@ -556,7 +536,8 @@ object EventStreams {
       q.awaitTermination()
     } }
     spark.read.parquet(new java.io.File(sinkDir, "out").getPath)
-      .smallSorted("error_id", "click_id")
+      .transform(graft.sources.Tables.presentationSorted(_,
+        col("error_id"), col("click_id")))
   }
 
   /** Fresh per-invocation durable-sink base for a streaming query
@@ -609,7 +590,7 @@ object EventStreams {
     // durable parquet sink (the q133 round-13 note: the match log is
     // stream-scaled; a memory sink driver-collects it)
     val sinkDir = streamSinkDir(spark, sfDir, "louter")
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark, 4, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = errorClickPairsStream(ev, windowMinutes,
           joinType = "left_outer")
@@ -635,7 +616,8 @@ object EventStreams {
       .filter(col("any_click").isNull)
       .select(col("error_id"), lit(-1L).as("click_id"))
     matched.unionByName(unmatched)
-      .smallSorted("error_id", "click_id")
+      .transform(graft.sources.Tables.presentationSorted(_,
+        col("error_id"), col("click_id")))
   }
 
   /** Oracle for [[errorClickLeftOuterAvailableNow]]: the batch LEFT
@@ -697,7 +679,7 @@ object EventStreams {
     // stream-scaled; a memory sink driver-collects it — at sf3 the old
     // memory sink blew spark.driver.maxResultSize)
     val sinkDir = streamSinkDir(spark, sfDir, "fouter")
-    withStatePartitions(spark, 4) {
+    withStatePartitions(spark, 4, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = errorClickPairsStream(ev, windowMinutes,
           joinType = "full_outer")
@@ -729,7 +711,8 @@ object EventStreams {
     val unmatchedClk = sink.filter(col("error_id").isNull)
       .select(lit(-1L).as("error_id"), col("click_id"))
     matched.unionByName(unmatchedErr).unionByName(unmatchedClk)
-      .smallSorted("error_id", "click_id")
+      .transform(graft.sources.Tables.presentationSorted(_,
+        col("error_id"), col("click_id")))
   }
 
   /** Oracle for [[errorClickFullOuterAvailableNow]]: the batch FULL
@@ -798,7 +781,7 @@ object EventStreams {
     // batches); eviction of never-matched rows emits NOTHING — unlike
     // ANTI (q177), where eviction IS the emission. Finalization is
     // therefore pure machinery here ([[withoutNoDataBatch]]).
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 4) {
+    withoutNoDataBatch(spark) { withStatePartitions(spark, 4, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = errorClickPairsStream(ev, windowMinutes,
           joinType = "left_semi")
@@ -809,7 +792,7 @@ object EventStreams {
         .start()
       q.awaitTermination()
     } }
-    spark.table(name).distinct().smallSorted("error_id")
+    spark.table(name).distinct().orderBy("error_id")
   }
 
   /** Oracle for [[errorClickSemiAvailableNow]]: the batch EXISTS
@@ -845,7 +828,7 @@ object EventStreams {
     spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     val nDataBatches = try {
-      withStatePartitions(spark, 8) {
+      withStatePartitions(spark, 8, sfDir) {
         val ev = (if (nFiles <= 1)
             readEventStream(spark, sfDir, glob = Some("events.parquet"))
           else readEventStream(spark,
@@ -882,8 +865,8 @@ object EventStreams {
           org.apache.spark.sql.expressions.Window.partitionBy("user_id")
             .orderBy(desc("n_events"))))
         .filter(col("rk") === 1).drop("rk")
-        .smallSorted("user_id")
-    } else spark.table(name).smallSorted("user_id")
+        .orderBy("user_id")
+    } else spark.table(name).orderBy("user_id")
   }
 
   /** q174 — [[InactivityDigestProcessor]] made driver-visible: timers
@@ -904,7 +887,7 @@ object EventStreams {
     spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     try {
-      withStatePartitions(spark, 8) {
+      withStatePartitions(spark, 8, sfDir) {
         val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .select("event_id", "ts", "user_id", "event_type", "value")
           .withWatermark("ts", "10 minutes")
@@ -920,7 +903,7 @@ object EventStreams {
         q.awaitTermination()
       }
     } finally spark.conf.set(provKey, prevProv)
-    val out = spark.table(name).smallSorted("user_id")
+    val out = spark.table(name).orderBy("user_id")
     // Vacuous-oracle guard (ADVICE r9, the q177-draft trap CLAUDE.md
     // records): the oracle keeps only users whose timer fell strictly
     // below the final watermark — a testdata span/gap change could make
@@ -1003,7 +986,7 @@ object EventStreams {
     spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
       "state.RocksDBStateStoreProvider")
     try {
-      withStatePartitions(spark, 8) {
+      withStatePartitions(spark, 8, sfDir) {
         val live = readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .select("event_id", "ts", "user_id", "event_type", "value")
           .filter(unix_micros(col("ts")) >= cutoff)
@@ -1019,7 +1002,7 @@ object EventStreams {
         q.awaitTermination()
       }
     } finally spark.conf.set(provKey, prevProv)
-    spark.table(name).smallSorted("user_id")
+    spark.table(name).orderBy("user_id")
   }
 
   /** Oracle for [[userLifetimeBootstrapAvailableNow]]: the full-history
@@ -1102,7 +1085,7 @@ object EventStreams {
     val blocked = graft.sources.Tables.customer(spark, sfDir)
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "MACHINERY"))
       .select(col("c_custkey").as("user_id"))
-    withStatePartitions(spark, 8) {
+    withStatePartitions(spark, 8, sfDir) {
       val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       val q = ev.join(broadcast(blocked), Seq("user_id"), "left_anti")
         .writeStream.format("memory").queryName(name)
@@ -1116,7 +1099,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
           .as("sum_value"))
-      .smallSorted("event_type")
+      .orderBy("event_type")
   }
 
   /** Oracle for [[suppressedStreamAvailableNow]]: the batch anti join
@@ -1167,31 +1150,46 @@ object EventStreams {
   private val spanningKeyMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), Long]()
 
-  /** Run `body` with the session's shuffle partitions temporarily
-    * lowered: a bounded replay commits every state-store partition on
-    * every micro-batch (data batch + no-data finalization), and that
-    * per-partition commit IO dominates a small run. Measured grains
-    * (Prof A/B via SPARK_GRAFT_STATE_PARTS): 8 for the windowed-agg
-    * replays (round 12: 4 serialized their per-row work, 32 paid
-    * commit IO), 4 for the chunked-interval stream-stream joins
-    * (round 14: best-of-2 q133 2.10 vs 2.22 s, q180 2.27 vs 2.46,
-    * q163 2.48 vs 3.12 at 8; 16 strictly worse — the join's work is
-    * map-heavy on the chunk key, so fewer state commits win). A
-    * production deployment sizes state partitions to its key
-    * cardinality independently of the batch engine's shuffle width.
+  /** Run `body` with the session's shuffle partitions set to `n`
+    * (restored after).
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(
+  private def withShufflePartitions[A](spark: SparkSession, n: Int)(
       body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val eff = sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(n)
-    if (eff != n)
-      System.err.println(
-        s"WARNING: SPARK_GRAFT_STATE_PARTS=$eff overrides the tuned state-partition dial ($n); " +
-          "this is for Prof-driven A/B runs only — unset it for official Bench/Verify numbers.")
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** Source rows per state partition. Round 12 measured 8 partitions
+    * as best for the 100,000 sf0.1 events (4 serialized the per-row
+    * work, 32 paid commit IO).
+    */
+  private[graft] val RowsPerStatePartition: Long = 12500L
+
+  /** State-partition width for a replay of `sourceRows` rows: the
+    * tuned `n`, capped at one partition per [[RowsPerStatePartition]]
+    * source rows. A bounded replay commits every state-store partition
+    * on every micro-batch, and below the cap that per-partition commit
+    * cost outweighs the per-row work it spreads. Tuned grains: 8 for
+    * the windowed-agg replays, 4 for the chunked-interval stream-stream
+    * joins (round 14: best-of-2 q133 2.10 vs 2.22 s, q180 2.27 vs 2.46,
+    * q163 2.48 vs 3.12 at 8; 16 strictly worse — the join's work is
+    * map-heavy on the chunk key, so fewer state commits win).
+    */
+  private[graft] def statePartitions(n: Int, sourceRows: Long): Int =
+    math.max(1L, math.min(n.toLong,
+      (sourceRows + RowsPerStatePartition - 1) / RowsPerStatePartition)).toInt
+
+  /** Run an event replay's `body` with its state width
+    * ([[statePartitions]]) as the session's shuffle partitions. Every
+    * event replay streams `sfDir`'s events table or a staged split of
+    * it, so the source rows come from that table's footers.
+    */
+  private def withStatePartitions[A](spark: SparkSession, n: Int,
+      sfDir: String)(body: => A): A =
+    withShufflePartitions(spark,
+      statePartitions(n, graft.sources.Tables.eventsRows(spark, sfDir)))(body)
 
   /** Run `body` with the no-data FINALIZATION micro-batch disabled
     * (`spark.sql.streaming.noDataMicroBatches.enabled=false`, restored
@@ -1253,7 +1251,7 @@ object EventStreams {
     */
   def sessionWindowsAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val name = "graft_stream_sessions_" + runCounter.incrementAndGet()
-    withStatePartitions(spark, 8) {
+    withStatePartitions(spark, 8, sfDir) {
       val q = sessionWindows(
         readEventStream(spark, sfDir, glob = Some("events.parquet")))
         .writeStream.format("memory").queryName(name)
@@ -1263,7 +1261,7 @@ object EventStreams {
       q.awaitTermination()
     }
     spark.table(name)
-      .smallSorted("user_id", "session_start")
+      .orderBy("user_id", "session_start")
   }
 
   /** Oracle for [[sessionWindowsAvailableNow]]: gap-sessionize with
@@ -1335,7 +1333,7 @@ object EventStreams {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
     // ---- replay: one file per trigger, real watermark advancement ----
     val name = "graft_stream_batched_" + runCounter.incrementAndGet()
-    val nDataBatches = withStatePartitions(spark, 8) {
+    val nDataBatches = withStatePartitions(spark, 8, sfDir) {
       val q = sessionWindows(
         readEventStream(spark, staging,
           maxFilesPerTrigger = Some(1)))
@@ -1351,7 +1349,7 @@ object EventStreams {
         "maxFilesPerTrigger was not honored, the multi-batch watermark " +
         "path was NOT exercised")
     spark.table(name)
-      .smallSorted("user_id", "session_start")
+      .orderBy("user_id", "session_start")
   }
 
   /** Stage `sfDir`'s events into `nFiles` chronological single-file
@@ -1505,7 +1503,10 @@ object EventStreams {
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     val outBase = new java.io.File(base, "out")
     outBase.mkdirs()
-    val nData = withStatePartitions(spark, 8) {
+    // the document/embedding replays keep no streaming state: their
+    // shuffle width sizes each batch's join work, which the events
+    // state-width rule (withStatePartitions) does not model
+    val nData = withShufflePartitions(spark, 8) {
       val stream = spark.readStream
         .schema(graft.sources.Tables.documentsSchema)
         .option("maxFilesPerTrigger", "1")
@@ -1542,7 +1543,7 @@ object EventStreams {
       .agg(sum("n_docs").cast("long").as("n_docs"),
         sum("n_admitted").cast("long").as("n_admitted"),
         sum("admitted_tokens").cast("long").as("admitted_tokens"))
-      .smallSorted("source")
+      .orderBy("source")
   }
 
   /** Oracle for [[corpusGateStreamAvailableNow]]: the whole-corpus
@@ -1799,7 +1800,7 @@ object EventStreams {
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
-    val nData = withStatePartitions(spark, 8) {
+    val nData = withShufflePartitions(spark, 8) {
       val stream = spark.readStream
         .schema(graft.sources.Tables.documentsSchema)
         .option("maxFilesPerTrigger", "1")
@@ -1917,7 +1918,7 @@ object EventStreams {
           val ids = pairs.select(col("doc_a").as("doc_id"))
             .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
           // semi-join FIRST (round-11 order), then spread: the join
-          // lands on the 8 state partitions (withStatePartitions
+          // lands on the 8 shuffle partitions (withShufflePartitions
           // scope), which serialized the expensive shingle exprs into
           // 8 tasks at sf10 — the repartition only moves the few
           // surviving candidate docs' text
@@ -1993,7 +1994,7 @@ object EventStreams {
       s"neardup admission replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
     spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .smallSorted("batch_idx")
+      .transform(graft.sources.Tables.presentationSorted(_, col("batch_idx")))
   }
 
   /** Stage `embeddings` as `nFiles` flat, id-ranged parquet files
@@ -2092,7 +2093,7 @@ object EventStreams {
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
-    val nData = withStatePartitions(spark, 8) {
+    val nData = withShufflePartitions(spark, 8) {
       val stream = spark.readStream
         .schema(graft.sources.Tables.embeddingsSchema)
         .option("maxFilesPerTrigger", "1")
@@ -2220,7 +2221,7 @@ object EventStreams {
       s"embedding neardup replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
     spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .smallSorted("batch_idx")
+      .transform(graft.sources.Tables.presentationSorted(_, col("batch_idx")))
   }
 
   /** q143 — DURABLE sink + checkpoint-recovery restart, the
@@ -2281,7 +2282,7 @@ object EventStreams {
     while (!recovered) {
       attempt += 1
       org.apache.commons.io.FileUtils.deleteQuietly(base)
-      val (d1, d2) = withStatePartitions(spark, 8) {
+      val (d1, d2) = withStatePartitions(spark, 8, sfDir) {
         // ---- run 1: kill after the first committed data batch ----
         val q1 = start()
         val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
@@ -2305,7 +2306,8 @@ object EventStreams {
     }
     // batch read of the sink: committed files only, via _spark_metadata
     spark.read.parquet(sinkDir)
-      .smallSorted("user_id", "session_start")
+      .transform(graft.sources.Tables.presentationSorted(_,
+        col("user_id"), col("session_start")))
   }
 
   /** q146 — watermark ENFORCEMENT made driver-visible (q134 proves the
@@ -2334,7 +2336,7 @@ object EventStreams {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles,
       lateTail = true)
     val name = "graft_stream_late_" + runCounter.incrementAndGet()
-    val dropped = withStatePartitions(spark, 8) {
+    val dropped = withStatePartitions(spark, 8, sfDir) {
       val q = sessionWindows(
         readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
         .writeStream.format("memory").queryName(name)
@@ -2349,14 +2351,14 @@ object EventStreams {
       "late replay: numRowsDroppedByWatermark == 0 - the late tail " +
         "was not dropped, the watermark did not enforce")
     spark.table(name)
-      .smallSorted("user_id", "session_start")
+      .orderBy("user_id", "session_start")
   }
 
   def hourlyByTypeAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val name = "graft_stream_hourly_" + runCounter.incrementAndGet()
     // Complete mode: the finalization batch would re-emit an identical
     // table ([[withoutNoDataBatch]])
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8) {
+    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
       val q = hourlyByType(
         readEventStream(spark, sfDir, glob = Some("events.parquet")))
         .writeStream.format("memory").queryName(name)
@@ -2365,7 +2367,7 @@ object EventStreams {
         .start()
       q.awaitTermination()
     } }
-    spark.table(name).smallSorted("window_start", "event_type")
+    spark.table(name).orderBy("window_start", "event_type")
   }
 
   /** q148 — UPDATE output mode, completing the output-mode triad
@@ -2397,7 +2399,7 @@ object EventStreams {
     // cross-batch-update fixture (the fold and oracle are
     // split-invariant: n_events is monotone per key whatever the split)
     val nDataBatches = withoutNoDataBatch(spark) {
-        withStatePartitions(spark, 8) {
+        withStatePartitions(spark, 8, sfDir) {
       val q = hourlyByType(
         readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
         .writeStream.format("memory").queryName(name)
@@ -2416,7 +2418,7 @@ object EventStreams {
       .agg(
         max(col("n_events")).as("n_events"),
         expr("max_by(sum_value, n_events)").as("sum_value"))
-      .smallSorted("window_start", "event_type")
+      .orderBy("window_start", "event_type")
     val logRows = log.count()
     val keyRows = folded.count()
     // ground truth from the data itself: does any (window, type) key
@@ -2478,7 +2480,7 @@ object EventStreams {
       nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
     val name = "graft_stream_enrich_" + runCounter.incrementAndGet()
-    val nData = withStatePartitions(spark, 8) {
+    val nData = withStatePartitions(spark, 8, sfDir) {
       val dim = graft.sources.Tables.customer(spark, sfDir)
         .select(col("c_custkey"), col("c_mktsegment"))
       val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
@@ -2498,7 +2500,7 @@ object EventStreams {
     require(nData >= 2,
       s"enrich replay ran $nData data batches - the per-micro-batch " +
         "stream-static join path was NOT exercised")
-    spark.table(name).smallSorted("segment")
+    spark.table(name).orderBy("segment")
   }
 
   /** q160 — SLOWLY-CHANGING dim pickup, the claim q149's in-plan join
@@ -2542,7 +2544,7 @@ object EventStreams {
     val dimV1 = graft.sources.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
     dimV1.write.mode("overwrite").parquet(dimDir)
-    val nData = withStatePartitions(spark, 8) {
+    val nData = withStatePartitions(spark, 8, sfDir) {
       val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -2592,7 +2594,7 @@ object EventStreams {
       .groupBy("segment")
       .agg(sum(col("n_events")).cast("long").as("n_events"),
         sum(col("sum_dec")).cast("double").as("sum_value"))
-      .smallSorted("segment")
+      .orderBy("segment")
     val names = folded.select("segment").collect().map(_.getString(0))
     require(names.exists(!_.endsWith("_v2")) && names.exists(_.endsWith("_v2")),
       "dim-swap replay: output lacks v1 or v2 segment names - the " +
@@ -2682,7 +2684,7 @@ object EventStreams {
       sfDir: String, k: Int = 256): DataFrame = {
     val name = "graft_stream_kmvdist_" + runCounter.incrementAndGet()
     // Complete mode: finalization would re-emit an identical table
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8) {
+    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
       val q = withKmvScalars(
         readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .withColumn("h", expr(kmvUserHashExpr))
@@ -2700,7 +2702,7 @@ object EventStreams {
         .start()
       q.awaitTermination()
     } }
-    spark.table(name).smallSorted("window_start", "event_type")
+    spark.table(name).orderBy("window_start", "event_type")
   }
 
   /** Shared DuckDB oracle for q141/q157 (the q157 fold reconstructs
@@ -2774,7 +2776,7 @@ object EventStreams {
     // evicts with the watermark computed from the previous batch's max
     // event time — so the finalization batch adds nothing observable
     val (nData, removed) = withoutNoDataBatch(spark) {
-        withStatePartitions(spark, 8) {
+        withStatePartitions(spark, 8, sfDir) {
       val q = withKmvScalars(
         readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
           .withColumn("h", expr(kmvUserHashExpr))
@@ -2810,7 +2812,7 @@ object EventStreams {
         expr("max_by(distinct_est, n_events)").as("distinct_est"))
       .select("window_start", "event_type", "n_events", "k_used",
         "kth_hash", "distinct_est")
-      .smallSorted("window_start", "event_type")
+      .orderBy("window_start", "event_type")
   }
 
   /** q154 — streaming UPSERT through `foreachBatch`, the merge-sink
@@ -2866,7 +2868,7 @@ object EventStreams {
       .select(col("user_id"), col("m.event_id").as("event_id"),
         col("m.ts").as("ts"), col("m.event_type").as("event_type"),
         col("m.value").as("value"))
-    val nData = withStatePartitions(spark, 8) {
+    val nData = withStatePartitions(spark, 8, sfDir) {
       val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -2890,6 +2892,7 @@ object EventStreams {
       s"upsert replay ran $nData data batches - the cross-batch merge " +
         "path was NOT exercised")
     val finalDir = versionsBelow(Long.MaxValue).last._2
-    spark.read.parquet(finalDir.getPath).smallSorted("user_id")
+    graft.sources.Tables.presentationSorted(
+      spark.read.parquet(finalDir.getPath), col("user_id"))
   }
 }

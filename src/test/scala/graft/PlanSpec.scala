@@ -325,11 +325,15 @@ class PlanSpec extends SparkSpec {
     val p = finalPlan(graft.operators.Events.purchaseClickAsof(spark, sf0001))
     val hashEx = "Exchange hashpartitioning".r.findAllIn(p).length
     val rangeEx = "Exchange rangepartitioning".r.findAllIn(p).length
+    val singleEx = "Exchange SinglePartition".r.findAllIn(p).length
     // one exchange collapses clicks to (user_id, click_ts) grain (the
     // tie-free-ASOF contract), one shuffles the union for the per-user
-    // window; anything more means the asof shape regressed
-    assert(hashEx == 2 && rangeEx == 1,
-      s"expected 2 hash + 1 range exchange, got $hashEx/$rangeEx in:\n$p")
+    // window; anything more means the asof shape regressed. The
+    // bounded presentation sort is one task behind a one-partition
+    // shuffle (the window stage keeps its parallelism), not a range sort
+    assert(hashEx == 2 && rangeEx == 0 && singleEx == 1,
+      s"expected 2 hash + 1 single-partition exchange, got " +
+        s"$hashEx hash/$rangeEx range/$singleEx single in:\n$p")
   }
 
   test("per-row-heavy text scans spread before fused work (single-row-group guard)") {
@@ -553,30 +557,123 @@ class PlanSpec extends SparkSpec {
       "compacted segment is not commit-marked")
   }
 
-  test("presentationSorted derives its strategy from cardinality; both paths byte-identical") {
+  // ---- result sorts planned by graft.sources.PresentationSort ----
+
+  /** Whether `rows` are in order on `keys` (name, ascending?). */
+  private def sortedOn(rows: Seq[org.apache.spark.sql.Row],
+      keys: (String, Boolean)*): Boolean = {
+    def cmp(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row): Int =
+      keys.iterator.map { case (k, asc) =>
+        val c = (a.getAs[Any](k), b.getAs[Any](k)) match {
+          case (x: Comparable[Any @unchecked], y) => x.compareTo(y)
+          case (x, y) => fail(s"non-comparable sort key $k: $x, $y")
+        }
+        if (asc) c else -c
+      }.find(_ != 0).getOrElse(0)
+    rows.sliding(2).forall {
+      case Seq(a, b) => cmp(a, b) <= 0
+      case _ => true
+    }
+  }
+
+  /** Run `body` with AQE partition coalescing off, so a shuffle keeps
+    * the session's 8 partitions however small the data is.
+    */
+  private def uncoalesced[A](body: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  test("result sorts: bounded dashboard and stream results collect in ORDER BY order with no range exchange") {
+    val cases: Seq[(String, org.apache.spark.sql.DataFrame, Seq[(String, Boolean)])] = Seq(
+      ("q02", Insights.monthlyRevenue(spark, sf0001),
+        Seq("sales_year" -> true, "sales_month" -> true)),
+      ("q03", Insights.revenueByStore(spark, sf0001),
+        Seq("revenue" -> false, "store_name" -> true)),
+      ("q04", Insights.revenueByBalanceBucket(spark, sf0001),
+        Seq("revenue" -> false, "balance_bucket" -> true)),
+      ("q06", Insights.categoryShare(spark, sf0001),
+        Seq("revenue" -> false, "brand" -> true)),
+      ("q124", graft.streaming.EventStreams.hourlyByTypeAvailableNow(spark, sf0001),
+        Seq("window_start" -> true, "event_type" -> true)))
+    cases.foreach { case (name, df, keys) =>
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"$name: empty result")
+      assert(sortedOn(rows, keys: _*), s"$name: rows out of ORDER BY order")
+      val p = finalPlan(df)
+      assert(!p.toLowerCase.contains("rangepartitioning"),
+        s"$name: result sort still plans a range exchange:\n$p")
+    }
+  }
+
+  test("result sorts: a frame above the row bound keeps the distributed range sort") {
     import org.apache.spark.sql.functions._
-    val Tables = graft.sources.Tables
-    // small frame: one-task in-partition sort (no range exchange)
-    val small = spark.range(0, 1000, 1, 8).toDF("id")
-      .withColumn("k", pmod(col("id") * 37, lit(997)))
-    val sortedSmall = Tables.presentationSorted(small, col("k"), col("id"))
-    assert(sortedSmall.rdd.getNumPartitions === 1,
-      "driver-sized frame must take the single-partition sort")
-    // synthetic large frame crosses the bound: the distributed range
-    // sort must be chosen (the match-log-grain streaming results'
-    // shape — no hand-audited list decides this anymore)
-    val big = spark.range(0, Tables.PresentationSortMaxRows + 1, 1, 8)
+    val big = spark.range(0, graft.sources.Tables.PresentationSortMaxRows + 1, 1, 8)
       .toDF("id").withColumn("k", pmod(col("id") * 2654435761L, lit(1000003L)))
-    val sortedBig = Tables.presentationSorted(big, col("k"), col("id"))
-    assert(sortedBig.rdd.getNumPartitions > 1,
-      "stream-scale frame must take the distributed range sort")
-    assert(plan(sortedBig).toLowerCase.contains("rangepartitioning"),
-      "distributed path must be a range sort")
-    // byte-identical outputs: the two strategies are the same total order
-    val a = sortedSmall.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val b = small.orderBy(col("k"), col("id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(a === b)
+      .orderBy("k", "id")
+    val rows = big.collect().toSeq
+    assert(sortedOn(rows, "k" -> true, "id" -> true))
+    assert(finalPlan(big).toLowerCase.contains("rangepartitioning"),
+      s"stream-scale frame must keep the range sort:\n${finalPlan(big)}")
+  }
+
+  test("result sorts: orderBy + limit still plans TakeOrderedAndProject") {
+    import org.apache.spark.sql.functions._
+    val topK = spark.range(0, 1000, 1, 8).toDF("id")
+      .groupBy(pmod(col("id") * 37, lit(97)).as("k")).count()
+      .orderBy(desc("count"), asc("k")).limit(5)
+    assert(topK.collect().length === 5)
+    assert(plan(topK).contains("TakeOrderedAndProject"),
+      s"top-k lost its TakeOrderedAndProject:\n${plan(topK)}")
+  }
+
+  test("result sorts: a bounded orderBy write keeps one file per range partition") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_sorted_write").toFile
+    try uncoalesced {
+      val out = new java.io.File(dir, "out").getPath
+      spark.range(0, 1000, 1, 8).toDF("id")
+        .withColumn("k", pmod(col("id") * 37, lit(997)))
+        .orderBy("k", "id").write.parquet(out)
+      val files = new java.io.File(out).listFiles
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      // the range sort's 8 partitions, one file each, in key order
+      assert(files.length === 8, s"expected 8 range-sorted files, got ${files.length}")
+      val rows = files.toSeq.flatMap(f => spark.read.parquet(f.getPath).collect())
+      assert(rows.length === 1000)
+      assert(sortedOn(rows, "k" -> true, "id" -> true),
+        "files concatenated in name order are not globally sorted")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("result sorts: q104's rank window stage keeps its parallelism") {
+    // the sort's input is 150 p_type rows but the window stage below it
+    // is part-grain: the one-task sort must sit behind a shuffle, not a
+    // coalesce(1) that funnels the window into one task
+    val stageTasks =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Seq[String])]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.add((e.stageInfo.numTasks,
+          e.stageInfo.rddInfos.flatMap(_.scope).map(_.name)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try uncoalesced {
+      val df = graft.operators.StatQa.revenueGini(spark, sf0001)
+      val rows = df.collect().toSeq
+      assert(sortedOn(rows, "p_type" -> true))
+      assert(!finalPlan(df).toLowerCase.contains("rangepartitioning"))
+      // drain the async listener bus before reading the stages
+      Thread.sleep(500)
+      import scala.jdk.CollectionConverters._
+      val windowStages = stageTasks.asScala.toSeq.filter(_._2.contains("Window"))
+      assert(windowStages.nonEmpty, s"no Window stage seen: $stageTasks")
+      assert(windowStages.forall(_._1 > 1),
+        s"the rank window ran in a single task: $windowStages\n${finalPlan(df)}")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("q184 hybrid: no Window ranks an unlimited embeddings scan") {

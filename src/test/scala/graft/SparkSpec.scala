@@ -13,15 +13,11 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.sources.Tables.graftConfigs
-      .foldLeft(SparkSession.builder()
-        .master("local[16]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
+    val s = graft.sources.Tables.graftSession(SparkSession.builder()
+      .master("local[16]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.ui.enabled", "false"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -744,4 +744,58 @@ class StreamingSpec extends SparkSpec {
       .select("user_id").distinct().count()
     assert(users === wantUsers)
   }
+
+  test("state width derives from the events footers: 1 at sf0.001/sf0.01, 8 (joins 4) at 100,000 rows") {
+    val sf001 = new java.io.File(new java.io.File(sf0001).getParent, "sf0.01").getPath
+    assert(Tables.eventsRows(spark, sf0001) === 1000L)
+    assert(Tables.eventsRows(spark, sf001) === 10000L)
+    // a 100,000-row events table (the sf0.1 size), staged as one file
+    // the way the testdata ships it
+    val dir = java.nio.file.Files.createTempDirectory("graft_events_100k").toFile
+    try {
+      val tmp = new java.io.File(dir, "_w")
+      spark.range(0, 100000, 1, 4)
+        .select(col("id").as("event_id"), expr("timestamp_micros(id)").as("ts"),
+          (col("id") % 97).as("user_id"), lit("view").as("event_type"),
+          col("id").cast("double").as("value"), lit("{}").as("props"))
+        .coalesce(1).write.parquet(tmp.getPath)
+      val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath,
+        new java.io.File(dir, "events.parquet").toPath)
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+      assert(Tables.eventsRows(spark, dir.getPath) === 100000L)
+      def width(n: Int, sfDir: String) =
+        EventStreams.statePartitions(n, Tables.eventsRows(spark, sfDir))
+      assert(width(8, sf0001) === 1 && width(8, sf001) === 1)
+      assert(width(4, sf0001) === 1 && width(4, sf001) === 1)
+      assert(width(8, dir.getPath) === 8, "windowed-agg sites at sf0.1")
+      assert(width(4, dir.getPath) === 4, "stream-stream join sites at sf0.1")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("q124 runs on the derived state width and still equals the batch hourly rollup") {
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => widths.add(o.numShufflePartitions.toInt))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val cols = Seq("window_start", "event_type", "n_events", "sum_value")
+      val got = EventStreams.hourlyByTypeAvailableNow(spark, sf0001)
+        .select(cols.map(col): _*).collect()
+      val want = Events.hourlyByType(spark, sf0001)
+        .select(cols.map(col): _*).collect()
+      assert(got.nonEmpty)
+      assert(got.sameElements(want))
+      // drain the async listener bus before reading the progress
+      Thread.sleep(500)
+      import scala.jdk.CollectionConverters._
+      assert(widths.asScala.toSeq.distinct === Seq(1),
+        s"q124 state partitions at sf0.001: ${widths.asScala.toSeq}")
+    } finally spark.streams.removeListener(listener)
+  }
 }

@@ -12,9 +12,11 @@ import graft.sources.Tables
   * ceiling and a broadcast threshold wide enough for the vector table
   * (the size gate then plans map-side lookups instead of sorting the
   * candidate stream with embedding payloads), and reports edges +
-  * wall time. Because artifacts are mtime+dial-keyed, a successful
-  * dialed build is then served to q203/q204/q206 verbatim — the
-  * registered queries complete at sf10 against the identical index.
+  * wall time. The artifacts are keyed on the embeddings mtime, the
+  * (k, bands, bits) dial and the build fingerprint, not on the
+  * candidate ceiling, so a successful dialed build is then served to
+  * q203/q204/q206 verbatim by the same build — the registered queries
+  * complete at sf10 against the identical index.
   *
   * Usage: `runMain graft.devtools.SoakKnn <sfDir> [maxCandPairs]
   *   [broadcastMB]`

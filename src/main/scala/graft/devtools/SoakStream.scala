@@ -46,7 +46,7 @@ object SoakStream {
       else {
         import org.apache.spark.sql.functions._
         val d = new java.io.File("/tmp/graft_stage",
-          s"mult${keyMult}_" + Integer.toHexString(sfDir.hashCode))
+          s"mult${keyMult}_" + Tables.pathKey(sfDir))
         val ev = Tables.events(spark, sfDir)
         (0 until keyMult).map(k => ev
             .withColumn("user_id", col("user_id") + lit(k * 100000000L))

@@ -919,7 +919,7 @@ object Corpus {
     * `EventStreams.streamingNeardupAdmission`): the q196 stage-2 rule
     * restated PER BATCH, where a doc's batch is the deterministic
     * staged range `doc_id·n div (max_id+1)`
-    * ([[graft.streaming.EventStreams.stageDocumentBatches]]). A drop
+    * ([[graft.streaming.EventStreams.stageIdBatches]]). A drop
     * is "by history" when any duplicate partner sits in an earlier
     * batch — the property that makes the replay genuinely incremental.
     */

@@ -480,37 +480,19 @@ object Dedup {
 
   /** Build (or reuse) the persisted corpus band index: the even-doc_id
     * half's (doc_id, band_idx, band_key) rows as parquet under
-    * /tmp/graft_index, keyed on the documents parquet mtime + the LSH
-    * dials — the streaming-staging freshness idiom, including the
-    * staged-files-exist check (a marker alone is not proof the data
-    * survived a /tmp cleaner).
+    * /tmp/graft_index, keyed through [[Tables.freshStagedDir]] on the
+    * documents parquet mtime + the LSH dials.
     */
-  private def corpusBandIndex(spark: SparkSession, sfDir: String): String = {
-    val root = new java.io.File("/tmp/graft_index",
-      "bands_" + Tables.pathKey(sfDir))
-    val data = new java.io.File(root, "bands")
-    val marker = new java.io.File(root, "_graft_index_key")
-    val srcMtime =
-      try new java.io.File(sfDir, "documents.parquet").lastModified
-      catch { case _: Exception => 0L }
-    val key = s"$srcMtime#$NumHashes#$Bands#$RowsPerBand"
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && new java.io.File(data, "_SUCCESS").exists
-    if (!fresh) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      root.mkdirs()
+  private def corpusBandIndex(spark: SparkSession, sfDir: String): String =
+    Tables.freshStagedDir("/tmp/graft_index/bands_" + Tables.pathKey(sfDir),
+      Seq(new java.io.File(sfDir, "documents.parquet")),
+      s"$NumHashes#$Bands#$RowsPerBand", Seq("bands/_SUCCESS")) { dir =>
       bandedFromSigs(
         minhashSignaturesRaw(spark, sfDir)
           .filter(pmod(col("doc_id"), lit(2)) === 0)
           .repartition(col("doc_id")))
-        .write.parquet(data.getPath)
-      java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    }
-    data.getPath
-  }
+        .write.parquet(dir + "/bands")
+    } + "/bands"
 
   /** DuckDB oracle for [[incrementalDedup]]: the banded CTE prefix with
     * candidates restricted to (incoming odd) × (corpus even), exact

@@ -167,26 +167,34 @@ object Layout {
     */
   def bucketedJoinRollup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{Bucketing, Tables}
-    // table names carry BOTH SOURCE MTIMES: a testdata regen of either
-    // side gets fresh tables, while repeat runs in one session (Bench's
-    // two passes) reuse the already-written buckets — the
+    // table names carry BOTH SOURCE MTIMES (Tables.sourceMtime: a
+    // missing source fails loudly): a testdata regen of either side gets
+    // fresh tables, while repeat runs in one session (Bench's two
+    // passes) reuse the already-written buckets — the
     // write-once/join-forever economics this operator exists to
-    // demonstrate. File.lastModified returns 0 for a missing path, so a
-    // zero mtime means the staging key would silently never change —
-    // fail loudly instead (round-10 ADVICE).
-    val liMt = new java.io.File(sfDir, "lineitem.parquet").lastModified
-    val ordMt = new java.io.File(sfDir, "orders.parquet").lastModified
-    require(liMt > 0 && ordMt > 0,
-      s"bucketed staging sources missing under $sfDir " +
-        s"(lineitem mtime=$liMt, orders mtime=$ordMt)")
-    val key = s"${Tables.pathKey(sfDir)}_${liMt}_$ordMt"
+    // demonstrate. The bucket spec lives in the session catalog, so the
+    // reuse guard is the catalog, not a freshStagedDir marker: the files
+    // alone cannot be reused by another JVM.
+    val pk = Tables.pathKey(sfDir)
+    val key = Seq("lineitem", "orders")
+      .map(t => Tables.sourceMtime(new java.io.File(sfDir, s"$t.parquet")))
+      .mkString(s"${pk}_", "_", "")
     val lt = s"graft_b_li_$key"
     val ot = s"graft_b_ord_$key"
     if (!spark.catalog.tableExists(lt) || !spark.catalog.tableExists(ot)) {
-      Seq(lt, ot).foreach { t =>
+      // before writing, drop every table this sfDir left under the
+      // warehouse dir (older source mtimes included), so the warehouse
+      // holds one pair per sfDir
+      val wh = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"))
+      val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val left = if (!fs.exists(wh)) Seq.empty[String]
+        else fs.listStatus(wh).toSeq.map(_.getPath.getName).filter(n =>
+          n.startsWith(s"graft_b_li_${pk}_") || n.startsWith(s"graft_b_ord_${pk}_"))
+      (left ++ Seq(lt, ot)).distinct.foreach { t =>
         graft.etl.Catalog.dropTable(spark, t)
         graft.etl.Catalog.deletePath(spark,
-          spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
+          new org.apache.hadoop.fs.Path(wh, t).toString)
       }
       Bucketing.writeBucketed(Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("k"), col("l_returnflag"),

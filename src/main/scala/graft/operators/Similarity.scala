@@ -297,42 +297,32 @@ object Similarity {
 
   /** Commit the kNN-graph job's two products — the per-vector ranked
     * top-k list and the rank-mutual edge list derived from it — as
-    * mtime-keyed artifacts under /tmp/graft_stage and return their
-    * paths, the q187/q195 staging discipline: the key carries the
-    * embeddings source mtime and every dial, so a testdata regen or a
-    * different (k, bands, bits) rebuilds while repeat consumers in one
-    * session (q203's presentation, q204's component stage, q206's
-    * triplet miner, Bench's second pass) read the committed parquet.
-    * This is also the production topology: the kNN-graph job runs once
-    * and downstream clustering/mining reads its output — recomputing
-    * the graph inside every consumer would be the anti-pattern.
+    * artifacts under /tmp/graft_stage and return their paths. The
+    * directory name carries every dial and [[Tables.freshStagedDir]]
+    * keys it on the embeddings mtime and the running build, so a
+    * testdata regen, a code change or a different (k, bands, bits)
+    * rebuilds while repeat consumers in one session (q203's
+    * presentation, q204's component stage, q206's triplet miner,
+    * Bench's second pass) read the committed parquet. This is also the
+    * production topology: the kNN-graph job runs once and downstream
+    * clustering/mining reads its output — recomputing the graph inside
+    * every consumer would be the anti-pattern.
     */
   private def ensureKnnArtifacts(spark: SparkSession, sfDir: String,
       k: Int, nBands: Int, bitsPerBand: Int,
       maxCandPairs: Long = 100L * 1000 * 1000): (String, String) = {
-    val mt = new java.io.File(sfDir, "embeddings.parquet").lastModified
-    require(mt > 0, s"embeddings.parquet missing under $sfDir " +
-      "(mtime 0 would freeze the artifact key - round-10 ADVICE)")
-    // format-version constant in the key: bump whenever computeKnnTopk /
-    // mutualEdgesOf LOGIC changes, or a code change would silently serve
-    // stale cached artifacts until the next testdata regen (round-12 ADVICE)
-    val fmtVersion = 2
-    val base = new java.io.File("/tmp/graft_stage",
-      s"mkg_v${fmtVersion}_${Tables.pathKey(sfDir)}_${mt}_${k}_${nBands}_$bitsPerBand")
-    val topkDir = new java.io.File(base, "topk")
-    val edgesDir = new java.io.File(base, "edges")
-    val fresh = new java.io.File(topkDir, "_SUCCESS").exists &&
-      new java.io.File(edgesDir, "_SUCCESS").exists
-    if (!fresh) {
-      org.apache.commons.io.FileUtils.deleteQuietly(base)
-      // parquet committer writes _SUCCESS last: a crashed build leaves
-      // no marker and the next call rebuilds both
+    val base = Tables.freshStagedDir(
+      s"/tmp/graft_stage/mkg_${Tables.pathKey(sfDir)}_${k}_${nBands}_$bitsPerBand",
+      Seq(new java.io.File(sfDir, "embeddings.parquet")), "knn",
+      Seq("topk/_SUCCESS", "edges/_SUCCESS")) { dir =>
+      // both products in one build: building them apart would run the
+      // heavy banded ranking twice
       val topk = computeKnnTopk(spark, sfDir, k, nBands, bitsPerBand,
         maxCandPairs)
-      topk.write.parquet(topkDir.getPath)
-      mutualEdgesOf(topk).write.parquet(edgesDir.getPath)
+      topk.write.parquet(dir + "/topk")
+      mutualEdgesOf(topk).write.parquet(dir + "/edges")
     }
-    (topkDir.getPath, edgesDir.getPath)
+    (base + "/topk", base + "/edges")
   }
 
   /** Rank-mutual edges from a (src, dst, rank, cosine) top-k list:
@@ -1081,39 +1071,31 @@ object Similarity {
   }
 
   /** Build (or reuse) the persisted PQ codes index: (vec_id, cluster,
-    * s, j) parquet under /tmp/graft_index, keyed on the embeddings
-    * mtime + every dial that shapes the codes — the [[corpusBandIndex]]
-    * freshness idiom including the staged-files-exist check (a marker
-    * alone is not proof the data survived a /tmp cleaner).
+    * s, j) parquet under /tmp/graft_index, keyed through
+    * [[Tables.freshStagedDir]] on the embeddings mtime + every dial
+    * that shapes the codes.
     */
   private def pqCodesIndex(spark: SparkSession, sfDir: String,
-      nSeeds: Int, m: Int, nClusters: Int): String = {
-    val root = new java.io.File("/tmp/graft_index",
-      "pq_" + Tables.pathKey(sfDir))
-    val data = new java.io.File(root, "codes")
-    val marker = new java.io.File(root, "_graft_index_key")
-    val srcMtime = embeddingsMtime(sfDir)
-    val key = s"$srcMtime#$nSeeds#$m#$nClusters#iters1"
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && new java.io.File(data, "_SUCCESS").exists
-    if (!fresh) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      root.mkdirs()
-      val codebooks = trainedCodebooks(spark, sfDir, nSeeds, m)
-      val centroids = ivfQuantizer(spark, sfDir, nClusters).map(_._2)
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          graft.functions.argmax_cosine(col("embedding"), centroids)
-            .as("cluster"),
-          posexplode(graft.functions.pq_encode(col("embedding"), codebooks)))
-        .toDF("vec_id", "cluster", "s", "j")
-        .write.parquet(data.getPath)
-      java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    }
-    data.getPath
+      nSeeds: Int, m: Int, nClusters: Int): String =
+    Tables.freshStagedDir("/tmp/graft_index/pq_" + Tables.pathKey(sfDir),
+      Seq(new java.io.File(sfDir, "embeddings.parquet")),
+      s"$nSeeds#$m#$nClusters#iters1", Seq("codes/_SUCCESS")) { dir =>
+      pqEncoded(spark, sfDir, nSeeds, m, nClusters,
+        Tables.embeddings(spark, sfDir)).write.parquet(dir + "/codes")
+    } + "/codes"
+
+  /** `batch`'s (vec_id, cluster, s, j) code rows: IVF cell from the
+    * [[ivfQuantizer]] centroids, PQ codes from the trained codebooks.
+    */
+  private def pqEncoded(spark: SparkSession, sfDir: String, nSeeds: Int,
+      m: Int, nClusters: Int, batch: DataFrame): DataFrame = {
+    val codebooks = trainedCodebooks(spark, sfDir, nSeeds, m)
+    val centroids = ivfQuantizer(spark, sfDir, nClusters).map(_._2)
+    batch.select(col("vec_id"),
+        graft.functions.argmax_cosine(col("embedding"), centroids)
+          .as("cluster"),
+        posexplode(graft.functions.pq_encode(col("embedding"), codebooks)))
+      .toDF("vec_id", "cluster", "s", "j")
   }
 
   /** q195 — INCREMENTAL ANN INDEX MAINTENANCE (round-10 verdict ask
@@ -1244,7 +1226,7 @@ object Similarity {
        |  CAST(1 AS BIGINT) AS searches_equal""".stripMargin
 
   /** Build (or reuse) the segmented PQ index for [[annIndexAppend]]:
-    * base codes (vec_id % 4 != 3) under an mtime-keyed cached dir; the
+    * base codes (vec_id % 4 != 3) under a [[Tables.freshStagedDir]]; the
     * incoming batch's codes (vec_id % 4 == 3) re-appended as a fresh
     * `_SUCCESS`-committed segment on EVERY invocation (the query must
     * demonstrate the live append path; the base reuses the
@@ -1252,34 +1234,18 @@ object Similarity {
     */
   private[graft] def pqSegmentedIndex(spark: SparkSession, sfDir: String,
       nSeeds: Int, m: Int, nClusters: Int): (String, String) = {
-    val root = new java.io.File("/tmp/graft_index",
-      "pqseg_" + Tables.pathKey(sfDir))
-    val base = new java.io.File(root, "base")
-    val seg = new java.io.File(root, "seg1")
-    val marker = new java.io.File(root, "_graft_index_key")
-    val srcMtime = embeddingsMtime(sfDir)
-    val key = s"$srcMtime#$nSeeds#$m#$nClusters#iters1#mod4"
-    val codebooks = trainedCodebooks(spark, sfDir, nSeeds, m)
-    val centroids = ivfQuantizer(spark, sfDir, nClusters).map(_._2)
-    def encode(batch: DataFrame): DataFrame = batch
-      .select(col("vec_id"),
-        graft.functions.argmax_cosine(col("embedding"), centroids)
-          .as("cluster"),
-        posexplode(graft.functions.pq_encode(col("embedding"), codebooks)))
-      .toDF("vec_id", "cluster", "s", "j")
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && new java.io.File(base, "_SUCCESS").exists
-    if (!fresh) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      root.mkdirs()
+    def encode(batch: DataFrame): DataFrame =
+      pqEncoded(spark, sfDir, nSeeds, m, nClusters, batch)
+    val root = Tables.freshStagedDir(
+      "/tmp/graft_index/pqseg_" + Tables.pathKey(sfDir),
+      Seq(new java.io.File(sfDir, "embeddings.parquet")),
+      s"$nSeeds#$m#$nClusters#iters1#mod4", Seq("base/_SUCCESS")) { dir =>
       encode(Tables.embeddings(spark, sfDir)
           .filter(pmod(col("vec_id"), lit(4)) =!= 3))
-        .write.parquet(base.getPath)
-      java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
+        .write.parquet(dir + "/base")
     }
+    val base = new java.io.File(root, "base")
+    val seg = new java.io.File(root, "seg1")
     // the APPEND: encode ONLY the incoming batch and commit it as its
     // own segment; the base files are never touched
     org.apache.commons.io.FileUtils.deleteQuietly(seg)

@@ -378,33 +378,78 @@ object Tables {
       schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Source-mtime-keyed staged fixture: rebuild when the source file's
-    * mtime changed (the documented mid-round testdata-regen hazard),
-    * when the on-disk key marker is missing/stale, or when any required
-    * output path is gone (a marker alone is not proof the data survived
-    * a /tmp cleaner) — the pqCodesIndex / stageChronologicalEvents
-    * freshness idiom, shared by the staged roundtrip fixtures
-    * (q48/q118/q164/q176). Freshness is re-checked on every call (three
-    * file stats), so no per-JVM memo can serve a stale segment.
+  /** The one freshness rule for every on-disk artifact (staged stream
+    * splits, kNN artifacts, PQ and band indexes, roundtrip fixtures):
+    * reuse `dir` only when its `_graft_stage_key` marker equals the
+    * current key — every source's mtime, the caller's dial string and
+    * [[buildFingerprint]] — and every `required` path under it still
+    * exists (a marker alone is not proof the data survived a /tmp
+    * cleaner). Otherwise delete `dir`, run `build(dir)` and write the
+    * marker LAST, so a build that dies midway leaves no marker and the
+    * next call rebuilds. A missing source fails before anything is
+    * deleted. Freshness is re-checked on every call (a few file stats),
+    * so no per-JVM memo can serve a stale artifact. The underscore
+    * prefix keeps Spark's file sources from reading the marker as data.
     */
-  def freshStagedDir(dir: String, srcFile: java.io.File, extraKey: String,
-      requiredRelative: Seq[String])(build: String => Unit): String = {
+  def freshStagedDir(dir: String, sources: Seq[java.io.File], key: String,
+      required: Seq[String])(build: String => Unit): String = {
     val root = new java.io.File(dir)
     val marker = new java.io.File(root, "_graft_stage_key")
-    val srcMtime = try srcFile.lastModified catch { case _: Exception => 0L }
-    val key = s"$srcMtime#$extraKey"
-    val fresh = srcMtime > 0L && marker.exists && {
+    val full = (sources.map(sourceMtime) :+ key :+ buildFingerprint)
+      .mkString("#")
+    val fresh = marker.exists && {
       try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
+        "UTF-8") == full
       catch { case _: Exception => false }
-    } && requiredRelative.forall(r => new java.io.File(root, r).exists)
+    } && required.forall(r => new java.io.File(root, r).exists)
     if (!fresh) {
       org.apache.commons.io.FileUtils.deleteQuietly(root)
       root.mkdirs()
       build(dir)
-      java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
+      java.nio.file.Files.write(marker.toPath, full.getBytes("UTF-8"))
     }
     dir
+  }
+
+  /** mtime of a cache source file. `File.lastModified` is 0 for a
+    * missing path, which would freeze an artifact key, so a missing
+    * source fails loudly instead.
+    */
+  def sourceMtime(f: java.io.File): Long = {
+    val mt = f.lastModified
+    require(mt > 0, s"cache source missing: $f " +
+      "(mtime 0 would freeze the artifact key)")
+    mt
+  }
+
+  /** Hash of the graft class files this JVM runs, computed once: a code
+    * change yields a new key in every [[freshStagedDir]] marker, so no
+    * cache serves an artifact an older build wrote.
+    */
+  lazy val buildFingerprint: String = codeFingerprint(
+    new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+
+  /** Fingerprint of a code location: for a class directory, md5 over
+    * every `.class` file under `graft/` (relative path and bytes,
+    * sorted by path); for a jar, md5 of the jar file.
+    */
+  private[graft] def codeFingerprint(location: java.io.File): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    if (location.isDirectory) {
+      val base = location.toPath
+      val walk = java.nio.file.Files.walk(base.resolve("graft"))
+      val classes = try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator.asScala
+          .filter(_.toString.endsWith(".class"))
+          .map(p => base.relativize(p).toString -> p).toVector.sortBy(_._1)
+      } finally walk.close()
+      classes.foreach { case (rel, p) =>
+        md.update(rel.getBytes("UTF-8"))
+        md.update(java.nio.file.Files.readAllBytes(p))
+      }
+    } else md.update(java.nio.file.Files.readAllBytes(location.toPath))
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
   private def srcParquet(sfDir: String, table: String): java.io.File =
@@ -420,7 +465,7 @@ object Tables {
   def documentsJsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val path = freshStagedDir(
       "/tmp/graft_stage/jsonl_docs_" + pathKey(sfDir),
-      srcParquet(sfDir, "documents"), "jsonl", Seq("_SUCCESS")) { p =>
+      Seq(srcParquet(sfDir, "documents")), "jsonl", Seq("_SUCCESS")) { p =>
       writeJsonl(documents(spark, sfDir), p)
     }
     readJsonl(spark, path, documentsSchema)
@@ -448,7 +493,7 @@ object Tables {
   def ordersSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val base = freshStagedDir(
       "/tmp/graft_stage/sink_orders_" + pathKey(sfDir),
-      srcParquet(sfDir, "orders"), "sink",
+      Seq(srcParquet(sfDir, "orders")), "sink",
       Seq("pq/_SUCCESS", "csv/_SUCCESS")) { p =>
       val o = orders(spark, sfDir)
       overwriteParquet(o.filter(col("o_orderkey") % 2 === 0), p + "/pq")
@@ -479,7 +524,7 @@ object Tables {
   def ordersOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     val base = freshStagedDir(
       "/tmp/graft_stage/orc_orders_" + pathKey(sfDir),
-      srcParquet(sfDir, "orders"), "orc", Seq("_SUCCESS")) { p =>
+      Seq(srcParquet(sfDir, "orders")), "orc", Seq("_SUCCESS")) { p =>
       orders(spark, sfDir).write.mode("overwrite").orc(p)
     }
     spark.read.schema(ordersSchema).orc(base).orderBy("o_orderkey")
@@ -517,7 +562,7 @@ object Tables {
     val cut = evolveCutover(spark, sfDir)
     val base = freshStagedDir(
       "/tmp/graft_stage/evolve_orders_" + pathKey(sfDir),
-      srcParquet(sfDir, "orders"), s"evolve#$cut",
+      Seq(srcParquet(sfDir, "orders")), s"evolve#$cut",
       Seq("seg=v1/_SUCCESS", "seg=v2/_SUCCESS")) { p =>
       val o = orders(spark, sfDir)
       o.filter(col("o_orderkey") < cut)

@@ -1357,123 +1357,76 @@ object EventStreams {
     * (FileStreamSource's batch order) and return the staging path.
     * Split is by equal TIME RANGE — one tiny min/max agg + a map-side
     * bucket expression, no global-window sort funnel; file sizes may
-    * vary, chronology is what matters. Rebuilt per call (delete +
-    * rewrite) so a testdata regen can never serve stale files. Shared
-    * by [[sessionWindowsBatchedReplay]] (q134) and the soak prober
-    * (graft.devtools.DevStream).
+    * vary, chronology is what matters. Reused through
+    * [[graft.sources.Tables.freshStagedDir]] until the events file or
+    * the code changes. Shared by [[sessionWindowsBatchedReplay]] (q134)
+    * and the soak prober (graft.devtools.DevStream).
     */
   def stageChronologicalEvents(spark: SparkSession, sfDir: String,
       nFiles: Int, lateTail: Boolean = false): String = {
-    val suffix = if (lateTail) "_late" else ""
-    // dir name carries nFiles: callers on different dials (a spec's
-    // explicit 4-file shape vs the registered 3) must not thrash one
-    // shared memo (round-13)
-    val staging = new java.io.File("/tmp/graft_stage",
-      "batched_events_" + graft.sources.Tables.pathKey(sfDir) +
-        s"_n$nFiles" + suffix)
-    val totalFiles = nFiles + (if (lateTail) 1 else 0)
-    // freshness fingerprint, the Tables.eventsTsIsNanos idiom: reuse the
-    // staged split only when it was built from the CURRENT source file
-    // and the same nFiles — a testdata regen (new mtime) or a different
-    // split is a cache miss and rebuilds. Saves the stage scan + nFiles
-    // single-file writes on every re-invocation (bench pass 2, soak
-    // sweeps); correctness is unchanged because the key pins the input.
-    val srcMtime =
-      try new java.io.File(sfDir, "events.parquet").lastModified
-      catch { case _: Exception => 0L }
-    val marker = new java.io.File(staging, "_graft_stage_key")
-    val key = s"$srcMtime#$nFiles#$lateTail"
-    // the marker alone is not proof the data files survived (an
-    // age-based /tmp cleaner can remove the ~1970-mtime part files but
-    // keep the fresher marker): freshness requires the key to match AND
-    // every expected data file to still exist
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && (0 until totalFiles).forall(i =>
-      new java.io.File(staging, f"b$i%04d.parquet").exists)
-    if (fresh) return staging.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    staging.mkdirs()
-    val evAll = graft.sources.Tables.events(spark, sfDir)
-    val bounds = evAll.agg(
-      min(expr("unix_micros(ts)")).as("lo"),
-      max(expr("unix_micros(ts)")).as("hi")).head()
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val span = hi - lo + 1
-    val ev = evAll.withColumn("_b",
-        expr(s"CAST(((unix_micros(ts) - ${lo}L) * $nFiles) div ${span}L AS INT)"))
-      .localCheckpoint(true) // one scan, reused by every bucket write
     // with lateTail the LAST staged file is a verbatim copy of the
     // OLDEST bucket: by the time the source reaches it the watermark
     // sits near the stream's end, so every row in it is late beyond the
     // delay and must be watermark-DROPPED (q146's fixture)
     val buckets = (0 until nFiles) ++ (if (lateTail) Seq(0) else Seq.empty)
-    buckets.zipWithIndex.foreach { case (b, i) =>
-      val tmp = new java.io.File(staging, s"_w$i")
-      ev.filter(col("_b") === b).drop("_b")
-        .coalesce(1).write.parquet(tmp.getPath)
-      val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(staging, f"b$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      // FileStreamSource orders by modification time: pin strictly
-      // increasing mtimes so batch order == chronological order even
-      // when the writes land within one filesystem timestamp tick
-      dest.setLastModified(1000000L * (i + 1))
+    // dir name carries the dials: callers on different splits (a spec's
+    // explicit 4-file shape vs the registered 3) must not thrash one
+    // shared entry (round-13)
+    stagedBuckets(sfDir, "events", s"_n$nFiles" + (if (lateTail) "_late" else ""),
+        buckets) {
+      val evAll = graft.sources.Tables.events(spark, sfDir)
+      val bounds = evAll.agg(
+        min(expr("unix_micros(ts)")).as("lo"),
+        max(expr("unix_micros(ts)")).as("hi")).head()
+      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+      val span = hi - lo + 1
+      evAll.withColumn("_b",
+        expr(s"CAST(((unix_micros(ts) - ${lo}L) * $nFiles) div ${span}L AS INT)"))
     }
-    // written LAST: a crash mid-stage leaves no marker, so the next call
-    // rebuilds; the underscore prefix keeps FileStreamSource from
-    // reading it as data (Spark skips _/. -prefixed files)
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    staging.getPath
   }
 
-  /** Stage `documents` as `nFiles` flat, id-ranged parquet files for
-    * file-stream ingest (the [[stageChronologicalEvents]] idiom on the
-    * corpus table: hoisted part files, pinned mtimes, mtime+key+files
-    * freshness).
+  /** Stage `table` (documents or embeddings) as `nFiles` flat parquet
+    * files of equal `idCol` ranges for file-stream ingest — the
+    * [[stageChronologicalEvents]] layout on a corpus table. An empty id
+    * range still gets a 0-row file, so the stream fires a batch for it.
     */
-  def stageDocumentBatches(spark: SparkSession, sfDir: String,
-      nFiles: Int = 3): String = {
-    // dir name carries nFiles (the stageChronologicalEvents rule):
-    // q205 (n=2) and q209 (n=4) otherwise thrash one shared memo,
-    // rebuilding the split twice per bench/Verify pass
-    val staging = new java.io.File("/tmp/graft_stage",
-      "batched_docs_" + graft.sources.Tables.pathKey(sfDir) +
-        s"_n$nFiles")
-    val srcMtime =
-      try new java.io.File(sfDir, "documents.parquet").lastModified
-      catch { case _: Exception => 0L }
-    val marker = new java.io.File(staging, "_graft_stage_key")
-    val key = s"$srcMtime#$nFiles"
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && (0 until nFiles).forall(i =>
-      new java.io.File(staging, f"b$i%04d.parquet").exists)
-    if (fresh) return staging.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    staging.mkdirs()
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    val maxId = docs.agg(max("doc_id")).head().getLong(0)
-    val ds = docs.withColumn("_b",
-        expr(s"CAST((doc_id * $nFiles) div ${maxId + 1}L AS INT)"))
-      .localCheckpoint(true)
-    (0 until nFiles).foreach { i =>
-      val tmp = new java.io.File(staging, s"_w$i")
-      ds.filter(col("_b") === i).drop("_b")
-        .coalesce(1).write.parquet(tmp.getPath)
-      val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(staging, f"b$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      dest.setLastModified(1000000L * (i + 1))
+  def stageIdBatches(spark: SparkSession, sfDir: String, table: String,
+      idCol: String, nFiles: Int): String =
+    stagedBuckets(sfDir, table, s"_n$nFiles", 0 until nFiles) {
+      val t = graft.sources.Tables.load(spark, sfDir, table)
+      val maxId = t.agg(max(idCol)).head().getLong(0)
+      t.withColumn("_b",
+        expr(s"CAST(($idCol * $nFiles) div ${maxId + 1}L AS INT)"))
     }
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    staging.getPath
+
+  /** The stagers' shared loop: under a fresh
+    * /tmp/graft_stage/batched_<table>_<pathKey><dials> dir, write the
+    * rows of bucket `buckets(i)` (the `_b` column of `bucketed`) as the
+    * single file `b%04d.parquet` with its mtime pinned to 1e6·(i+1):
+    * FileStreamSource orders by modification time, and the pin keeps
+    * batch order == bucket order even when the writes land within one
+    * filesystem timestamp tick.
+    */
+  private def stagedBuckets(sfDir: String, table: String, dials: String,
+      buckets: Seq[Int])(bucketed: => DataFrame): String = {
+    val names = buckets.indices.map(i => f"b$i%04d.parquet")
+    graft.sources.Tables.freshStagedDir(
+      "/tmp/graft_stage/batched_" + table + "_" +
+        graft.sources.Tables.pathKey(sfDir) + dials,
+      Seq(new java.io.File(sfDir, table + ".parquet")), "buckets",
+      names) { dir =>
+      val staged = bucketed.localCheckpoint(true) // one scan, every bucket
+      buckets.zipWithIndex.foreach { case (b, i) =>
+        val tmp = new java.io.File(dir, s"_w$i")
+        staged.filter(col("_b") === b).drop("_b")
+          .coalesce(1).write.parquet(tmp.getPath)
+        val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
+        val dest = new java.io.File(dir, names(i))
+        java.nio.file.Files.move(part.toPath, dest.toPath)
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        dest.setLastModified(1000000L * (i + 1))
+      }
+    }
   }
 
   /** q202 — STREAMING CORPUS-GATE INGEST: the q83 quality battery on
@@ -1497,7 +1450,7 @@ object EventStreams {
     */
   def corpusGateStreamAvailableNow(spark: SparkSession, sfDir: String,
       nFiles: Int = 2): DataFrame = {
-    val staging = stageDocumentBatches(spark, sfDir, nFiles)
+    val staging = stageIdBatches(spark, sfDir, "documents", "doc_id", nFiles)
     val base = new java.io.File("/tmp/graft_stream_sink",
       "corpgate_" + graft.sources.Tables.pathKey(sfDir))
     org.apache.commons.io.FileUtils.deleteQuietly(base)
@@ -1581,7 +1534,7 @@ object EventStreams {
   /** q205 — STREAMING NEAR-DUP ADMISSION (round-11 verdict #6): q196's
     * batch stage 2 on the LIVE path, wired through q159's versioned-
     * segment index idiom. The staged document batches (ascending
-    * doc_id ranges — [[stageDocumentBatches]]) replay one file per
+    * doc_id ranges — [[stageIdBatches]]) replay one file per
     * trigger; each micro-batch (a) gates its train-split docs with the
     * SHARED battery ([[graft.operators.Corpus.withGateScore]]),
     * (b) bands its gate admits with the SHARED stage-2 banding
@@ -1788,7 +1741,7 @@ object EventStreams {
       nFiles: Int = 2, maxLiveSegments: Int = 1,
       foldTargetBytes: Long = 64L << 20,
       maxProbePairs: Long = 64L << 20): DataFrame = {
-    val staging = stageDocumentBatches(spark, sfDir, nFiles)
+    val staging = stageIdBatches(spark, sfDir, "documents", "doc_id", nFiles)
     // dir keyed by the dials too: the registered q205 (fold every
     // batch) and q209 (amortized, maxLive=2) variants must not share
     // scratch — a later run deletes the base dir at start
@@ -1997,48 +1950,6 @@ object EventStreams {
       .transform(graft.sources.Tables.presentationSorted(_, col("batch_idx")))
   }
 
-  /** Stage `embeddings` as `nFiles` flat, id-ranged parquet files
-    * (the [[stageDocumentBatches]] idiom on the vector table: hoisted
-    * part files, pinned mtimes, mtime+key+files freshness).
-    */
-  def stageEmbeddingBatches(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): String = {
-    val staging = new java.io.File("/tmp/graft_stage",
-      "batched_embs_" + graft.sources.Tables.pathKey(sfDir) +
-        s"_n$nFiles")
-    val srcMtime =
-      try new java.io.File(sfDir, "embeddings.parquet").lastModified
-      catch { case _: Exception => 0L }
-    val marker = new java.io.File(staging, "_graft_stage_key")
-    val key = s"$srcMtime#$nFiles"
-    val fresh = srcMtime > 0L && marker.exists && {
-      try new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8") == key
-      catch { case _: Exception => false }
-    } && (0 until nFiles).forall(i =>
-      new java.io.File(staging, f"b$i%04d.parquet").exists)
-    if (fresh) return staging.getPath
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
-    staging.mkdirs()
-    val vecs = graft.sources.Tables.embeddings(spark, sfDir)
-    val maxId = vecs.agg(max("vec_id")).head().getLong(0)
-    val ds = vecs.withColumn("_b",
-        expr(s"CAST((vec_id * $nFiles) div ${maxId + 1}L AS INT)"))
-      .localCheckpoint(true)
-    (0 until nFiles).foreach { i =>
-      val tmp = new java.io.File(staging, s"_w$i")
-      ds.filter(col("_b") === i).drop("_b")
-        .coalesce(1).write.parquet(tmp.getPath)
-      val part = tmp.listFiles.find(_.getName.endsWith(".parquet")).get
-      val dest = new java.io.File(staging, f"b$i%04d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      dest.setLastModified(1000000L * (i + 1))
-    }
-    java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8"))
-    staging.getPath
-  }
-
   /** q210 — STREAMING EMBEDDING NEAR-DUP ADMISSION: the sign-LSH
     * dedup family's live path, the exact counterpart of [[
     * streamingNeardupAdmission]] on the vector table. Staged id-ranged
@@ -2084,7 +1995,7 @@ object EventStreams {
     require(nBandsDial * bitsPerBand <= 16,
       s"dial ${nBandsDial}x$bitsPerBand exceeds the 16-bit signature")
     val mask = (1 << bitsPerBand) - 1
-    val staging = stageEmbeddingBatches(spark, sfDir, nFiles)
+    val staging = stageIdBatches(spark, sfDir, "embeddings", "vec_id", nFiles)
     val base = new java.io.File("/tmp/graft_stream_sink",
       "embneardup_" + graft.sources.Tables.pathKey(sfDir) +
         s"_n${nFiles}m$maxLiveSegments")

@@ -11,6 +11,9 @@ import graft.sources.Tables
   * the driver regenerates /root/testdata in place between (and once,
   * during) rounds, and a stale entry silently serves wrong centroids /
   * the wrong timestamp branch (CLAUDE.md round-6 notes; ADVICE r6).
+  * Also pins the on-disk artifact cache, [[Tables.freshStagedDir]]:
+  * build-fingerprint, deleted-output, crashed-build and missing-source
+  * cases, and q187's one-pair-per-sfDir warehouse cleanup.
   */
 class MtimeCacheSpec extends SparkSpec {
 
@@ -99,6 +102,130 @@ class MtimeCacheSpec extends SparkSpec {
     val ids = spark.read.parquet(staging.getPath + "/b0000.parquet")
       .select("event_id").collect().map(_.getLong(0))
     assert(ids.forall(_ >= 100L), "rebuilt staging must hold the new rows")
+  }
+
+  /** A scratch source file plus a [[Tables.freshStagedDir]] call over it
+    * whose build writes `part/_SUCCESS` and counts its runs.
+    */
+  private class Staged(tag: String) {
+    val dir: File = tmpDir(tag)
+    val src: File = new File(dir, "src.bin")
+    java.nio.file.Files.write(src.toPath, "v1".getBytes("UTF-8"))
+    val out: File = new File(dir, "out")
+    val marker: File = new File(out, "_graft_stage_key")
+    val success: File = new File(out, "part/_SUCCESS")
+    var builds = 0
+    def stage(): String =
+      Tables.freshStagedDir(out.getPath, Seq(src), "dial", Seq("part/_SUCCESS")) { p =>
+        builds += 1
+        new File(p, "part").mkdirs()
+        java.nio.file.Files.write(new File(p, "part/_SUCCESS").toPath,
+          Array.emptyByteArray)
+      }
+  }
+
+  test("freshStagedDir rebuilds a marker written under another build fingerprint") {
+    val st = new Staged("fp")
+    st.stage(); st.stage()
+    assert(st.builds === 1, "same sources, dials and build must reuse")
+    val key = new String(java.nio.file.Files.readAllBytes(st.marker.toPath), "UTF-8")
+    assert(key.contains(Tables.buildFingerprint),
+      s"marker key does not carry the build fingerprint: $key")
+    java.nio.file.Files.write(st.marker.toPath,
+      key.replace(Tables.buildFingerprint, "0" * 32).getBytes("UTF-8"))
+    st.stage()
+    assert(st.builds === 2, "an artifact from another build must be rebuilt")
+  }
+
+  test("freshStagedDir rebuilds when a required _SUCCESS is gone under a fresh marker") {
+    val st = new Staged("req")
+    st.stage()
+    assert(st.success.delete())
+    st.stage()
+    assert(st.builds === 2 && st.success.exists,
+      "a fresh marker alone must not vouch for a deleted output")
+  }
+
+  test("freshStagedDir: a build that throws leaves no marker; the next call rebuilds") {
+    val st = new Staged("crash")
+    intercept[IllegalStateException] {
+      Tables.freshStagedDir(st.out.getPath, Seq(st.src), "dial",
+          Seq("part/_SUCCESS")) { p =>
+        new File(p, "part").mkdirs()
+        java.nio.file.Files.write(new File(p, "part/_SUCCESS").toPath,
+          Array.emptyByteArray)
+        throw new IllegalStateException("build died")
+      }
+    }
+    assert(!st.marker.exists, "a failed build must not leave a marker")
+    st.stage()
+    assert(st.builds === 1 && st.marker.exists,
+      "the call after a failed build must rebuild")
+  }
+
+  test("freshStagedDir fails on a missing source and keeps the staged dir") {
+    val st = new Staged("missing")
+    st.stage()
+    assert(st.src.delete())
+    val e = intercept[IllegalArgumentException](st.stage())
+    assert(e.getMessage.contains("mtime 0 would freeze the artifact key") &&
+      e.getMessage.contains(st.src.getPath), e.getMessage)
+    assert(st.success.exists && st.marker.exists,
+      "a missing source must fail before anything is deleted")
+    assert(st.builds === 1)
+  }
+
+  test("codeFingerprint changes when one class file's bytes change") {
+    val cls = tmpDir("classes")
+    def put(rel: String, body: String): Unit = {
+      val f = new File(cls, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, body.getBytes("UTF-8"))
+    }
+    put("graft/A.class", "a")
+    put("graft/sources/B.class", "b")
+    val f1 = Tables.codeFingerprint(cls)
+    assert(Tables.codeFingerprint(cls) === f1, "fingerprint must be stable")
+    put("graft/sources/B.class", "c")
+    val f2 = Tables.codeFingerprint(cls)
+    assert(f2 !== f1, "a changed class file must change the fingerprint")
+    put("graft/sources/B.class", "b")
+    assert(Tables.codeFingerprint(cls) === f1)
+  }
+
+  test("q187 keeps one bucketed table pair per sfDir across a source rewrite") {
+    val dir = tmpDir("bucketed")
+    def copy(t: String, mtime: Long): Unit = {
+      val dest = new File(dir, s"$t.parquet")
+      java.nio.file.Files.copy(new File(sf0001, s"$t.parquet").toPath,
+        dest.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      dest.setLastModified(mtime)
+    }
+    val t0 = System.currentTimeMillis - 60000L
+    copy("lineitem", t0)
+    copy("orders", t0)
+    val pk = Tables.pathKey(dir.getPath)
+    val wh = new File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def entries(prefix: String): Seq[String] =
+      Option(wh.list()).toSeq.flatten.filter(_.startsWith(s"${prefix}_${pk}_"))
+    try {
+      val first = graft.operators.Layout.bucketedJoinRollup(spark, dir.getPath)
+        .collect().toSeq
+      copy("lineitem", t0 + 10000L)
+      val second = graft.operators.Layout.bucketedJoinRollup(spark, dir.getPath)
+        .collect().toSeq
+      assert(second === first)
+      val li = entries("graft_b_li")
+      val ord = entries("graft_b_ord")
+      assert(li.size === 1 && ord.size === 1,
+        s"warehouse holds stale bucketed tables: ${li ++ ord}")
+      assert(li.head.endsWith(s"_${t0 + 10000L}_$t0"),
+        s"the kept pair is not the rewritten source's: ${li.head}")
+    } finally (entries("graft_b_li") ++ entries("graft_b_ord")).foreach { t =>
+      graft.etl.Catalog.dropTable(spark, t)
+      org.apache.commons.io.FileUtils.deleteQuietly(new File(wh, t))
+    }
   }
 
   test("eventsTsIsNanos refreshes when events.parquet is rewritten in place") {

@@ -570,7 +570,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("q210 empty staged bucket still emits an all-zero ledger row (oracle series twin)") {
-    // round-14 ADVICE #4: stageEmbeddingBatches writes a (0-row) file
+    // round-14 ADVICE #4: stageIdBatches writes a (0-row) file
     // for an empty id-range bucket, the file source fires a batch for
     // it, and the ledger gets an all-zero row — the oracle now emits
     // one row per range(0, nBatches) so that row has a twin. Pin the

@@ -483,7 +483,7 @@ object Features {
   def movingRevenue(spark: SparkSession, sfDir: String, days: Int = 7): DataFrame = {
     val daily = Tables.lineitem(spark, sfDir)
       .groupBy(to_date(col("l_shipdate")).as("ship_date"))
-      .agg(sum(Insights.revenueDec).as("rev"),
+      .agg(Insights.revenueSum.as("rev"),
         count(lit(1)).as("n_items"))
       .withColumn("day_n", datediff(col("ship_date"),
         lit("1970-01-01").cast("date")))

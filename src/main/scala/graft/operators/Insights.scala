@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, MakeDecimal, NumericEvalContext}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.HllAgg
 import graft.sources.Tables
@@ -11,27 +15,34 @@ import graft.sources.Tables
   * dashboard KPI measures (Project Documentation docx §5), re-expressed
   * against the driver testdata star (FIXTURES.md role mapping).
   *
-  * Money correctness strategy (SURVEY.md §7.4.3): per-row arithmetic stays
-  * in source doubles (deterministic IEEE ops, identical in any engine);
-  * the moment values enter an AGGREGATION they are cast to exact DECIMAL
-  * so the sum is associative and engine/partition-order independent —
-  * double summation would differ between Spark's partial aggregation and
-  * DuckDB's sequential sum in the last ulps. Final aggregate columns are
-  * then cast to DOUBLE for PRESENTATION: both engines perform one
-  * correctly-rounded decimal→double conversion of the same exact value,
-  * so the rendered float64 is bit-identical — whereas a DECIMAL output
-  * column renders differently per engine (Spark parquet → exact Decimal
-  * objects, DuckDB fetchdf → float64), which failed the round-1 harness
-  * hash compare on every decimal-typed output.
+  * Money correctness strategy (SURVEY.md §7.4.3): a revenue value never
+  * enters an aggregate as a double — double summation would differ
+  * between Spark's partial aggregation and DuckDB's sequential sum in the
+  * last ulps. Each row's revenue becomes an exact scaled integer,
+  * [[revenueE4]] (a `Long` in 1e-4 currency units, equal to the DuckDB
+  * oracle's `DECIMAL(18,2) × (1 − DECIMAL(4,2))` product), and
+  * [[revenueSum]] adds those longs with ONE integer `Sum` under pinned
+  * ANSI overflow checking — associative, partition-order independent,
+  * and loud on overflow in any session. The total converts to
+  * `decimal(34,4)` once, after the aggregate, so it has the type and
+  * value of the oracle's decimal `SUM` while no row or aggregate buffer
+  * pays the `BigDecimal` path. Final aggregate columns are then cast to
+  * DOUBLE for PRESENTATION: both engines perform one correctly-rounded
+  * decimal→double conversion of the same exact value, so the rendered
+  * float64 is bit-identical — whereas a DECIMAL output column renders
+  * differently per engine (Spark parquet → exact Decimal objects, DuckDB
+  * fetchdf → float64), which failed the round-1 harness hash compare on
+  * every decimal-typed output.
   *
   * Every query ends in an explicit total ORDER BY (with tiebreak) so
   * results are row-order deterministic across engines.
   */
 object Insights {
 
-  /** Exact per-row revenue: extendedprice * (1 - discount), computed in
-    * decimal. l_extendedprice is cents-precise -> DECIMAL(18,2) exact;
-    * l_discount is in hundredths -> DECIMAL(4,2) exact.
+  /** Exact per-row revenue in decimal: extendedprice * (1 - discount),
+    * with l_extendedprice rounded to DECIMAL(18,2) and l_discount to
+    * DECIMAL(4,2). The definition [[revenueE4]] reproduces, and its
+    * fallback for values off the cents fast path.
     */
   def revenueDec: Column =
     col("l_extendedprice").cast("decimal(18,2)") *
@@ -42,8 +53,82 @@ object Insights {
     "CAST(l_extendedprice AS DECIMAL(18,2)) * " +
       "(CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
 
+  /** Fast-path guard of the cents kernel: `x` lies within `1e-6` cent of
+    * a whole number of cents `k = rint(x·100)` and `|x| < bound`.
+    *
+    * Why passing it makes `rint(x·100)` equal the decimal cast's cents:
+    * with `|x| < 1e9`, `x·100 < 2^37`, so the double product is within
+    * half an ulp (2^-17 ≈ 7.7e-6) of the real one, and the guard puts
+    * that product within 1e-6 of `k`: `|x − k/100| < 8.7e-8`. Spark
+    * casts a double to decimal by rounding its decimal string
+    * (`Double.toString`) HALF_UP; that string reads back as `x`, so it
+    * is within half an ulp of `x` (< 6e-8 below 1e9) and within 1.5e-7
+    * of `k/100` — far inside the half-cent (5e-3) either side — and the
+    * cast yields exactly `k/100`.
+    * The bound keeps `k/100` inside the narrowest target type:
+    * 1e9 ≪ 1e16 for `decimal(18,2)`; 99 < 99.995 for `decimal(4,2)`.
+    * NaN, ±Inf and out-of-range values fail `abs(x) < bound` (NaN sorts
+    * above every double in Spark), and a null makes the guard null;
+    * each takes the fallback branch, so it raises the cast's error or
+    * returns its null exactly as the decimal expression does. Ties such
+    * as 1.005 or 2.675 (`x·100` ≈ 100.4999…) fail the tolerance and are
+    * rounded by the decimal cast itself.
+    */
+  private def centsGuard(x: Column, bound: Double): Column =
+    abs(x) < bound && abs(x * 100 - rint(x * 100)) < 1e-6
+
+  private def centsFast(x: Column): Column = rint(x * 100).cast("long")
+
+  /** A price's cents as a long: `x` cast to `decimal(18,2)` (rounded
+    * HALF_UP) and scaled by 100 — from `rint` when [[centsGuard]] holds,
+    * else from that decimal expression itself.
+    */
+  def cents(x: Column): Column =
+    when(centsGuard(x, 1e9), centsFast(x))
+      .otherwise((x.cast("decimal(18,2)") * 100).cast("long"))
+
+  /** [[revenueDec]] as an exact `Long` in 1e-4 currency units:
+    * `cents(price) · (100 − cents(discount))`, equal to
+    * `CAST(revenueDec * 10000 AS BIGINT)`. Rows off the fast path (see
+    * [[centsGuard]]) compute that decimal expression itself; its cast to
+    * long is ANSI whatever the session says, so a row whose 1e-4 value
+    * passes `Long.MaxValue` (a 9.2e14 line) fails with `CAST_OVERFLOW`
+    * where a non-ANSI session's plain cast would wrap.
+    */
+  def revenueE4: Column = {
+    val price = col("l_extendedprice")
+    val disc = col("l_discount")
+    when(centsGuard(price, 1e9) && centsGuard(disc, 99.0),
+        centsFast(price) * (lit(100L) - centsFast(disc)))
+      .otherwise(toColumn(Cast(toExpression(revenueDec * 10000), LongType,
+        None, EvalMode.ANSI)))
+  }
+
+  /** Exact `Sum` of a long column with ANSI overflow checking pinned:
+    * a bare `sum(long)` follows `spark.sql.ansi.enabled` and wraps
+    * silently when it is off; this one raises `ARITHMETIC_OVERFLOW` in
+    * every session.
+    */
+  def sumE4(e4: Column): Column =
+    toColumn(Sum(toExpression(e4), NumericEvalContext(EvalMode.ANSI))
+      .toAggregateExpression())
+
+  /** A 1e-4-unit long total as `decimal(34,4)`: the type of a decimal
+    * `SUM` over [[revenueDec]], converted once after the aggregate.
+    */
+  def e4Decimal(e4Total: Column): Column =
+    toColumn(MakeDecimal(toExpression(e4Total), 34, 4))
+
+  /** The decimal `SUM` of [[revenueDec]] — same `decimal(34,4)` type,
+    * same value — as one long `Sum` of [[revenueE4]] (see [[sumE4]]).
+    * The long cannot pass `Long.MaxValue` before `sum·10^4` passes
+    * 2^53, the limit below which the double presentation cast is exact
+    * in both engines.
+    */
+  def revenueSum: Column = e4Decimal(sumE4(revenueE4))
+
   private def sumRev: Column =
-    sum(revenueDec).cast("double").as("revenue")
+    revenueSum.cast("double").as("revenue")
 
   /** Q1 — top-5 products by revenue (SQL Analysis docx Q1; SURVEY.md §2
     * E2+F1+G1+G3+B10). part broadcasts while it fits the session
@@ -152,14 +237,14 @@ object Insights {
   def revenueByBalanceBucket(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
       .groupBy(col("l_orderkey"))
-      .agg(sum(revenueDec).as("order_rev"), count(lit(1)).as("order_lines"))
+      .agg(sumE4(revenueE4).as("order_rev_e4"), count(lit(1)).as("order_lines"))
       .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .join(Joins.broadcastIfSmall(Tables.customer(spark, sfDir)
           .select("c_custkey", "c_acctbal")),
         col("o_custkey") === col("c_custkey"))
       .groupBy(balanceBucket(col("c_acctbal")).as("balance_bucket"))
-      .agg(sum(col("order_rev")).cast("double").as("revenue"),
+      .agg(e4Decimal(sumE4(col("order_rev_e4"))).cast("double").as("revenue"),
         sum(col("order_lines")).as("n_sales"))
       .orderBy(desc("revenue"), asc("balance_bucket"))
 
@@ -193,11 +278,11 @@ object Insights {
     // multiplier a multi-distinct aggregate plans into.
     val li = Tables.lineitem(spark, sfDir)
     val liKpis = li.agg(
-      sum(revenueDec).cast("double").as("total_revenue"),
+      revenueSum.cast("double").as("total_revenue"),
       // F6 avg order amount: decimal sum -> double -> divide. Exact
       // cross-engine while sum*10^4 < 2^53 (decimal->double is a
       // single correctly-rounded conversion in both engines).
-      (sum(revenueDec).cast("double") / count(lit(1)))
+      (revenueSum.cast("double") / count(lit(1)))
         .as("avg_line_amount"),
       countDistinct(col("l_orderkey")).as("n_orders"),
       count(lit(1)).as("n_lines"))
@@ -255,7 +340,7 @@ object Insights {
           Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .agg(
-        sum(revenueDec).cast("double").as("total_revenue"),
+        revenueSum.cast("double").as("total_revenue"),
         HllAgg.countDistinct(col("l_orderkey"), rsd).as("n_orders_approx"),
         HllAgg.countDistinct(col("o_custkey"), rsd)
           .as("n_customers_approx"),
@@ -764,10 +849,9 @@ object Insights {
     */
   def histogramPercentileCells(spark: SparkSession, sfDir: String,
       nb: Int = 4096): DataFrame = {
-    val cents = expr(
-      "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
     val base = Tables.lineitem(spark, sfDir)
-      .select(cents.as("c"), year(col("l_shipdate")).as("shard"))
+      .select(cents(col("l_extendedprice")).as("c"),
+        year(col("l_shipdate")).as("shard"))
     val bounds = base.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
     val cells = base.crossJoin(broadcast(bounds))
       .select(col("shard"),
@@ -855,10 +939,10 @@ object Insights {
     * scan and reads p% of rows after (on a sorted/bucketed layout)
     * skipping most files entirely.
     *
-    * Exactness discipline: per-row revenue in 1e-4-unit BIGINT (cents ×
-    * (100−discount-hundredths) — products capped at 1e18, inside
-    * int64), first/second moments summed in DECIMAL(38,0), converted
-    * once via [[Features.decToDouble]] (the hi/lo split — second
+    * Exactness discipline: per-row revenue in 1e-4-unit BIGINT
+    * ([[revenueE4]]: cents × (100−discount-hundredths)), first/second
+    * moments summed in DECIMAL(38,0), converted once via
+    * [[Features.decToDouble]] (the hi/lo split — second
     * moments cross 2^53 far below sf1), then the estimator arithmetic
     * runs in doubles with the IDENTICAL expression tree on both
     * engines. Identical rows hash into the same bucket, so exact
@@ -871,16 +955,12 @@ object Insights {
     // does not divide 100 would silently floor the multiplier
     require(100 % pctSample == 0,
       s"pctSample must divide 100, got $pctSample")
-    val revE4 = expr(
-      """CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
-        |(100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))"""
-        .stripMargin)
     val sampled = Tables.lineitem(spark, sfDir)
       .select(
         pmod(TextAnalysis.md5Hash60(concat_ws(":", lit("aqp"),
             col("l_orderkey"), col("l_linenumber"), col("l_partkey"))),
           lit(100)).as("b"),
-        revE4.as("rev_e4"))
+        revenueE4.as("rev_e4"))
       .filter(col("b") < pctSample)
     val agg = sampled.agg(
       count(lit(1)).as("n_sampled"),
@@ -953,16 +1033,12 @@ object Insights {
       pctSample: Int = 10): DataFrame = {
     require(100 % pctSample == 0,
       s"pctSample must divide 100, got $pctSample")
-    val revE4 = expr(
-      """CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
-        |(100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT))"""
-        .stripMargin)
     val sampled = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"),
         pmod(TextAnalysis.md5Hash60(concat_ws(":", lit("aqp"),
             col("l_orderkey"), col("l_linenumber"), col("l_partkey"))),
           lit(100)).as("b"),
-        revE4.as("rev_e4"))
+        revenueE4.as("rev_e4"))
       .filter(col("b") < pctSample)
       .join(Joins.broadcastIfSmall(
           Tables.part(spark, sfDir).select("p_partkey", "p_brand")),
@@ -1025,10 +1101,11 @@ object Insights {
           Tables.part(spark, sfDir).select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand").as("brand"))
-      .agg(sum(revenueDec).as("rev"))
-      // integer ppm via INTEGER division on cents-scaled sums (the
-      // weekdaySeasonality idiom; decimal `/` + floor diverges
-      // between engines when the ratio sits within an ulp of an int)
+      .agg(revenueSum.as("rev"))
+      // integer ppm via INTEGER division on sums rounded HALF_UP to
+      // cents (the weekdaySeasonality idiom; decimal `/` + floor
+      // diverges between engines when the ratio sits within an ulp of
+      // an int)
       .withColumn("cents", (col("rev") * 100).cast("decimal(38,0)"))
       .withColumn("totc", sum(col("cents")).over(w))
       .withColumn("share_ppm",
@@ -1093,7 +1170,7 @@ object Insights {
           Tables.supplier(spark, sfDir)),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("r_name").as("region"), col("p_brand").as("brand"))
-      .agg(sum(revenueDec).as("rev"))
+      .agg(revenueSum.as("rev"))
     val w = Window.partitionBy(col("region"))
       .orderBy(desc("rev"), asc("brand"))
     agg.withColumn("rank_in_region", row_number().over(w).cast("int"))
@@ -1134,7 +1211,7 @@ object Insights {
       .groupBy(
         year(col("l_shipdate")).as("sales_year"),
         month(col("l_shipdate")).as("sales_month"))
-      .agg(sum(revenueDec).as("rev"))
+      .agg(revenueSum.as("rev"))
     val byMonth = Window.partitionBy(col("sales_year"))
       .orderBy(col("sales_month"))
     val cum = byMonth.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1190,7 +1267,7 @@ object Insights {
           Tables.supplier(spark, sfDir)),
         col("l_suppkey") === col("s_suppkey"))
       .rollup(col("r_name"), col("p_brand"))
-      .agg(sum(revenueDec).cast("double").as("revenue"),
+      .agg(revenueSum.cast("double").as("revenue"),
         count(lit(1)).as("n_sales"),
         grouping_id().cast("int").as("grouping_level"))
       .select(
@@ -1240,7 +1317,7 @@ object Insights {
       .groupingSets(
         Seq(Seq(col("r_name"), col("p_brand")), Seq(col("p_brand")), Seq()),
         col("r_name"), col("p_brand"))
-      .agg(sum(revenueDec).cast("double").as("revenue"),
+      .agg(revenueSum.cast("double").as("revenue"),
         count(lit(1)).as("n_sales"),
         grouping_id().cast("int").as("grouping_level"))
       .select(
@@ -1422,7 +1499,7 @@ object Insights {
     * whose map side already reduces to ≤15 rows per partition) and the
     * CUBE's Expand runs over the ~15-row base frame. Exact because SUM
     * and COUNT re-aggregate (Σ of partial Σs, Σ of partial counts) and
-    * the money stays DECIMAL through both levels. NULL group keys are
+    * the money stays a 1e-4-unit long through both levels. NULL group keys are
     * coalesced to 'ALL' (same presentation contract as q44: NULL
     * renders differently in Spark parquet vs DuckDB fetchdf).
     */
@@ -1432,10 +1509,10 @@ object Insights {
           Tables.supplier(spark, sfDir)),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("r_name"), col("l_returnflag"))
-      .agg(sum(revenueDec).as("rev_dec"), count(lit(1)).as("n_base"))
+      .agg(sumE4(revenueE4).as("rev_e4"), count(lit(1)).as("n_base"))
     base
       .cube(col("r_name"), col("l_returnflag"))
-      .agg(sum(col("rev_dec")).cast("double").as("revenue"),
+      .agg(e4Decimal(sumE4(col("rev_e4"))).cast("double").as("revenue"),
         sum(col("n_base")).as("n_sales"),
         grouping_id().cast("int").as("grouping_level"))
       .select(
@@ -1597,7 +1674,7 @@ object Insights {
           Tables.part(spark, sfDir).select("p_partkey", "p_type", "p_brand")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_type"), col("p_brand"))
-      .agg(sum(revenueDec).as("rev"))
+      .agg(revenueSum.as("rev"))
       // cents-scaled INTEGER division, as in categoryShare
       .withColumn("cents", (col("rev") * 100).cast("decimal(38,0)"))
       .withColumn("totc", sum(col("cents")).over(byType))

@@ -265,7 +265,7 @@ object RetailBi {
     val byRev = Window.orderBy(col("rev").desc, col("l_partkey"))
     Tables.lineitem(spark, sfDir)
       .groupBy("l_partkey")
-      .agg(sum(Insights.revenueDec).as("rev"))
+      .agg(Insights.revenueSum.as("rev"))
       .withColumn("cum", sum(col("rev")).over(
         byRev.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("total", sum(col("rev")).over(
@@ -435,12 +435,11 @@ object RetailBi {
   def weekdaySeasonality(spark: SparkSession, sfDir: String): DataFrame = {
     val wAll = Window.partitionBy()
     Tables.lineitem(spark, sfDir)
-      .select(Cleaning.weekdayMon1(to_date(col("l_shipdate")))
-          .cast("int").as("weekday"),
-        Insights.revenueDec.as("rev"))
-      .groupBy("weekday")
-      .agg(sum("rev").as("revd"))
-      // revd has scale 2, so *100 is integral — the cents cast is exact
+      .groupBy(Cleaning.weekdayMon1(to_date(col("l_shipdate")))
+          .cast("int").as("weekday"))
+      .agg(Insights.revenueSum.as("revd"))
+      // revd is decimal(34,4): the cast to decimal(38,0) rounds the
+      // cents HALF_UP, as DuckDB's CAST(... AS HUGEINT) does
       .withColumn("cents", (col("revd") * 100).cast("decimal(38,0)"))
       .withColumn("total", sum("cents").over(wAll))
       .select(col("weekday"), col("revd").cast("double").as("revenue"),

@@ -173,7 +173,7 @@ object StatQa {
     // 7-digit daily totals; the mean keeps the full exact decimal.
     val daily = Tables.lineitem(spark, sfDir)
       .groupBy(to_date(col("l_shipdate")).as("day"))
-      .agg(sum(Insights.revenueDec).as("rev_dec"))
+      .agg(Insights.revenueSum.as("rev_dec"))
       .withColumn("c0", floor(col("rev_dec")).cast("decimal(29,0)"))
     val all = Window.partitionBy()
     daily
@@ -247,7 +247,7 @@ object StatQa {
       .orderBy(col("rev"), col("l_partkey"))
     Tables.lineitem(spark, sfDir)
       .groupBy("l_partkey")
-      .agg(sum(Insights.revenueDec).as("rev"))
+      .agg(Insights.revenueSum.as("rev"))
       .join(Joins.broadcastIfSmall(
           Tables.part(spark, sfDir).select("p_partkey", "p_type")),
         col("l_partkey") === col("p_partkey"))

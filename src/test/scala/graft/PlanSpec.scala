@@ -776,4 +776,49 @@ class PlanSpec extends SparkSpec {
           s"(HLL off-thread overlap); saw ${iv.size} strictly serial jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("q01-q06 revenue sums run on longs: no wide decimal buffer, no decimal cast off the fallback") {
+    // the executable form of "revenue sums run on longs": every revenue
+    // aggregate is one long Sum of Insights.revenueE4, so no aggregate
+    // buffer may hold a decimal above the 18-digit compact-long
+    // precision (those buffers go through java.math.BigDecimal per
+    // row), and the source doubles may be cast to decimal only inside
+    // the kernel's fallback branch (the ELSE of its rint-guarded CASE)
+    import org.apache.spark.sql.catalyst.expressions.{Cast, CaseWhen, Expression, Rint}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.DecimalType
+    object Aqe extends AdaptiveSparkPlanHelper
+    val money = Set("l_extendedprice", "l_discount")
+    def castsOffFallback(e: Expression): Seq[Expression] = e match {
+      case cw: CaseWhen if cw.branches.exists(_._2.find(_.isInstanceOf[Rint]).isDefined) =>
+        cw.branches.flatMap { case (c, v) => castsOffFallback(c) ++ castsOffFallback(v) }
+      case c: Cast if c.dataType.isInstanceOf[DecimalType] &&
+          c.child.references.exists(a => money(a.name)) =>
+        c +: castsOffFallback(c.child)
+      case other => other.children.flatMap(castsOffFallback)
+    }
+    Seq("q01_top_products", "q02_monthly_revenue", "q03_revenue_by_store",
+        "q04_balance_bucket", "q05_kpi_summary", "q06_category_share")
+      .foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sf0001)
+        df.collect() // finalize the adaptive plan
+        val plan = df.queryExecution.executedPlan
+        val aggs = Aqe.collect(plan) { case a: BaseAggregateExec => a }
+        assert(aggs.nonEmpty, s"$name: no aggregate in:\n$plan")
+        val wide = aggs.flatMap(_.aggregateExpressions
+            .flatMap(_.aggregateFunction.aggBufferAttributes))
+          .filter(_.dataType match {
+            case d: DecimalType => d.precision > 18
+            case _ => false
+          })
+        assert(wide.isEmpty,
+          s"$name: decimal aggregate buffers above precision 18 " +
+            s"(${wide.mkString(", ")}) in:\n$plan")
+        val casts = Aqe.flatMap(plan)(_.expressions.flatMap(castsOffFallback))
+        assert(casts.isEmpty,
+          s"$name: money column cast to decimal outside the fallback " +
+            s"(${casts.mkString(", ")}) in:\n$plan")
+      }
+  }
 }

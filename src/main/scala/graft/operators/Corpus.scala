@@ -111,9 +111,7 @@ object Corpus {
         (coalesce(col("n_dup_shingles"), lit(0L)).cast("double") /
           greatest(coalesce(col("n_shingles"), lit(0L)), lit(1L)))
           .as("dup_frac"))
-      // presentation sort (round-16): the sampled range exchange
-      // re-executed the doc-grain join tail a second time
-      .transform(Tables.presentationSorted(_, col("doc_id")))
+      .orderBy("doc_id")
   }
 
   def shingleDedupSql(n: Int = 8): String =

@@ -204,9 +204,7 @@ object Dedup {
     // word_shingles scan ran twice — checkpoint it once (blocks are
     // reclaimed by freeTransientBlocks)
     val sh = distinctShingles(spark, sfDir).localCheckpoint(true)
-    Tables.presentationSorted(
-      bestMatchAgainstIndex(incoming, index, sh, threshold),
-      col("doc_id"))
+    bestMatchAgainstIndex(incoming, index, sh, threshold).orderBy("doc_id")
   }
 
   /** Distinct 3-shingle sets per doc (the exact-Jaccard verification
@@ -296,14 +294,12 @@ object Dedup {
         col("band_idx"), col("band_key"))
     val dups2 = bestMatchAgainstIndex(batchBands(3),
       seg0.unionByName(seg1), sh, threshold)
-    // presentation sort (round-16): the global orderBy's range-sampling
-    // pass re-executed the round-2 probe chain; presentationSorted
-    // one-task-sorts the (small) admission log instead
-    Tables.presentationSorted(
-      dups1.withColumn("batch_round", lit(1L))
-        .unionByName(dups2.withColumn("batch_round", lit(2L)))
-        .select("batch_round", "doc_id", "dup_of", "jaccard"),
-      col("batch_round"), col("doc_id"))
+    // dups1 is a checkpoint: repartition so AQE counts the union
+    dups1.withColumn("batch_round", lit(1L))
+      .unionByName(dups2.withColumn("batch_round", lit(2L)))
+      .select("batch_round", "doc_id", "dup_of", "jaccard")
+      .repartition(col("batch_round"), col("doc_id"))
+      .orderBy("batch_round", "doc_id")
   }
 
   /** DuckDB oracle for [[incrementalDedupLoop]]: the banded CTE prefix,
@@ -719,9 +715,6 @@ object Dedup {
       .localCheckpoint(true)
     val labels = propagateMinLabels(und, maxIters)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
-    // round-15 A/B: presentationSorted (checkpoint-first) measured a
-    // wash here — labels is already checkpointed, so the range
-    // sampling only re-runs the cheap sizes agg; the plain sort stays
     labels.join(sizes, "lbl")
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
         col("cluster_size"),
@@ -961,8 +954,7 @@ object Dedup {
         element_at(graft.functions.minhash_sig(col("text"), 1), 1).as("block"),
         graft.functions.shingle_hashes(col("text")).as("sh"))
       .localCheckpoint(true)
-    // CARDINALITY-ADAPTIVE scoring (round-14, the presentationSorted
-    // discipline on a join plan): the round-13 doc-grain rework fixed
+    // CARDINALITY-ADAPTIVE scoring: the round-13 doc-grain rework fixed
     // the one-hot-block single task at sf3 but costs two extra
     // doc_id-keyed joins every run (+0.68 s at sf0.1, where the max
     // block is tiny). The probe below MEASURES the max block size over
@@ -1286,15 +1278,10 @@ object Dedup {
     // (sorted_intersect_count over ShingleHashesExpr's sorted distinct
     // arrays — value-identical to size(array_intersect), ~10x cheaper,
     // and cheap enough that Catalyst pushing the admission threshold
-    // into the join condition no longer matters). The scored result is
-    // eagerly checkpointed BEFORE the presentation sort: a global
-    // orderBy's range-exchange SAMPLES ITS CHILD with a separate job,
-    // which re-executed the entire verify join a second time (both
-    // tail stages measured near-equal cost); sorting the checkpoint
-    // pays the verify exactly once, and presentationSorted picks the
-    // one-task sort while the admitted-pair count is presentation-
-    // sized (identical total order either way).
-    val scored = candSpread
+    // into the join condition no longer matters). The pair joins read
+    // checkpoints, so no plan fact bounds them: the repartition gives
+    // the result sort a stage AQE counts.
+    candSpread
       .join(sets.select(col("doc_id").as("doc_a"), col("hs").as("ha"),
         col("sz").as("sz_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("hs").as("hb"),
@@ -1306,8 +1293,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("o"),
         col("sz_a"), col("sz_b"),
         expr("o * 1000000 div (sz_a + sz_b - o)").as("jaccard_ppm"))
-      .localCheckpoint(true)
-    Tables.presentationSorted(scored, col("doc_a"), col("doc_b"))
+      .repartition(col("doc_a"), col("doc_b"))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Oracle for [[allPairsJaccard]]: the identical prefix index and

@@ -59,7 +59,7 @@ object Graph {
     // every downstream frame (degrees, nodes, N, per-iteration joins)
     // derives from the checkpointed list. Checkpointing the derived
     // frames separately instead would materialize the construction
-    // once PER checkpoint (observed in DevProfile as a doubled
+    // once PER checkpoint (graft.devtools.Prof shows it as a doubled
     // pair-generation stage).
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -138,13 +138,9 @@ object Graph {
     // the mirror union makes every dst also a src BY CONSTRUCTION, so
     // the symmetrized fast path applies: no node-set union, no
     // per-iteration dangling-mass pass (~20% of the query at sf0.1).
-    // presentationSorted (round-15): the bare orderBy's range-exchange
-    // sampling re-executed the whole lazy 3-iteration chain a second
-    // time; the node-grain result takes the one-task sort instead
-    Tables.presentationSorted(
-      pagerank(edges, iters, assumeNoDangling = true)
-        .select(col("node").as("part"), col("r").as("rank_e12")),
-      desc("rank_e12"), asc("part"))
+    pagerank(edges, iters, assumeNoDangling = true)
+      .select(col("node").as("part"), col("r").as("rank_e12"))
+      .orderBy(desc("rank_e12"), asc("part"))
   }
 
   /** q135 — PageRank over a genuinely DIRECTED graph with dangling
@@ -161,13 +157,12 @@ object Graph {
       RetailBi.baskets(Tables.lineitem(spark, sfDir)),
       minPairs = minPairs, maxItems = 64)
     val edges = pairs.select(col("part_a").as("src"), col("part_b").as("dst"))
-    // general path ranks are already checkpointed per iteration, so the
-    // sort input is node-grain materialized blocks — presentationSorted
-    // takes the one-task sort instead of the fixed range-exchange
-    Tables.presentationSorted(
-      pagerank(edges, iters)
-        .select(col("node").as("part"), col("r").as("rank_e12")),
-      desc("rank_e12"), asc("part"))
+    // the general path's ranks are a checkpoint: repartition so AQE
+    // counts them
+    pagerank(edges, iters)
+      .select(col("node").as("part"), col("r").as("rank_e12"))
+      .repartition(col("rank_e12"), col("part"))
+      .orderBy(desc("rank_e12"), asc("part"))
   }
 
   /** DuckDB oracle for [[directedRank]]: the identical general-path
@@ -285,12 +280,7 @@ object Graph {
       .unionByName(tris.select(col("v").as("part")))
       .unionByName(tris.select(col("w").as("part")))
       .groupBy("part").agg(count(lit(1)).as("tri_cnt"))
-      // presentation sort (round-16): the global orderBy's
-      // range-sampling pass re-executed the wedge-join tail a second
-      // time; presentationSorted sorts the node-grain counts (bounded
-      // by |parts|) in one task without the sampling pass
-      .transform(graft.sources.Tables.presentationSorted(_,
-        desc("tri_cnt"), asc("part")))
+      .orderBy(desc("tri_cnt"), asc("part"))
   }
 
   /** Degree-ordered orientation of an undirected pair frame (`a < b`,

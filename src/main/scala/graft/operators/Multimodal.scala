@@ -99,11 +99,11 @@ object Multimodal {
     * partition-independent-order idiom, bounded by frames-per-media.
     */
   def mediaFeatures(spark: SparkSession, sfDir: String): DataFrame =
-    // presentation sort (round-16): the global orderBy's range-sampling
-    // pass re-executed the whole 3-branch codec union a second time;
-    // presentationSorted one-task-sorts the media-grain result
-    graft.sources.Tables.presentationSorted(
-      mediaFeaturesUnordered(spark, sfDir), col("media_id"))
+    // the codec branches are typed maps over a checkpoint: repartition
+    // so AQE counts them
+    mediaFeaturesUnordered(spark, sfDir)
+      .repartition(col("media_id"))
+      .orderBy("media_id")
 
   private def mediaFeaturesUnordered(spark: SparkSession,
       sfDir: String): DataFrame = {

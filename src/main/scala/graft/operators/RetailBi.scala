@@ -204,11 +204,7 @@ object RetailBi {
         ((col("n_pair").cast("double") * col("n_orders").cast("double")) /
           (col("n_a").cast("double") * col("n_b").cast("double")))
           .as("lift"))
-      // presentation sort (round-16): the global orderBy's
-      // range-sampling pass re-executed the pair-generation tail;
-      // presentationSorted one-task-sorts the pair-grain result
-      .transform(Tables.presentationSorted(_,
-        col("part_a"), col("part_b")))
+      .orderBy("part_a", "part_b")
   }
 
   /** Oracle cap parity (ADVICE r9): the Spark side's `maxItems = 64`

@@ -356,7 +356,10 @@ object Sampling {
         Seq("pos_key", "source", "rk"), "schedule_pos")
       .select(col("schedule_pos"), col("source"), col("doc_id"),
         col("n_tokens"), col("pos_key"))
-      .transform(df => Tables.presentationSorted(df, col("schedule_pos")))
+      // the rank comes from an RDD zipWithIndex: repartition so AQE
+      // counts it
+      .repartition(col("schedule_pos"))
+      .orderBy("schedule_pos")
   }
 
   /** Oracle for [[interleavedSchedule]]: q201's full apportionment

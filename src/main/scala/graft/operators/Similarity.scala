@@ -289,10 +289,7 @@ object Similarity {
       maxCandPairs: Long = 100L * 1000 * 1000): DataFrame = {
     val (_, edges) = ensureKnnArtifacts(spark, sfDir, k, nBands,
       bitsPerBand, maxCandPairs)
-    // presentation sort with the strategy derived from the edge count
-    // (round-13: k·n/2 edges outgrow the one-task sort at scale)
-    Tables.presentationSorted(spark.read.parquet(edges),
-      col("vec_a"), col("vec_b"))
+    spark.read.parquet(edges).orderBy("vec_a", "vec_b")
   }
 
   /** Commit the kNN-graph job's two products — the per-vector ranked
@@ -508,10 +505,7 @@ object Similarity {
         col("n.dst").as("neg_id"),
         col("n.rank").cast("long").as("neg_rank"),
         col("n.cosine").as("neg_cosine"))
-      // eager checkpoint: presentationSorted's row-count probe and the
-      // sort itself both read the materialized result, not the join DAG
-      .localCheckpoint(true)
-      .transform(df => Tables.presentationSorted(df, col("anchor_id")))
+      .orderBy("anchor_id")
   }
 
   /** Oracle for [[tripletMining]]: the shared topk CTE, mutuality by
@@ -587,10 +581,7 @@ object Similarity {
         col("m.score").as("keep_score"),
         col("cluster_size"),
         (col("cluster_size") - 1).as("n_discarded"))
-      // cluster-grain presentation sort with no range-sampling pass
-      // re-running the gate-score kernel join
-      .transform(df => graft.sources.Tables.presentationSorted(df,
-        col("cluster_id")))
+      .orderBy("cluster_id")
   }
 
   /** Oracle for [[semanticDedupEndgame]]: q203's edge SQL, the q60
@@ -2267,12 +2258,7 @@ object Similarity {
             .as("recall_ppm"),
           col("n_cand_pairs"))
     }.reduce(_.unionByName(_))
-      // presentation sort (round-16): the union of four 1-row
-      // crossJoined aggs has optimizer maxRows = 4, so this takes the
-      // zero-job one-task path instead of a sampled range exchange
-      // that re-executed every config's candidate/topk DAG
-      .transform(Tables.presentationSorted(_,
-        desc("recall_ppm"), asc("n_cand_pairs"), asc("n_bands")))
+      .orderBy(desc("recall_ppm"), asc("n_cand_pairs"), asc("n_bands"))
   }
 
   def annConfigSweepSql(nQueries: Int = 10, k: Int = 5): String = {

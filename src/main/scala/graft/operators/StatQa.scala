@@ -192,10 +192,7 @@ object StatQa {
       .withColumn("z", (col("revenue") - col("mean")) / col("sd"))
       .withColumn("is_anomaly", (abs(col("z")) > zCut).cast("int"))
       .select("day", "revenue", "mean", "sd", "z", "is_anomaly")
-      // presentation sort (round-16): the sampled range exchange
-      // re-executed the day-grain whole-frame moment windows a second
-      // time; presentationSorted one-task-sorts the date-grain result
-      .transform(graft.sources.Tables.presentationSorted(_, col("day")))
+      .orderBy("day")
   }
 
   def dailyAnomaliesSql(zCut: Double = 3.0): String =

@@ -217,9 +217,7 @@ object TextAnalysis {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select("doc_id", "rank", "term", "tf", "df", "score")
-      // presentation sort (round-16): kills the range-sampling pass
-      // that re-executed the per-doc ranking window a second time
-      .transform(Tables.presentationSorted(_, col("doc_id"), col("rank")))
+      .orderBy("doc_id", "rank")
   }
 
   def tfidfSql(topK: Int = 3): String =
@@ -376,9 +374,10 @@ object TextAnalysis {
         (coalesce(col("top_bigram_count"), lit(0L)).cast("double") /
           greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1)))
           .as("top_bigram_frac"))
-      // presentation sort (round-16): kills the range-sampling pass
-      // that re-executed the doc-grain join tail
-      .transform(Tables.presentationSorted(_, col("doc_id")))
+      // the preserved side is a checkpoint: no row bound until a stage
+      // counts it
+      .repartition(col("doc_id"))
+      .orderBy("doc_id")
   }
 
   val repetitionSql: String =
@@ -523,7 +522,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bigrams"), col("n_covered"),
         expr("CAST(n_covered * 1000000 div n_bigrams AS BIGINT)")
           .as("coverage_ppm"))
-      .transform(Tables.presentationSorted(_, col("doc_id")))
+      .orderBy("doc_id")
   }
 
   def bigramCoverageSql(topK: Int = 200): String =

@@ -182,10 +182,7 @@ object Validation {
     audit("customer", cust, tomb)
       .unionByName(audit("orders", orders, deadOrders))
       .unionByName(audit("lineitem", li, deadLi))
-      // presentation sort (round-16): union of three 1-row crossJoined
-      // aggs has optimizer maxRows = 3 — zero-job one-task path, no
-      // sampled range exchange re-running the audit counts
-      .transform(Tables.presentationSorted(_, col("table_name")))
+      .orderBy("table_name")
   }
 
   def gdprErasureSql(tombMod: Int = 97): String =
@@ -304,12 +301,7 @@ object Validation {
       .unionByName(one("events", Tables.events(spark, sfDir),
         """concat_ws('|', event_id, user_id, event_type,
           |CAST(floor(value * 100) AS BIGINT), unix_micros(ts))""".stripMargin))
-      // presentation sort (round-16): the union of three global aggs
-      // has optimizer maxRows = 3, so this takes the zero-job one-task
-      // path — the former global orderBy's range-sampling pass paid the
-      // fixed ~0.45 s exchange machinery and re-ran the three final agg
-      // stages a second time
-      .transform(Tables.presentationSorted(_, col("table_name")))
+      .orderBy("table_name")
   }
 
   /** Oracle for [[tableChecksums]]: the identical canonical rendering,

@@ -1,10 +1,14 @@
 package graft.sources
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionSet}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.command.DataWritingCommand
-import org.apache.spark.sql.execution.datasources.WriteFiles
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex, WriteFiles}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -12,22 +16,34 @@ import org.apache.spark.sql.execution.streaming.sources.MemoryPlan
 import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.execution.GenerateExec
 
-/** Result-sort planning from row counts. A global `ORDER BY` on a
+/** Result-sort planning from row counts: the one way a result is
+  * sorted, so callers write a plain `orderBy`. A global `ORDER BY` on a
   * result frame pays a range exchange: a sampling job plus a shuffle,
   * about 0.45 s of fixed cost whatever the row count. When the sort's
-  * input is known to hold at most [[Tables.PresentationSortMaxRows]]
-  * rows, one task sorting one partition gives the same total order for
-  * a fraction of that. This rule makes that choice inside Catalyst, so
-  * callers write a plain `orderBy`.
+  * input is known to hold at most [[MaxRows]] rows, one task sorting
+  * one partition gives the same total order for a fraction of that.
   *
-  * Injected twice by [[Tables.graftSession]]: as an optimizer rule,
-  * where the bound is static (`LocalRelation`, `Range`, `Limit`, a
-  * memory-sink table's current row count), and as an AQE runtime
-  * optimizer rule, where a materialized shuffle stage reports its exact
-  * row count (`LogicalQueryStage.maxRows`), carried up through
-  * `Aggregate`, `Filter` and `Project`. Before the stage below the sort
-  * finishes, the range exchange's sampling job has not been submitted,
-  * so re-planning there removes both of its jobs.
+  * Injected twice by [[Tables.graftSession]]: as an optimizer rule and
+  * as an AQE runtime optimizer rule. The row bound comes from plan
+  * facts, carried up through `Project`, `Filter`, grouped `Aggregate`
+  * and `Union` (the sum of its children):
+  *  - static: Catalyst's `maxRows` (`LocalRelation`, `Range`, `Limit`,
+  *    global aggregates), and a memory-sink table's current row count;
+  *  - a parquet scan that shares the sort's stage (reached through
+  *    projections, filters, unions and joins' preserved sides, never
+  *    below an aggregate or window, whose exchange AQE counts exactly):
+  *    the sum of its files' footer row counts, read on the driver with
+  *    no job. A streaming sink's index lists only committed files;
+  *  - an equi-join whose other side is distinct on its join keys, or a
+  *    join with a side of at most one row: the preserved side's bound.
+  *    Semi and anti joins keep the left side's bound;
+  *  - at runtime, a materialized shuffle stage's exact row count
+  *    (`LogicalQueryStage.maxRows`). Before the stage below the sort
+  *    finishes, the range exchange's sampling job has not been
+  *    submitted, so re-planning there removes both of its jobs.
+  *
+  * A frame with none of these (an RDD or checkpoint leaf) gets its
+  * count from a `repartition` on the sort keys, which AQE then counts.
   *
   * The rule fires only on a RESULT-level global sort: the plan root, or
   * a sort directly under a root `Project` or `Repartition(1, shuffle =
@@ -39,12 +55,21 @@ import org.apache.spark.sql.execution.GenerateExec
   *
   * The one partition comes from `coalesce(1)` when the operators
   * between the sort and the exchange below it are only projections,
-  * filters and aggregates (cheap on bounded rows). If a window, join or
-  * generator sits in that stage, its input is not bounded by the
-  * sort's row count, so a one-partition shuffle (`Repartition(1,
+  * filters and aggregates (cheap on bounded rows). If a window, join,
+  * union or generator sits in that stage, its input is not bounded by
+  * the sort's row count, so a one-partition shuffle (`Repartition(1,
   * shuffle = true)`) keeps that stage parallel.
   */
 object PresentationSort extends Rule[LogicalPlan] {
+
+  /** Rows at or below which a result sort takes the single-partition
+    * path. A global orderBy pays about 0.45 s of fixed range-exchange
+    * machinery (sampling pass plus sort pass, per-task setup on every
+    * core) regardless of row count, while a one-task sort of up to 256k
+    * rows stays well under 0.2 s. Stream match logs at sf1 (about 4.6M
+    * rows) sit far above the bound and keep the distributed sort.
+    */
+  val MaxRows: Long = 262144L
 
   def apply(plan: LogicalPlan): LogicalPlan = (plan match {
     case w: V2WriteCommand if isNoopSink(w.table) =>
@@ -73,35 +98,64 @@ object PresentationSort extends Rule[LogicalPlan] {
   }
 
   private def onePartition(s: Sort): Option[LogicalPlan] =
-    if (s.global &&
-        rowBound(s.child).exists(_ <= Tables.PresentationSortMaxRows))
+    if (s.global && rowBound(s.child).exists(_ <= MaxRows))
       Some(s.copy(global = false,
         child = Repartition(1, shuffle = !narrowStage(s.child), s.child)))
     else None
 
-  /** Whether a plain `orderBy` over `p` leaves this rule a row count to
-    * plan from: a static bound, or a top aggregate or window, whose
-    * shuffle stage AQE counts at runtime. A join's runtime bound is the
-    * product of its inputs' counts, and a bare scan or read-back has no
-    * stage to count, so neither qualifies.
+  /** Upper bound on the rows `p` produces (see the object doc for the
+    * sources). `footers` is false below an aggregate, where a scan does
+    * not share the sort's stage.
     */
-  def plansOwnSort(p: LogicalPlan): Boolean = rowBound(p).isDefined || (p match {
-    case _: Project | _: Filter => plansOwnSort(p.children.head)
-    case _: Aggregate | _: Window => true
-    case u: Union => u.children.forall(plansOwnSort)
-    case _ => false
-  })
-
-  /** Upper bound on the rows `p` produces: Catalyst's `maxRows`, except
-    * that a memory-sink table (which has none) reports its sink's
-    * current row count, seen through the operators that cannot add
-    * rows.
-    */
-  private def rowBound(p: LogicalPlan): Option[Long] = p match {
+  private def rowBound(p: LogicalPlan, footers: Boolean = true): Option[Long] = p match {
     case m: MemoryPlan => Some(m.sink.allData.size.toLong)
-    case _: Project | _: Filter => rowBound(p.children.head)
-    case a: Aggregate if a.groupingExpressions.nonEmpty => rowBound(a.child)
+    case _: Project | _: Filter => rowBound(p.children.head, footers)
+    case a: Aggregate if a.groupingExpressions.nonEmpty => rowBound(a.child, footers = false)
+    case u: Union =>
+      val bounds = u.children.map(rowBound(_, footers))
+      if (bounds.forall(_.isDefined)) Some(bounds.flatten.sum) else None
+    case j: Join => (joinBound(j, footers) ++ j.maxRows).minOption
+    case l: LogicalRelation if footers => footerRows(l)
     case _ => p.maxRows
+  }
+
+  /** The preserved side's bound, for a join that cannot repeat a
+    * preserved row: the other side has at most one row, or is distinct
+    * on its equi-join keys.
+    */
+  private def joinBound(j: Join, footers: Boolean): Option[Long] = {
+    val (lk, rk) = j match {
+      case ExtractEquiJoinKeys(_, lk, rk, _, _, _, _, _) => (lk, rk)
+      case _ => (Nil, Nil)
+    }
+    j.joinType match {
+      case LeftSemi | LeftAnti => rowBound(j.left, footers)
+      case Inner | Cross | LeftOuter if unique(j.right, rk) => rowBound(j.left, footers)
+      case Inner | Cross if unique(j.left, lk) => rowBound(j.right, footers)
+      case _ => None
+    }
+  }
+
+  /** Whether `p` has at most one row per value of `keys`. A query stage
+    * reports no distinct keys of its own, so this reads the logical
+    * plan each stage stands for.
+    */
+  private def unique(p: LogicalPlan, keys: Seq[Expression]): Boolean = {
+    def unstaged(q: LogicalPlan): LogicalPlan =
+      q.transformUp { case s: LogicalQueryStage => unstaged(s.logicalPlan) }
+    val u = unstaged(p)
+    (p.maxRows ++ u.maxRows).exists(_ <= 1) || (keys.nonEmpty &&
+      u.distinctKeys.exists(_.subsetOf(ExpressionSet(keys))))
+  }
+
+  /** Rows of a parquet scan, from the footers of the files its index
+    * lists.
+    */
+  private def footerRows(l: LogicalRelation): Option[Long] = l.relation match {
+    case r @ HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _,
+        _: ParquetFileFormat, _) =>
+      Some(Tables.parquetRows(r.sparkSession, index.allFiles()))
+    case _ => None
   }
 
   /** Whether everything between the sort and the nearest exchange (or

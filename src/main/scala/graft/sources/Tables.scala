@@ -15,9 +15,10 @@ import org.apache.spark.sql.types._
   *
   * Also the session contract: [[graftSession]] builds every graft
   * session with the [[PresentationSort]] rule, so a result `orderBy`
-  * on a bounded frame plans as one task from static or AQE runtime row
-  * counts; [[presentationSorted]] covers the frames the rule gets no
-  * count for.
+  * on a bounded frame plans as one task from plan facts (static
+  * bounds, parquet footer counts, join keys) or AQE runtime row counts.
+  * The footer reader [[parquetRows]] is shared by that rule and the
+  * events readers.
   */
 object Tables {
 
@@ -186,75 +187,72 @@ object Tables {
     eventsSchema.fields.map(f =>
       if (f.name == "ts") f.copy(dataType = TimestampType) else f))
 
-  /** What an events source's parquet footers say: whether `ts` is
-    * stored as TIMESTAMP(NANOS), and the source's total row count.
+  /** The parquet files at `path`: the file itself, or the visible files
+    * under a directory, filtered by `glob` at its top level.
     */
-  private case class EventsFooters(tsIsNanos: Boolean, rows: Long)
-
-  private val eventsFooters =
-    new java.util.concurrent.ConcurrentHashMap[String, EventsFooters]()
-
-  /** One read of the events source's footers per distinct path+glob,
-    * memoized on (path, glob, mtime): the documented hazard is testdata
-    * REGENERATED at the same path with a flipped encoding, so a
-    * JVM-lifetime key would silently apply the wrong ts
-    * branch (1970 or year-56k timestamps) after a regen. Including the
-    * file/dir mtime in the key makes a rewrite a cache miss; within one
-    * immutable layout it is still one footer read per path.
-    */
-  private def eventsFootersOf(s: SparkSession, path: String,
-      glob: Option[String]): EventsFooters = {
-    // local-path mtime fingerprint; 0 for non-local URIs (falls back to
-    // per-JVM memoization, the pre-round-7 behavior)
-    val mtime = try new java.io.File(path).lastModified catch { case _: Exception => 0L }
-    eventsFooters.computeIfAbsent(s"$path#${glob.getOrElse("")}#$mtime", _ => {
-      val r = s.read
-      glob.foreach(g => r.option("pathGlobFilter", g))
-      EventsFooters(r.parquet(path).schema("ts").dataType == LongType,
-        parquetRows(s, path, glob))
-    })
-  }
-
-  /** Row count of the parquet files at `path` (a file, or a directory
-    * filtered by `glob` at its top level), summed from their footers
-    * without a Spark job.
-    */
-  private def parquetRows(s: SparkSession, path: String,
-      glob: Option[String]): Long = {
+  private def parquetFiles(s: SparkSession, path: String,
+      glob: Option[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
     import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
-    val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     def visible(f: FileStatus) = !f.getPath.getName.startsWith("_") &&
       !f.getPath.getName.startsWith(".")
     def files(f: FileStatus): Seq[FileStatus] =
       if (f.isFile) Seq(f)
       else fs.listStatus(f.getPath).toSeq.filter(visible).flatMap(files)
     val top = fs.getFileStatus(root)
-    val picked =
-      if (top.isFile) Seq(top)
-      else fs.listStatus(root).toSeq.filter(f => visible(f) &&
-        glob.forall(g => new GlobFilter(g).accept(f.getPath)))
-    picked.flatMap(files).map { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-      try reader.getRecordCount finally reader.close()
+    if (top.isFile) Seq(top)
+    else fs.listStatus(root).toSeq.filter(f => visible(f) &&
+      glob.forall(g => new GlobFilter(g).accept(f.getPath))).flatMap(files)
+  }
+
+  private val footerRowCounts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
+
+  /** Row count of parquet `files`, summed from their footers on the
+    * driver with no Spark job. Each file's count is memoized on its
+    * path, length and mtime, so a rewritten file is read again.
+    */
+  private[sources] def parquetRows(s: SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
+    val conf = s.sparkContext.hadoopConfiguration
+    files.map { f =>
+      footerRowCounts.computeIfAbsent(
+        (f.getPath.toString, f.getLen, f.getModificationTime), _ => {
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          try reader.getRecordCount finally reader.close()
+        }).longValue
     }.sum
   }
 
-  /** Whether the events parquet at `path` stores `ts` as TIMESTAMP(NANOS)
-    * (inferred as LongType under nanosAsLong) rather than
-    * TIMESTAMP(MICROS). Footer-memoized ([[eventsFootersOf]]).
+  private val eventsTsNanos =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** Whether the events parquet at `path` (filtered by `glob`) stores
+    * `ts` as TIMESTAMP(NANOS) (inferred as LongType under nanosAsLong)
+    * rather than TIMESTAMP(MICROS). Sniffed once per file set, keyed on
+    * each file's path, length and mtime: testdata REGENERATED at the
+    * same path may flip the encoding, and a stale answer silently
+    * applies the wrong ts branch (1970 or year-56k timestamps). A
+    * directory's mtime does not change when a file in it is rewritten
+    * in place, so the key names the files themselves.
     */
   def eventsTsIsNanos(s: SparkSession, path: String,
-      glob: Option[String] = None): Boolean =
-    eventsFootersOf(s, path, glob).tsIsNanos
+      glob: Option[String] = None): Boolean = {
+    val key = parquetFiles(s, path, glob)
+      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .mkString(s"$path#${glob.getOrElse("")}#", ",", "")
+    eventsTsNanos.computeIfAbsent(key, _ => {
+      val r = s.read
+      glob.foreach(g => r.option("pathGlobFilter", g))
+      r.parquet(path).schema("ts").dataType == LongType
+    })
+  }
 
-  /** Rows of the events table under `sfDir`, from the same footer memo
-    * (and the same key) the event-stream readers use.
-    */
+  /** Rows of the events table under `sfDir`, from its footers. */
   def eventsRows(s: SparkSession, sfDir: String): Long =
-    eventsFootersOf(s, sfDir, Some("events.parquet")).rows
+    parquetRows(s, parquetFiles(s, sfDir, Some("events.parquet")))
 
   val documentsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -746,45 +744,6 @@ object Tables {
       case e => throw e
     }
     done.map(_.get)
-  }
-
-  /** Rows at or below which a presentation sort takes the
-    * single-partition path. Measured round 12/13: a global orderBy
-    * pays ~0.45 s of fixed range-exchange machinery (sampling pass +
-    * sort pass, per-task setup × 32) regardless of row count, while a
-    * one-task in-partition sort of ≤256k rows is well under 0.2 s —
-    * and the round-12 soak's match-log-grain streaming results
-    * (q133/q163/q170, ~4.6M rows at sf1) sit far above the bound, so
-    * they take the distributed sort automatically.
-    */
-  val PresentationSortMaxRows: Long = 262144L
-
-  /** Total sort of a RESULT frame. Where [[PresentationSort]] gets a
-    * row count from the plan (a static bound, or the runtime count of a
-    * top aggregate's or window's shuffle stage) this is a plain
-    * `orderBy` and the rule picks the strategy with no extra job. Other
-    * frames (bare scans, read-backs, join-topped results) pay one count
-    * probe and take the one-task sort at or below
-    * [[PresentationSortMaxRows]] rows. A frame with a join, aggregate,
-    * window or generator is checkpointed first, so the probe and the
-    * sort do not both re-run it; blocks are reclaimed by
-    * [[freeTransientBlocks]].
-    */
-  def presentationSorted(df: DataFrame,
-      keys: org.apache.spark.sql.Column*): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val plan = df.queryExecution.optimizedPlan
-    if (PresentationSort.plansOwnSort(plan)) df.orderBy(keys: _*)
-    else {
-      val expensive = plan.exists {
-        case _: Join | _: Aggregate | _: Window | _: Generate => true
-        case _ => false
-      }
-      val probed = if (expensive) df.localCheckpoint(true) else df
-      if (probed.count() <= PresentationSortMaxRows)
-        probed.coalesce(1).sortWithinPartitions(keys: _*)
-      else probed.orderBy(keys: _*)
-    }
   }
 
   /** Collision-free /tmp directory key for a source path: md5 of the

@@ -536,8 +536,7 @@ object EventStreams {
       q.awaitTermination()
     } }
     spark.read.parquet(new java.io.File(sinkDir, "out").getPath)
-      .transform(graft.sources.Tables.presentationSorted(_,
-        col("error_id"), col("click_id")))
+      .orderBy("error_id", "click_id")
   }
 
   /** Fresh per-invocation durable-sink base for a streaming query
@@ -616,8 +615,7 @@ object EventStreams {
       .filter(col("any_click").isNull)
       .select(col("error_id"), lit(-1L).as("click_id"))
     matched.unionByName(unmatched)
-      .transform(graft.sources.Tables.presentationSorted(_,
-        col("error_id"), col("click_id")))
+      .orderBy("error_id", "click_id")
   }
 
   /** Oracle for [[errorClickLeftOuterAvailableNow]]: the batch LEFT
@@ -711,8 +709,7 @@ object EventStreams {
     val unmatchedClk = sink.filter(col("error_id").isNull)
       .select(lit(-1L).as("error_id"), col("click_id"))
     matched.unionByName(unmatchedErr).unionByName(unmatchedClk)
-      .transform(graft.sources.Tables.presentationSorted(_,
-        col("error_id"), col("click_id")))
+      .orderBy("error_id", "click_id")
   }
 
   /** Oracle for [[errorClickFullOuterAvailableNow]]: the batch FULL
@@ -1947,7 +1944,7 @@ object EventStreams {
       s"neardup admission replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
     spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .transform(graft.sources.Tables.presentationSorted(_, col("batch_idx")))
+      .orderBy("batch_idx")
   }
 
   /** q210 — STREAMING EMBEDDING NEAR-DUP ADMISSION: the sign-LSH
@@ -2132,7 +2129,7 @@ object EventStreams {
       s"embedding neardup replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
     spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .transform(graft.sources.Tables.presentationSorted(_, col("batch_idx")))
+      .orderBy("batch_idx")
   }
 
   /** q143 — DURABLE sink + checkpoint-recovery restart, the
@@ -2217,8 +2214,7 @@ object EventStreams {
     }
     // batch read of the sink: committed files only, via _spark_metadata
     spark.read.parquet(sinkDir)
-      .transform(graft.sources.Tables.presentationSorted(_,
-        col("user_id"), col("session_start")))
+      .orderBy("user_id", "session_start")
   }
 
   /** q146 — watermark ENFORCEMENT made driver-visible (q134 proves the
@@ -2803,7 +2799,6 @@ object EventStreams {
       s"upsert replay ran $nData data batches - the cross-batch merge " +
         "path was NOT exercised")
     val finalDir = versionsBelow(Long.MaxValue).last._2
-    graft.sources.Tables.presentationSorted(
-      spark.read.parquet(finalDir.getPath), col("user_id"))
+    spark.read.parquet(finalDir.getPath).orderBy("user_id")
   }
 }

@@ -249,4 +249,27 @@ class MtimeCacheSpec extends SparkSpec {
     assert(Tables.eventsTsIsNanos(spark, f2.getPath),
       "rewritten LongType ts must be re-sniffed as nanos (mtime cache miss)")
   }
+
+  test("eventsRows refreshes when events.parquet is overwritten byte-for-byte in place") {
+    val s = spark
+    import s.implicits._
+    def events(n: Int) = (0 until n).map(i => (i.toLong,
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), i % 5L, "view", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val dir = tmpDir("events-rows")
+    val f = writeTable(dir, "events", events(20), 0L)
+    assert(Tables.eventsRows(spark, dir.getPath) === 20)
+
+    // regenerate elsewhere, then truncate-and-write the same file: its
+    // directory entry is untouched, so only the file's own length and
+    // mtime say it changed
+    val regen = writeTable(tmpDir("events-rows-regen"), "events", events(35), 0L)
+    val dirMtime = dir.lastModified
+    val prevMtime = f.lastModified
+    java.nio.file.Files.write(f.toPath, java.nio.file.Files.readAllBytes(regen.toPath))
+    f.setLastModified(math.max(System.currentTimeMillis, prevMtime + 1001))
+    assert(dir.lastModified === dirMtime, "an in-place write must not touch the directory")
+    assert(Tables.eventsRows(spark, dir.getPath) === 35,
+      "the regenerated file's footer must be read again")
+  }
 }

@@ -597,7 +597,9 @@ class PlanSpec extends SparkSpec {
       ("q06", Insights.categoryShare(spark, sf0001),
         Seq("revenue" -> false, "brand" -> true)),
       ("q124", graft.streaming.EventStreams.hourlyByTypeAvailableNow(spark, sf0001),
-        Seq("window_start" -> true, "event_type" -> true)))
+        Seq("window_start" -> true, "event_type" -> true)),
+      ("q133", graft.streaming.EventStreams.errorClickPairsAvailableNow(spark, sf0001),
+        Seq("error_id" -> true, "click_id" -> true)))
     cases.foreach { case (name, df, keys) =>
       val rows = df.collect().toSeq
       assert(rows.nonEmpty, s"$name: empty result")
@@ -610,7 +612,7 @@ class PlanSpec extends SparkSpec {
 
   test("result sorts: a frame above the row bound keeps the distributed range sort") {
     import org.apache.spark.sql.functions._
-    val big = spark.range(0, graft.sources.Tables.PresentationSortMaxRows + 1, 1, 8)
+    val big = spark.range(0, graft.sources.PresentationSort.MaxRows + 1, 1, 8)
       .toDF("id").withColumn("k", pmod(col("id") * 2654435761L, lit(1000003L)))
       .orderBy("k", "id")
     val rows = big.collect().toSeq
@@ -674,6 +676,134 @@ class PlanSpec extends SparkSpec {
       assert(windowStages.forall(_._1 > 1),
         s"the rank window ran in a single task: $windowStages\n${finalPlan(df)}")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      // drain the async listener bus before reading the count
+      Thread.sleep(500)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Whether the finalized plan sorts in one partition: no range
+    * exchange, and a coalesce or single-partition shuffle below the sort.
+    */
+  private def onePartitionSort(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = finalPlan(df)
+    !p.toLowerCase.contains("rangepartitioning") &&
+      (p.contains("Coalesce 1") || p.contains("SinglePartition"))
+  }
+
+  test("result sorts: q94's join-topped result needs no build job and no range exchange") {
+    // pairs ⋈ per-item counts (distinct on the join key, twice) × one
+    // order count: the pair side's runtime count bounds the result
+    val (df, buildJobs) = jobsDuring(graft.operators.RetailBi.basketPairs(spark, sf0001))
+    assert(buildJobs === 0, "building q94's frame ran Spark jobs")
+    val rows = df.collect().toSeq
+    assert(rows.nonEmpty)
+    assert(sortedOn(rows, "part_a" -> true, "part_b" -> true))
+    assert(onePartitionSort(df), s"q94 did not plan a one-partition sort:\n${finalPlan(df)}")
+  }
+
+  test("result sorts: parquet read-backs are bounded by the footers of their committed files") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_readback").toFile
+    def write(rows: Long, name: String): String = {
+      val path = new java.io.File(dir, name).getPath
+      spark.range(0, rows, 1, 8).toDF("id")
+        .withColumn("k", pmod(col("id") * 2654435761L, lit(1000003L)))
+        .write.parquet(path)
+      path
+    }
+    def checkSorted(df: org.apache.spark.sql.DataFrame, rows: Long): Unit = {
+      val got = df.collect().toSeq
+      assert(got.length === rows)
+      assert(sortedOn(got, "k" -> true, "id" -> true))
+    }
+    try uncoalesced {
+      val small = write(1000, "small")
+      val big = write(graft.sources.PresentationSort.MaxRows + 1, "big")
+      val smallSorted = spark.read.parquet(small).orderBy("k", "id")
+      checkSorted(smallSorted, 1000)
+      assert(onePartitionSort(smallSorted),
+        s"a 1000-row read-back must sort in one partition:\n${finalPlan(smallSorted)}")
+      val bigSorted = spark.read.parquet(big).orderBy("k", "id")
+      checkSorted(bigSorted, graft.sources.PresentationSort.MaxRows + 1)
+      assert(finalPlan(bigSorted).toLowerCase.contains("rangepartitioning"),
+        s"a read-back above the bound must keep the range sort:\n${finalPlan(bigSorted)}")
+
+      // a streaming file sink whose directory also holds files no batch
+      // committed (a failed attempt's leftovers): only the committed
+      // 1000 rows count, not what a directory listing would find
+      val sink = new java.io.File(dir, "sink")
+      spark.readStream.schema(spark.read.parquet(small).schema).parquet(small)
+        .writeStream.format("parquet")
+        .option("path", sink.getPath)
+        .option("checkpointLocation", new java.io.File(dir, "ckpt").getPath)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      new java.io.File(big).listFiles.filter(_.getName.endsWith(".parquet")).foreach(f =>
+        java.nio.file.Files.copy(f.toPath, new java.io.File(sink, s"orphan-${f.getName}").toPath))
+      val sinkSorted = spark.read.parquet(sink.getPath).orderBy("k", "id")
+      checkSorted(sinkSorted, 1000)
+      assert(onePartitionSort(sinkSorted),
+        s"a sink read-back must count committed files only:\n${finalPlan(sinkSorted)}")
+      // a union is bounded by the sum of its inputs
+      val unionSorted = spark.read.parquet(small)
+        .union(spark.read.parquet(sink.getPath)).orderBy("k", "id")
+      checkSorted(unionSorted, 2000)
+      assert(onePartitionSort(unionSorted),
+        s"a union of bounded read-backs must sort in one partition:\n${finalPlan(unionSorted)}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("result sorts: a small many-to-many join keeps the range sort") {
+    import org.apache.spark.sql.functions._
+    // 100k result rows, but neither side is distinct on the key, so
+    // the only bound is the 1000 x 1000 product (the sort key is a
+    // permutation of the ids, so no input ordering satisfies the sort)
+    def side(name: String) = spark.range(0, 1000, 1, 8)
+      .select(pmod(col("id"), lit(10L)).as("key"),
+        pmod(col("id") * 7919L, lit(1000L)).as(name))
+    val df = side("a").join(side("b"), "key").orderBy("a", "b")
+    val rows = uncoalesced(df.collect().toSeq)
+    assert(rows.length === 100000)
+    assert(sortedOn(rows, "a" -> true, "b" -> true))
+    assert(finalPlan(df).toLowerCase.contains("rangepartitioning"),
+      s"a many-to-many join must keep the range sort:\n${finalPlan(df)}")
+  }
+
+  test("result sorts: a left join onto an aggregate AQE has materialized sorts in one partition") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft_stagejoin").toFile
+    try uncoalesced {
+      val path = new java.io.File(dir, "facts").getPath
+      spark.range(0, 2000, 1, 8)
+        .select(pmod(col("id"), lit(300L)).as("key"), col("id"))
+        .write.parquet(path)
+      val facts = spark.read.parquet(path)
+      // no static bound: the footers sit below both aggregates, so
+      // only the runtime counts of their stages bound the join, and
+      // the right stage's distinct key comes from the plan it stands for
+      val df = facts.groupBy("key").agg(count(lit(1)).as("n"))
+        .join(facts.groupBy("key").agg(sum("id").as("s")), Seq("key"), "left")
+        .orderBy("key")
+      val rows = df.collect().toSeq
+      assert(rows.length === 300)
+      assert(sortedOn(rows, "key" -> true))
+      assert(onePartitionSort(df),
+        s"the join onto a materialized aggregate must sort in one partition:\n${finalPlan(df)}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("q184 hybrid: no Window ranks an unlimited embeddings scan") {

@@ -263,36 +263,36 @@ object Insights {
        |ORDER BY revenue DESC, balance_bucket ASC""".stripMargin
 
   /** Dashboard KPI row (F4-F7): total revenue, order count, distinct
-    * customers, total line count. A single global aggregate — partial
-    * aggregation reduces 100 TB to one row per partition before the
-    * 1-row shuffle. countDistinct is exact, as the reference's KPI is;
+    * customers, total line count. One global aggregate over the
+    * order-grain join (see the comment in the body). countDistinct is
+    * exact, as the reference's KPI is;
     * [[kpiSummaryApprox]] (native HllAgg sketch — NOT the built-in
     * `approx_count_distinct`, see its scaladoc) is the knob to flip at
     * extreme cardinality.
     */
   def kpiSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    // Scale shape: revenue/order-count/line-count need NO join (they are
-    // lineitem-local); only the distinct-customer KPI touches orders,
-    // and it joins the pre-distinct orderkey set (order grain), not the
-    // raw fact. One countDistinct per aggregate also avoids the Expand
-    // multiplier a multi-distinct aggregate plans into.
-    val li = Tables.lineitem(spark, sfDir)
-    val liKpis = li.agg(
-      revenueSum.cast("double").as("total_revenue"),
-      // F6 avg order amount: decimal sum -> double -> divide. Exact
-      // cross-engine while sum*10^4 < 2^53 (decimal->double is a
-      // single correctly-rounded conversion in both engines).
-      (revenueSum.cast("double") / count(lit(1)))
-        .as("avg_line_amount"),
-      countDistinct(col("l_orderkey")).as("n_orders"),
-      count(lit(1)).as("n_lines"))
-    val custKpi = li.select("l_orderkey").distinct()
+    // Scale shape: one lineitem pass. The fact collapses to order grain
+    // (1e-4-unit revenue, line count) BEFORE the one orders join, as in
+    // q04, so the join and the global aggregate carry one row per order
+    // and count(*) there is the order count. Only the customer KPI
+    // needs a distinct, and one countDistinct per aggregate plans no
+    // Expand. The inner join is the oracle's own form.
+    val revenue = e4Decimal(sumE4(col("order_rev_e4"))).cast("double")
+    val lines = sum(col("order_lines"))
+    Tables.lineitem(spark, sfDir)
+      .groupBy(col("l_orderkey"))
+      .agg(sumE4(revenueE4).as("order_rev_e4"), count(lit(1)).as("order_lines"))
       .join(Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
-      .agg(countDistinct(col("o_custkey")).as("n_customers"))
-    liKpis.crossJoin(custKpi)
-      .select("total_revenue", "avg_line_amount", "n_orders", "n_customers",
-        "n_lines")
+      .agg(
+        revenue.as("total_revenue"),
+        // F6 avg order amount: decimal sum -> double -> divide. Exact
+        // cross-engine while sum*10^4 < 2^53 (decimal->double is a
+        // single correctly-rounded conversion in both engines).
+        (revenue / lines).as("avg_line_amount"),
+        count(lit(1)).as("n_orders"),
+        countDistinct(col("o_custkey")).as("n_customers"),
+        lines.as("n_lines"))
   }
 
   val kpiSummarySql: String =

@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * on a bounded frame plans as one task from plan facts (static
   * bounds, parquet footer counts, join keys) or AQE runtime row counts.
   * The footer reader [[parquetRows]] is shared by that rule and the
-  * events readers.
+  * events readers. Local files go through [[GraftLocalFs]], which the
+  * session registers for the `file` scheme.
   */
 object Tables {
 
@@ -51,7 +52,10 @@ object Tables {
     "spark.sql.ui.retainedExecutions" -> "64",
     "spark.ui.retainedJobs" -> "200",
     "spark.ui.retainedStages" -> "200",
-    "spark.ui.retainedTasks" -> "10000")
+    "spark.ui.retainedTasks" -> "10000") ++
+    // file: scheme through java.nio, not a chmod/readlink process per
+    // file and rename (no libhadoop); see GraftLocalFs
+    GraftLocalFs.configs
 
   /** Apply [[graftConfigs]] to a builder, inject the [[PresentationSort]]
     * rule (static and AQE runtime optimizer) and construct the session —
@@ -60,7 +64,10 @@ object Tables {
     * nanosAsLong invariant and the result-sort planning hold everywhere.
     * `getOrCreate` silently drops `withExtensions` when a session
     * already exists, so a returned session without the rule fails here
-    * instead of planning every result sort as a range exchange.
+    * instead of planning every result sort as a range exchange. Likewise
+    * a session whose `file:` scheme does not resolve to [[GraftLocalFs]]
+    * (a local `FileSystem` cached before the session was built) fails
+    * instead of forking a process per local file it writes.
     */
   def graftSession(builder: SparkSession.Builder): SparkSession = {
     val spark = graftConfigs
@@ -76,6 +83,7 @@ object Tables {
         state.adaptiveRulesHolder.runtimeOptimizerRules.contains(PresentationSort),
       "graftSession: getOrCreate returned an existing SparkSession built " +
         "without the PresentationSort rule; stop it before building a graft session")
+    GraftLocalFs.requireResolved(state.newHadoopConf())
     spark
   }
 

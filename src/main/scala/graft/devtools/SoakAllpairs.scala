@@ -27,8 +27,7 @@ object SoakAllpairs {
       .config("spark.ui.enabled", "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
-    val docs = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-      spark.sparkContext.defaultParallelism)
+    val docs = Tables.spread(Tables.documents(spark, sfDir))
     val n = Dedup.allPairsJaccardOn(docs, maxCandPerDoc = cap).count()
     val tAll = (System.nanoTime() - t0) / 1e9
     println(s"""{"sfDir":"$sfDir","maxCandPerDoc":$cap,"pairs":$n,""" +

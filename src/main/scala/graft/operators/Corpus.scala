@@ -53,7 +53,7 @@ object Corpus {
   private def shingleHashes(spark: SparkSession, sfDir: String,
       n: Int): DataFrame =
     shingleHashesOf(
-      Tables.withMinParallelism(Tables.documents(spark, sfDir), 16), n)
+      Tables.spread(Tables.documents(spark, sfDir)), n)
 
   /** [[shingleHashes]] over an explicit (possibly pre-restricted)
     * document frame — q196 semi-joins the survivors BEFORE the shingle
@@ -148,8 +148,7 @@ object Corpus {
     * one row of partial counters per (partition, source).
     */
   def qualityGates(spark: SparkSession, sfDir: String): DataFrame = {
-    val gated = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val gated = Tables.spread(Tables.documents(spark, sfDir))
       .withColumn("tks", expr(tokensSparkSql))
       .withColumn("n_tokens", size(col("tks")))
       .withColumn("sum_len",
@@ -186,8 +185,7 @@ object Corpus {
     * grain; same narrow codegen'd scan shape.
     */
   def docGateScores(spark: SparkSession, sfDir: String): DataFrame =
-    withGateScore(Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism))
+    withGateScore(Tables.spread(Tables.documents(spark, sfDir)))
       .select(col("doc_id"), col("score"))
 
   /** The q83 gate battery on any frame with a `text` column: appends
@@ -334,8 +332,7 @@ object Corpus {
     */
   def boilerplateGrams(spark: SparkSession, sfDir: String,
       n: Int = 5): DataFrame = {
-    val inst = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val inst = Tables.spread(Tables.documents(spark, sfDir))
       .withColumn("tks", expr(tokensSparkSql))
       .select(col("source"), col("doc_id"),
         explode(shinglesExpr("tks", n)).as("sh"))
@@ -407,8 +404,7 @@ object Corpus {
   def encodingGate(spark: SparkSession, sfDir: String): DataFrame = {
     val printable = "[\\x20-\\x7e\\t\\n\\r]"
     val ctrl = "[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]"
-    val gated = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val gated = Tables.spread(Tables.documents(spark, sfDir))
       .select(col("source"),
         length(col("text")).as("nc"),
         length(regexp_replace(col("text"), printable, "")).as("non_ascii"),
@@ -563,8 +559,7 @@ object Corpus {
     */
   def bpeMerges(spark: SparkSession, sfDir: String,
       topN: Int = 20): DataFrame = {
-    val words = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val words = Tables.spread(Tables.documents(spark, sfDir))
       .select(explode(expr(tokensSparkSql)).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("f"))
@@ -664,9 +659,7 @@ object Corpus {
     // would compute every doc's signature and then discard the
     // non-admits — at a 1% admit rate that is 100× wasted signature
     // work at scale. Restrict the scan first, then compute.
-    val admittedDocs = Tables.withMinParallelism(
-        Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val admittedDocs = Tables.spread(Tables.documents(spark, sfDir))
       .join(s1, Seq("doc_id"), "left_semi")
     val bands = bandsOf(admittedDocs).localCheckpoint(true)
     val cands = bands
@@ -703,9 +696,7 @@ object Corpus {
     // doc_id % 5 filter pushes to the eval side's scan, and the
     // survivor side semi-joins s2 BEFORE exploding (same reasoning as
     // stage 2's semi-join-first)
-    val docsSpread = Tables.withMinParallelism(
-      Tables.documents(spark, sfDir),
-      spark.sparkContext.defaultParallelism)
+    val docsSpread = Tables.spread(Tables.documents(spark, sfDir))
     val evalH = shingleHashesOf(
         docsSpread.filter(pmod(col("doc_id"), lit(5)) === 0), 5)
       .select("h").distinct()

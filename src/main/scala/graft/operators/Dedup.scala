@@ -58,8 +58,7 @@ object Dedup {
     * canonical keeper = min doc_id per md5(normalized text).
     */
   def exactDedup(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables.documents(spark, sfDir))
       .groupBy(md5(lower(trim(col("text"))).cast("binary")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_doc_id"),
         count(lit(1)).as("n_copies"))
@@ -94,8 +93,7 @@ object Dedup {
     * block — a mid-pipeline global sort would be pure waste).
     */
   def minhashSignaturesRaw(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables.documents(spark, sfDir))
       .select(
         col("doc_id"),
         graft.functions.minhash_sig(col("text"), NumHashes).as("minhash"))
@@ -211,8 +209,7 @@ object Dedup {
     * grain shared by the incremental probes).
     */
   private[operators] def distinctShingles(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism).select(
+    Tables.spread(Tables.documents(spark, sfDir)).select(
       col("doc_id"),
       array_distinct(graft.functions.word_shingles(col("text"))).as("sh"))
 
@@ -550,8 +547,7 @@ object Dedup {
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val sh = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism).select(
+    val sh = Tables.spread(Tables.documents(spark, sfDir)).select(
       col("doc_id"),
       array_distinct(graft.functions.word_shingles(col("text"))).as("sh"))
     cands
@@ -947,8 +943,7 @@ object Dedup {
     // one fused scan computes block + hash set, materialized ONCE
     // (eager checkpoint = the generator barrier AND the reuse point
     // for the cardinality probe + both scoring plans)
-    val base = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val base = Tables.spread(Tables.documents(spark, sfDir))
       .select(
         col("doc_id"),
         element_at(graft.functions.minhash_sig(col("text"), 1), 1).as("block"),
@@ -1052,8 +1047,7 @@ object Dedup {
     simhashRaw(spark, sfDir).orderBy("doc_id")
 
   def simhashRaw(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables.documents(spark, sfDir))
       .select(
         col("doc_id"),
         graft.functions.simhash60(col("text")).as("simhash"))
@@ -1162,8 +1156,7 @@ object Dedup {
   def allPairsJaccard(spark: SparkSession, sfDir: String,
       tauNum: Int = 3, tauDen: Int = 5): DataFrame =
     allPairsJaccardOn(
-      Tables.withMinParallelism(Tables.documents(spark, sfDir),
-        spark.sparkContext.defaultParallelism),
+      Tables.spread(Tables.documents(spark, sfDir)),
       tauNum, tauDen)
 
   /** [[allPairsJaccard]] over an explicit corpus frame, with the
@@ -1272,8 +1265,7 @@ object Dedup {
     // tail stages were 1.4 s + 1.2 s serial). The repartition moves
     // only (doc_a, doc_b) id pairs; scoring parallelism then follows
     // pair volume (the round-13 q33 discipline).
-    val candSpread = Tables.withMinParallelism(cand,
-      docs.sparkSession.sparkContext.defaultParallelism)
+    val candSpread = Tables.spread(cand)
     // verify: one merge-walk intersect count per pair
     // (sorted_intersect_count over ShingleHashesExpr's sorted distinct
     // arrays — value-identical to size(array_intersect), ~10x cheaper,

@@ -34,9 +34,8 @@ object Events {
   def hourlyByType(spark: SparkSession, sfDir: String): DataFrame =
     // spread the scan: the window bucketing + partial agg fuse into the
     // scan stage, which is ONE task on a single-row-group input (sf1
-    // soak: 27x superlinear); no-op on properly split inputs
-    Tables.withMinParallelism(Tables.events(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    // soak: 27x superlinear)
+    Tables.spread(Tables.events(spark, sfDir))
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("window_start"), col("event_type"),
@@ -63,8 +62,7 @@ object Events {
   def slidingHourly(spark: SparkSession, sfDir: String): DataFrame =
     // spread the scan: the 4-window Expand multiplies rows BEFORE the
     // partial agg, all fused into the scan task (sf1 soak: 47x)
-    Tables.withMinParallelism(Tables.events(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables.events(spark, sfDir))
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("window.start").as("window_start"), col("n_events"),

@@ -381,7 +381,7 @@ object Insights {
     // is free next to a shuffle), collapse to (flag, measure, value)
     // grain, run the prefix-sum breakpoints per (flag, measure), then
     // pivot the 6 bounded rows back to the KPI layout.
-    val stacked = Tables.withMinParallelism(li3, 16)
+    val stacked = Tables.spread(li3)
       .select(col("l_returnflag"), explode(array(
         struct(lit("qty").as("vc"),
           col("l_quantity").cast("double").as("v")),
@@ -1153,11 +1153,11 @@ object Insights {
     * presentation-only.
     */
   def topBrandsPerRegion(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
-    // round-16 A/B: the round-15 q44-shape scan spread (projected
-    // withMinParallelism under the all-broadcast plan) measured a
+    // round-16 A/B: the round-15 q44-shape scan spread (then a
+    // projected round-robin exchange under the all-broadcast plan) measured a
     // LOSS here — best-of-6 1.32 s unspread vs 1.80 s spread on one
     // host — because this agg's per-row work is one decimal
-    // multiply-add, too cheap to pay a round-robin exchange of the
+    // multiply-add, too cheap to pay an exchange of the
     // fact scan for (q44 keeps its spread: its Expand×3 rollup is the
     // expensive-pipeline case the spread exists for). Reverted to the
     // plain scan; the storeRegion/part broadcasts (one less fact
@@ -1254,12 +1254,10 @@ object Insights {
     // testdata — the rollup's heavy per-row work serialized 3-wide on
     // a 32-core session (the SMJ it replaced was accidentally
     // providing the spread). Project to the 4 needed columns BEFORE
-    // the spread exchange (guide §2.3). At real scale the scan has
-    // thousands of splits and withMinParallelism is a no-op.
-    Tables.withMinParallelism(Tables.lineitem(spark, sfDir)
+    // the spread exchange (guide §2.3).
+    Tables.spread(Tables.lineitem(spark, sfDir)
         .select("l_partkey", "l_suppkey", "l_extendedprice",
-          "l_discount"),
-        spark.sparkContext.defaultParallelism)
+          "l_discount"))
       .join(Joins.broadcastIfSmall(
           Tables.part(spark, sfDir).select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
@@ -1303,11 +1301,10 @@ object Insights {
   def revenueGroupingSets(spark: SparkSession, sfDir: String): DataFrame =
     // projected scan spread under all-broadcast joins: the q44 shape
     // (Expand x3 + decimal partial agg would fuse into the 3-task scan
-    // stage); no-op at real scan split counts
-    Tables.withMinParallelism(Tables.lineitem(spark, sfDir)
+    // stage)
+    Tables.spread(Tables.lineitem(spark, sfDir)
         .select("l_partkey", "l_suppkey", "l_extendedprice",
-          "l_discount"),
-        spark.sparkContext.defaultParallelism)
+          "l_discount"))
       .join(Joins.broadcastIfSmall(
           Tables.part(spark, sfDir).select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))

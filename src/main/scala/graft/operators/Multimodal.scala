@@ -59,15 +59,14 @@ object Multimodal {
       .as[MediaRecord]
   }
 
-  /** Media spread to real parallelism: the testdata parquet is a
-    * single row group, which would otherwise serialize every fused
-    * per-row codec pass into one task (round-6 lesson).
+  /** The media table (or its `kind` slice) through [[Tables.spread]],
+    * ahead of the fused per-row codec passes.
     */
-  private def mediaSpread(spark: SparkSession,
-      sfDir: String): Dataset[MediaRecord] = {
+  private def mediaSpread(spark: SparkSession, sfDir: String,
+      kind: Option[String] = None): Dataset[MediaRecord] = {
     import spark.implicits._
-    Tables.withMinParallelism(mediaFromDocuments(spark, sfDir).toDF(),
-        spark.sparkContext.defaultParallelism)
+    val media = mediaFromDocuments(spark, sfDir)
+    Tables.spread(kind.fold(media)(k => media.filter(col("kind") === k)).toDF())
       .as[MediaRecord]
   }
 
@@ -388,18 +387,9 @@ object Multimodal {
     }
   }
 
-  /** Registered q156: documents → real BMP bytes → real decode. The
-    * spread repartition keeps the fused encode+decode off the testdata's
-    * single-row-group scan task (Tables.withMinParallelism note).
-    */
-  def mediaDecode(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val media = Tables.withMinParallelism(
-        mediaFromDocuments(spark, sfDir).toDF(),
-        spark.sparkContext.defaultParallelism)
-      .as[MediaRecord]
-    bmpDecode(bmpEncode(media)).toDF().orderBy("media_id")
-  }
+  /** Registered q156: documents → real BMP bytes → real decode. */
+  def mediaDecode(spark: SparkSession, sfDir: String): DataFrame =
+    bmpDecode(bmpEncode(mediaSpread(spark, sfDir))).toDF().orderBy("media_id")
 
   /** DuckDB oracle for [[mediaDecode]] — every decoded fact restated
     * from the source text (ASCII contract, see [[mediaFrames]]):
@@ -568,18 +558,11 @@ object Multimodal {
   }
 
   /** Registered q166: the "audio" slice of the media table → real
-    * deflate container → real inflate + CRC-verified decode. The spread
-    * repartition keeps the fused encode+decode off the testdata's
-    * single-row-group scan task.
+    * deflate container → real inflate + CRC-verified decode.
     */
-  def audioDecodeRun(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val media = Tables.withMinParallelism(
-        mediaFromDocuments(spark, sfDir).filter(col("kind") === "audio").toDF(),
-        spark.sparkContext.defaultParallelism)
-      .as[MediaRecord]
-    audioDecode(audioEncode(media)).toDF().orderBy("media_id")
-  }
+  def audioDecodeRun(spark: SparkSession, sfDir: String): DataFrame =
+    audioDecode(audioEncode(mediaSpread(spark, sfDir, Some("audio"))))
+      .toDF().orderBy("media_id")
 
   /** DuckDB oracle for [[audioDecodeRun]] — every decoded fact restated
     * from the source text (ASCII contract, see [[mediaFrames]]):
@@ -674,17 +657,12 @@ object Multimodal {
     * The md5 column is dropped here (NUL padding puts it outside
     * DuckDB's string model; ExtensionsSpec pins it brute-force).
     */
-  def mediaResize(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val media = Tables.withMinParallelism(
-        mediaFromDocuments(spark, sfDir).filter(col("kind") === "image").toDF(),
-        spark.sparkContext.defaultParallelism)
-      .as[MediaRecord]
-    bmpDecode(bmpResize(bmpEncode(media))).toDF()
+  def mediaResize(spark: SparkSession, sfDir: String): DataFrame =
+    bmpDecode(bmpResize(bmpEncode(mediaSpread(spark, sfDir, Some("image")))))
+      .toDF()
       .select("media_id", "file_size", "width", "height", "px_sum",
         "px_nonzero")
       .orderBy("media_id")
-  }
 
   /** DuckDB oracle for [[mediaResize]] — the integer nearest-neighbor
     * gather replayed over the source text: source grid is 32 px wide
@@ -886,18 +864,11 @@ object Multimodal {
 
   /** Registered q168: the "video" media slice → seekable deflate
     * container → directory-seeked sample of every 4th frame, inflated
-    * and CRC-verified. The spread repartition keeps the fused
-    * encode+sample off the testdata's single-row-group scan task.
+    * and CRC-verified.
     */
-  def videoFramesRun(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val media = Tables.withMinParallelism(
-        mediaFromDocuments(spark, sfDir).filter(col("kind") === "video").toDF(),
-        spark.sparkContext.defaultParallelism)
-      .as[MediaRecord]
-    videoSampleFrames(videoEncode(media)).toDF()
-      .orderBy("media_id", "frame_idx")
-  }
+  def videoFramesRun(spark: SparkSession, sfDir: String): DataFrame =
+    videoSampleFrames(videoEncode(mediaSpread(spark, sfDir, Some("video"))))
+      .toDF().orderBy("media_id", "frame_idx")
 
   /** DuckDB oracle for [[videoFramesRun]] — every sampled frame's facts
     * restated from the source text (ASCII contract, see
@@ -947,12 +918,8 @@ object Multimodal {
     */
   def sceneChanges(spark: SparkSession, sfDir: String,
       threshold: Long = 1000): DataFrame = {
-    import spark.implicits._
-    val media = Tables.withMinParallelism(
-        mediaFromDocuments(spark, sfDir).filter(col("kind") === "video").toDF(),
-        spark.sparkContext.defaultParallelism)
-      .as[MediaRecord]
-    val frames = videoSampleFrames(videoEncode(media), step = 1).toDF()
+    val frames = videoSampleFrames(
+      videoEncode(mediaSpread(spark, sfDir, Some("video"))), step = 1).toDF()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("media_id").orderBy("frame_idx")
     frames

@@ -278,8 +278,7 @@ object Sampling {
     // q83/q194/q196/q202): all-four-gates-pass == score 4, so a future
     // threshold tweak changes every consumer together (round-12 ADVICE)
     val gated = Corpus.withGateScore(
-        Tables.withMinParallelism(Tables.documents(spark, sfDir),
-          spark.sparkContext.defaultParallelism))
+        Tables.spread(Tables.documents(spark, sfDir)))
       .filter(col("score") === 4)
     val supply = gated.groupBy("source")
       .agg(sum(col("n_tokens").cast("long")).as("supply_tokens"))
@@ -328,8 +327,7 @@ object Sampling {
     val quotas = tokenApportionment(spark, sfDir, budget)
       .select(col("source"), col("final_tokens"))
     val admitted = Corpus.withGateScore(
-        Tables.withMinParallelism(Tables.documents(spark, sfDir),
-          spark.sparkContext.defaultParallelism))
+        Tables.spread(Tables.documents(spark, sfDir)))
       .filter(col("score") === 4)
       .select(col("doc_id"), col("source"),
         col("n_tokens").cast("long").as("n_tokens"),

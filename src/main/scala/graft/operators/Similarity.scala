@@ -349,8 +349,7 @@ object Similarity {
     // ids-only banded frame: lsh_sig runs ONCE per vector instead of
     // once per self-join side, and the embeddings scan feeds the
     // banding once (round-12 ADVICE — the embeddingNeardup idiom)
-    val emb = Tables.withMinParallelism(Tables.embeddings(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val emb = Tables.spread(Tables.embeddings(spark, sfDir))
       .withColumn("sig", graft.functions.lsh_sig(col("embedding"), planeSigns))
     val bandExpr =
       s"""transform(sequence(0, ${nBands - 1}),
@@ -1967,8 +1966,7 @@ object Similarity {
       threshold: Double = 0.95, maxCandPerVec: Long = 6144): DataFrame = {
     // spread before banding: sig + the candidate join probe fuse into
     // the scan stage (single-row-group inputs = one task otherwise)
-    val emb = Tables.withMinParallelism(Tables.embeddings(spark, sfDir),
-        spark.sparkContext.defaultParallelism)
+    val emb = Tables.spread(Tables.embeddings(spark, sfDir))
       .withColumn("sig", graft.functions.lsh_sig(col("embedding"), planeSigns))
     // checkpointed ids+sig frame: one signature computation feeds the
     // histogram (dial choice) and both sides of the candidate self-join

@@ -111,9 +111,8 @@ object Star {
     // Spread the fact scan before the fused per-row work: the broadcast
     // probes + date_key formatting + downstream shuffle write all fuse
     // into the scan stage, which on a single-row-group input runs at
-    // file-split parallelism (1-3 tasks). No-op on many-row-group
-    // production inputs (the established guard, see Tables).
-    val li = Tables.withMinParallelism(Tables.lineitem(spark, sfDir), 16)
+    // file-split parallelism (1-3 tasks).
+    val li = Tables.spread(Tables.lineitem(spark, sfDir))
     val ord = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"))
     // The rank-keyed dim builds each run two small eager jobs (range

@@ -21,12 +21,10 @@ object TextAnalysis {
   /** Documents scan spread to the session's parallelism before the
     * fused per-row text work (regex scans, token splits, gram explodes)
     * — single-row-group inputs otherwise run the whole pass in one
-    * task (sf1 soak: 6-8x superlinear on every text query). No-op on
-    * properly split production inputs; see Tables.withMinParallelism.
+    * task (sf1 soak: 6-8x superlinear on every text query).
     */
   private def spreadDocs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.withMinParallelism(Tables.documents(spark, sfDir),
-      spark.sparkContext.defaultParallelism)
+    Tables.spread(Tables.documents(spark, sfDir))
 
   /** 60-bit hash from md5 hex (first 15 nibbles), usable as a portable,
     * seedable hash in both engines: Spark `conv(substr(md5(x),1,15),16,10)`,
@@ -569,8 +567,7 @@ object TextAnalysis {
   def keywordSearch(spark: SparkSession, sfDir: String,
       terms: Seq[String] = Seq("scan", "join", "hash"),
       k: Int = 20): DataFrame = {
-    val docs = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-      spark.sparkContext.defaultParallelism)
+    val docs = spreadDocs(spark, sfDir)
     val postings = docs
       .select(col("doc_id"),
         explode(expr("split(lower(trim(text)), '\\\\s+')")).as("t"))
@@ -640,8 +637,7 @@ object TextAnalysis {
   def bm25Search(spark: SparkSession, sfDir: String,
       terms: Seq[String] = Seq("scan", "join", "hash"),
       k: Int = 20): DataFrame = {
-    val docs = Tables.withMinParallelism(Tables.documents(spark, sfDir),
-      spark.sparkContext.defaultParallelism)
+    val docs = spreadDocs(spark, sfDir)
     val toks = docs.select(col("doc_id"),
       expr("split(lower(trim(text)), '\\\\s+')").as("tks"))
     val postings = toks

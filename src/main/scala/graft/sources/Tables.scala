@@ -621,7 +621,7 @@ object Tables {
     * accumulate-tiny-appends problem that kills scan parallelism
     * bookkeeping at 100 TB). Sizing comes from the optimized plan's
     * statistics (file footers — no job), the rewrite is one
-    * round-robin repartition, and the swap keeps the original as a
+    * [[writeParquetFiles]], and the swap keeps the original as a
     * `_compact_bak` directory until the rewrite is renamed into place:
     * a failed write leaves the original untouched, and a crash
     * mid-swap leaves the data recoverable in the backup — no window
@@ -636,7 +636,7 @@ object Tables {
     val nFiles = ((inputBytes + targetBytes - 1) / targetBytes)
       .max(BigInt(1)).min(BigInt(1 << 20)).toInt
     val tmp = path + "_compact_tmp"
-    df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
+    writeParquetFiles(df, tmp, nFiles)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
     val dst = new org.apache.hadoop.fs.Path(path)
@@ -686,7 +686,7 @@ object Tables {
   /** JDBC batch sink (A3): executeBatch every `batchSize` rows, exactly
     * the reference's `cursor.executemany` batching (5000,
     * `etl/config.ini:26`). One connection per partition — writer
-    * parallelism = input partitions; `df.repartition(n)` is the knob.
+    * parallelism = input partitions, so the caller sets it.
     */
   def writeJdbc(df: DataFrame, url: String, table: String,
       mode: String = "append",
@@ -700,18 +700,44 @@ object Tables {
       .mode(mode)
       .save()
 
-  /** Ensure at least `min` partitions before CPU-heavy per-row work.
+  /** `df` spread to `defaultParallelism` partitions, for CPU-heavy
+    * per-row work fused above it.
     *
     * The driver testdata ships one row group per parquet file, so a scan
-    * stage is ONE task no matter the split config — an expensive
-    * projection fused into it runs single-threaded. At 100 TB the input
-    * has thousands of row groups and this is a no-op (the partition
-    * count check costs only a file listing); the round-robin shuffle
-    * only fires for pathologically under-split inputs, where shuffling
-    * the raw rows is cheaper than serial compute.
+    * stage is ONE task no matter the split config, and an expensive
+    * projection fused into it runs single-threaded. An input that already
+    * has `defaultParallelism` or more partitions (production inputs with
+    * thousands of row groups) comes back unchanged; the check costs only
+    * a file listing.
+    *
+    * The exchange hashes every column. A round-robin `repartition(n)`
+    * would sort each input partition first
+    * (`spark.sql.execution.sortBeforeRepartition`, so that a retried
+    * task sends the same rows to the same reducers), and on a one-split
+    * input that is one task sorting the whole table. A hash exchange is
+    * just as retry-deterministic without the sort, because the row's own
+    * values pick its partition. Every column, not a key, so a
+    * low-cardinality leading column cannot collapse the spread.
     */
-  def withMinParallelism(df: DataFrame, min: Int): DataFrame =
-    if (df.rdd.getNumPartitions >= min) df else df.repartition(min)
+  def spread(df: DataFrame): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= n) df else hashPartitioned(df, n)
+  }
+
+  /** Overwrite `path` with `df` as `nFiles` parquet files (at most: a
+    * hash partition can be empty). One file takes a `coalesce(1)`, no
+    * exchange; more take the [[spread]] exchange.
+    */
+  def writeParquetFiles(df: DataFrame, path: String, nFiles: Int): Unit =
+    (if (nFiles > 1) hashPartitioned(df, nFiles) else df.coalesce(1))
+      .write.mode("overwrite").parquet(path)
+
+  /** `df` in `n` partitions hashed on every column, each named through
+    * `df.col` with backquotes so names with dots resolve.
+    */
+  private def hashPartitioned(df: DataFrame, n: Int): DataFrame =
+    df.repartition(n,
+      df.columns.toSeq.map(c => df.col("`" + c.replace("`", "``") + "`")): _*)
 
   /** Daemon-thread pool for overlapping INDEPENDENT driver actions
     * inside one query (guide §2.6: jobs are only sequential because

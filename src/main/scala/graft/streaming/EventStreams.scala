@@ -1466,11 +1466,9 @@ object EventStreams {
           // spread the fused gate scan: a micro-batch frame inherits
           // the arriving FILE's split count (7 tasks at sf10 for a
           // 32-core session, Prof round-14), not defaultParallelism —
-          // the round-6 withMinParallelism rule applies to foreachBatch
-          // frames too
+          // Tables.spread applies to foreachBatch frames too
           graft.operators.Corpus.withGateScore(
-              graft.sources.Tables.withMinParallelism(batch,
-                batch.sparkSession.sparkContext.defaultParallelism))
+              graft.sources.Tables.spread(batch))
             .groupBy(col("source"))
             .agg(count(lit(1)).as("n_docs"),
               sum((col("score") === 4).cast("long")).as("n_admitted"),
@@ -1723,9 +1721,7 @@ object EventStreams {
         (liveBytes + foldTargetBytes - 1) / foldTargetBytes).toInt
       val folded = live.map(d => spark.read.parquet(d.getPath))
         .reduce(_ unionByName _) // pure band-row copy
-      (if (nOut > 1) folded.repartition(nOut)
-       else folded.coalesce(1))
-        .write.mode("overwrite").parquet(gen.getPath)
+      graft.sources.Tables.writeParquetFiles(folded, gen.getPath, nOut)
       val liveMetas = live.map(segRowMeta)
       writeSegRowMeta(gen,
         if (liveMetas.exists(_ >= Long.MaxValue / 8)) Long.MaxValue / 8
@@ -1768,7 +1764,7 @@ object EventStreams {
           // at sf10 made the scan stage 9.4 s where 32 spread tasks
           // take ~2 s (Prof round-14)
           // scored is ALWAYS checkpointed: its two consumers would
-          // otherwise each replay the withMinParallelism SHUFFLE plus
+          // otherwise each replay the spread SHUFFLE plus
           // the gate battery — a round-14 A/B of skipping below
           // 1 MiB/batch measured q205 ~1 s SLOWER at sf0.1 (the
           // recompute cost is fixed shuffle machinery, not data size,
@@ -1776,9 +1772,8 @@ object EventStreams {
           val pool = batchOverlapPool()
           try {
           val scored = graft.operators.Corpus.withGateScore(
-              graft.sources.Tables.withMinParallelism(
-                batch.filter(pmod(col("doc_id"), lit(5)) =!= 0),
-                spark.sparkContext.defaultParallelism))
+              graft.sources.Tables.spread(
+                batch.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
             .localCheckpoint(true)
           // OVERLAP 1 (round-16, guide §2.6): the ledger-stats agg and
           // the band construction both read the scored checkpoint
@@ -1830,9 +1825,8 @@ object EventStreams {
                 s"neardup b$batchId: segment commit")
               val segParts = math.max(1L, math.min(64L,
                 nGate * graft.operators.Dedup.Bands / 500000L + 1L)).toInt
-              (if (segParts > 1) batchBands.repartition(segParts)
-               else batchBands.coalesce(1))
-                .write.mode("overwrite").parquet(segDir.getPath)
+              graft.sources.Tables.writeParquetFiles(batchBands,
+                segDir.getPath, segParts)
               writeSegRowMeta(segDir,
                 nGate * graft.operators.Dedup.Bands)
             }
@@ -1873,10 +1867,9 @@ object EventStreams {
           // 8 tasks at sf10 — the repartition only moves the few
           // surviving candidate docs' text
           val sh = graft.operators.Corpus.shinglesOf(
-            graft.sources.Tables.withMinParallelism(
+            graft.sources.Tables.spread(
               graft.sources.Tables.documents(spark, sfDir)
-                .join(ids, Seq("doc_id"), "left_semi"),
-              spark.sparkContext.defaultParallelism))
+                .join(ids, Seq("doc_id"), "left_semi")))
           val dropped = pairs
             .join(sh.select(col("doc_id").as("doc_a"),
               col("sh").as("sh_a")), Seq("doc_a"))
@@ -2013,8 +2006,7 @@ object EventStreams {
           // scale — the round-14 foreachBatch parallelism rule), then
           // ONE checkpoint feeds the stats agg, the segment write, and
           // both sides of the probe join
-          val bands = graft.sources.Tables.withMinParallelism(batch,
-              spark.sparkContext.defaultParallelism)
+          val bands = graft.sources.Tables.spread(batch)
             .select(col("vec_id"),
               graft.functions.lsh_sig(col("embedding"),
                 graft.operators.Similarity.planeSigns)
@@ -2051,9 +2043,8 @@ object EventStreams {
                 s"embneardup b$batchId: segment commit")
               val segParts = math.max(1L,
                 math.min(64L, bandRows / 500000L + 1L)).toInt
-              (if (segParts > 1) bands.repartition(segParts)
-               else bands.coalesce(1))
-                .write.mode("overwrite").parquet(segDir.getPath)
+              graft.sources.Tables.writeParquetFiles(bands,
+                segDir.getPath, segParts)
               writeSegRowMeta(segDir, bandRows)
             }
           })

@@ -337,21 +337,42 @@ class PlanSpec extends SparkSpec {
   }
 
   test("per-row-heavy text scans spread before fused work (single-row-group guard)") {
-    // the sf1 soak found these serializing their regex/shingle work into
-    // ONE task on single-row-group inputs; the spread must stay in the
-    // plan (a round-robin exchange below the heavy projection). No-op
-    // protection: on many-row-group production inputs the helper keeps
-    // the native split count and no exchange appears — testdata is the
-    // single-group shape, so the exchange must be present here.
+    // the sf1 soak found these serializing their per-row work into ONE
+    // task on single-row-group inputs (testdata is that shape), so the
+    // spread must stay in the plan: a hash exchange of defaultParallelism
+    // partitions over every column of the spread frame, with no sort
+    // feeding it. A round-robin exchange sorts its whole input first
+    // (sortBeforeRepartition), so none may appear anywhere.
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val width = spark.sparkContext.defaultParallelism
     val heavy = Seq(
-      graft.operators.TextAnalysis.textStats(spark, sf0001),
-      graft.operators.TextAnalysis.piiRedaction(spark, sf0001),
-      graft.operators.Corpus.qualityGates(spark, sf0001),
-      graft.operators.Events.slidingHourly(spark, sf0001))
-    heavy.foreach { df =>
-      val p = df.queryExecution.sparkPlan.toString
-      assert(p.contains("RoundRobinPartitioning"),
-        s"expected a spread (round-robin) exchange under the fused work:\n$p")
+      "q19 textStats" -> graft.operators.TextAnalysis.textStats(spark, sf0001),
+      "q57 piiRedaction" -> graft.operators.TextAnalysis.piiRedaction(spark, sf0001),
+      "q83 qualityGates" -> graft.operators.Corpus.qualityGates(spark, sf0001),
+      "q27 slidingHourly" -> graft.operators.Events.slidingHourly(spark, sf0001),
+      "q09 factSales" -> Star.factSales(spark, sf0001),
+      "q26 hourlyByType" -> graft.operators.Events.hourlyByType(spark, sf0001),
+      "q14 exactDedup" -> graft.operators.Dedup.exactDedup(spark, sf0001))
+    heavy.foreach { case (name, df) =>
+      val p = df.queryExecution.sparkPlan
+      val roundRobin = p.collect { case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e }
+      assert(roundRobin.isEmpty, s"$name plans a round-robin exchange:\n$p")
+      val spreads = p.collect { case e: ShuffleExchangeExec => e }.filter { e =>
+        e.outputPartitioning match {
+          case h: HashPartitioning => h.numPartitions == width &&
+            e.child.output.forall(h.references.contains)
+          case _ => false
+        }
+      }
+      assert(spreads.nonEmpty,
+        s"$name: no $width-way hash exchange over every column of its input:\n$p")
+      spreads.foreach { e =>
+        assert(e.child.collectFirst { case s: SortExec => s }.isEmpty,
+          s"$name: a sort feeds the spread exchange:\n$p")
+      }
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.devtools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 import graft.sources.Tables
 import graft.streaming.EventStreams
@@ -60,12 +59,8 @@ object SoakStream {
 
     val stream = EventStreams.readEventStream(spark, staging,
       maxFilesPerTrigger = Some(1))
-    val q = EventStreams.sessionWindows(stream)
-      .writeStream.format("memory").queryName("soak_sessions")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val (q, sink) = EventStreams.drain(EventStreams.sessionWindows(stream),
+      EventStreams.memorySink("soak"), width = 8) // state partitions
     val tAll = (System.nanoTime() - t0) / 1e9
 
     q.recentProgress.foreach { p =>
@@ -79,7 +74,7 @@ object SoakStream {
         s""""stateMemBytes":${l(_.memoryUsedBytes)},""" +
         s""""durationMs":${p.durationMs.getOrDefault("triggerExecution", -1L)}}""")
     }
-    val emitted = spark.table("soak_sessions").count()
+    val emitted = sink.count()
     println(s"""{"sfDir":"$sfDir","nFiles":$nFiles,"keyMult":$keyMult,"emitted":$emitted,""" +
       s""""stageSec":${math.rint(tStage * 100) / 100},""" +
       s""""totalSec":${math.rint(tAll * 100) / 100}}""")

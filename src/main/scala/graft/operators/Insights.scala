@@ -586,21 +586,13 @@ object Insights {
     // driver calls them sequentially; the scheduler is thread-safe
     // and job descriptions are thread-local). Serial before: ~1 s HLL
     // + ~2.5 s digest/exact; overlapped they cost max(), not sum().
-    // daemon thread (round-15 ADVICE #2): if a main-thread action
-    // between submit and get throws, the pool must not keep the JVM
-    // from exiting — shutdown still runs in the finally below on the
-    // normal path
-    val hllPool = java.util.concurrent.Executors.newFixedThreadPool(1,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-hll-overlap")
-        t.setDaemon(true)
-        t
-      })
-    val hllBaseF = hllPool.submit(
-      new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame =
-          ordAgg.crossJoin(custAgg).localCheckpoint(true)
-      })
+    // daemon thread (round-15 ADVICE #2, Tables.overlapPool): if a
+    // main-thread action between submit and get throws, the pool must
+    // not keep the JVM from exiting — shutdown still runs in the
+    // finally below on the normal path
+    val hllPool = Tables.overlapPool(1)
+    val hllBaseF = Tables.submitJob(hllPool, spark, "q136: hll dials")(
+      ordAgg.crossJoin(custAgg).localCheckpoint(true))
     def hllRowsOf(hllBase: DataFrame) = hllDials.map { r =>
       val d = dialCol(r)
       val regs = HllAgg.registersForRsd(r)

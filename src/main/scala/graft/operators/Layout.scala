@@ -202,16 +202,14 @@ object Layout {
       Bucketing.writeBucketed(Tables.orders(spark, sfDir)
         .select(col("o_orderkey").as("k"), col("o_totalprice")), ot, "k", 16)
     }
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val joined = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val joined = Tables.withConfs(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> Some("-1")) {
       val j = Bucketing.coLocatedJoin(spark, lt, ot, "k")
       val p = j.queryExecution.sparkPlan.toString
       require(!p.contains("Exchange"),
         s"bucketed join planned a shuffle - co-location broken:\n$p")
       j
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-      prevThreshold)
+    }
     joined.groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"),
         sum(floor(col("l_quantity") * 100).cast("long")).cast("long")

@@ -103,9 +103,15 @@ object Tables {
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
 
+  /** Name prefix of the memory tables that streaming replays drain
+    * into (`<prefix><tag>_<n>`, built by
+    * `graft.streaming.EventStreams.memorySink`).
+    */
+  val StreamTablePrefix = "graft_stream_"
+
   /** Drop the memory-sink temp views left by completed streaming
-    * replays (each AvailableNow run registers a fresh
-    * `graft_stream_<type>_<n>` table whose FULL drained result lives in
+    * replays (each replay registers a fresh [[StreamTablePrefix]]
+    * table whose FULL drained result lives in
     * driver heap — a many-query session otherwise accumulates every
     * past replay's rows for the JVM lifetime). Same contract as
     * [[freeTransientBlocks]]: call BETWEEN queries, after the current
@@ -114,8 +120,29 @@ object Tables {
     */
   def dropDrainedStreamTables(spark: SparkSession): Unit =
     spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_stream_"))
+      .filter(_.name.startsWith(StreamTablePrefix))
       .foreach(t => spark.catalog.dropTempView(t.name))
+
+  /** Run `body` with every `key -> Some(value)` set on the session,
+    * then put each of those keys back exactly, also when `body`
+    * throws: a key that was set gets its value again, and a key that
+    * was not set is unset (not pinned to its default). `key -> None`
+    * leaves the key as it is. The one place graft code sets a session
+    * conf: execution settings live on the session, so a scope that
+    * leaks one changes every later query.
+    */
+  def withConfs[A](spark: SparkSession, confs: (String, Option[String])*)(
+      body: => A): A = {
+    val scoped = confs.collect { case (k, Some(v)) => (k, v) }
+    val explicit = spark.conf.getAll
+    val prev = scoped.map { case (k, _) => (k, explicit.get(k)) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   // --------------------------------------------------------------------
   // Driver testdata schemas (parquet). Declaring them (rather than relying

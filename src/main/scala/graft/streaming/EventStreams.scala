@@ -4,7 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming form of the event analytics (SURVEY.md §7.5):
   * the same windowed aggregations as [[graft.operators.Events]], plus
@@ -348,19 +349,12 @@ object EventStreams {
   def sessionizeStatefulAvailableNow(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_stateful_" + runCounter.incrementAndGet()
-    withStatePartitions(spark, 8, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Event]
-      val q = sessionizeStateful(ev)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy("user_id", "session_start")
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event]
+    val (_, sink) = drain(sessionizeStateful(ev).toDF(),
+      memorySink("stateful"), stateWidth(spark, 8, sfDir))
+    sink.orderBy("user_id", "session_start")
   }
 
   /** Oracle for [[sessionizeStatefulAvailableNow]]: gap-sessionize
@@ -433,19 +427,13 @@ object EventStreams {
     * pins the dedup, not just the rollup.
     */
   def dedupStreamAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dedup_" + runCounter.incrementAndGet()
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // first-sight emission: the finalization batch would only evict
-    // state, never emit ([[withoutNoDataBatch]])
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = dedupStream(ev.unionByName(ev))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name)
+    // state, never emit ([[start]]'s skipFinalBatch)
+    val (_, sink) = drain(dedupStream(ev.unionByName(ev)),
+      memorySink("dedup"), stateWidth(spark, 8, sfDir),
+      skipFinalBatch = true)
+    sink
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
@@ -519,34 +507,27 @@ object EventStreams {
     // spark.driver.maxResultSize; the parquet sink commits per batch
     // on executors and the batch read back is spread, which is also
     // the production topology)
-    val sinkDir = streamSinkDir(spark, sfDir, "pairs")
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // INNER join: pairs emit when both rows are present; the
     // finalization batch would only evict join state, never emit
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 4, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = errorClickPairsStream(ev)
-        .select(col("error_id"), col("click_id"))
-        .writeStream.format("parquet")
-        .option("path", new java.io.File(sinkDir, "out").getPath)
-        .option("checkpointLocation",
-          new java.io.File(sinkDir, "ckpt").getPath)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.read.parquet(new java.io.File(sinkDir, "out").getPath)
-      .orderBy("error_id", "click_id")
+    val (_, sink) = drain(
+      errorClickPairsStream(ev).select(col("error_id"), col("click_id")),
+      parquetSink(streamSinkDir(sfDir, "pairs")),
+      stateWidth(spark, 4, sfDir), skipFinalBatch = true)
+    sink.orderBy("error_id", "click_id")
   }
 
-  /** Fresh per-invocation durable-sink base for a streaming query
-    * (sink + checkpoint live together; deleted up front so each call
-    * exercises the full cycle — the q143 discipline).
+  /** Fresh per-invocation durable-sink base for a streaming query,
+    * `/tmp/graft_stream_sink/<tag>_<pathKey(sfDir)><dials>` (sink,
+    * checkpoint and any per-batch outputs live together; deleted up
+    * front so each call exercises the full cycle — the q143
+    * discipline). `dials` keeps variants of one query on one sfDir
+    * apart.
     */
-  private def streamSinkDir(spark: SparkSession, sfDir: String,
-      tag: String): java.io.File = {
+  private def streamSinkDir(sfDir: String, tag: String,
+      dials: String = ""): java.io.File = {
     val base = new java.io.File("/tmp/graft_stream_sink",
-      tag + "_" + graft.sources.Tables.pathKey(sfDir))
+      tag + "_" + graft.sources.Tables.pathKey(sfDir) + dials)
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     base.mkdirs()
     base
@@ -588,26 +569,14 @@ object EventStreams {
       sfDir: String, windowMinutes: Int = 5): DataFrame = {
     // durable parquet sink (the q133 round-13 note: the match log is
     // stream-scaled; a memory sink driver-collects it)
-    val sinkDir = streamSinkDir(spark, sfDir, "louter")
-    withStatePartitions(spark, 4, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = errorClickPairsStream(ev, windowMinutes,
-          joinType = "left_outer")
-        .select(col("error_id"), col("click_id"))
-        .writeStream.format("parquet")
-        .option("path", new java.io.File(sinkDir, "out").getPath)
-        .option("checkpointLocation",
-          new java.io.File(sinkDir, "ckpt").getPath)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // executor-side read: both derivations below scan the committed
     // files (no driver-local table re-shipped per action — the old
     // localCheckpoint workaround is obsolete with a durable sink)
-    val sink = spark.read
-      .parquet(new java.io.File(sinkDir, "out").getPath)
+    val (_, sink) = drain(
+      errorClickPairsStream(ev, windowMinutes, joinType = "left_outer")
+        .select(col("error_id"), col("click_id")),
+      parquetSink(streamSinkDir(sfDir, "louter")), stateWidth(spark, 4, sfDir))
     val matched = sink.filter(col("click_id").isNotNull)
       .select("error_id", "click_id")
     val unmatched = sink.groupBy("error_id")
@@ -676,26 +645,14 @@ object EventStreams {
     // durable parquet sink (the q133 round-13 note: the match log is
     // stream-scaled; a memory sink driver-collects it — at sf3 the old
     // memory sink blew spark.driver.maxResultSize)
-    val sinkDir = streamSinkDir(spark, sfDir, "fouter")
-    withStatePartitions(spark, 4, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = errorClickPairsStream(ev, windowMinutes,
-          joinType = "full_outer")
-        .select(col("error_id"), col("click_id"))
-        .writeStream.format("parquet")
-        .option("path", new java.io.File(sinkDir, "out").getPath)
-        .option("checkpointLocation",
-          new java.io.File(sinkDir, "ckpt").getPath)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // executor-side read: the three derivations below scan the
     // committed files (the round-9 localCheckpoint workaround for the
     // driver-local memory table is obsolete with a durable sink)
-    val sink = spark.read
-      .parquet(new java.io.File(sinkDir, "out").getPath)
+    val (_, sink) = drain(
+      errorClickPairsStream(ev, windowMinutes, joinType = "full_outer")
+        .select(col("error_id"), col("click_id")),
+      parquetSink(streamSinkDir(sfDir, "fouter")), stateWidth(spark, 4, sfDir))
     val matched = sink
       .filter(col("error_id").isNotNull && col("click_id").isNotNull)
       .select("error_id", "click_id")
@@ -773,23 +730,16 @@ object EventStreams {
     */
   def errorClickSemiAvailableNow(spark: SparkSession,
       sfDir: String, windowMinutes: Int = 5): DataFrame = {
-    val name = "graft_stream_semi_" + runCounter.incrementAndGet()
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // LEFT SEMI emits a left row the moment a match arrives (data
     // batches); eviction of never-matched rows emits NOTHING — unlike
     // ANTI (q177), where eviction IS the emission. Finalization is
-    // therefore pure machinery here ([[withoutNoDataBatch]]).
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 4, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = errorClickPairsStream(ev, windowMinutes,
-          joinType = "left_semi")
-        .select(col("error_id"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name).distinct().orderBy("error_id")
+    // therefore pure machinery here ([[start]]'s skipFinalBatch).
+    val (_, sink) = drain(
+      errorClickPairsStream(ev, windowMinutes, joinType = "left_semi")
+        .select(col("error_id")),
+      memorySink("semi"), stateWidth(spark, 4, sfDir), skipFinalBatch = true)
+    sink.distinct().orderBy("error_id")
   }
 
   /** Oracle for [[errorClickSemiAvailableNow]]: the batch EXISTS
@@ -809,8 +759,8 @@ object EventStreams {
   /** q172 — [[LifetimeProcessor]] (the Spark 4 transformWithState API)
     * made driver-visible: groupByKey(user) → transformWithState with
     * two typed state variables, Update mode, RocksDB state store (the
-    * only provider the new API supports — swapped in for this query
-    * and restored after), AvailableNow drain. The bounded replay is
+    * only provider the new API supports — [[start]] sets it for any
+    * plan holding transformWithState), AvailableNow drain. The bounded replay is
     * one data batch, so each user emits exactly one final profile and
     * the drained sink equals the batch aggregate — counts and the
     * nanos-quantized value sum are order-free exact, the top type is
@@ -819,36 +769,24 @@ object EventStreams {
   def userLifetimeAvailableNow(spark: SparkSession, sfDir: String,
       nFiles: Int = 1): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_tws_" + runCounter.incrementAndGet()
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    val nDataBatches = try {
-      withStatePartitions(spark, 8, sfDir) {
-        val ev = (if (nFiles <= 1)
-            readEventStream(spark, sfDir, glob = Some("events.parquet"))
-          else readEventStream(spark,
-            stageChronologicalEvents(spark, sfDir, nFiles),
-            maxFilesPerTrigger = Some(1)))
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Event]
-        val q = ev.groupByKey(_.user_id)
-          .transformWithState(new LifetimeProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        q.recentProgress.count(_.numInputRows > 0)
-      }
-    } finally spark.conf.set(provKey, prevProv)
+    val ev = (if (nFiles <= 1)
+        readEventStream(spark, sfDir, glob = Some("events.parquet"))
+      else readEventStream(spark,
+        stageChronologicalEvents(spark, sfDir, nFiles),
+        maxFilesPerTrigger = Some(1)))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Event]
+    val (q, sink) = drain(
+      ev.groupByKey(_.user_id)
+        .transformWithState(new LifetimeProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+        .toDF(),
+      memorySink("tws"), stateWidth(spark, 8, sfDir), OutputMode.Update)
     if (nFiles > 1) {
+      val nDataBatches = dataBatches(q)
       require(nDataBatches >= 2,
         s"multi-batch replay ran as $nDataBatches data batch(es)")
-      val sink = spark.table(name)
       // state persistence proof: a user seen in >1 batch re-emits with
       // an ACCUMULATED profile — without cross-batch state every
       // emission would restart at its own batch's counts
@@ -863,7 +801,7 @@ object EventStreams {
             .orderBy(desc("n_events"))))
         .filter(col("rk") === 1).drop("rk")
         .orderBy("user_id")
-    } else spark.table(name).orderBy("user_id")
+    } else sink.orderBy("user_id")
   }
 
   /** q174 — [[InactivityDigestProcessor]] made driver-visible: timers
@@ -878,29 +816,19 @@ object EventStreams {
   def inactivityDigestAvailableNow(spark: SparkSession, sfDir: String,
       gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_tws_timer_" + runCounter.incrementAndGet()
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      withStatePartitions(spark, 8, sfDir) {
-        val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .withWatermark("ts", "10 minutes")
-          .as[Event]
-        val q = ev.groupByKey(_.user_id)
-          .transformWithState(new InactivityDigestProcessor(gapMinutes),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Update())
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally spark.conf.set(provKey, prevProv)
-    val out = spark.table(name).orderBy("user_id")
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .withWatermark("ts", "10 minutes")
+      .as[Event]
+    // the timers fire in the finalization batch: it must run
+    val (_, sink) = drain(
+      ev.groupByKey(_.user_id)
+        .transformWithState(new InactivityDigestProcessor(gapMinutes),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Update())
+        .toDF(),
+      memorySink("tws_timer"), stateWidth(spark, 8, sfDir), OutputMode.Update)
+    val out = sink.orderBy("user_id")
     // Vacuous-oracle guard (ADVICE r9, the q177-draft trap CLAUDE.md
     // records): the oracle keeps only users whose timer fell strictly
     // below the final watermark — a testdata span/gap change could make
@@ -960,7 +888,6 @@ object EventStreams {
   def userLifetimeBootstrapAvailableNow(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_tws_boot_" + runCounter.incrementAndGet()
     val ev = graft.sources.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -978,28 +905,18 @@ object EventStreams {
           .as("types"))
       .as[InitLifetime]
       .groupByKey(_.user_id)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.get(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      withStatePartitions(spark, 8, sfDir) {
-        val live = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .filter(unix_micros(col("ts")) >= cutoff)
-          .as[Event]
-        val q = live.groupByKey(_.user_id)
-          .transformWithState(new LifetimeBootstrapProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update(), initStates)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-    } finally spark.conf.set(provKey, prevProv)
-    spark.table(name).orderBy("user_id")
+    val live = readEventStream(spark, sfDir, glob = Some("events.parquet"))
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .filter(unix_micros(col("ts")) >= cutoff)
+      .as[Event]
+    val (_, sink) = drain(
+      live.groupByKey(_.user_id)
+        .transformWithState(new LifetimeBootstrapProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update(), initStates)
+        .toDF(),
+      memorySink("tws_boot"), stateWidth(spark, 8, sfDir), OutputMode.Update)
+    sink.orderBy("user_id")
   }
 
   /** Oracle for [[userLifetimeBootstrapAvailableNow]]: the full-history
@@ -1074,7 +991,6 @@ object EventStreams {
     */
   def suppressedStreamAvailableNow(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val name = "graft_stream_anti_" + runCounter.incrementAndGet()
     // two erasure segments, not one: the sf0.001 fixture's event users
     // happen to contain no AUTOMOBILE custkeys at all, which made the
     // single-segment blocklist VACUOUS there (caught by the QueriesSpec
@@ -1082,16 +998,10 @@ object EventStreams {
     val blocked = graft.sources.Tables.customer(spark, sfDir)
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "MACHINERY"))
       .select(col("c_custkey").as("user_id"))
-    withStatePartitions(spark, 8, sfDir) {
-      val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
-      val q = ev.join(broadcast(blocked), Seq("user_id"), "left_anti")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
+    val (_, sink) = drain(ev.join(broadcast(blocked), Seq("user_id"), "left_anti"),
+      memorySink("anti"), stateWidth(spark, 8, sfDir))
+    sink
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
@@ -1147,17 +1057,6 @@ object EventStreams {
   private val spanningKeyMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), Long]()
 
-  /** Run `body` with the session's shuffle partitions set to `n`
-    * (restored after).
-    */
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** Source rows per state partition. Round 12 measured 8 partitions
     * as best for the 100,000 sf0.1 events (4 serialized the per-row
     * work, 32 paid commit IO).
@@ -1178,46 +1077,118 @@ object EventStreams {
     math.max(1L, math.min(n.toLong,
       (sourceRows + RowsPerStatePartition - 1) / RowsPerStatePartition)).toInt
 
-  /** Run an event replay's `body` with its state width
-    * ([[statePartitions]]) as the session's shuffle partitions. Every
-    * event replay streams `sfDir`'s events table or a staged split of
-    * it, so the source rows come from that table's footers.
+  /** An event replay's state width ([[statePartitions]]). Every event
+    * replay streams `sfDir`'s events table or a staged split of it, so
+    * the source rows come from that table's footers.
     */
-  private def withStatePartitions[A](spark: SparkSession, n: Int,
-      sfDir: String)(body: => A): A =
-    withShufflePartitions(spark,
-      statePartitions(n, graft.sources.Tables.eventsRows(spark, sfDir)))(body)
+  private def stateWidth(spark: SparkSession, n: Int, sfDir: String): Int =
+    statePartitions(n, graft.sources.Tables.eventsRows(spark, sfDir))
 
-  /** Run `body` with the no-data FINALIZATION micro-batch disabled
-    * (`spark.sql.streaming.noDataMicroBatches.enabled=false`, restored
-    * after). A bounded AvailableNow replay with a watermark runs one
-    * extra batch after the last file solely to advance the watermark —
-    * needed ONLY where that advance EMITS (append-mode windowed aggs:
-    * the final windows; outer/semi/anti joins: the unmatched rows).
-    * Where the finalization provably emits nothing it is pure per-batch
-    * machinery (~0.3-0.7 s at the harness scale, measured via Prof's
-    * per-batch durationMs): Complete mode re-emits an identical table,
-    * Update mode emits only on data, inner joins emit only on matches,
-    * and dropDuplicates emits each key on FIRST sight — for those the
-    * watermark's one job, state EVICTION, already ran on the later data
-    * batches (each batch evicts with the watermark computed from the
-    * previous batch's max event time). Callers that assert eviction
-    * (q157's numRowsRemoved) still observe it on the data batches.
-    * NEVER wrap an append-mode windowed agg, an outer join, or an
-    * ANTI join — rows would be withheld
-    * (q125/q134/q143/q146/q163/q170/q177 keep the finalization
-    * batch). SEMI (q180) is inner-like: emission happens on match.
+  /** Where a bounded replay writes, and what [[drain]] hands back once
+    * it has drained: the sink's rows for a memory or parquet sink, `()`
+    * for a per-batch function that writes its own outputs.
     */
-  private def withoutNoDataBatch[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private[graft] final class Sink[R] private[EventStreams] (
+      private[EventStreams] val attach:
+        DataStreamWriter[Row] => DataStreamWriter[Row],
+      private[EventStreams] val rows: SparkSession => R)
+
+  /** A fresh memory table `<StreamTablePrefix><tag>_<n>`, dropped
+    * between queries by [[graft.sources.Tables.dropDrainedStreamTables]].
+    */
+  private[graft] def memorySink(tag: String): Sink[DataFrame] = {
+    val name = graft.sources.Tables.StreamTablePrefix + tag + "_" +
+      runCounter.incrementAndGet()
+    new Sink(_.format("memory").queryName(name), _.table(name))
+  }
+
+  /** A durable parquet sink: rows in `base/out`, checkpoint in
+    * `base/ckpt`. Its rows are a batch read of the committed files
+    * (resolved through `_spark_metadata`, the view a downstream reader
+    * gets).
+    */
+  private[graft] def parquetSink(base: java.io.File): Sink[DataFrame] = {
+    val out = new java.io.File(base, "out").getPath
+    new Sink(_.format("parquet").option("path", out)
+        .option("checkpointLocation", new java.io.File(base, "ckpt").getPath),
+      _.read.parquet(out))
+  }
+
+  /** Hands each micro-batch and its id to `f`. */
+  private[graft] def batchSink(f: (DataFrame, Long) => Unit): Sink[Unit] =
+    new Sink(_.foreachBatch(f), _ => ())
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with a starter for a BOUNDED replay of `stream` into
+    * `sink`: each call starts one query under an AvailableNow trigger
+    * (every file present at start, then stop). `body` owns the started
+    * queries' lifetime; the session confs the replay needs are set for
+    * `body` and restored exactly when it returns or throws
+    * ([[graft.sources.Tables.withConfs]]):
+    *   - `spark.sql.shuffle.partitions` = `width`, the stateful
+    *     operators' state partitions ([[statePartitions]] for event
+    *     replays) or the per-batch join width of a stateless
+    *     `foreachBatch` replay.
+    *   - the RocksDB state-store provider when the plan holds a
+    *     `transformWithState` node, the only provider Spark runs it on.
+    *   - with `skipFinalBatch`, `noDataMicroBatches.enabled=false`.
+    *
+    * `skipFinalBatch` drops the no-data FINALIZATION micro-batch that a
+    * watermarked Append or Update replay runs after its last file,
+    * solely to advance the watermark. It is needed ONLY where that
+    * advance EMITS (append-mode windowed aggs: the final windows;
+    * outer/anti joins: the unmatched rows; event-time timers: q174's
+    * digests). Where it provably emits nothing it is pure per-batch
+    * machinery (~0.3-0.7 s at the harness scale, measured via Prof's
+    * per-batch durationMs): Update mode emits only on data, inner and
+    * semi joins emit only on matches, and dropDuplicates emits each key
+    * on FIRST sight — for those the watermark's one job, state
+    * EVICTION, already ran on the later data batches (each batch
+    * evicts with the watermark computed from the previous batch's max
+    * event time), so q157's asserted numRowsRemoved still shows. Spark
+    * runs no finalization batch in Complete mode at all (only Append
+    * and Update ask for one), so there is nothing to skip. The opt-out
+    * is stated per call site, never derived from the plan: whether the
+    * last watermark advance emits depends on each operator's emission
+    * rule, and a wrong guess withholds rows silently.
+    */
+  private[graft] def start[A](stream: DataFrame, sink: Sink[_], width: Int,
+      mode: OutputMode = OutputMode.Append(),
+      skipFinalBatch: Boolean = false)(body: (() => StreamingQuery) => A): A = {
+    require(!(skipFinalBatch && mode == OutputMode.Complete()),
+      "Complete mode runs no finalization batch to skip")
+    val transformsWithState = stream.queryExecution.logical.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
+    graft.sources.Tables.withConfs(stream.sparkSession,
+      "spark.sql.shuffle.partitions" -> Some(width.toString),
+      "spark.sql.streaming.stateStore.providerClass" ->
+        Option.when(transformsWithState)(RocksDbProvider),
+      "spark.sql.streaming.noDataMicroBatches.enabled" ->
+        Option.when(skipFinalBatch)("false")) {
+      body(() => sink.attach(stream.writeStream.outputMode(mode))
+        .trigger(Trigger.AvailableNow()).start())
     }
   }
+
+  /** Replay `stream` into `sink` to the end ([[start]]) and return the
+    * terminated query with the sink's rows.
+    */
+  private[graft] def drain[R](stream: DataFrame, sink: Sink[R], width: Int,
+      mode: OutputMode = OutputMode.Append(),
+      skipFinalBatch: Boolean = false): (StreamingQuery, R) = {
+    val q = start(stream, sink, width, mode, skipFinalBatch) { run =>
+      val q = run()
+      q.awaitTermination()
+      q
+    }
+    (q, sink.rows(stream.sparkSession))
+  }
+
+  /** Micro-batches of `q` that read input rows. */
+  private[graft] def dataBatches(q: StreamingQuery): Int =
+    q.recentProgress.count(_.numInputRows > 0)
 
   /** q124 — the streaming engine made driver-visible: runs
     * [[hourlyByType]] as a REAL Structured Streaming job (file source
@@ -1247,18 +1218,10 @@ object EventStreams {
     * row pins the eviction boundary, where q124 pins the aggregation.
     */
   def sessionWindowsAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_sessions_" + runCounter.incrementAndGet()
-    withStatePartitions(spark, 8, sfDir) {
-      val q = sessionWindows(
-        readEventStream(spark, sfDir, glob = Some("events.parquet")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
-      .orderBy("user_id", "session_start")
+    val (_, sink) = drain(
+      sessionWindows(readEventStream(spark, sfDir, glob = Some("events.parquet"))),
+      memorySink("sessions"), stateWidth(spark, 8, sfDir))
+    sink.orderBy("user_id", "session_start")
   }
 
   /** Oracle for [[sessionWindowsAvailableNow]]: gap-sessionize with
@@ -1329,24 +1292,15 @@ object EventStreams {
       nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
     // ---- replay: one file per trigger, real watermark advancement ----
-    val name = "graft_stream_batched_" + runCounter.incrementAndGet()
-    val nDataBatches = withStatePartitions(spark, 8, sfDir) {
-      val q = sessionWindows(
-        readEventStream(spark, staging,
-          maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+    val (q, sink) = drain(
+      sessionWindows(readEventStream(spark, staging, maxFilesPerTrigger = Some(1))),
+      memorySink("batched"), stateWidth(spark, 8, sfDir))
+    val nDataBatches = dataBatches(q)
     require(nDataBatches >= 2,
       s"batched replay ran $nDataBatches data batches - " +
         "maxFilesPerTrigger was not honored, the multi-batch watermark " +
         "path was NOT exercised")
-    spark.table(name)
-      .orderBy("user_id", "session_start")
+    sink.orderBy("user_id", "session_start")
   }
 
   /** Stage `sfDir`'s events into `nFiles` chronological single-file
@@ -1448,41 +1402,31 @@ object EventStreams {
   def corpusGateStreamAvailableNow(spark: SparkSession, sfDir: String,
       nFiles: Int = 2): DataFrame = {
     val staging = stageIdBatches(spark, sfDir, "documents", "doc_id", nFiles)
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "corpgate_" + graft.sources.Tables.pathKey(sfDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    val outBase = new java.io.File(base, "out")
+    val outBase = new java.io.File(streamSinkDir(sfDir, "corpgate"), "out")
     outBase.mkdirs()
+    val stream = spark.readStream
+      .schema(graft.sources.Tables.documentsSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staging)
     // the document/embedding replays keep no streaming state: their
     // shuffle width sizes each batch's join work, which the events
-    // state-width rule (withStatePartitions) does not model
-    val nData = withShufflePartitions(spark, 8) {
-      val stream = spark.readStream
-        .schema(graft.sources.Tables.documentsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // spread the fused gate scan: a micro-batch frame inherits
-          // the arriving FILE's split count (7 tasks at sf10 for a
-          // 32-core session, Prof round-14), not defaultParallelism —
-          // Tables.spread applies to foreachBatch frames too
-          graft.operators.Corpus.withGateScore(
-              graft.sources.Tables.spread(batch))
-            .groupBy(col("source"))
-            .agg(count(lit(1)).as("n_docs"),
-              sum((col("score") === 4).cast("long")).as("n_admitted"),
-              sum(when(col("score") === 4, col("n_tokens").cast("long"))
-                .otherwise(0L)).as("admitted_tokens"))
-            .write.mode("overwrite")
-            .parquet(new java.io.File(outBase, s"b$batchId").getPath)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+    // state-width rule (stateWidth) does not model
+    val (q, _) = drain(stream, batchSink { (batch, batchId) =>
+      // spread the fused gate scan: a micro-batch frame inherits
+      // the arriving FILE's split count (7 tasks at sf10 for a
+      // 32-core session, Prof round-14), not defaultParallelism —
+      // Tables.spread applies to foreachBatch frames too
+      graft.operators.Corpus.withGateScore(
+          graft.sources.Tables.spread(batch))
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum((col("score") === 4).cast("long")).as("n_admitted"),
+          sum(when(col("score") === 4, col("n_tokens").cast("long"))
+            .otherwise(0L)).as("admitted_tokens"))
+        .write.mode("overwrite")
+        .parquet(new java.io.File(outBase, s"b$batchId").getPath)
+    }, width = 8)
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"corpus-gate replay ran $nData data batches - the per-batch " +
         "ledger path was not exercised")
@@ -1696,16 +1640,6 @@ object EventStreams {
     * copy), with a poisoned input staying poisoned so the probe guard
     * keeps taking its exact tier.
     */
-  /** Daemon-thread pool for overlapping INDEPENDENT per-batch jobs
-    * inside foreachBatch (guide §2.6: actions are only sequential
-    * because the caller invokes them sequentially; the scheduler is
-    * thread-safe and job-description state is thread-local). Daemon
-    * threads so a failed batch can never keep the JVM from exiting;
-    * callers shut the pool down in a finally regardless.
-    */
-  private def batchOverlapPool(): java.util.concurrent.ExecutorService =
-    graft.sources.Tables.overlapPool()
-
   private def foldLiveSegmentsPastDial(spark: SparkSession,
       segBase: java.io.File, batchId: Long, maxLiveSegments: Int,
       foldTargetBytes: Long): Unit = {
@@ -1738,201 +1672,179 @@ object EventStreams {
     // dir keyed by the dials too: the registered q205 (fold every
     // batch) and q209 (amortized, maxLive=2) variants must not share
     // scratch — a later run deletes the base dir at start
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "neardup_" + graft.sources.Tables.pathKey(sfDir) +
-        s"_n${nFiles}m$maxLiveSegments")
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
+    val base = streamSinkDir(sfDir, "neardup", s"_n${nFiles}m$maxLiveSegments")
     val outBase = new java.io.File(base, "out")
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
-    val nData = withShufflePartitions(spark, 8) {
-      val stream = spark.readStream
-        .schema(graft.sources.Tables.documentsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // ONE checkpoint + ONE stats action per batch front half
-          // (round-14 action fusion: each action at micro-batch grain
-          // pays fixed scheduling cost, and the old shape spent four —
-          // train checkpoint, train stats, gate checkpoint, gate
-          // count — where the gate score can ride the same
-          // materialization and ALL three ledger stats one agg)
-          // spread the fused gate+shingle scan (the q202 note): the
-          // batch frame arrives with the FILE's split count — 7 tasks
-          // at sf10 made the scan stage 9.4 s where 32 spread tasks
-          // take ~2 s (Prof round-14)
-          // scored is ALWAYS checkpointed: its two consumers would
-          // otherwise each replay the spread SHUFFLE plus
-          // the gate battery — a round-14 A/B of skipping below
-          // 1 MiB/batch measured q205 ~1 s SLOWER at sf0.1 (the
-          // recompute cost is fixed shuffle machinery, not data size,
-          // so the checkpoint wins at every scale)
-          val pool = batchOverlapPool()
-          try {
-          val scored = graft.operators.Corpus.withGateScore(
-              graft.sources.Tables.spread(
-                batch.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
-            .localCheckpoint(true)
-          // OVERLAP 1 (round-16, guide §2.6): the ledger-stats agg and
-          // the band construction both read the scored checkpoint
-          // blocks and are independent — run the tiny agg on the pool
-          // thread while the main thread builds+checkpoints the bands
-          val trainStatsF = pool.submit(
-            new java.util.concurrent.Callable[org.apache.spark.sql.Row] {
-              def call(): org.apache.spark.sql.Row = {
-                spark.sparkContext.setJobDescription(
-                  s"neardup b$batchId: train stats")
-                scored.agg(count(lit(1)),
-                    coalesce(min("doc_id"), lit(Long.MaxValue)),
-                    sum((col("score") === 4).cast("long")))
-                  .head()
-              }
-            })
-          val gateAdm = scored.filter(col("score") === 4)
-            .select("doc_id", "text")
-          val batchBands = graft.operators.Corpus.bandsOf(gateAdm)
-            .localCheckpoint(true)
-          val trainStats = trainStatsF.get()
-          val nDocs = trainStats.getLong(0)
-          val batchLo = trainStats.getLong(1)
-          val nGate = if (trainStats.isNullAt(2)) 0L else trainStats.getLong(2)
-          // commit the segment up front FROM the checkpoint blocks
-          // (idempotent overwrite, the q154 re-delivery discipline).
-          // File count derived from the gate-admit count, never a
-          // fixed coalesce(1): one file at harness scale keeps the
-          // next batches' probe listing cheap, and the write spreads
-          // once a batch's band rows are big enough to matter
-          // (~500k rows/file; a probe-side readback of a 32-file
-          // micro-segment costs more than the checkpoint it replaces —
-          // measured round-14, which is why the probe below keeps the
-          // in-memory blocks and only HISTORY comes from parquet)
-          val segDir = new java.io.File(segBase, s"b$batchId")
-          // OVERLAP 2 (round-16): the segment commit writes from the
-          // band checkpoint blocks and is consumed only by FUTURE
-          // batches (the probe below excludes it by name) and by the
-          // fold — run it on the pool thread while the main thread
-          // probes history and checkpoints the candidate pairs; joined
-          // before the fold, which needs the segment committed.
-          // exact row-count sidecar: band rows per segment are
-          // admits × Bands by construction, so the probe guard below
-          // can bound the join without any extra scan (overwrite mode
-          // clears the dir, so a re-delivered batch rewrites it too)
-          val segF = pool.submit(new java.lang.Runnable {
-            def run(): Unit = {
-              spark.sparkContext.setJobDescription(
-                s"neardup b$batchId: segment commit")
-              val segParts = math.max(1L, math.min(64L,
-                nGate * graft.operators.Dedup.Bands / 500000L + 1L)).toInt
-              graft.sources.Tables.writeParquetFiles(batchBands,
-                segDir.getPath, segParts)
-              writeSegRowMeta(segDir,
-                nGate * graft.operators.Dedup.Bands)
-            }
-          })
-          // history = whatever segments are LIVE (committed, not yet
-          // folded into a generation) — a directory listing, not a
-          // batch-id range, so compaction is transparent to the probe;
-          // this batch's just-committed segment is excluded by NAME
-          // (which also covers a crashed attempt's stale copy on
-          // re-delivery — previously that copy rode the probe union
-          // and was neutralized by doc_a < doc_b + distinct)
-          val priorSegs = liveSegments(segBase)
-            .filterNot(_.getName == segDir.getName)
-          val probe = priorSegs.foldLeft(batchBands)((acc, d) =>
-            acc.unionByName(spark.read.parquet(d.getPath)))
-          // probe-volume guard: count BEFORE the join materializes —
-          // the q185/q33/kNN discipline on the one self-join this
-          // loop runs forever; the returned frame shares one probe
-          // scan between the bound agg and the join at scale
-          // ([[guardProbeVolume]])
-          val probeG = guardProbeVolume(probe, priorSegs,
-            nGate * graft.operators.Dedup.Bands, batchLo, "doc_id",
-            Seq("band_idx", "band_key"), maxProbePairs, batchId,
-            "probe-pair-volume")
-          val pairs = probeG.select(col("doc_id").as("doc_a"),
-              col("band_idx"), col("band_key"))
-            .join(batchBands.select(col("doc_id").as("doc_b"),
-              col("band_idx"), col("band_key")),
-              Seq("band_idx", "band_key"))
-            .filter(col("doc_a") < col("doc_b"))
-            .select("doc_a", "doc_b").distinct()
-            .localCheckpoint(true)
-          val ids = pairs.select(col("doc_a").as("doc_id"))
-            .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
-          // semi-join FIRST (round-11 order), then spread: the join
-          // lands on the 8 shuffle partitions (withShufflePartitions
-          // scope), which serialized the expensive shingle exprs into
-          // 8 tasks at sf10 — the repartition only moves the few
-          // surviving candidate docs' text
-          val sh = graft.operators.Corpus.shinglesOf(
-            graft.sources.Tables.spread(
-              graft.sources.Tables.documents(spark, sfDir)
-                .join(ids, Seq("doc_id"), "left_semi")))
-          val dropped = pairs
-            .join(sh.select(col("doc_id").as("doc_a"),
-              col("sh").as("sh_a")), Seq("doc_a"))
-            .join(sh.select(col("doc_id").as("doc_b"),
-              col("sh").as("sh_b")), Seq("doc_b"))
-            .withColumn("n_inter",
-              size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-            .withColumn("n_union",
-              (size(col("sh_a")) + size(col("sh_b"))).cast("long")
-                - col("n_inter"))
-            .filter(col("n_inter") * 2 >= col("n_union"))
-            .groupBy(col("doc_b").as("doc_id"))
-            .agg(max((col("doc_a") < batchLo).cast("long")).as("by_hist"))
-          // ledger: ONE action — the dup-stats agg IS the ledger row
-          // (round-14 fusion: previously a head() collect plus a
-          // separate one-row toDF write, two scheduled jobs per batch).
-          // OVERLAP 3 (round-16): the ledger job reads ONLY the
-          // eagerly-checkpointed `pairs` blocks and the source
-          // documents table — never segment parquet (round-14 ADVICE
-          // #1's hazard analysis) — so it safely overlaps the fold,
-          // which touches only segment files. Submitted BEFORE the
-          // fold starts and joined after; the TEXT path alone does
-          // this (the embedding path's ledger reads probed segment
-          // files when the guard's tier 0 clears, so there the ledger
-          // must complete before the fold deletes them).
-          val ledgerF = pool.submit(new java.lang.Runnable {
-            def run(): Unit = {
-              spark.sparkContext.setJobDescription(
-                s"neardup b$batchId: ledger")
-              dropped
-                .agg(count(lit(1)).as("n_dup_dropped"),
-                  coalesce(sum("by_hist"), lit(0L))
-                    .as("n_dropped_by_history"))
-                .select(lit(batchId).as("batch_idx"),
-                  lit(nDocs).as("n_docs"), lit(nGate).as("n_gate"),
-                  col("n_dup_dropped"), col("n_dropped_by_history"),
-                  (lit(nGate) - col("n_dup_dropped")).as("n_admitted"))
-                .coalesce(1).write.mode("overwrite")
-                .parquet(new java.io.File(outBase, s"b$batchId").getPath)
-            }
-          })
-          // fold live segments past the dial (bytes-derived write
-          // parallelism, _SUCCESS before delete, sidecar = Σ inputs —
-          // [[foldLiveSegmentsPastDial]]); needs this batch's segment
-          // committed, so join the segment future first
-          segF.get()
-          foldLiveSegmentsPastDial(spark, segBase, batchId,
-            maxLiveSegments, foldTargetBytes)
-          ledgerF.get()
-          } finally pool.shutdown()
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // SOAK diagnostic (stderr-only): per-batch wall times, the
-      // flat-across-batches evidence the compaction exists to provide
-      System.err.println("neardup-batch-ms: " + q.recentProgress
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.getOrDefault("triggerExecution", -1L))
-        .mkString(","))
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+    val stream = spark.readStream
+      .schema(graft.sources.Tables.documentsSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staging)
+    val (q, _) = drain(stream, batchSink { (batch, batchId) =>
+      // ONE checkpoint + ONE stats action per batch front half
+      // (round-14 action fusion: each action at micro-batch grain
+      // pays fixed scheduling cost, and the old shape spent four —
+      // train checkpoint, train stats, gate checkpoint, gate
+      // count — where the gate score can ride the same
+      // materialization and ALL three ledger stats one agg)
+      // spread the fused gate+shingle scan (the q202 note): the
+      // batch frame arrives with the FILE's split count — 7 tasks
+      // at sf10 made the scan stage 9.4 s where 32 spread tasks
+      // take ~2 s (Prof round-14)
+      // scored is ALWAYS checkpointed: its two consumers would
+      // otherwise each replay the spread SHUFFLE plus
+      // the gate battery — a round-14 A/B of skipping below
+      // 1 MiB/batch measured q205 ~1 s SLOWER at sf0.1 (the
+      // recompute cost is fixed shuffle machinery, not data size,
+      // so the checkpoint wins at every scale)
+      val pool = graft.sources.Tables.overlapPool()
+      try {
+      val scored = graft.operators.Corpus.withGateScore(
+          graft.sources.Tables.spread(
+            batch.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
+        .localCheckpoint(true)
+      // OVERLAP 1 (round-16, guide §2.6): the ledger-stats agg and
+      // the band construction both read the scored checkpoint
+      // blocks and are independent — run the tiny agg on the pool
+      // thread while the main thread builds+checkpoints the bands
+      val trainStatsF = graft.sources.Tables.submitJob(pool, spark,
+          s"neardup b$batchId: train stats") {
+        scored.agg(count(lit(1)),
+            coalesce(min("doc_id"), lit(Long.MaxValue)),
+            sum((col("score") === 4).cast("long")))
+          .head()
+      }
+      val gateAdm = scored.filter(col("score") === 4)
+        .select("doc_id", "text")
+      val batchBands = graft.operators.Corpus.bandsOf(gateAdm)
+        .localCheckpoint(true)
+      val trainStats = trainStatsF.get()
+      val nDocs = trainStats.getLong(0)
+      val batchLo = trainStats.getLong(1)
+      val nGate = if (trainStats.isNullAt(2)) 0L else trainStats.getLong(2)
+      // commit the segment up front FROM the checkpoint blocks
+      // (idempotent overwrite, the q154 re-delivery discipline).
+      // File count derived from the gate-admit count, never a
+      // fixed coalesce(1): one file at harness scale keeps the
+      // next batches' probe listing cheap, and the write spreads
+      // once a batch's band rows are big enough to matter
+      // (~500k rows/file; a probe-side readback of a 32-file
+      // micro-segment costs more than the checkpoint it replaces —
+      // measured round-14, which is why the probe below keeps the
+      // in-memory blocks and only HISTORY comes from parquet)
+      val segDir = new java.io.File(segBase, s"b$batchId")
+      // OVERLAP 2 (round-16): the segment commit writes from the
+      // band checkpoint blocks and is consumed only by FUTURE
+      // batches (the probe below excludes it by name) and by the
+      // fold — run it on the pool thread while the main thread
+      // probes history and checkpoints the candidate pairs; joined
+      // before the fold, which needs the segment committed.
+      // exact row-count sidecar: band rows per segment are
+      // admits × Bands by construction, so the probe guard below
+      // can bound the join without any extra scan (overwrite mode
+      // clears the dir, so a re-delivered batch rewrites it too)
+      val segF = graft.sources.Tables.submitJob(pool, spark,
+          s"neardup b$batchId: segment commit") {
+        val segParts = math.max(1L, math.min(64L,
+          nGate * graft.operators.Dedup.Bands / 500000L + 1L)).toInt
+        graft.sources.Tables.writeParquetFiles(batchBands,
+          segDir.getPath, segParts)
+        writeSegRowMeta(segDir, nGate * graft.operators.Dedup.Bands)
+      }
+      // history = whatever segments are LIVE (committed, not yet
+      // folded into a generation) — a directory listing, not a
+      // batch-id range, so compaction is transparent to the probe;
+      // this batch's just-committed segment is excluded by NAME
+      // (which also covers a crashed attempt's stale copy on
+      // re-delivery — previously that copy rode the probe union
+      // and was neutralized by doc_a < doc_b + distinct)
+      val priorSegs = liveSegments(segBase)
+        .filterNot(_.getName == segDir.getName)
+      val probe = priorSegs.foldLeft(batchBands)((acc, d) =>
+        acc.unionByName(spark.read.parquet(d.getPath)))
+      // probe-volume guard: count BEFORE the join materializes —
+      // the q185/q33/kNN discipline on the one self-join this
+      // loop runs forever; the returned frame shares one probe
+      // scan between the bound agg and the join at scale
+      // ([[guardProbeVolume]])
+      val probeG = guardProbeVolume(probe, priorSegs,
+        nGate * graft.operators.Dedup.Bands, batchLo, "doc_id",
+        Seq("band_idx", "band_key"), maxProbePairs, batchId,
+        "probe-pair-volume")
+      val pairs = probeG.select(col("doc_id").as("doc_a"),
+          col("band_idx"), col("band_key"))
+        .join(batchBands.select(col("doc_id").as("doc_b"),
+          col("band_idx"), col("band_key")),
+          Seq("band_idx", "band_key"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()
+        .localCheckpoint(true)
+      val ids = pairs.select(col("doc_a").as("doc_id"))
+        .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
+      // semi-join FIRST (round-11 order), then spread: the join
+      // lands on the replay's 8 shuffle partitions, which serialized the expensive shingle exprs into
+      // 8 tasks at sf10 — the repartition only moves the few
+      // surviving candidate docs' text
+      val sh = graft.operators.Corpus.shinglesOf(
+        graft.sources.Tables.spread(
+          graft.sources.Tables.documents(spark, sfDir)
+            .join(ids, Seq("doc_id"), "left_semi")))
+      val dropped = pairs
+        .join(sh.select(col("doc_id").as("doc_a"),
+          col("sh").as("sh_a")), Seq("doc_a"))
+        .join(sh.select(col("doc_id").as("doc_b"),
+          col("sh").as("sh_b")), Seq("doc_b"))
+        .withColumn("n_inter",
+          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+        .withColumn("n_union",
+          (size(col("sh_a")) + size(col("sh_b"))).cast("long")
+            - col("n_inter"))
+        .filter(col("n_inter") * 2 >= col("n_union"))
+        .groupBy(col("doc_b").as("doc_id"))
+        .agg(max((col("doc_a") < batchLo).cast("long")).as("by_hist"))
+      // ledger: ONE action — the dup-stats agg IS the ledger row
+      // (round-14 fusion: previously a head() collect plus a
+      // separate one-row toDF write, two scheduled jobs per batch).
+      // OVERLAP 3 (round-16): the ledger job reads ONLY the
+      // eagerly-checkpointed `pairs` blocks and the source
+      // documents table — never segment parquet (round-14 ADVICE
+      // #1's hazard analysis) — so it safely overlaps the fold,
+      // which touches only segment files. Submitted BEFORE the
+      // fold starts and joined after; the TEXT path alone does
+      // this (the embedding path's ledger reads probed segment
+      // files when the guard's tier 0 clears, so there the ledger
+      // must complete before the fold deletes them).
+      val ledgerF = graft.sources.Tables.submitJob(pool, spark,
+          s"neardup b$batchId: ledger") {
+        dropped
+          .agg(count(lit(1)).as("n_dup_dropped"),
+            coalesce(sum("by_hist"), lit(0L))
+              .as("n_dropped_by_history"))
+          .select(lit(batchId).as("batch_idx"),
+            lit(nDocs).as("n_docs"), lit(nGate).as("n_gate"),
+            col("n_dup_dropped"), col("n_dropped_by_history"),
+            (lit(nGate) - col("n_dup_dropped")).as("n_admitted"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new java.io.File(outBase, s"b$batchId").getPath)
+      }
+      // fold live segments past the dial (bytes-derived write
+      // parallelism, _SUCCESS before delete, sidecar = Σ inputs —
+      // [[foldLiveSegmentsPastDial]]); needs this batch's segment
+      // committed, so join the segment future first
+      segF.get()
+      foldLiveSegmentsPastDial(spark, segBase, batchId,
+        maxLiveSegments, foldTargetBytes)
+      ledgerF.get()
+      } finally pool.shutdown()
+    }, width = 8)
+    // SOAK diagnostic (stderr-only): per-batch wall times, the
+    // flat-across-batches evidence the compaction exists to provide
+    System.err.println("neardup-batch-ms: " + q.recentProgress
+      .filter(_.numInputRows > 0)
+      .map(p => p.durationMs.getOrDefault("triggerExecution", -1L))
+      .mkString(","))
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"neardup admission replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
@@ -1986,136 +1898,123 @@ object EventStreams {
       s"dial ${nBandsDial}x$bitsPerBand exceeds the 16-bit signature")
     val mask = (1 << bitsPerBand) - 1
     val staging = stageIdBatches(spark, sfDir, "embeddings", "vec_id", nFiles)
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "embneardup_" + graft.sources.Tables.pathKey(sfDir) +
-        s"_n${nFiles}m$maxLiveSegments")
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
+    val base = streamSinkDir(sfDir, "embneardup", s"_n${nFiles}m$maxLiveSegments")
     val outBase = new java.io.File(base, "out")
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
-    val nData = withShufflePartitions(spark, 8) {
-      val stream = spark.readStream
-        .schema(graft.sources.Tables.embeddingsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staging)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // sign + band in one spread scan (lsh_sig is native but the
-          // arriving file's split count would still serialize it at
-          // scale — the round-14 foreachBatch parallelism rule), then
-          // ONE checkpoint feeds the stats agg, the segment write, and
-          // both sides of the probe join
-          val bands = graft.sources.Tables.spread(batch)
-            .select(col("vec_id"),
-              graft.functions.lsh_sig(col("embedding"),
-                graft.operators.Similarity.planeSigns)
-                .cast("long").as("sig"))
-            .select(col("vec_id"), explode(expr(
-              s"""transform(sequence(0, ${nBandsDial - 1}), b ->
-                 |  named_struct('band_idx', b,
-                 |    'band_v', (sig >> (b * $bitsPerBand)) & $mask))"""
-                .stripMargin)).as("bv"))
-            .select(col("vec_id"), col("bv.band_idx").as("band_idx"),
-              col("bv.band_v").as("band_v"))
-            .localCheckpoint(true)
-          val st = bands
-            .agg(count(lit(1)),
-              coalesce(min("vec_id"), lit(Long.MaxValue)))
-            .head()
-          val bandRows = st.getLong(0)
-          val nVecs = bandRows / nBandsDial
-          val batchLo = st.getLong(1)
-          val segDir = new java.io.File(segBase, s"b$batchId")
-          // OVERLAP (round-16, guide §2.6, the text-path idiom): the
-          // segment commit writes from the band checkpoint blocks and
-          // is consumed only by future batches and the fold — run it
-          // on a pool thread while the main thread probes history and
-          // writes the ledger; joined before the fold. Unlike the
-          // text path the LEDGER here is not overlapped with the
-          // fold: when tier 0 clears, its lineage reads the probed
-          // segment parquet the fold would delete.
-          val pool = batchOverlapPool()
-          try {
-          val segF = pool.submit(new java.lang.Runnable {
-            def run(): Unit = {
-              spark.sparkContext.setJobDescription(
-                s"embneardup b$batchId: segment commit")
-              val segParts = math.max(1L,
-                math.min(64L, bandRows / 500000L + 1L)).toInt
-              graft.sources.Tables.writeParquetFiles(bands,
-                segDir.getPath, segParts)
-              writeSegRowMeta(segDir, bandRows)
-            }
-          })
-          val priorSegs = liveSegments(segBase)
-            .filterNot(_.getName == segDir.getName)
-          val probe = priorSegs.foldLeft(bands)((acc, d) =>
-            acc.unionByName(spark.read.parquet(d.getPath)))
-          // two-tier probe-volume guard — [[guardProbeVolume]]; the
-          // returned frame shares one probe scan between the bound
-          // agg and the join at scale
-          val probeG = guardProbeVolume(probe, priorSegs, bandRows,
-            batchLo, "vec_id", Seq("band_idx", "band_v"),
-            maxProbePairs, batchId, "emb-probe-pair-volume")
-          val pairs = probeG.select(col("vec_id").as("vec_a"),
-              col("band_idx"), col("band_v"))
-            .join(bands.select(col("vec_id").as("vec_b"),
-              col("band_idx"), col("band_v")),
-              Seq("band_idx", "band_v"))
-            .filter(col("vec_a") < col("vec_b"))
-            .select("vec_a", "vec_b").distinct()
-          // exact-cosine verify on ids-only pairs: vectors attach via
-          // size-gated broadcast lookups, never ride the pair exchange.
-          // No checkpoint on pairs — unlike the text path (two
-          // consumers), the ledger agg is its only consumer and it
-          // runs BEFORE the fold deletes any probed segment
-          val vecs = graft.operators.Joins.broadcastIfSmall(
-            graft.sources.Tables.embeddings(spark, sfDir)
-              .select(col("vec_id"), col("embedding")))
-          val scoredPairs = pairs
-            .join(vecs.select(col("vec_id").as("vec_a"),
-              col("embedding").as("e_a")), Seq("vec_a"))
-            .join(vecs.select(col("vec_id").as("vec_b"),
-              col("embedding").as("e_b")), Seq("vec_b"))
-            .withColumn("cosine",
-              graft.functions.cosine_sim(col("e_a"), col("e_b")))
-          // ledger: ONE action — per-vec fold then the global row
-          scoredPairs
-            .groupBy(col("vec_b"))
-            .agg(count(lit(1)).as("n_pairs_b"),
-              max((col("cosine") >= threshold).cast("long"))
-                .as("is_dup"),
-              max((col("cosine") >= threshold &&
-                col("vec_a") < batchLo).cast("long")).as("by_hist"))
-            .agg(coalesce(sum("n_pairs_b"), lit(0L)).as("n_cand_pairs"),
-              coalesce(sum("is_dup"), lit(0L)).as("n_dup_dropped"),
-              coalesce(sum("by_hist"), lit(0L))
-                .as("n_dropped_by_history"))
-            .select(lit(batchId).as("batch_idx"),
-              lit(nVecs).as("n_vecs"), col("n_cand_pairs"),
-              col("n_dup_dropped"), col("n_dropped_by_history"),
-              (lit(nVecs) - col("n_dup_dropped")).as("n_admitted"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(new java.io.File(outBase, s"b$batchId").getPath)
-          // fold live segments past the dial — the q205 compaction
-          // machinery ([[foldLiveSegmentsPastDial]]); needs this
-          // batch's segment committed, so join the segment future
-          segF.get()
-          foldLiveSegmentsPastDial(spark, segBase, batchId,
-            maxLiveSegments, foldTargetBytes)
-          } finally pool.shutdown()
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      System.err.println("embneardup-batch-ms: " + q.recentProgress
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.getOrDefault("triggerExecution", -1L))
-        .mkString(","))
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+    val stream = spark.readStream
+      .schema(graft.sources.Tables.embeddingsSchema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staging)
+    val (q, _) = drain(stream, batchSink { (batch, batchId) =>
+      // sign + band in one spread scan (lsh_sig is native but the
+      // arriving file's split count would still serialize it at
+      // scale — the round-14 foreachBatch parallelism rule), then
+      // ONE checkpoint feeds the stats agg, the segment write, and
+      // both sides of the probe join
+      val bands = graft.sources.Tables.spread(batch)
+        .select(col("vec_id"),
+          graft.functions.lsh_sig(col("embedding"),
+            graft.operators.Similarity.planeSigns)
+            .cast("long").as("sig"))
+        .select(col("vec_id"), explode(expr(
+          s"""transform(sequence(0, ${nBandsDial - 1}), b ->
+             |  named_struct('band_idx', b,
+             |    'band_v', (sig >> (b * $bitsPerBand)) & $mask))"""
+            .stripMargin)).as("bv"))
+        .select(col("vec_id"), col("bv.band_idx").as("band_idx"),
+          col("bv.band_v").as("band_v"))
+        .localCheckpoint(true)
+      val st = bands
+        .agg(count(lit(1)),
+          coalesce(min("vec_id"), lit(Long.MaxValue)))
+        .head()
+      val bandRows = st.getLong(0)
+      val nVecs = bandRows / nBandsDial
+      val batchLo = st.getLong(1)
+      val segDir = new java.io.File(segBase, s"b$batchId")
+      // OVERLAP (round-16, guide §2.6, the text-path idiom): the
+      // segment commit writes from the band checkpoint blocks and
+      // is consumed only by future batches and the fold — run it
+      // on a pool thread while the main thread probes history and
+      // writes the ledger; joined before the fold. Unlike the
+      // text path the LEDGER here is not overlapped with the
+      // fold: when tier 0 clears, its lineage reads the probed
+      // segment parquet the fold would delete.
+      val pool = graft.sources.Tables.overlapPool()
+      try {
+      val segF = graft.sources.Tables.submitJob(pool, spark,
+          s"embneardup b$batchId: segment commit") {
+        val segParts = math.max(1L,
+          math.min(64L, bandRows / 500000L + 1L)).toInt
+        graft.sources.Tables.writeParquetFiles(bands,
+          segDir.getPath, segParts)
+        writeSegRowMeta(segDir, bandRows)
+      }
+      val priorSegs = liveSegments(segBase)
+        .filterNot(_.getName == segDir.getName)
+      val probe = priorSegs.foldLeft(bands)((acc, d) =>
+        acc.unionByName(spark.read.parquet(d.getPath)))
+      // two-tier probe-volume guard — [[guardProbeVolume]]; the
+      // returned frame shares one probe scan between the bound
+      // agg and the join at scale
+      val probeG = guardProbeVolume(probe, priorSegs, bandRows,
+        batchLo, "vec_id", Seq("band_idx", "band_v"),
+        maxProbePairs, batchId, "emb-probe-pair-volume")
+      val pairs = probeG.select(col("vec_id").as("vec_a"),
+          col("band_idx"), col("band_v"))
+        .join(bands.select(col("vec_id").as("vec_b"),
+          col("band_idx"), col("band_v")),
+          Seq("band_idx", "band_v"))
+        .filter(col("vec_a") < col("vec_b"))
+        .select("vec_a", "vec_b").distinct()
+      // exact-cosine verify on ids-only pairs: vectors attach via
+      // size-gated broadcast lookups, never ride the pair exchange.
+      // No checkpoint on pairs — unlike the text path (two
+      // consumers), the ledger agg is its only consumer and it
+      // runs BEFORE the fold deletes any probed segment
+      val vecs = graft.operators.Joins.broadcastIfSmall(
+        graft.sources.Tables.embeddings(spark, sfDir)
+          .select(col("vec_id"), col("embedding")))
+      val scoredPairs = pairs
+        .join(vecs.select(col("vec_id").as("vec_a"),
+          col("embedding").as("e_a")), Seq("vec_a"))
+        .join(vecs.select(col("vec_id").as("vec_b"),
+          col("embedding").as("e_b")), Seq("vec_b"))
+        .withColumn("cosine",
+          graft.functions.cosine_sim(col("e_a"), col("e_b")))
+      // ledger: ONE action — per-vec fold then the global row
+      scoredPairs
+        .groupBy(col("vec_b"))
+        .agg(count(lit(1)).as("n_pairs_b"),
+          max((col("cosine") >= threshold).cast("long"))
+            .as("is_dup"),
+          max((col("cosine") >= threshold &&
+            col("vec_a") < batchLo).cast("long")).as("by_hist"))
+        .agg(coalesce(sum("n_pairs_b"), lit(0L)).as("n_cand_pairs"),
+          coalesce(sum("is_dup"), lit(0L)).as("n_dup_dropped"),
+          coalesce(sum("by_hist"), lit(0L))
+            .as("n_dropped_by_history"))
+        .select(lit(batchId).as("batch_idx"),
+          lit(nVecs).as("n_vecs"), col("n_cand_pairs"),
+          col("n_dup_dropped"), col("n_dropped_by_history"),
+          (lit(nVecs) - col("n_dup_dropped")).as("n_admitted"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(new java.io.File(outBase, s"b$batchId").getPath)
+      // fold live segments past the dial — the q205 compaction
+      // machinery ([[foldLiveSegmentsPastDial]]); needs this
+      // batch's segment committed, so join the segment future
+      segF.get()
+      foldLiveSegmentsPastDial(spark, segBase, batchId,
+        maxLiveSegments, foldTargetBytes)
+      } finally pool.shutdown()
+    }, width = 8)
+    System.err.println("embneardup-batch-ms: " + q.recentProgress
+      .filter(_.numInputRows > 0)
+      .map(p => p.durationMs.getOrDefault("triggerExecution", -1L))
+      .mkString(","))
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"embedding neardup replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
@@ -2159,18 +2058,10 @@ object EventStreams {
   def sessionWindowsDurableRestart(spark: SparkSession, sfDir: String,
       nFiles: Int = 2, maxAttempts: Int = 3): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "restart_" + graft.sources.Tables.pathKey(sfDir))
-    val sinkDir = new java.io.File(base, "out").getPath
-    val ckptDir = new java.io.File(base, "ckpt").getPath
-    def start() = sessionWindows(
-        readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
-      .writeStream.format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val stream = sessionWindows(
+      readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
+    val width = stateWidth(spark, 8, sfDir)
+    var sink = parquetSink(streamSinkDir(sfDir, "restart"))
     // the kill is a race by design (stop() vs the replay draining);
     // if run 1 commits every batch before the stop lands, nothing is
     // left to recover — rebuild the dirs and re-race (bounded retries,
@@ -2180,21 +2071,21 @@ object EventStreams {
     var recovered = false
     while (!recovered) {
       attempt += 1
-      org.apache.commons.io.FileUtils.deleteQuietly(base)
-      val (d1, d2) = withStatePartitions(spark, 8, sfDir) {
+      if (attempt > 1) sink = parquetSink(streamSinkDir(sfDir, "restart"))
+      val (d1, d2) = start(stream, sink, width) { run =>
         // ---- run 1: kill after the first committed data batch ----
-        val q1 = start()
+        val q1 = run()
         val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
         while (q1.isActive && System.nanoTime < deadline &&
             !q1.recentProgress.exists(_.numInputRows > 0))
           Thread.sleep(2)
         q1.stop()
         q1.awaitTermination()
-        val committed1 = q1.recentProgress.count(_.numInputRows > 0)
+        val committed1 = dataBatches(q1)
         // ---- run 2: recover from the checkpoint, drain to the end ----
-        val q2 = start()
+        val q2 = run()
         q2.awaitTermination()
-        (committed1, q2.recentProgress.count(_.numInputRows > 0))
+        (committed1, dataBatches(q2))
       }
       require(d1 >= 1, s"restart harness: first run committed $d1 data " +
         "batches before the stop - recovery was not exercised")
@@ -2204,8 +2095,7 @@ object EventStreams {
           s"drained in all $maxAttempts attempts - recovery never exercised")
     }
     // batch read of the sink: committed files only, via _spark_metadata
-    spark.read.parquet(sinkDir)
-      .orderBy("user_id", "session_start")
+    sink.rows(spark).orderBy("user_id", "session_start")
   }
 
   /** q146 — watermark ENFORCEMENT made driver-visible (q134 proves the
@@ -2233,39 +2123,22 @@ object EventStreams {
     // the filter watermark past the whole copied bucket.
     val staging = stageChronologicalEvents(spark, sfDir, nFiles,
       lateTail = true)
-    val name = "graft_stream_late_" + runCounter.incrementAndGet()
-    val dropped = withStatePartitions(spark, 8, sfDir) {
-      val q = sessionWindows(
-        readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-    }
+    val (q, sink) = drain(
+      sessionWindows(readEventStream(spark, staging, maxFilesPerTrigger = Some(1))),
+      memorySink("late"), stateWidth(spark, 8, sfDir))
+    val dropped = q.recentProgress.flatMap(_.stateOperators)
+      .map(_.numRowsDroppedByWatermark).sum
     require(dropped > 0,
       "late replay: numRowsDroppedByWatermark == 0 - the late tail " +
         "was not dropped, the watermark did not enforce")
-    spark.table(name)
-      .orderBy("user_id", "session_start")
+    sink.orderBy("user_id", "session_start")
   }
 
   def hourlyByTypeAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_hourly_" + runCounter.incrementAndGet()
-    // Complete mode: the finalization batch would re-emit an identical
-    // table ([[withoutNoDataBatch]])
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
-      val q = hourlyByType(
-        readEventStream(spark, sfDir, glob = Some("events.parquet")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name).orderBy("window_start", "event_type")
+    val (_, sink) = drain(
+      hourlyByType(readEventStream(spark, sfDir, glob = Some("events.parquet"))),
+      memorySink("hourly"), stateWidth(spark, 8, sfDir), OutputMode.Complete)
+    sink.orderBy("window_start", "event_type")
   }
 
   /** q148 — UPDATE output mode, completing the output-mode triad
@@ -2291,26 +2164,18 @@ object EventStreams {
   def hourlyByTypeUpdateReplay(spark: SparkSession, sfDir: String,
       nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
-    val name = "graft_stream_update_" + runCounter.incrementAndGet()
     // Update mode emits only on data; the finalization batch would
     // only evict state. Two chronological files are the minimal
     // cross-batch-update fixture (the fold and oracle are
     // split-invariant: n_events is monotone per key whatever the split)
-    val nDataBatches = withoutNoDataBatch(spark) {
-        withStatePartitions(spark, 8, sfDir) {
-      val q = hourlyByType(
-        readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    } }
+    val (q, log) = drain(
+      hourlyByType(readEventStream(spark, staging, maxFilesPerTrigger = Some(1))),
+      memorySink("update"), stateWidth(spark, 8, sfDir), OutputMode.Update,
+      skipFinalBatch = true)
+    val nDataBatches = dataBatches(q)
     require(nDataBatches >= 2,
       s"update replay ran $nDataBatches data batches - the multi-batch " +
         "update path was NOT exercised")
-    val log = spark.table(name)
     val folded = log
       .groupBy(col("window_start"), col("event_type"))
       .agg(
@@ -2377,28 +2242,22 @@ object EventStreams {
   def segmentRollupStream(spark: SparkSession, sfDir: String,
       nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
-    val name = "graft_stream_enrich_" + runCounter.incrementAndGet()
-    val nData = withStatePartitions(spark, 8, sfDir) {
-      val dim = graft.sources.Tables.customer(spark, sfDir)
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
+    val dim = graft.sources.Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), col("c_mktsegment"))
+    val (q, sink) = drain(
+      readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
         .join(org.apache.spark.sql.functions.broadcast(dim),
           col("user_id") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("segment"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(28,10)")).cast("double")
-            .as("sum_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+            .as("sum_value")),
+      memorySink("enrich"), stateWidth(spark, 8, sfDir), OutputMode.Complete)
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"enrich replay ran $nData data batches - the per-micro-batch " +
         "stream-static join path was NOT exercised")
-    spark.table(name).orderBy("segment")
+    sink.orderBy("segment")
   }
 
   /** q160 — SLOWLY-CHANGING dim pickup, the claim q149's in-plan join
@@ -2432,58 +2291,48 @@ object EventStreams {
   def dimSwapEnrichReplay(spark: SparkSession, sfDir: String,
       nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "dimswap_" + graft.sources.Tables.pathKey(sfDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
+    val base = streamSinkDir(sfDir, "dimswap")
     val dimDir = new java.io.File(base, "dim").getPath
     val outBase = new java.io.File(base, "out")
     outBase.mkdirs()
     val dimV1 = graft.sources.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
     dimV1.write.mode("overwrite").parquet(dimDir)
-    val nData = withStatePartitions(spark, 8, sfDir) {
-      val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          // the pickup: a FRESH read per batch re-lists the dim dir
-          val dim = s.read.parquet(dimDir)
-          batch
-            .join(org.apache.spark.sql.functions.broadcast(dim),
-              col("user_id") === col("c_custkey"))
-            .groupBy(col("segment"))
-            .agg(count(lit(1)).as("n_events"),
-              sum(col("value").cast("decimal(28,10)")).as("sum_dec"))
-            .write.mode("overwrite") // idempotent per-batch dir (q154)
-            .parquet(new java.io.File(outBase, s"b$batchId").getPath)
-          // bump AFTER the first batch committed: later batches see v2.
-          // The bump is guarded TWICE: an on-disk marker (fast path) AND
-          // a data-level conditional — a segment already ending in
-          // '_v2' is passed through unchanged — so a RE-EXECUTED batch 0
-          // (failure anywhere between the v2 overwrite and marker
-          // creation; foreachBatch is at-least-once) re-runs the bump as
-          // a no-op rewrite instead of double-suffixing to '_v2_v2'.
-          // The marker alone left that window open (round-10 ADVICE):
-          // only self-detection from the data closes it.
-          val bumped = new java.io.File(dimDir, "_graft_dim_bumped")
-          if (batchId == 0L && !bumped.exists) {
-            val v2 = s.read.parquet(dimDir)
-              .withColumn("segment",
-                when(col("segment").endsWith("_v2"), col("segment"))
-                  .otherwise(concat(col("segment"), lit("_v2"))))
-              .localCheckpoint(true) // sever lineage from the files
-                                     // about to be overwritten
-            v2.write.mode("overwrite").parquet(dimDir)
-            bumped.createNewFile()
-          }
-          ()
+    val (q, _) = drain(readEventStream(spark, staging, maxFilesPerTrigger = Some(1)),
+      batchSink { (batch, batchId) =>
+        val s = batch.sparkSession
+        // the pickup: a FRESH read per batch re-lists the dim dir
+        val dim = s.read.parquet(dimDir)
+        batch
+          .join(org.apache.spark.sql.functions.broadcast(dim),
+            col("user_id") === col("c_custkey"))
+          .groupBy(col("segment"))
+          .agg(count(lit(1)).as("n_events"),
+            sum(col("value").cast("decimal(28,10)")).as("sum_dec"))
+          .write.mode("overwrite") // idempotent per-batch dir (q154)
+          .parquet(new java.io.File(outBase, s"b$batchId").getPath)
+        // bump AFTER the first batch committed: later batches see v2.
+        // The bump is guarded TWICE: an on-disk marker (fast path) AND
+        // a data-level conditional — a segment already ending in
+        // '_v2' is passed through unchanged — so a RE-EXECUTED batch 0
+        // (failure anywhere between the v2 overwrite and marker
+        // creation; foreachBatch is at-least-once) re-runs the bump as
+        // a no-op rewrite instead of double-suffixing to '_v2_v2'.
+        // The marker alone left that window open (round-10 ADVICE):
+        // only self-detection from the data closes it.
+        val bumped = new java.io.File(dimDir, "_graft_dim_bumped")
+        if (batchId == 0L && !bumped.exists) {
+          val v2 = s.read.parquet(dimDir)
+            .withColumn("segment",
+              when(col("segment").endsWith("_v2"), col("segment"))
+                .otherwise(concat(col("segment"), lit("_v2"))))
+            .localCheckpoint(true) // sever lineage from the files
+                                   // about to be overwritten
+          v2.write.mode("overwrite").parquet(dimDir)
+          bumped.createNewFile()
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+      }, stateWidth(spark, 8, sfDir))
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"dim-swap replay ran $nData data batches - the version bump " +
         "could not be exercised")
@@ -2580,10 +2429,8 @@ object EventStreams {
     */
   def hourlyDistinctKmvAvailableNow(spark: SparkSession,
       sfDir: String, k: Int = 256): DataFrame = {
-    val name = "graft_stream_kmvdist_" + runCounter.incrementAndGet()
-    // Complete mode: finalization would re-emit an identical table
-    withoutNoDataBatch(spark) { withStatePartitions(spark, 8, sfDir) {
-      val q = withKmvScalars(
+    val (_, sink) = drain(
+      withKmvScalars(
         readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .withColumn("h", expr(kmvUserHashExpr))
           .withWatermark("ts", "10 minutes")
@@ -2593,14 +2440,9 @@ object EventStreams {
           .select(col("window.start").as("window_start"),
             col("event_type"), col("kmv"), col("n_events")), k)
         .select("window_start", "event_type", "n_events", "k_used",
-          "kth_hash", "distinct_est")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Complete)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } }
-    spark.table(name).orderBy("window_start", "event_type")
+          "kth_hash", "distinct_est"),
+      memorySink("kmvdist"), stateWidth(spark, 8, sfDir), OutputMode.Complete)
+    sink.orderBy("window_start", "event_type")
   }
 
   /** Shared DuckDB oracle for q141/q157 (the q157 fold reconstructs
@@ -2668,14 +2510,12 @@ object EventStreams {
   def hourlyDistinctKmvUpdateReplay(spark: SparkSession, sfDir: String,
       k: Int = 256, nFiles: Int = 2): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
-    val name = "graft_stream_kmvevict_" + runCounter.incrementAndGet()
     // Update mode emits only on data; eviction (the asserted
     // numRowsRemoved) happens on the LATER DATA batches — each batch
     // evicts with the watermark computed from the previous batch's max
     // event time — so the finalization batch adds nothing observable
-    val (nData, removed) = withoutNoDataBatch(spark) {
-        withStatePartitions(spark, 8, sfDir) {
-      val q = withKmvScalars(
+    val (q, sink) = drain(
+      withKmvScalars(
         readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
           .withColumn("h", expr(kmvUserHashExpr))
           .withWatermark("ts", "10 minutes")
@@ -2685,16 +2525,12 @@ object EventStreams {
           .select(col("window.start").as("window_start"),
             col("event_type"), col("kmv"), col("n_events")), k)
         .select("window_start", "event_type", "n_events", "k_used",
-          "kth_hash", "distinct_est")
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      (q.recentProgress.count(_.numInputRows > 0),
-        q.recentProgress.flatMap(_.stateOperators)
-          .map(_.numRowsRemoved).sum)
-    } }
+          "kth_hash", "distinct_est"),
+      memorySink("kmvevict"), stateWidth(spark, 8, sfDir), OutputMode.Update,
+      skipFinalBatch = true)
+    val nData = dataBatches(q)
+    val removed = q.recentProgress.flatMap(_.stateOperators)
+      .map(_.numRowsRemoved).sum
     require(nData >= 2,
       s"kmv evict replay ran $nData data batches - the multi-batch " +
         "eviction path was NOT exercised")
@@ -2702,7 +2538,7 @@ object EventStreams {
       "kmv evict replay: numRowsRemoved == 0 - the watermark evicted " +
         "no window state; 'state bounded by open windows' was NOT " +
         "demonstrated")
-    spark.table(name)
+    sink
       .groupBy(col("window_start"), col("event_type"))
       .agg(max(col("n_events")).as("n_events"),
         expr("max_by(k_used, n_events)").as("k_used"),
@@ -2747,10 +2583,7 @@ object EventStreams {
     val staging = stageChronologicalEvents(spark, sfDir, nFiles)
     // md5 of the full path, not String.hashCode: 32-bit hash collisions
     // between two sfDirs would interleave their version chains (ADVICE r8)
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      "upsert_" + graft.sources.Tables.pathKey(sfDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
+    val base = streamSinkDir(sfDir, "upsert")
     def versionsBelow(limit: Long): Seq[(Long, java.io.File)] = {
       val fs = Option(base.listFiles()).getOrElse(Array.empty)
       fs.filter(f => f.isDirectory && f.getName.startsWith("v") &&
@@ -2766,26 +2599,19 @@ object EventStreams {
       .select(col("user_id"), col("m.event_id").as("event_id"),
         col("m.ts").as("ts"), col("m.event_type").as("event_type"),
         col("m.value").as("value"))
-    val nData = withStatePartitions(spark, 8, sfDir) {
-      val q = readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          val bLatest = latestPerUser(batch.select(cols.map(col): _*))
-          val merged = versionsBelow(batchId).lastOption match {
-            case Some((_, dir)) =>
-              latestPerUser(s.read.parquet(dir.getPath).unionByName(bLatest))
-            case None => bLatest
-          }
-          merged.write.mode("overwrite")
-            .parquet(new java.io.File(base, s"v$batchId").getPath)
-          () // foreachBatch wants Unit (VoidFunction2 overload ambiguity)
+    val (q, _) = drain(readEventStream(spark, staging, maxFilesPerTrigger = Some(1)),
+      batchSink { (batch, batchId) =>
+        val s = batch.sparkSession
+        val bLatest = latestPerUser(batch.select(cols.map(col): _*))
+        val merged = versionsBelow(batchId).lastOption match {
+          case Some((_, dir)) =>
+            latestPerUser(s.read.parquet(dir.getPath).unionByName(bLatest))
+          case None => bLatest
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.count(_.numInputRows > 0)
-    }
+        merged.write.mode("overwrite")
+          .parquet(new java.io.File(base, s"v$batchId").getPath)
+      }, stateWidth(spark, 8, sfDir))
+    val nData = dataBatches(q)
     require(nData >= 2,
       s"upsert replay ran $nData data batches - the cross-batch merge " +
         "path was NOT exercised")

@@ -798,4 +798,118 @@ class StreamingSpec extends SparkSpec {
         s"q124 state partitions at sf0.001: ${widths.asScala.toSeq}")
     } finally spark.streams.removeListener(listener)
   }
+
+  /** Progress of every streaming query `body` starts whose name begins
+    * with `prefix`, one batch-ordered sequence per run. Spark posts a
+    * run's terminated event after its last progress event on the same
+    * asynchronous bus, so waiting for every started run to terminate
+    * drains its progress.
+    */
+  private def progressOf[A](prefix: String)(body: => A)
+      : (A, Seq[Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]]) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import scala.jdk.CollectionConverters._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val done = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.runId)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val a = body
+      val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+      while (!started.asScala.forall(done.contains) && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(started.asScala.forall(done.contains), "a started replay never terminated")
+      val runs = progress.asScala.toSeq
+        .filter(p => Option(p.name).exists(_.startsWith(prefix)))
+        .groupBy(_.runId).values.map(_.sortBy(_.batchId)).toSeq
+      (a, runs)
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("Complete mode runs no finalization batch: q124 and q141 run one micro-batch, q125 two") {
+    assert(spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") === "true",
+      "these counts are for the default conf")
+    val (_, hourly) = progressOf("graft_stream_hourly_")(
+      EventStreams.hourlyByTypeAvailableNow(spark, sf0001).collect())
+    assert(hourly.map(_.length) === Seq(1), s"q124 batches: $hourly")
+    val (_, kmv) = progressOf("graft_stream_kmvdist_")(
+      EventStreams.hourlyDistinctKmvAvailableNow(spark, sf0001).collect())
+    assert(kmv.map(_.length) === Seq(1), s"q141 batches: $kmv")
+    // Append mode: the data batch, then the finalization batch that
+    // advances the watermark and emits the closed sessions
+    val (_, sessions) = progressOf("graft_stream_sessions_")(
+      EventStreams.sessionWindowsAvailableNow(spark, sf0001).collect())
+    assert(sessions.map(_.map(_.numInputRows > 0)) === Seq(Seq(true, false)),
+      s"q125 batches: $sessions")
+  }
+
+  test("Tables.withConfs restores a set key and unsets an absent one, also when the body throws") {
+    val setKey = "spark.sql.shuffle.partitions"
+    val absentKey = "graft.spec.withconfs.absent"
+    val keptKey = "spark.sql.ansi.enabled"
+    val before = spark.conf.getAll
+    assert(before.contains(setKey) && !before.contains(absentKey))
+    def restored(): Unit = {
+      val now = spark.conf.getAll
+      assert(now.get(setKey) === before.get(setKey))
+      assert(now.get(keptKey) === before.get(keptKey))
+      assert(now.get(absentKey) === None, s"$absentKey was left set")
+    }
+    val seen = Tables.withConfs(spark, setKey -> Some("3"),
+        absentKey -> Some("x"), keptKey -> None) {
+      (spark.conf.get(setKey), spark.conf.get(absentKey), spark.conf.getAll.get(keptKey))
+    }
+    assert(seen === (("3", "x", before.get(keptKey))))
+    restored()
+    val thrown = intercept[IllegalStateException] {
+      Tables.withConfs(spark, setKey -> Some("5"), absentKey -> Some("y")) {
+        assert(spark.conf.get(setKey) === "5" && spark.conf.get(absentKey) === "y")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(thrown.getMessage === "body failed")
+    restored()
+  }
+
+  test("a memory table drained by EventStreams.drain is dropped by Tables.dropDrainedStreamTables") {
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    val (q, rows) = EventStreams.drain(
+      EventStreams.readEventStream(spark, sf0001, glob = Some("events.parquet")),
+      EventStreams.memorySink("janitor_spec"), width = 1)
+    assert(!q.isActive && q.exception.isEmpty)
+    assert(rows.count() === Tables.eventsRows(spark, sf0001))
+    val made = tables() -- before
+    assert(made.size === 1, s"drain registered $made")
+    Tables.dropDrainedStreamTables(spark)
+    assert((tables() intersect made).isEmpty, s"$made outlived the janitor")
+  }
+
+  test("the runner sets RocksDB only for transformWithState plans and restores the provider conf") {
+    import scala.jdk.CollectionConverters._
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
+    def provider() = (spark.conf.getAll.get(provKey), spark.conf.get(provKey))
+    val before = provider()
+    def rocksOps(runs: Seq[Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]]) = {
+      val ops = runs.flatten.flatMap(_.stateOperators)
+      assert(ops.nonEmpty, "no state operator progress")
+      ops.map(_.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))).distinct
+    }
+    val (lifetime, tws) = progressOf("graft_stream_tws_")(
+      EventStreams.userLifetimeAvailableNow(spark, sf0001).collect())
+    assert(lifetime.nonEmpty)
+    assert(provider() === before)
+    assert(rocksOps(tws) === Seq(true), "q172 did not run on RocksDB")
+    val (_, hourly) = progressOf("graft_stream_hourly_")(
+      EventStreams.hourlyByTypeAvailableNow(spark, sf0001).collect())
+    assert(provider() === before)
+    assert(rocksOps(hourly) === Seq(false), "q124 ran on RocksDB")
+  }
 }

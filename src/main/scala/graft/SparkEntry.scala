@@ -601,7 +601,7 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] = Map(
-    "q01_top_products" -> Insights.topProductsByRevenueSql(),
+    "q01_top_products" -> Insights.topProductsByRevenueSql,
     "q02_monthly_revenue" -> Insights.monthlyRevenueSql,
     "q03_revenue_by_store" -> Insights.revenueByStoreSql,
     "q04_balance_bucket" -> Insights.revenueByBalanceBucketSql,
@@ -616,87 +616,86 @@ object SparkEntry {
     "q12_row_counts" -> Validation.rowCountsSql,
     "q14_dedup_exact" -> Dedup.exactDedupSql,
     "q15_minhash_signatures" -> Dedup.minhashSignaturesSql,
-    "q16_neardup_pairs" -> Dedup.neardupPairsSql(),
+    "q16_neardup_pairs" -> Dedup.neardupPairsSql,
     "q17_simhash" -> Dedup.simhashSql,
-    "q18_simhash_neardup" -> Dedup.simhashNeardupSql(),
+    "q18_simhash_neardup" -> Dedup.simhashNeardupSql,
     "q19_text_stats" -> TextAnalysis.textStatsSql,
     "q20_language_id" -> TextAnalysis.languageIdSql,
     "q21_fingerprints" -> TextAnalysis.fingerprintsSql,
     "q22_embed_stats" -> Similarity.embedStatsSql,
-    "q23_knn_bruteforce" -> Similarity.knnBruteForceSql(),
-    "q24_ann_lsh" -> Similarity.annLshSql(),
+    "q23_knn_bruteforce" -> Similarity.knnBruteForceSql,
+    "q24_ann_lsh" -> Similarity.annLshSql,
     "q25_embed_neardup" -> Similarity.embeddingNeardupSql(0.4),
     "q26_events_hourly" -> Events.hourlyByTypeSql,
     "q27_events_sliding" -> Events.slidingHourlySql,
-    "q28_events_sessions" -> Events.sessionizeSql(),
+    "q28_events_sessions" -> Events.sessionizeSql,
     "q29_events_daily" -> Events.dailyTypeRollupSql,
     "q30_media_features" -> Multimodal.mediaFeaturesSql,
     "q31_media_rollup" -> Multimodal.mediaKindRollupSql,
     "q156_media_decode" -> Multimodal.mediaDecodeSql,
     "q166_audio_decode" -> Multimodal.audioDecodeSql,
     "q32_events_props" -> Events.propsRollupSql,
-    "q33_ngram_jaccard" -> Dedup.ngramJaccardPairsSql(),
-    "q34_ann_ivf" -> Similarity.annIvfSql(),
-    "q138_ann_pq" -> Similarity.annPqSql(),
-    "q139_sampled_kpi" -> Insights.sampledKpiSql(),
-    "q145_sampled_groups" -> Insights.sampledGroupKpiSql(),
-    "q147_incremental_dedup" -> Dedup.incrementalDedupSql(),
-    "q159_dedup_loop" -> Dedup.incrementalDedupLoopSql(),
-    "q161_cms_cells" -> StatQa.cmsShardCellsSql(),
-    "q162_filtered_ann" -> Similarity.annIvfFilteredSql(),
+    "q33_ngram_jaccard" -> Dedup.ngramJaccardPairsSql,
+    "q34_ann_ivf" -> Similarity.annIvfSql,
+    "q138_ann_pq" -> Similarity.annPqSql,
+    "q139_sampled_kpi" -> Insights.sampledKpiSql,
+    "q145_sampled_groups" -> Insights.sampledGroupKpiSql,
+    "q147_incremental_dedup" -> Dedup.incrementalDedupSql,
+    "q159_dedup_loop" -> Dedup.incrementalDedupLoopSql,
+    "q161_cms_cells" -> StatQa.cmsShardCellsSql,
+    "q162_filtered_ann" -> Similarity.annIvfFilteredSql,
     "q163_streaming_outer_join" ->
-      graft.streaming.EventStreams.errorClickLeftOuterAvailableNowSql(),
+      graft.streaming.EventStreams.errorClickLeftOuterAvailableNowSql,
     "q164_orc_roundtrip" -> graft.sources.Tables.ordersOrcRoundtripSql,
-    "q165_keyword_search" -> TextAnalysis.keywordSearchSql(),
-    "q167_phrase_search" -> TextAnalysis.phraseSearchSql(),
+    "q165_keyword_search" -> TextAnalysis.keywordSearchSql,
+    "q167_phrase_search" -> TextAnalysis.phraseSearchSql,
     "q168_video_frames" -> Multimodal.videoFramesSql,
     "q169_media_resize" -> Multimodal.mediaResizeSql,
     "q170_streaming_full_outer" ->
-      graft.streaming.EventStreams.errorClickFullOuterAvailableNowSql(),
-    "q171_bm25_search" -> TextAnalysis.bm25SearchSql(),
+      graft.streaming.EventStreams.errorClickFullOuterAvailableNowSql,
+    "q171_bm25_search" -> TextAnalysis.bm25SearchSql,
     "q172_transform_with_state" ->
       graft.streaming.EventStreams.userLifetimeAvailableNowSql,
-    "q173_sorted_export" -> Layout.sortedExportManifestSql(),
+    "q173_sorted_export" -> Layout.sortedExportManifestSql,
     "q174_tws_timers" ->
-      graft.streaming.EventStreams.inactivityDigestAvailableNowSql(),
+      graft.streaming.EventStreams.inactivityDigestAvailableNowSql,
     "q175_tws_bootstrap" ->
       graft.streaming.EventStreams.userLifetimeBootstrapAvailableNowSql,
     "q176_schema_evolution" -> graft.sources.Tables.ordersEvolvedReadSql,
     "q177_streaming_anti" ->
       graft.streaming.EventStreams.suppressedStreamAvailableNowSql,
-    "q178_kmv_cells" -> StatQa.kmvShardCellsSql(),
+    "q178_kmv_cells" -> StatQa.kmvShardCellsSql,
     "q179_variant_props" -> Events.variantPathRollupSql,
     "q180_streaming_semi" ->
-      graft.streaming.EventStreams.errorClickSemiAvailableNowSql(),
+      graft.streaming.EventStreams.errorClickSemiAvailableNowSql,
     "q181_group_ols" -> StatQa.groupOlsSql,
-    "q182_scene_changes" -> Multimodal.sceneChangesSql(),
-    "q183_rolling_distinct" -> StatQa.rollingDistinctCellsSql(),
-    "q184_hybrid_rrf" -> Similarity.hybridRrfSearchSql(),
-    "q185_allpairs_jaccard" -> Dedup.allPairsJaccardSql(),
-    "q186_context_windows" -> Events.contextWindowsSql(),
+    "q182_scene_changes" -> Multimodal.sceneChangesSql,
+    "q183_rolling_distinct" -> StatQa.rollingDistinctCellsSql,
+    "q184_hybrid_rrf" -> Similarity.hybridRrfSearchSql,
+    "q185_allpairs_jaccard" -> Dedup.allPairsJaccardSql,
+    "q186_context_windows" -> Events.contextWindowsSql,
     "q187_bucket_join" -> Layout.bucketedJoinRollupSql,
-    "q188_decayed_engagement" -> Events.decayedEngagementSql(),
+    "q188_decayed_engagement" -> Events.decayedEngagementSql,
     "q189_grouping_sets" -> Insights.revenueGroupingSetsSql,
-    "q190_interval_overlap" -> Events.campaignOverlapSql(),
-    "q191_multitouch" -> Events.multiTouchAttributionSql(),
-    "q192_session_paths" -> Events.sessionPathsSql(),
+    "q190_interval_overlap" -> Events.campaignOverlapSql,
+    "q191_multitouch" -> Events.multiTouchAttributionSql,
+    "q192_session_paths" -> Events.sessionPathsSql,
     "q193_table_checksums" -> Validation.tableChecksumsSql,
-    "q194_keep_best" -> Dedup.keepBestDedupSql(),
-    "q195_ann_index_append" -> Similarity.annIndexAppendSql(),
-    "q196_corpus_pipeline" -> Corpus.corpusPipelineSql(),
+    "q194_keep_best" -> Dedup.keepBestDedupSql,
+    "q195_ann_index_append" -> Similarity.annIndexAppendSql,
+    "q196_corpus_pipeline" -> Corpus.corpusPipelineSql,
     "q197_fuzzy_join" -> Joins.fuzzyNameJoinSql,
-    "q198_hierarchy_rollup" -> Graph.hierarchyRollupSql(),
-    "q199_ann_compact" -> Similarity.annIndexCompactSql(),
+    "q198_hierarchy_rollup" -> Graph.hierarchyRollupSql,
+    "q199_ann_compact" -> Similarity.annIndexCompactSql,
     "q200_cuped_lift" -> StatQa.cupedLiftSql,
-    "q201_token_apportionment" -> Sampling.tokenApportionmentSql(),
-    "q202_streaming_gate" ->
-      graft.streaming.EventStreams.corpusGateStreamSql,
-    "q203_mutual_knn" -> Similarity.mutualKnnGraphSql(),
-    "q204_semantic_endgame" -> Similarity.semanticDedupEndgameSql(),
+    "q201_token_apportionment" -> Sampling.tokenApportionmentSql,
+    "q202_streaming_gate" -> graft.streaming.EventStreams.corpusGateStreamSql,
+    "q203_mutual_knn" -> Similarity.mutualKnnGraphSql,
+    "q204_semantic_endgame" -> Similarity.semanticDedupEndgameSql,
     "q205_streaming_neardup" -> Corpus.streamingNeardupAdmissionSql(),
-    "q206_triplet_mining" -> Similarity.tripletMiningSql(),
-    "q207_interleaved_schedule" -> Sampling.interleavedScheduleSql(),
-    "q208_band_index_compact" -> Dedup.bandIndexCompactSql(),
+    "q206_triplet_mining" -> Similarity.tripletMiningSql,
+    "q207_interleaved_schedule" -> Sampling.interleavedScheduleSql,
+    "q208_band_index_compact" -> Dedup.bandIndexCompactSql,
     "q209_streaming_neardup_amortized" ->
       Corpus.streamingNeardupAdmissionSql(nBatches = 4),
     "q210_streaming_embedding_neardup" ->
@@ -705,27 +704,26 @@ object SparkEntry {
     // BOTH streaming distinct queries carry the one full oracle — the
     // q157 fold reconstructs the q141 per-window finals by design
     "q141_streaming_distinct" ->
-      graft.streaming.EventStreams.hourlyDistinctKmvSql(),
-    "q157_streaming_evict" ->
-      graft.streaming.EventStreams.hourlyDistinctKmvSql(),
+      graft.streaming.EventStreams.hourlyDistinctKmvSql,
+    "q157_streaming_evict" -> graft.streaming.EventStreams.hourlyDistinctKmvSql,
     // folding the update log must reproduce the q26 batch aggregate
     "q148_streaming_update" -> Events.hourlyByTypeSql,
     "q149_streaming_enrich" ->
       graft.streaming.EventStreams.segmentRollupStreamSql,
     "q160_stream_dim_swap" ->
-      graft.streaming.EventStreams.dimSwapEnrichReplaySql(),
-    "q150_histogram_cells" -> Insights.histogramPercentileCellsSql(),
-    "q151_triangle_count" -> Graph.triangleCountsSql(),
-    "q152_value_drift" -> StatQa.valueDriftSql(),
+      graft.streaming.EventStreams.dimSwapEnrichReplaySql,
+    "q150_histogram_cells" -> Insights.histogramPercentileCellsSql,
+    "q151_triangle_count" -> Graph.triangleCountsSql,
+    "q152_value_drift" -> StatQa.valueDriftSql,
     "q153_audience_overlap" -> Events.audienceOverlapSql,
     // the folded upsert target must equal the q66 batch latest-by-user
     "q154_streaming_upsert" -> Events.latestByUserSql,
-    "q155_diversity_sample" -> Similarity.diversitySampleSql(),
-    "q140_semantic_dedup" -> Similarity.semanticDedupSql(),
-    "q142_ann_pq_trained" -> Similarity.annPqTrainedSql(),
-    "q144_ann_ivf_pq" -> Similarity.annIvfPqSql(),
+    "q155_diversity_sample" -> Similarity.diversitySampleSql,
+    "q140_semantic_dedup" -> Similarity.semanticDedupSql,
+    "q142_ann_pq_trained" -> Similarity.annPqTrainedSql,
+    "q144_ann_ivf_pq" -> Similarity.annIvfPqSql,
     // identical results to q144: the stored index holds the same codes
-    "q158_pq_stored" -> Similarity.annIvfPqSql(),
+    "q158_pq_stored" -> Similarity.annIvfPqSql,
     "q35_media_frames" -> Multimodal.mediaFramesSql,
     "q36_clean_sales" -> CleanCsv.cleanSalesCsvSql,
     "q37_clean_products" -> CleanCsv.cleanProductsCsvSql,
@@ -733,7 +731,7 @@ object SparkEntry {
     "q39_date_merge" -> Star.dateMergeSql,
     "q40_derived_amounts" -> CleanCsv.derivedAmountsCsvSql,
     "q41_token_counts" -> TextAnalysis.tokenCountsSql,
-    "q42_top_brands_region" -> Insights.topBrandsPerRegionSql(),
+    "q42_top_brands_region" -> Insights.topBrandsPerRegionSql,
     "q43_running_revenue" -> Insights.monthlyRunningRevenueSql,
     "q44_revenue_rollup" -> Insights.revenueRollupSql,
     "q46_asof_join" -> AsofJoin.purchaseBeforeClickSql,
@@ -744,69 +742,69 @@ object SparkEntry {
     "q48_jsonl_roundtrip" -> graft.sources.Tables.documentsJsonlRoundtripSql,
     "q49_percentiles" -> Insights.percentileSummarySql,
     "q50_range_join" -> RangeJoin.clicksNearErrorsSql,
-    "q51_vocabulary" -> TextAnalysis.vocabularySql(),
+    "q51_vocabulary" -> TextAnalysis.vocabularySql,
     "q52_outlier_audit" -> Validation.outlierAuditSql,
-    "q53_train_split" -> Sampling.trainSplitSql(),
-    "q54_domain_caps" -> Sampling.domainCapsSql(),
-    "q55_seq_packing" -> Sampling.seqPackingSql(),
+    "q53_train_split" -> Sampling.trainSplitSql,
+    "q54_domain_caps" -> Sampling.domainCapsSql,
+    "q55_seq_packing" -> Sampling.seqPackingSql,
     "q56_repetition" -> TextAnalysis.repetitionSql,
     "q57_pii_redaction" -> TextAnalysis.piiRedactionSql,
     "q58_embed_quantize" -> Similarity.embedQuantizeSql,
     "q59_scd2" -> Scd.customerScd2Sql,
-    "q60_dedup_clusters" -> Dedup.dedupClustersSql(),
-    "q61_bloom_join" -> Insights.highValueItemsSql(),
+    "q60_dedup_clusters" -> Dedup.dedupClustersSql,
+    "q61_bloom_join" -> Insights.highValueItemsSql,
     "q62_incremental_rollup" -> Events.incrementalDailyRollupSql,
-    "q63_click_funnel" -> Events.clickFunnelSql(),
+    "q63_click_funnel" -> Events.clickFunnelSql,
     "q64_region_pivot" -> Insights.monthlyRegionPivotSql,
     "q65_props_unpivot" -> Insights.propsRollupUnpivotSql,
     "q66_latest_by_user" -> Events.latestByUserSql,
-    "q67_zorder" -> Layout.ordersZOrderSql(),
-    "q68_value_deciles" -> Features.valueDecilesSql(),
+    "q67_zorder" -> Layout.ordersZOrderSql,
+    "q68_value_deciles" -> Features.valueDecilesSql,
     "q69_exact_corr" -> Features.exactCorrSql,
-    "q70_price_histogram" -> Features.priceHistogramSql(),
-    "q71_moving_revenue" -> Features.movingRevenueSql(),
-    "q72_fuzzy_match" -> Dedup.fuzzyNameMatchSql(),
-    "q73_doc_chunks" -> TextAnalysis.chunkDocsSql(),
+    "q70_price_histogram" -> Features.priceHistogramSql,
+    "q71_moving_revenue" -> Features.movingRevenueSql,
+    "q72_fuzzy_match" -> Dedup.fuzzyNameMatchSql,
+    "q73_doc_chunks" -> TextAnalysis.chunkDocsSql,
     "q74_set_cohorts" -> Insights.customerHalfCohortsSql,
     "q75_sql_channel" -> graft.etl.Catalog.sqlChannelSql,
-    "q76_tfidf" -> TextAnalysis.tfidfSql(),
-    "q77_containment" -> Dedup.containmentPairsSql(),
-    "q78_debounce" -> Events.debounceSql(),
-    "q79_active_users" -> Events.rollingActiveUsersSql(),
+    "q76_tfidf" -> TextAnalysis.tfidfSql,
+    "q77_containment" -> Dedup.containmentPairsSql,
+    "q78_debounce" -> Events.debounceSql,
+    "q79_active_users" -> Events.rollingActiveUsersSql,
     "q80_retention" -> Events.retentionCohortsSql,
     "q81_streaks" -> Events.activityStreaksSql,
-    "q82_shingle_dedup" -> Corpus.shingleDedupSql(),
+    "q82_shingle_dedup" -> Corpus.shingleDedupSql,
     "q83_quality_gates" -> Corpus.qualityGatesSql,
-    "q84_decontamination" -> Corpus.decontaminationSql(),
+    "q84_decontamination" -> Corpus.decontaminationSql,
     "q85_revenue_cube" -> Insights.revenueCubeSql,
     "q86_month_spine" -> Insights.monthSpineRevenueSql,
     "q89_brand_share" -> Insights.brandShareInTypeSql,
-    "q87_concurrent_sessions" -> Events.concurrentSessionsSql(),
+    "q87_concurrent_sessions" -> Events.concurrentSessionsSql,
     "q88_transitions" -> Events.transitionMatrixSql,
     "q90_interarrival" -> Events.interarrivalSql,
-    "q91_mad_outliers" -> Features.madOutliersSql(),
-    "q92_gdpr_erasure" -> Validation.gdprErasureSql(),
+    "q91_mad_outliers" -> Features.madOutliersSql,
+    "q92_gdpr_erasure" -> Validation.gdprErasureSql,
     "q93_rfm_segments" -> RetailBi.rfmSegmentsSql,
-    "q94_basket_pairs" -> RetailBi.basketPairsSql(),
+    "q94_basket_pairs" -> RetailBi.basketPairsSql,
     "q95_abc_classes" -> RetailBi.abcClassificationSql,
     "q96_new_vs_returning" -> RetailBi.newVsReturningSql,
     "q97_ship_lag" -> RetailBi.shipLagSql,
-    "q98_boilerplate" -> Corpus.boilerplateGramsSql(),
+    "q98_boilerplate" -> Corpus.boilerplateGramsSql,
     "q99_encoding_gate" -> Corpus.encodingGateSql,
     "q100_domain_mixture" -> Corpus.domainMixtureSql,
     "q101_benford" -> StatQa.benfordAuditSql,
     "q102_independence" -> StatQa.segmentRegionIndependenceSql,
-    "q103_daily_anomalies" -> StatQa.dailyAnomaliesSql(),
+    "q103_daily_anomalies" -> StatQa.dailyAnomaliesSql,
     "q104_revenue_gini" -> StatQa.revenueGiniSql,
-    "q105_ann_recall" -> Similarity.annRecallSql(),
+    "q105_ann_recall" -> Similarity.annRecallSql,
     "q106_priority_sets" -> Insights.prioritySetsSql,
     "q107_skyline" -> Skyline.skylinePartsSql,
-    "q108_weighted_sample" -> Sampling.weightedSampleSql(),
-    "q109_stratified_sample" -> Sampling.stratifiedSampleSql(),
-    "q110_heavy_hitters" -> StatQa.heavyHittersSql(),
+    "q108_weighted_sample" -> Sampling.weightedSampleSql,
+    "q109_stratified_sample" -> Sampling.stratifiedSampleSql,
+    "q110_heavy_hitters" -> StatQa.heavyHittersSql,
     "q111_daily_reconcile" -> Validation.dailyReconcileSql,
-    "q112_bpe_merges" -> Corpus.bpeMergesSql(),
-    "q113_topk_per_segment" -> Insights.topCustomersPerSegmentSql(),
+    "q112_bpe_merges" -> Corpus.bpeMergesSql,
+    "q113_topk_per_segment" -> Insights.topCustomersPerSegmentSql,
     "q114_weekday_seasonality" -> RetailBi.weekdaySeasonalitySql,
     "q115_price_ranks" -> Features.priceRanksSql,
     "q116_weighted_median" -> Features.weightedMedianSql,
@@ -821,10 +819,10 @@ object SparkEntry {
     // decrement rounds, ApproxSpec-pinned) proves the output equals
     // the exact top-N, with an exact fallback when it fails — either
     // way the plain exact SQL is a valid oracle
-    "q120_approx_heavy_hitters" -> StatQa.heavyHittersSql(),
-    "q121_ann_config_sweep" -> Similarity.annConfigSweepSql(),
-    "q122_bigram_coverage" -> TextAnalysis.bigramCoverageSql(),
-    "q123_shard_stats" -> Sampling.shardStatsSql(),
+    "q120_approx_heavy_hitters" -> StatQa.heavyHittersSql,
+    "q121_ann_config_sweep" -> Similarity.annConfigSweepSql,
+    "q122_bigram_coverage" -> TextAnalysis.bigramCoverageSql,
+    "q123_shard_stats" -> Sampling.shardStatsSql,
     // the streaming run must reproduce the BATCH oracle cell-exactly
     "q124_streaming_hourly" -> Events.hourlyByTypeSql,
     "q125_streaming_sessions" ->
@@ -832,7 +830,7 @@ object SparkEntry {
     "q126_asof_attribution" -> Events.purchaseClickAsofSql,
     "q127_snapshot_diff" -> Scd.customerSnapshotDiffSql,
     "q128_kmeans_clusters" -> Similarity.kmeansSql(iters = 3),
-    "q129_copurchase_rank" -> Graph.copurchaseRankSql(),
+    "q129_copurchase_rank" -> Graph.copurchaseRankSql,
     "q130_pit_sales" -> Scd.pitSalesSql,
     "q131_streaming_stateful" ->
       graft.streaming.EventStreams.sessionizeStatefulAvailableNowSql,
@@ -845,7 +843,7 @@ object SparkEntry {
     // sink equals the single-batch emitted set
     "q134_streaming_batched" ->
       graft.streaming.EventStreams.sessionWindowsAvailableNowSql,
-    "q135_directed_rank" -> Graph.directedRankSql(),
+    "q135_directed_rank" -> Graph.directedRankSql,
     // q136: portable sweep columns (dials/state/bounds/exact
     // companions) hash-oracled; within_bound EXECUTED from the live
     // estimates, pinned to 1 — only max_err_ppm stays spec-only

@@ -51,9 +51,11 @@ object DumpPlans {
         if (plan.contains("AdaptiveSparkPlan") &&
             !plan.contains("isFinalPlan=true"))
           println(s"[dumpplans] $n WARN adaptive plan NOT finalized")
-        val ex = "Exchange".r.findAllIn(plan).length
-        val reused = "ReusedExchange".r.findAllIn(plan).length
-        println(s"[dumpplans] $n exchanges=$ex reused=$reused")
+        def count(node: String) = node.r.findAllIn(plan).length
+        println(s"[dumpplans] $n scans=${count("FileScan")} " +
+          s"exchanges=${count("Exchange")} " +
+          s"reused=${count("ReusedExchange")} " +
+          s"singlePartition=${count("SinglePartition")}")
       } catch {
         case e: Throwable =>
           println(s"[dumpplans] $n FAILED: ${e.getMessage}")

@@ -16,7 +16,9 @@ import graft.sources.Tables
   * made with exactly this signal); wall ≫ taskRunSum/cores means a
   * serial tail (single-task final merge, driver-side work, skew).
   *
-  * Usage: `runMain graft.devtools.Prof <sfDir> <q1,q2,...> [passes]`
+  * Usage: `runMain graft.devtools.Prof <sfDir> <q1,q2,...> [passes]`.
+  * For an A/B of a conf, pass it as a JVM system property, which
+  * SparkConf reads: `dev/spark_java.sh -Dspark.k=v graft.devtools.Prof …`.
   */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -31,15 +33,6 @@ object Prof {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-    // A/B dial: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overlays arbitrary
-    // confs for profiling experiments without touching graftConfigs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").iterator
-      .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF entry '$kv' lacks '=' (expected k=v;k=v)")
-        }
-      })
     val spark = Tables.graftSession(builder)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.util.concurrent.{CompletableFuture, Future}
+import java.util.concurrent.CompletableFuture
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ import graft.sources.Tables
   *
   * Overlapped sinks: every sink — the four staging CSVs, the three dim
   * loads (rank build plus write), dim_date and fact_sales — is an
-  * independent job on one [[Tables.overlapPool]] sized to the sinks.
+  * independent job in one [[Tables.overlapped]] scope sized to the sinks.
   * Only fact_sales waits, on the three dims' rank keys. A dim's keys
   * are built only when its table or fact_sales is loaded.
   *
@@ -116,60 +116,58 @@ object Pipeline {
 
     val cleaned = staged.map(_._2)
     cleaned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
-    val pool = Tables.overlapPool(staged.size + dims.size + 2)
-    val sinks = Seq.newBuilder[Future[_]]
-    def sink[T](name: String)(write: => T): Future[T] = {
-      val f = Tables.submitJob(pool, spark, s"etl: $name")(write)
-      sinks += f
-      f
-    }
     try {
-      staged.foreach { case (name, df) =>
-        sink(name)(Tables.writeCsv(df, s"$stagingDir/$name"))
-      }
-      // each dim's rank keys complete their own future before the dim
-      // write starts, so the fact waits on the keys and not the writes
-      val keys = dims.map { d =>
-        val load = !loaded(d.table)
-        d -> Option.when(load || loadFact) {
-          val k = new CompletableFuture[DataFrame]
-          sink(d.table) {
-            try k.complete(d.keyed)
-            catch { case e: Throwable => k.completeExceptionally(e); throw e }
-            if (load) Tables.overwriteParquet(k.get(), path(d.table))
+      // the scope waits for every sink and rethrows the first failed one
+      val (keys, fact) = Tables.overlapped(spark,
+          staged.size + dims.size + 2) { ov =>
+        def sink[T](name: String)(write: => T) =
+          ov.submit(s"etl: $name")(write)
+        staged.foreach { case (name, df) =>
+          sink(name)(Tables.writeCsv(df, s"$stagingDir/$name"))
+        }
+        // each dim's rank keys complete their own future before the dim
+        // write starts, so the fact waits on the keys and not the writes
+        val keys = dims.map { d =>
+          val load = !loaded(d.table)
+          d -> Option.when(load || loadFact) {
+            val k = new CompletableFuture[DataFrame]
+            sink(d.table) {
+              try k.complete(d.keyed)
+              catch { case e: Throwable => k.completeExceptionally(e); throw e }
+              if (load) Tables.overwriteParquet(k.get(), path(d.table))
+            }
+            k
           }
-          k
         }
-      }
-      sink("dim_date") {
-        val datePath = path("dim_date")
-        if (!loaded("dim_date")) Tables.overwriteParquet(dimDate, datePath)
-        else {
-          // staged MERGE-upsert via temp + swap: can't overwrite a path
-          // while reading it
-          val tmp = s"$datePath._staged"
-          Tables.overwriteParquet(
-            Star.upsertByKey(spark.read.parquet(datePath), dimDate, "date_key"),
-            tmp)
-          Tables.overwriteParquet(spark.read.parquet(tmp), datePath)
-          Catalog.deletePath(spark, tmp)
+        sink("dim_date") {
+          val datePath = path("dim_date")
+          if (!loaded("dim_date")) Tables.overwriteParquet(dimDate, datePath)
+          else {
+            // staged MERGE-upsert via temp + swap: can't overwrite a path
+            // while reading it
+            val tmp = s"$datePath._staged"
+            Tables.overwriteParquet(
+              Star.upsertByKey(spark.read.parquet(datePath), dimDate,
+                "date_key"), tmp)
+            Tables.overwriteParquet(spark.read.parquet(tmp), datePath)
+            Catalog.deletePath(spark, tmp)
+          }
         }
+        val fact = Option.when(loadFact)(sink("fact_sales") {
+          val f = factFrom(sales, keys.map { case (d, k) => d -> k.get.get() })
+          Tables.overwriteParquet(f, path("fact_sales"))
+          f
+        })
+        (keys, fact)
       }
-      val fact = Option.when(loadFact)(sink("fact_sales") {
-        val f = factFrom(sales, keys.map { case (d, k) => d -> k.get.get() })
-        Tables.overwriteParquet(f, path("fact_sales"))
-        f
-      })
-      Tables.joinAll(sinks.result())
 
-      def built(table: String, f: Option[Future[DataFrame]]) =
-        f.fold(spark.read.parquet(path(table)))(_.get())
+      def built(table: String, f: Option[DataFrame]) =
+        f.getOrElse(spark.read.parquet(path(table)))
       val Seq(dimCustomer, dimProduct, dimStore) =
-        keys.map { case (d, k) => built(d.table, k) }
+        keys.map { case (d, k) => built(d.table, k.map(_.get())) }
       Warehouse(dimCustomer, dimProduct, dimStore, dimDate,
-        built("fact_sales", fact))
+        built("fact_sales", fact.map(_.get())))
     } finally {
-      pool.shutdown()
       cleaned.foreach(_.unpersist())
     }
   }

@@ -88,13 +88,14 @@ object RetailDataGen {
       pick(Regions, rand(seed + 23)).as("region"),
       pick(StoreTypes, rand(seed + 24)).as("store_type"))
 
+  val SalesAnchor = "2025-09-12" // last sale date of the generated data
+
   /** Sales facts with dd-MM-yyyy string dates over a trailing-2-years
     * window anchored at a fixed date (determinism; the reference anchors
     * at "today", `scripts/generate_data.py:234-235`).
     */
   def sales(spark: SparkSession, n: Long, nCustomers: Long, nProducts: Long,
-      nStores: Long, seed: Long = 42,
-      anchor: String = "2025-09-12"): DataFrame =
+      nStores: Long, seed: Long = 42): DataFrame =
     spark.range(1, n + 1).select(
         col("id").as("sales_id"),
         (lit(1) + (rand(seed + 31) * nCustomers).cast("long")).as("customer_id"),
@@ -102,7 +103,8 @@ object RetailDataGen {
         (lit(1) + (rand(seed + 33) * nStores).cast("long")).as("store_id"),
         (lit(1) + (rand(seed + 34) * 5).cast("int")).as("quantity"),
         date_format(
-          date_sub(to_date(lit(anchor)), (rand(seed + 35) * 730).cast("int")),
+          date_sub(to_date(lit(SalesAnchor)),
+            (rand(seed + 35) * 730).cast("int")),
           "dd-MM-yyyy").as("sales_date"),
         element_at(array(Discounts.map(d => lit(d.toDouble)): _*),
           (rand(seed + 36) * Discounts.size).cast("int") + 1).as("discount_pct"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.EventStreams
 
 /** Corpus-curation operators for LLM training-data pipelines over
   * `documents` (SURVEY.md §7.5 extensions): word-shingle exact-substring
@@ -72,11 +73,13 @@ object Corpus {
        |hs AS (SELECT doc_id, ${TextAnalysis.md5Hash60Sql("s")} AS h
        |       FROM sh)""".stripMargin
 
+  val ShingleN = 8 // shingle length of the shingle dedup, in tokens
+
   /** Exact-substring deduplication at word-shingle grain (the n-gram
     * approximation of suffix-array exact-substring dedup from the
     * "Deduplicating Training Data" line of work): for every doc, the
-    * fraction of its `n`-gram instances that occur ≥2 times anywhere in
-    * the corpus (any doc, counting multiplicity).
+    * fraction of its `ShingleN`-gram instances that occur ≥2 times
+    * anywhere in the corpus (any doc, counting multiplicity).
     *
     * Scale shape: explode → partial-agg at (doc, hash) grain (map-side
     * combine collapses within-doc repeats before the exchange) →
@@ -86,14 +89,13 @@ object Corpus {
     * count) — never shingle text. No all-pairs structure anywhere; at
     * 100 TB this is three linear shuffles of ~24-byte rows.
     */
-  def shingleDedup(spark: SparkSession, sfDir: String,
-      n: Int = 8): DataFrame = {
+  def shingleDedup(spark: SparkSession, sfDir: String): DataFrame = {
     // perDoc feeds BOTH the corpus rollup and the join-back; without a
     // materialization the shingle scan (the expensive subtree) executes
     // once per branch — Catalyst reuses identical exchanges, but the two
     // branches shuffle at different grains. The checkpointed frame is
     // the compact (int64, int64, count) grain, not shingle text.
-    val perDoc = shingleHashes(spark, sfDir, n)
+    val perDoc = shingleHashes(spark, sfDir, ShingleN)
       .groupBy("doc_id", "h").agg(count(lit(1)).as("c_doc"))
       .localCheckpoint(true)
     val corpus = perDoc.groupBy("h").agg(sum("c_doc").as("c_all"))
@@ -114,8 +116,8 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  def shingleDedupSql(n: Int = 8): String =
-    s"""WITH ${shingleHashesSql(n)},
+  def shingleDedupSql: String =
+    s"""WITH ${shingleHashesSql(ShingleN)},
        |pd AS (SELECT doc_id, h, COUNT(*) AS c_doc FROM hs
        |       GROUP BY doc_id, h),
        |cc AS (SELECT h, SUM(c_doc) AS c_all FROM pd GROUP BY h),
@@ -280,10 +282,13 @@ object Corpus {
        |GROUP BY source
        |ORDER BY source""".stripMargin
 
+  val DecontamN = 5 // n-gram length of the decontamination check
+  val EvalMod = 5 // one document in this many is held out as eval
+
   /** Eval-set decontamination (the GPT-3/PaLM-style n-gram overlap
-    * check): a deterministic held-out slice (doc_id ≡ 0 mod `evalMod`)
+    * check): a deterministic held-out slice (doc_id ≡ 0 mod `EvalMod`)
     * plays the benchmark set; every training doc reports how many of
-    * its distinct `n`-gram shingles collide with the eval set's
+    * its distinct `DecontamN`-gram shingles collide with the eval set's
     * shingle inventory. Docs with any collision are what a real
     * pipeline would drop or flag before training.
     *
@@ -293,12 +298,11 @@ object Corpus {
     * unknown post-explode), so the train side never shuffles; the
     * doc-grain agg is the only exchange and carries 16-byte rows.
     */
-  def decontamination(spark: SparkSession, sfDir: String, n: Int = 5,
-      evalMod: Int = 5): DataFrame = {
-    val hs = shingleHashes(spark, sfDir, n)
-    val evalSet = hs.filter(pmod(col("doc_id"), lit(evalMod)) === 0)
+  def decontamination(spark: SparkSession, sfDir: String): DataFrame = {
+    val hs = shingleHashes(spark, sfDir, DecontamN)
+    val evalSet = hs.filter(pmod(col("doc_id"), lit(EvalMod)) === 0)
       .select("h").distinct().withColumn("hit", lit(1))
-    val train = hs.filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
+    val train = hs.filter(pmod(col("doc_id"), lit(EvalMod)) =!= 0)
       .select("doc_id", "h").distinct()
     val agg = train
       .join(Joins.broadcastIfSmall(evalSet,
@@ -307,7 +311,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_distinct_shingles"),
         sum(coalesce(col("hit"), lit(0))).as("n_contaminated"))
     Tables.documents(spark, sfDir)
-      .filter(pmod(col("doc_id"), lit(evalMod)) =!= 0).select("doc_id")
+      .filter(pmod(col("doc_id"), lit(EvalMod)) =!= 0).select("doc_id")
       .join(agg, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_distinct_shingles"), lit(0L))
@@ -317,6 +321,8 @@ object Corpus {
           .as("is_contaminated"))
       .orderBy("doc_id")
   }
+
+  val BoilerplateN = 5 // n-gram length of the boilerplate check
 
   /** Per-source template ("boilerplate") n-gram detection: a gram is
     * boilerplate for a source when it appears in ≥20% of that source's
@@ -330,12 +336,11 @@ object Corpus {
     * frequencies; every exchange carries ~24-byte hash rows, and the
     * final rollup is source-grain (bounded). No text ever shuffles.
     */
-  def boilerplateGrams(spark: SparkSession, sfDir: String,
-      n: Int = 5): DataFrame = {
+  def boilerplateGrams(spark: SparkSession, sfDir: String): DataFrame = {
     val inst = Tables.spread(Tables.documents(spark, sfDir))
       .withColumn("tks", expr(tokensSparkSql))
       .select(col("source"), col("doc_id"),
-        explode(shinglesExpr("tks", n)).as("sh"))
+        explode(shinglesExpr("tks", BoilerplateN)).as("sh"))
       .select(col("source"), col("doc_id"),
         TextAnalysis.md5Hash60(col("sh")).as("h"))
       .groupBy("source", "doc_id", "h")
@@ -360,10 +365,10 @@ object Corpus {
       .orderBy("source")
   }
 
-  def boilerplateGramsSql(n: Int = 5): String =
+  def boilerplateGramsSql: String =
     s"""WITH tk AS (SELECT source, doc_id, $tokensDuckSql AS tks
        |            FROM documents),
-       |sh AS (SELECT source, doc_id, unnest(${shinglesSql("tks", n)}) AS s
+       |sh AS (SELECT source, doc_id, unnest(${shinglesSql("tks", BoilerplateN)}) AS s
        |       FROM tk),
        |inst AS (
        |  SELECT source, doc_id, ${TextAnalysis.md5Hash60Sql("s")} AS h,
@@ -523,11 +528,11 @@ object Corpus {
        |GROUP BY d.source
        |ORDER BY d.source""".stripMargin
 
-  def decontaminationSql(n: Int = 5, evalMod: Int = 5): String =
-    s"""WITH ${shingleHashesSql(n)},
-       |ev AS (SELECT DISTINCT h FROM hs WHERE doc_id % $evalMod = 0),
+  def decontaminationSql: String =
+    s"""WITH ${shingleHashesSql(DecontamN)},
+       |ev AS (SELECT DISTINCT h FROM hs WHERE doc_id % $EvalMod = 0),
        |tr AS (SELECT DISTINCT doc_id, h FROM hs
-       |       WHERE doc_id % $evalMod <> 0),
+       |       WHERE doc_id % $EvalMod <> 0),
        |agg AS (
        |  SELECT tr.doc_id,
        |    COUNT(*) AS n_distinct_shingles,
@@ -541,8 +546,10 @@ object Corpus {
        |  CAST(COALESCE(agg.n_contaminated, 0) > 0 AS INT)
        |    AS is_contaminated
        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-       |WHERE d.doc_id % $evalMod <> 0
+       |WHERE d.doc_id % $EvalMod <> 0
        |ORDER BY d.doc_id""".stripMargin
+
+  val BpeMerges = 20 // BPE merges learned
 
   /** The counting step of one BPE merge round — the tokenizer-induction
     * primitive: corpus frequency of every adjacent character pair,
@@ -557,8 +564,7 @@ object Corpus {
     * positions count UTF-16 code units in Spark vs code points in
     * DuckDB: identical for the driver's ASCII corpus.
     */
-  def bpeMerges(spark: SparkSession, sfDir: String,
-      topN: Int = 20): DataFrame = {
+  def bpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     val words = Tables.spread(Tables.documents(spark, sfDir))
       .select(explode(expr(tokensSparkSql)).as("w"))
       .filter(length(col("w")) >= 2)
@@ -569,10 +575,10 @@ object Corpus {
         .as("pair"))
       .groupBy("pair").agg(sum("f").as("merge_count"))
       .orderBy(col("merge_count").desc, col("pair"))
-      .limit(topN)
+      .limit(BpeMerges)
   }
 
-  def bpeMergesSql(topN: Int = 20): String =
+  def bpeMergesSql: String =
     s"""WITH toks AS (
        |  SELECT unnest($tokensDuckSql) AS w FROM documents),
        |words AS (
@@ -584,7 +590,11 @@ object Corpus {
        |SELECT pair, CAST(SUM(f) AS BIGINT) AS merge_count
        |FROM pairs GROUP BY pair
        |ORDER BY merge_count DESC, pair
-       |LIMIT $topN""".stripMargin
+       |LIMIT $BpeMerges""".stripMargin
+
+  val PipelineQuota = 32 // diversity picks of the pipeline
+  val PipelineMinQuota = 2 // floor on one cell's pipeline quota
+  val PipelinePackBudget = 512 // tokens per packed sequence
 
   // ------------------------------------------------------------------
   // q196 — the COMPOSED corpus-build pipeline (round-10 verdict ask
@@ -628,14 +638,12 @@ object Corpus {
   // another's payloads. The ledger scalars are aggregate actions on
   // those checkpointed id frames (bounded driver state: six longs).
   // ------------------------------------------------------------------
-  def corpusPipeline(spark: SparkSession, sfDir: String,
-      nClusters: Int = 16, totalQuota: Int = 32, minQuota: Int = 2,
-      budget: Int = 512): DataFrame = {
+  def corpusPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // ---- stage 1: quality gates over the train split ----
     val train = docGateScores(spark, sfDir)
-      .filter(pmod(col("doc_id"), lit(5)) =!= 0)
+      .filter(pmod(col("doc_id"), lit(EvalMod)) =!= 0)
       .localCheckpoint(true)
     // ledger-scalar FUSION (round-15): each ledger action is a full
     // driver job (~0.15-0.25 s of scheduling/planning floor each on a
@@ -698,10 +706,11 @@ object Corpus {
     // stage 2's semi-join-first)
     val docsSpread = Tables.spread(Tables.documents(spark, sfDir))
     val evalH = shingleHashesOf(
-        docsSpread.filter(pmod(col("doc_id"), lit(5)) === 0), 5)
+        docsSpread.filter(pmod(col("doc_id"), lit(EvalMod)) === 0),
+        DecontamN)
       .select("h").distinct()
     val contamHits = shingleHashesOf(
-        docsSpread.join(s2, Seq("doc_id"), "left_semi"), 5)
+        docsSpread.join(s2, Seq("doc_id"), "left_semi"), DecontamN)
       .select("doc_id", "h").distinct()
       .join(Joins.broadcastIfSmall(evalH, Tables.documents(spark, sfDir)),
         Seq("h"))
@@ -715,8 +724,8 @@ object Corpus {
         Seq("doc_id"), "left_anti")
       .localCheckpoint(true)
     // ---- stage 4: cluster-balanced diversity sample ----
-    val centroids = Similarity.ivfQuantizer(spark, sfDir, nClusters)
-      .map(_._2)
+    val centroids = Similarity
+      .ivfQuantizer(spark, sfDir, Similarity.IvfClusters).map(_._2)
     val assigned = Tables.embeddings(spark, sfDir)
       .join(s3.select(col("doc_id").as("vec_id")), Seq("vec_id"))
       .select(col("vec_id"),
@@ -725,15 +734,15 @@ object Corpus {
     val sizes = assigned.groupBy("cluster").agg(count(lit(1)).as("n_c"))
     val nAll = broadcast(assigned.agg(count(lit(1)).as("n")))
     val quotas = broadcast(sizes.crossJoin(nAll).select(col("cluster"),
-      greatest(lit(minQuota.toLong),
-        expr(s"${totalQuota}L * n_c div n")).as("quota")))
+      greatest(lit(PipelineMinQuota.toLong),
+        expr(s"${PipelineQuota}L * n_c div n")).as("quota")))
     val wCell = Window.partitionBy("cluster")
       .orderBy(md5(col("vec_id").cast("string").cast("binary")),
         col("vec_id"))
     val s4 = assigned
       .withColumn("pick_rank", row_number().over(wCell))
       .filter(col("pick_rank") <=
-        lit(math.max(minQuota, totalQuota).toLong))
+        lit(math.max(PipelineMinQuota, PipelineQuota).toLong))
       .join(quotas, Seq("cluster"))
       .filter(col("pick_rank") <= col("quota"))
       .select(col("vec_id").as("doc_id"), col("cluster"))
@@ -749,7 +758,7 @@ object Corpus {
         size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
     val packs = ScalableKeys
       .withPrefixSum(toks, "doc_id", "toks", "cum_before")
-      .withColumn("pack_id", expr(s"cum_before div $budget"))
+      .withColumn("pack_id", expr(s"cum_before div $PipelinePackBudget"))
       .groupBy("pack_id")
       .agg(count(lit(1)).as("n_docs"),
         sum("toks").cast("long").as("pack_tokens"))
@@ -782,15 +791,14 @@ object Corpus {
     * eval intersection, the q155 quota sample, the q55 prefix-sum
     * packing — then the same ledger + histogram union.
     */
-  def corpusPipelineSql(nClusters: Int = 16, totalQuota: Int = 32,
-      minQuota: Int = 2, budget: Int = 512): String = {
+  def corpusPipelineSql: String = {
     val cos = Similarity.cosineExprDuck("e.embedding", "s.centroid")
     // @BANDED@ is substituted AFTER stripMargin (the Dedup oracle
     // idiom): the banded CTE's own continuation lines begin with `||`,
     // which a second stripMargin pass would truncate to `|`
     s"""@BANDED@,
        |gate AS MATERIALIZED (${docGateScoresSql}),
-       |train AS (SELECT doc_id, score FROM gate WHERE doc_id % 5 <> 0),
+       |train AS (SELECT doc_id, score FROM gate WHERE doc_id % $EvalMod <> 0),
        |s1 AS MATERIALIZED (SELECT doc_id FROM train WHERE score = 4),
        |bandedq AS (SELECT b.* FROM banded b JOIN s1 USING (doc_id)),
        |cands AS MATERIALIZED (
@@ -812,9 +820,9 @@ object Corpus {
        |  WHERE 2 * i.n_inter >= sa.n + sb.n - i.n_inter),
        |s2 AS MATERIALIZED (SELECT doc_id FROM s1
        |  WHERE doc_id NOT IN (SELECT doc_b FROM dups)),
-       |${shingleHashesSql(5)},
+       |${shingleHashesSql(DecontamN)},
        |evh AS MATERIALIZED (
-       |  SELECT DISTINCT h FROM hs WHERE doc_id % 5 = 0),
+       |  SELECT DISTINCT h FROM hs WHERE doc_id % $EvalMod = 0),
        |contam AS MATERIALIZED (
        |  SELECT DISTINCT t.doc_id, t.h
        |  FROM (SELECT DISTINCT doc_id, h FROM hs) t
@@ -828,7 +836,7 @@ object Corpus {
        |         embedding AS centroid
        |  FROM embeddings
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nClusters),
+       |  LIMIT ${Similarity.IvfClusters}),
        |assigned AS MATERIALIZED (
        |  SELECT vec_id, cluster FROM (
        |    SELECT e.vec_id, s.cluster,
@@ -842,7 +850,7 @@ object Corpus {
        |ntot AS (SELECT COUNT(*) AS n FROM assigned),
        |quotas AS (
        |  SELECT cluster,
-       |    GREATEST($minQuota, $totalQuota * n_c // ntot.n) AS quota
+       |    GREATEST($PipelineMinQuota, $PipelineQuota * n_c // ntot.n) AS quota
        |  FROM sizes4 CROSS JOIN ntot),
        |ranked AS (
        |  SELECT cluster, vec_id,
@@ -865,7 +873,7 @@ object Corpus {
        |      AS cum_before
        |  FROM t5),
        |packs AS MATERIALIZED (
-       |  SELECT cum_before // $budget AS pack_id, COUNT(*) AS n_docs,
+       |  SELECT cum_before // $PipelinePackBudget AS pack_id, COUNT(*) AS n_docs,
        |    CAST(SUM(toks) AS BIGINT) AS pack_tokens
        |  FROM c5 GROUP BY 1)
        |SELECT * FROM (
@@ -912,14 +920,15 @@ object Corpus {
     * is "by history" when any duplicate partner sits in an earlier
     * batch — the property that makes the replay genuinely incremental.
     */
-  def streamingNeardupAdmissionSql(nBatches: Int = 2): String =
+  def streamingNeardupAdmissionSql(
+      nBatches: Int = EventStreams.ReplayFiles): String =
     s"""@BANDED@,
        |gate AS MATERIALIZED (${docGateScoresSql}),
        |mx AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
        |train AS MATERIALIZED (
        |  SELECT g.doc_id, g.score,
        |    CAST((g.doc_id * $nBatches) // mx.m AS BIGINT) AS batch_idx
-       |  FROM gate g CROSS JOIN mx WHERE g.doc_id % 5 <> 0),
+       |  FROM gate g CROSS JOIN mx WHERE g.doc_id % $EvalMod <> 0),
        |s1 AS MATERIALIZED (
        |  SELECT doc_id, batch_idx FROM train WHERE score = 4),
        |bandedq AS (SELECT b.* FROM banded b JOIN s1 USING (doc_id)),

@@ -124,12 +124,14 @@ object Dedup {
        |FROM mh GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
 
+  val JaccardThreshold = 0.5 // MinHash Jaccard of a near-dup
+
   /** Near-duplicate pairs via MinHash LSH + exact Jaccard verification:
     * 1. signature -> `Bands` band keys (hash of `RowsPerBand` minhashes);
     * 2. explode bands, shuffle on (band_idx, band_key) — only docs
     *    agreeing on a whole band collide;
     * 3. self-join within buckets (doc_a < doc_b), distinct;
-    * 4. verify candidates with true 3-shingle Jaccard >= `threshold`.
+    * 4. verify candidates with true 3-shingle Jaccard >= `JaccardThreshold`.
     *
     * At 100 TB: the exploded band table is 4 rows x ~24 bytes per doc;
     * bucket joins are local to each band-key partition; the quadratic
@@ -143,14 +145,16 @@ object Dedup {
     * default).
     */
   def neardupPairs(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5, maxBucketSize: Option[Int] = None): DataFrame =
+      maxBucketSize: Option[Int] = None): DataFrame =
     shingleScoredCandidates(spark, sfDir, maxBucketSize)
       .withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
+
+  val ContainmentThreshold = 0.5 // containment of a contained doc
 
   /** Overlap-coefficient containment pairs — the SUBSET-duplicate
     * detector Jaccard misses: a short doc quoted wholesale inside a
@@ -158,13 +162,12 @@ object Dedup {
     * |A∩B| / min(|A|,|B|) near 1. Same LSH candidate machinery, same
     * scale shape; only the final scoring expression differs.
     */
-  def containmentPairs(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame =
+  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame =
     shingleScoredCandidates(spark, sfDir, None)
       .withColumn("overlap",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           least(size(col("sh_a")), size(col("sh_b"))))
-      .filter(col("overlap") >= threshold)
+      .filter(col("overlap") >= ContainmentThreshold)
       .select("doc_a", "doc_b", "overlap")
       .orderBy("doc_a", "doc_b")
 
@@ -187,8 +190,7 @@ object Dedup {
     * doc (highest exact Jaccard, tie toward the lowest id), the
     * admission decision a curation pipeline acts on.
     */
-  def incrementalDedup(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
+  def incrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val index = spark.read.parquet(corpusBandIndex(spark, sfDir))
       .select(col("doc_id").as("corpus_id"),
         col("band_idx"), col("band_key"))
@@ -202,7 +204,7 @@ object Dedup {
     // word_shingles scan ran twice — checkpoint it once (blocks are
     // reclaimed by freeTransientBlocks)
     val sh = distinctShingles(spark, sfDir).localCheckpoint(true)
-    bestMatchAgainstIndex(incoming, index, sh, threshold).orderBy("doc_id")
+    bestMatchAgainstIndex(incoming, index, sh).orderBy("doc_id")
   }
 
   /** Distinct 3-shingle sets per doc (the exact-Jaccard verification
@@ -220,7 +222,7 @@ object Dedup {
     * (doc_id, dup_of, jaccard) — unsorted (callers order or compose).
     */
   private def bestMatchAgainstIndex(batchBands: DataFrame,
-      index: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
+      index: DataFrame, sh: DataFrame): DataFrame = {
     val cands = batchBands.join(index, Seq("band_idx", "band_key"))
       .select(col("doc_id"), col("corpus_id"))
       .distinct()
@@ -233,7 +235,7 @@ object Dedup {
       .withColumn("jaccard",
         size(array_intersect(col("sh"), col("sh_c"))).cast("double") /
           size(array_union(col("sh"), col("sh_c"))))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardThreshold)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("corpus_id").as("dup_of"), col("jaccard"))
@@ -260,8 +262,7 @@ object Dedup {
     * cache. Oracle: both rounds restated in SQL — round 2's candidate
     * set is (even corpus) ∪ (round-1 odd docs with no round-1 match).
     */
-  def incrementalDedupLoop(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
+  def incrementalDedupLoop(spark: SparkSession, sfDir: String): DataFrame = {
     val root = new java.io.File("/tmp/graft_index",
       "loop_" + Tables.pathKey(sfDir))
     org.apache.commons.io.FileUtils.deleteQuietly(root)
@@ -279,7 +280,7 @@ object Dedup {
         .repartition(col("doc_id")))
     // ---- round 1: probe the corpus index, admit, append segment ----
     val bands1 = batchBands(1).localCheckpoint(true) // probed AND appended
-    val dups1 = bestMatchAgainstIndex(bands1, seg0, sh, threshold)
+    val dups1 = bestMatchAgainstIndex(bands1, seg0, sh)
       .localCheckpoint(true) // reused: output + the admit filter
     val seg1Dir = new java.io.File(root, "seg1")
     bands1.join(dups1.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -289,8 +290,8 @@ object Dedup {
     val seg1 = spark.read.parquet(seg1Dir.getPath)
       .select(col("doc_id").as("corpus_id"),
         col("band_idx"), col("band_key"))
-    val dups2 = bestMatchAgainstIndex(batchBands(3),
-      seg0.unionByName(seg1), sh, threshold)
+    val dups2 =
+      bestMatchAgainstIndex(batchBands(3), seg0.unionByName(seg1), sh)
     // dups1 is a checkpoint: repartition so AQE counts the union
     dups1.withColumn("batch_round", lit(1L))
       .unionByName(dups2.withColumn("batch_round", lit(2L)))
@@ -304,7 +305,7 @@ object Dedup {
     * round-1 docs with no match, round-2 best matches against
     * corpus ∪ admits, both rounds tagged.
     */
-  def incrementalDedupLoopSql(threshold: Double = 0.5): String =
+  def incrementalDedupLoopSql: String =
     s"""@BANDED@,
        |@DOCSH@,
        |r1cands AS MATERIALIZED (
@@ -329,7 +330,7 @@ object Dedup {
        |    JOIN sizes sa ON sa.doc_id = i.doc_id
        |    JOIN sizes sb ON sb.doc_id = i.corpus_id
        |    WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)
-       |            >= $threshold)
+       |            >= $JaccardThreshold)
        |  WHERE rn = 1),
        |admits AS MATERIALIZED (
        |  SELECT DISTINCT doc_id FROM banded
@@ -359,7 +360,7 @@ object Dedup {
        |    JOIN sizes sa ON sa.doc_id = i.doc_id
        |    JOIN sizes sb ON sb.doc_id = i.corpus_id
        |    WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)
-       |            >= $threshold)
+       |            >= $JaccardThreshold)
        |  WHERE rn = 1)
        |SELECT CAST(1 AS BIGINT) AS batch_round, doc_id, dup_of, jaccard
        |FROM r1
@@ -395,8 +396,7 @@ object Dedup {
     * read-union-write of band rows (25 bytes/doc/band), embarrassingly
     * parallel, scheduled every K ingests.
     */
-  def bandIndexCompact(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame = {
+  def bandIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val root = new java.io.File("/tmp/graft_index",
       "compact_" + Tables.pathKey(sfDir))
     org.apache.commons.io.FileUtils.deleteQuietly(root)
@@ -412,7 +412,7 @@ object Dedup {
         col("band_idx"), col("band_key"))
     // ---- the q159 chain: round-1 probe, admit, append segment 1 ----
     val bands1 = batchBands(1).localCheckpoint(true)
-    val dups1 = bestMatchAgainstIndex(bands1, asIndex(seg0), sh, threshold)
+    val dups1 = bestMatchAgainstIndex(bands1, asIndex(seg0), sh)
     val seg1Dir = new java.io.File(root, "seg1")
     bands1.join(dups1.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .write.parquet(seg1Dir.getPath)
@@ -428,16 +428,14 @@ object Dedup {
     // compacted-side probe on a pool thread while the main thread
     // materializes the union-side one; both read only checkpointed
     // bands / committed parquet.
-    val pool = Tables.overlapPool()
-    val (a, b) = try {
-      val aF = Tables.submitJob(pool, spark, "q208: probe compacted")(
-        bestMatchAgainstIndex(bands3, asIndex(compacted), sh, threshold)
+    val (a, b) = Tables.overlapped(spark) { ov =>
+      val aF = ov.submit("q208: probe compacted")(
+        bestMatchAgainstIndex(bands3, asIndex(compacted), sh)
           .localCheckpoint(true))
-      val bEager =
-        bestMatchAgainstIndex(bands3, asIndex(union), sh, threshold)
-          .localCheckpoint(true)
+      val bEager = bestMatchAgainstIndex(bands3, asIndex(union), sh)
+        .localCheckpoint(true)
       (aF.get(), bEager)
-    } finally pool.shutdown()
+    }
     // ONE action for the equality bit (round-16 fusion): a count of
     // the UNION of both exceptAll branches equals the sum of their
     // counts (union is bag semantics), halving the driver jobs here
@@ -453,8 +451,8 @@ object Dedup {
     * and reports the comparison) — plus the equality bit the oracle
     * states as 1, which is the assertion that the fold is lossless.
     */
-  def bandIndexCompactSql(threshold: Double = 0.5): String = {
-    val base = incrementalDedupLoopSql(threshold)
+  def bandIndexCompactSql: String = {
+    val base = incrementalDedupLoopSql
     val tail =
       """SELECT CAST(1 AS BIGINT) AS batch_round, doc_id, dup_of, jaccard
         |FROM r1
@@ -491,7 +489,7 @@ object Dedup {
     * candidates restricted to (incoming odd) × (corpus even), exact
     * Jaccard by shingle-row join, best match per incoming doc.
     */
-  def incrementalDedupSql(threshold: Double = 0.5): String =
+  def incrementalDedupSql: String =
     s"""@BANDED@,
        |cands AS MATERIALIZED (
        |  SELECT DISTINCT i.doc_id, c.doc_id AS corpus_id
@@ -512,7 +510,7 @@ object Dedup {
        |  JOIN sizes sa ON sa.doc_id = i.doc_id
        |  JOIN sizes sb ON sb.doc_id = i.corpus_id
        |  WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter)
-       |          >= $threshold),
+       |          >= $JaccardThreshold),
        |best AS (
        |  SELECT doc_id, corpus_id AS dup_of, jaccard,
        |    row_number() OVER (PARTITION BY doc_id
@@ -589,6 +587,8 @@ object Dedup {
         .drop("_bucket_n")
     }
 
+  val MaxEditDist = 8 // edit distance up to which two names match
+
   /** Fuzzy record linkage on part names: blocked edit-distance join.
     * Candidate pairs only form inside a (brand, size) block — the
     * record-linkage blocking that keeps the pair count linear-ish — and
@@ -597,30 +597,29 @@ object Dedup {
     * lossless and the O(m·n) DP only runs on survivors). All-integer
     * comparison: identical in every engine.
     */
-  def fuzzyNameMatch(spark: SparkSession, sfDir: String,
-      maxDist: Int = 8): DataFrame = {
+  def fuzzyNameMatch(spark: SparkSession, sfDir: String): DataFrame = {
     val p = Tables.part(spark, sfDir)
       .select(col("p_partkey"), col("p_brand"), col("p_size"), col("p_name"))
     val a = p.toDF("part_a", "brand", "size", "name_a")
     val b = p.toDF("part_b", "brand", "size", "name_b")
     a.join(b, Seq("brand", "size"))
       .filter(col("part_a") < col("part_b"))
-      .filter(abs(length(col("name_a")) - length(col("name_b"))) <= maxDist)
+      .filter(abs(length(col("name_a")) - length(col("name_b"))) <= MaxEditDist)
       .withColumn("lev", levenshtein(col("name_a"), col("name_b")))
-      .filter(col("lev") <= maxDist)
+      .filter(col("lev") <= MaxEditDist)
       .select("part_a", "part_b", "name_a", "name_b", "lev")
       .orderBy("part_a", "part_b")
   }
 
-  def fuzzyNameMatchSql(maxDist: Int = 8): String =
+  def fuzzyNameMatchSql: String =
     s"""SELECT a.p_partkey AS part_a, b.p_partkey AS part_b,
        |  a.p_name AS name_a, b.p_name AS name_b,
        |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS lev
        |FROM part a JOIN part b
        |  ON a.p_brand = b.p_brand AND a.p_size = b.p_size
        | AND a.p_partkey < b.p_partkey
-       | AND abs(length(a.p_name) - length(b.p_name)) <= $maxDist
-       |WHERE levenshtein(a.p_name, b.p_name) <= $maxDist
+       | AND abs(length(a.p_name) - length(b.p_name)) <= $MaxEditDist
+       |WHERE levenshtein(a.p_name, b.p_name) <= $MaxEditDist
        |ORDER BY part_a, part_b""".stripMargin
 
   /** Duplicate-cluster resolution — the step AFTER near-dup pair mining
@@ -702,14 +701,15 @@ object Dedup {
     labels
   }
 
-  def dedupClusters(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5, maxIters: Int = 25): DataFrame = {
-    val edges = neardupPairs(spark, sfDir, threshold)
+  val ClosureMaxIters = 25 // label-propagation rounds, at most
+
+  def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
+    val edges = neardupPairs(spark, sfDir)
       .select("doc_a", "doc_b")
     val und = edges.select(col("doc_a").as("s"), col("doc_b").as("d"))
       .union(edges.select(col("doc_b").as("s"), col("doc_a").as("d")))
       .localCheckpoint(true)
-    val labels = propagateMinLabels(und, maxIters)
+    val labels = propagateMinLabels(und, ClosureMaxIters)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
@@ -722,7 +722,7 @@ object Dedup {
   /** Oracle: transitive closure by recursive CTE (tractable at oracle
     * scale), min reachable id per node.
     */
-  def dedupClustersSql(threshold: Double = 0.5): String =
+  def dedupClustersSql: String =
     // stripMargin runs on the template BEFORE substituting the inner
     // query: the pairs SQL contains lines starting with '||', which an
     // outer stripMargin would truncate to '|'
@@ -750,7 +750,7 @@ object Dedup {
        |  CASE WHEN l.node = l.cluster_id THEN 1 ELSE 0 END AS is_canonical
        |FROM lbl l JOIN sizes s USING (cluster_id)
        |ORDER BY doc_id""".stripMargin
-      .replace("@PAIRS@", neardupPairsSql(threshold))
+      .replace("@PAIRS@", neardupPairsSql)
 
   /** q194 — KEEP-BEST dedup: the curation policy layer on top of the
     * q60 cluster resolution. Production dedup does not keep "the
@@ -767,9 +767,8 @@ object Dedup {
     * the EDGE list; the policy layer adds one doc-grain score scan and
     * one cluster-grain struct-max — both map-side-combining.
     */
-  def keepBestDedup(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.5): DataFrame =
-    dedupClusters(spark, sfDir, threshold)
+  def keepBestDedup(spark: SparkSession, sfDir: String): DataFrame =
+    dedupClusters(spark, sfDir)
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
       .join(Corpus.docGateScores(spark, sfDir), Seq("doc_id"))
       .groupBy("cluster_id")
@@ -786,7 +785,7 @@ object Dedup {
     * + the q83 gate score at doc grain + the same (score, −doc_id)
     * argmax restated as a window rank.
     */
-  def keepBestDedupSql(threshold: Double = 0.5): String =
+  def keepBestDedupSql: String =
     s"""WITH RECURSIVE np AS MATERIALIZED (
        |  SELECT doc_a, doc_b FROM (@PAIRS@) pairs),
        |und AS MATERIALIZED (
@@ -817,7 +816,7 @@ object Dedup {
        |  CAST(cluster_size - 1 AS BIGINT) AS n_discarded
        |FROM ranked WHERE rk = 1
        |ORDER BY cluster_id""".stripMargin
-      .replace("@PAIRS@", neardupPairsSql(threshold))
+      .replace("@PAIRS@", neardupPairsSql)
       .replace("@SCORES@", Corpus.docGateScoresSql)
 
   /** Shared CTE prefix of the LSH-candidate oracles, row-based for the
@@ -890,27 +889,29 @@ object Dedup {
   // NOTE: the CTE is spliced AFTER stripMargin (placeholder pattern) —
   // its '||' continuation lines would be truncated to '|' if the outer
   // template stripped margins post-interpolation.
-  def neardupPairsSql(threshold: Double = 0.5): String =
+  def neardupPairsSql: String =
     s"""@CTE@
        |SELECT doc_a, doc_b,
        |  CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) AS jaccard
        |FROM inter
        |JOIN sizes sa ON sa.doc_id = doc_a
        |JOIN sizes sb ON sb.doc_id = doc_b
-       |WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= $threshold
+       |WHERE CAST(n_inter AS DOUBLE) / (sa.n + sb.n - n_inter) >= $JaccardThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
       .replace("@CTE@", lshCandidatesCte)
 
-  def containmentPairsSql(threshold: Double = 0.5): String =
+  def containmentPairsSql: String =
     s"""@CTE@
        |SELECT doc_a, doc_b,
        |  CAST(n_inter AS DOUBLE) / least(sa.n, sb.n) AS overlap
        |FROM inter
        |JOIN sizes sa ON sa.doc_id = doc_a
        |JOIN sizes sb ON sb.doc_id = doc_b
-       |WHERE CAST(n_inter AS DOUBLE) / least(sa.n, sb.n) >= $threshold
+       |WHERE CAST(n_inter AS DOUBLE) / least(sa.n, sb.n) >= $ContainmentThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
       .replace("@CTE@", lshCandidatesCte)
+
+  val NgramThreshold = 0.8 // exact n-gram Jaccard of a pair (q33)
 
   /** Standalone n-gram Jaccard near-dup detection (no banded MinHash):
     * single-minhash blocking — two docs are candidates iff they share
@@ -938,7 +939,7 @@ object Dedup {
     * DuckDB compute identical md5-60 values on both sides.
     */
   def ngramJaccardPairs(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.8, blockLocalCeiling: Long = 512L,
+      blockLocalCeiling: Long = 512L,
       maxScoredPairs: Long = 64L * 1000 * 1000): DataFrame = {
     // one fused scan computes block + hash set, materialized ONCE
     // (eager checkpoint = the generator barrier AND the reuse point
@@ -1013,12 +1014,12 @@ object Dedup {
       .withColumn("jaccard", col("n_inter").cast("double") /
         (size(col("sh_a")).cast("long") + size(col("sh_b")).cast("long")
           - col("n_inter")))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= NgramThreshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .orderBy("doc_a", "doc_b")
   }
 
-  def ngramJaccardPairsSql(threshold: Double = 0.8): String =
+  def ngramJaccardPairsSql: String =
     s"""WITH base AS MATERIALIZED (
        |  SELECT doc_id, $shinglesExprDuck AS shl FROM documents),
        |sh AS MATERIALIZED (
@@ -1036,7 +1037,7 @@ object Dedup {
        |      AS jaccard
        |  FROM sh a JOIN sh b
        |    ON a.block = b.block AND a.doc_id < b.doc_id) t
-       |WHERE jaccard >= $threshold
+       |WHERE jaccard >= $NgramThreshold
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** 60-bit SimHash over whitespace tokens: per bit i, sum +-1 votes of
@@ -1082,12 +1083,13 @@ object Dedup {
        |SELECT doc_id, simhash FROM sh
        |ORDER BY doc_id""".stripMargin
 
+  val MaxHamming = 6 // SimHash Hamming distance up to which two documents pair
+
   /** SimHash near-dup pairs: LSH on 4 bands of 15 bits (two near-dups
     * must agree exactly on at least one band), verified by Hamming
     * distance <= maxHamming. Same shuffle shape as MinHash LSH.
     */
-  def simhashNeardup(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 6): DataFrame = {
+  def simhashNeardup(spark: SparkSession, sfDir: String): DataFrame = {
     // same barrier + outer-explode pattern as neardupPairs (see there)
     val sh = simhashRaw(spark, sfDir).repartition(col("doc_id"))
     val banded = sh.select(col("doc_id"), col("simhash"),
@@ -1103,11 +1105,11 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
       .orderBy("doc_a", "doc_b")
   }
 
-  def simhashNeardupSql(maxHamming: Int = 6): String =
+  def simhashNeardupSql: String =
     s"""WITH @SIMHASH@,
        |banded AS (
        |  SELECT doc_id, simhash,
@@ -1117,9 +1119,12 @@ object Dedup {
        |  CAST(bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) AS INT) AS hamming
        |FROM banded a JOIN banded b
        |  ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-       |WHERE bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) <= $maxHamming
+       |WHERE bit_count(CAST(xor(a.simhash, b.simhash) AS BIGINT)) <= $MaxHamming
        |ORDER BY doc_a, doc_b""".stripMargin
       .replace("@SIMHASH@", simhashCteDuck)
+
+  val TauNum = 3 // all-pairs Jaccard threshold, numerator
+  val TauDen = 5 // ...and denominator (tau = 3/5)
 
   /** q185 — EXACT all-pairs set-similarity join with PREFIX FILTERING
     * (Chaudhuri/Bayardo/Xiao's SSJoin/AllPairs/PPJoin family): every
@@ -1154,7 +1159,7 @@ object Dedup {
     * sizes, df, prefix, and the array fold).
     */
   def allPairsJaccard(spark: SparkSession, sfDir: String,
-      tauNum: Int = 3, tauDen: Int = 5): DataFrame =
+      tauNum: Int = TauNum, tauDen: Int = TauDen): DataFrame =
     allPairsJaccardOn(
       Tables.spread(Tables.documents(spark, sfDir)),
       tauNum, tauDen)
@@ -1173,8 +1178,8 @@ object Dedup {
     * degeneracy (an identical-doc corpus measures ~n/2 per doc) long
     * before the verify join explodes.
     */
-  def allPairsJaccardOn(docs: DataFrame, tauNum: Int = 3, tauDen: Int = 5,
-      maxCandPerDoc: Long = 1024): DataFrame = {
+  def allPairsJaccardOn(docs: DataFrame, tauNum: Int = TauNum,
+      tauDen: Int = TauDen, maxCandPerDoc: Long = 1024): DataFrame = {
     // ONE fused kernel per doc (ShingleHashesExpr): tokens → shingles →
     // md5-60 → per-doc dedup + sort, all inside the scan — no string
     // explode, no per-shingle Column tree, no distinct exchange. The
@@ -1295,7 +1300,7 @@ object Dedup {
     * lemma itself is proven against the UNPRUNED join in DedupSpec,
     * where the brute-force twin is affordable.)
     */
-  def allPairsJaccardSql(tauNum: Int = 3, tauDen: Int = 5): String =
+  def allPairsJaccardSql: String =
     s"""WITH tk AS (
        |  SELECT DISTINCT doc_id,
        |    CAST(('0x' || substr(md5(ts), 1, 15)) AS BIGINT) AS t
@@ -1310,7 +1315,7 @@ object Dedup {
        |                         ORDER BY d.df_t, k.t) AS pos
        |    FROM tk k JOIN df d ON k.t = d.t
        |    JOIN sizes s ON s.doc_id = k.doc_id) p
-       |  WHERE pos <= sz - ((sz * $tauNum + ${tauDen - 1}) // $tauDen) + 1),
+       |  WHERE pos <= sz - ((sz * $TauNum + ${TauDen - 1}) // $TauDen) + 1),
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM pref a JOIN pref b
@@ -1328,6 +1333,6 @@ object Dedup {
        |FROM inter i
        |JOIN sizes sa ON sa.doc_id = i.doc_a
        |JOIN sizes sb ON sb.doc_id = i.doc_b
-       |WHERE i.o * ${tauNum + tauDen} >= $tauNum * (sa.sz + sb.sz)
+       |WHERE i.o * ${TauNum + TauDen} >= $TauNum * (sa.sz + sb.sz)
        |ORDER BY i.doc_a, i.doc_b""".stripMargin
 }

@@ -78,6 +78,8 @@ object Events {
        |GROUP BY 1
        |ORDER BY window_start""".stripMargin
 
+  val SessionGapMinutes = 30 // inactivity gap that closes a session, in minutes
+
   /** Sessionization with a 30-minute inactivity gap (the classic
     * lag -> gap-flag -> running-sum session id), then per-session
     * aggregates. One shuffle: the window partition by user.
@@ -87,17 +89,15 @@ object Events {
     * user_id is high-cardinality so partitions balance. The streaming
     * equivalent (session_window + watermark) is in EventStreams.
     */
-  def sessionize(spark: SparkSession, sfDir: String,
-      gapMinutes: Int = 30): DataFrame =
-    sessions(spark, sfDir, gapMinutes).orderBy("user_id", "session_seq")
+  def sessionize(spark: SparkSession, sfDir: String): DataFrame =
+    sessions(spark, sfDir).orderBy("user_id", "session_seq")
 
   /** The session frame without [[sessionize]]'s presentation sort —
     * shared with [[concurrentSessions]], which re-aggregates it.
     */
-  private def sessions(spark: SparkSession, sfDir: String,
-      gapMinutes: Int): DataFrame = {
+  private def sessions(spark: SparkSession, sfDir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val gapSec = gapMinutes * 60
+    val gapSec = SessionGapMinutes * 60
     Tables.events(spark, sfDir)
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       // gap measured in exact fractional seconds (timestamp->double is
@@ -117,8 +117,8 @@ object Events {
         sumValue)
   }
 
-  def sessionizeSql(gapMinutes: Int = 30): String = {
-    val gapSec = gapMinutes * 60
+  def sessionizeSql: String = {
+    val gapSec = SessionGapMinutes * 60
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   event_type, value FROM events),
        |flagged AS (
@@ -140,14 +140,18 @@ object Events {
        |ORDER BY user_id, session_seq""".stripMargin
   }
 
+  val CampaignPeriodDays = 7 // campaign recurrence period, in days
+  val CampaignLenDays = 3 // days each campaign runs within its period
+
   /** q190 — INTERVAL-OVERLAP join (interval × interval, the shape q50's
     * point-in-window range join cannot express): user sessions overlap
     * derived campaign windows, reporting per campaign the overlapping
     * sessions, distinct users, and the EXACT total overlap time —
     * min(ends) − max(starts) in microseconds, pure integer arithmetic.
     * Campaign windows are derived deterministically from the data's own
-    * date span (`lenDays`-day windows every `periodDays` from the first
-    * event date), so both engines construct the identical calendar.
+    * date span (`CampaignLenDays`-day windows every `CampaignPeriodDays`
+    * from the first event date), so both engines construct the identical
+    * calendar.
     *
     * Scale shape: the campaign side is a calendar — O(span/period)
     * rows — so the overlap join is a broadcast nested-loop against the
@@ -156,10 +160,8 @@ object Events {
     * overlap would chunk both sides on time like q50/q133 — the
     * calendar case is the one that should NOT pay that exchange.)
     */
-  def campaignOverlap(spark: SparkSession, sfDir: String,
-      gapMinutes: Int = 30, periodDays: Int = 7,
-      lenDays: Int = 3): DataFrame = {
-    val s = sessions(spark, sfDir, gapMinutes)
+  def campaignOverlap(spark: SparkSession, sfDir: String): DataFrame = {
+    val s = sessions(spark, sfDir)
       .select(col("user_id"),
         unix_micros(col("session_start")).as("s_us"),
         unix_micros(col("session_end")).as("e_us"))
@@ -167,14 +169,14 @@ object Events {
     val camps = broadcast(Tables.events(spark, sfDir)
       .agg(min(to_date(col("ts"))).as("d0"), max(to_date(col("ts"))).as("d1"))
       .select(explode(expr(
-        s"sequence(0, CAST(datediff(d1, d0) div $periodDays AS INT))"))
+        s"sequence(0, CAST(datediff(d1, d0) div $CampaignPeriodDays AS INT))"))
         .as("campaign_id"),
         unix_micros(col("d0").cast("timestamp")).as("base_us"))
       .select(col("campaign_id"),
-        (col("base_us") + col("campaign_id") * periodDays * dayUs)
+        (col("base_us") + col("campaign_id") * CampaignPeriodDays * dayUs)
           .as("c_start"),
-        (col("base_us") + col("campaign_id") * periodDays * dayUs
-          + lenDays * dayUs).as("c_end")))
+        (col("base_us") + col("campaign_id") * CampaignPeriodDays * dayUs
+          + CampaignLenDays * dayUs).as("c_end")))
     s.join(camps, col("s_us") < col("c_end") && col("c_start") < col("e_us"))
       .select(col("campaign_id"), col("user_id"),
         (least(col("e_us"), col("c_end")) -
@@ -186,9 +188,8 @@ object Events {
       .orderBy("campaign_id")
   }
 
-  def campaignOverlapSql(gapMinutes: Int = 30, periodDays: Int = 7,
-      lenDays: Int = 3): String = {
-    val gapSec = gapMinutes * 60
+  def campaignOverlapSql: String = {
+    val gapSec = SessionGapMinutes * 60
     val dayUs = 86400L * 1000000
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id
        |            FROM events),
@@ -214,13 +215,13 @@ object Events {
        |    CAST(date_diff('day',
        |           MIN(CAST(CAST(ts AS TIMESTAMP) AS DATE)),
        |           MAX(CAST(CAST(ts AS TIMESTAMP) AS DATE)))
-       |         // $periodDays AS INT) AS n_c
+       |         // $CampaignPeriodDays AS INT) AS n_c
        |  FROM events),
        |camps AS (
        |  SELECT CAST(i AS INT) AS campaign_id,
-       |    base_us + i * ${periodDays.toLong * dayUs} AS c_start,
-       |    base_us + i * ${periodDays.toLong * dayUs}
-       |      + ${lenDays.toLong * dayUs} AS c_end
+       |    base_us + i * ${CampaignPeriodDays.toLong * dayUs} AS c_start,
+       |    base_us + i * ${CampaignPeriodDays.toLong * dayUs}
+       |      + ${CampaignLenDays.toLong * dayUs} AS c_end
        |  FROM b, LATERAL UNNEST(range(0, n_c + 1)) t(i))
        |SELECT campaign_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_sessions,
@@ -231,6 +232,8 @@ object Events {
        |GROUP BY campaign_id
        |ORDER BY campaign_id""".stripMargin
   }
+
+  val AttributionWindowDays = 7 // attribution lookback, in days
 
   /** q191 — LINEAR MULTI-TOUCH attribution: each purchase's value is
     * credited EQUALLY to every prior non-purchase touch by the same
@@ -246,9 +249,8 @@ object Events {
     * per-purchase touch count is one window count over the join
     * output, and the channel rollup collapses map-side.
     */
-  def multiTouchAttribution(spark: SparkSession, sfDir: String,
-      windowDays: Int = 7): DataFrame = {
-    val winUs = windowDays * 86400L * 1000000
+  def multiTouchAttribution(spark: SparkSession, sfDir: String): DataFrame = {
+    val winUs = AttributionWindowDays * 86400L * 1000000
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         col("event_type"), col("value"), col("event_id"))
@@ -270,8 +272,8 @@ object Events {
       .orderBy("channel")
   }
 
-  def multiTouchAttributionSql(windowDays: Int = 7): String = {
-    val winUs = windowDays * 86400L * 1000000
+  def multiTouchAttributionSql: String = {
+    val winUs = AttributionWindowDays * 86400L * 1000000
     s"""WITH ev AS (
        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
        |         event_type, value, event_id
@@ -301,6 +303,8 @@ object Events {
        |ORDER BY channel""".stripMargin
   }
 
+  val TopSessionPaths = 50 // session paths kept by frequency
+
   /** q192 — SESSION PATH mining: the full ordered event-type sequence
     * of every session (q28's gap rule), folded to the top-k path
     * histogram — the clickstream-analytics complement to q186's
@@ -316,10 +320,9 @@ object Events {
     * session-grain agg whose value is bounded by session length, one
     * path-grain histogram exchange.
     */
-  def sessionPaths(spark: SparkSession, sfDir: String,
-      gapMinutes: Int = 30, k: Int = 50): DataFrame = {
+  def sessionPaths(spark: SparkSession, sfDir: String): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val gapSec = gapMinutes * 60
+    val gapSec = SessionGapMinutes * 60
     Tables.events(spark, sfDir)
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("new_session",
@@ -337,11 +340,11 @@ object Events {
       .groupBy("path")
       .agg(count(lit(1)).as("n_sessions"))
       .orderBy(desc("n_sessions"), asc("path"))
-      .limit(k)
+      .limit(TopSessionPaths)
   }
 
-  def sessionPathsSql(gapMinutes: Int = 30, k: Int = 50): String = {
-    val gapSec = gapMinutes * 60
+  def sessionPathsSql: String = {
+    val gapSec = SessionGapMinutes * 60
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   event_type FROM events),
        |flagged AS (
@@ -362,7 +365,7 @@ object Events {
        |FROM paths
        |GROUP BY path
        |ORDER BY n_sessions DESC, path
-       |LIMIT $k""".stripMargin
+       |LIMIT $TopSessionPaths""".stripMargin
   }
 
   /** Per-type daily funnel-ish rollup with distinct users — exercises
@@ -409,9 +412,11 @@ object Events {
        |GROUP BY 1, 2
        |ORDER BY event_date, event_type""".stripMargin
 
+  val RollupSplitDate = "2024-01-16" // first day of the second load
+
   /** Incremental rollup maintenance: the daily rollup recomputed as a
     * MERGE of two independently pre-aggregated batches (events before /
-    * after `splitDate`) — the pattern an incremental ETL uses so each
+    * after `RollupSplitDate`) — the pattern an incremental ETL uses so each
     * load only aggregates its own delta. The partial state is kept at
     * (date, type, user) grain with decimal value sums, which makes every
     * output measure exactly re-aggregatable: counts sum, decimal sums
@@ -421,8 +426,8 @@ object Events {
     * you persist between loads). Oracle = the full single-pass rollup:
     * merged partials must be bit-identical to recomputing from scratch.
     */
-  def incrementalDailyRollup(spark: SparkSession, sfDir: String,
-      splitDate: String = "2024-01-16"): DataFrame = {
+  def incrementalDailyRollup(spark: SparkSession,
+      sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(to_date(col("ts")).as("event_date"), col("event_type"),
         col("user_id"), col("value"))
@@ -430,8 +435,9 @@ object Events {
       .groupBy("event_date", "event_type", "user_id")
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(28,10)")).as("sv"))
-    val merged = partial(ev.filter(col("event_date") < lit(splitDate)))
-      .unionByName(partial(ev.filter(col("event_date") >= lit(splitDate))))
+    val merged = partial(ev.filter(col("event_date") < lit(RollupSplitDate)))
+      .unionByName(
+        partial(ev.filter(col("event_date") >= lit(RollupSplitDate))))
     merged.groupBy("event_date", "event_type")
       .agg(sum("n").as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -442,16 +448,17 @@ object Events {
   /** Same oracle as the single-pass rollup — that equality IS the check. */
   val incrementalDailyRollupSql: String = dailyTypeRollupSql
 
+  val FunnelWithinHours = 1 // funnel step window, in hours
+
   /** Click→purchase funnel: for each click, the user's next purchase
     * (conditional MIN over the following frame of a per-user window);
-    * converted = purchase within `withinHours`. Rolled up per day:
+    * converted = purchase within `FunnelWithinHours`. Rolled up per day:
     * clicks, conversions, rate. One exchange on user_id for the window,
     * one on the day for the rollup — both key-partitioned, no global
     * funnel; at 100 TB this is the standard sessionized-funnel shape
     * (the per-user frame never leaves its partition).
     */
-  def clickFunnel(spark: SparkSession, sfDir: String,
-      withinHours: Int = 1): DataFrame = {
+  def clickFunnel(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(1, Window.unboundedFollowing)
@@ -461,7 +468,8 @@ object Events {
       .filter(col("event_type") === "click")
       .withColumn("converted",
         when(col("next_purchase_ts") <=
-          col("ts") + expr(s"INTERVAL $withinHours HOURS"), 1).otherwise(0))
+          col("ts") + expr(s"INTERVAL $FunnelWithinHours HOURS"), 1)
+          .otherwise(0))
       .groupBy(to_date(col("ts")).as("event_date"))
       .agg(count(lit(1)).as("n_clicks"), sum("converted").as("n_converted"))
       .withColumn("conversion_rate",
@@ -469,7 +477,7 @@ object Events {
       .orderBy("event_date")
   }
 
-  def clickFunnelSql(withinHours: Int = 1): String =
+  def clickFunnelSql: String =
     s"""WITH e AS (
        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type
        |  FROM events),
@@ -482,9 +490,9 @@ object Events {
        |  FROM e)
        |SELECT CAST(ts AS DATE) AS event_date,
        |  COUNT(*) AS n_clicks,
-       |  CAST(SUM(CASE WHEN next_purchase_ts <= ts + INTERVAL $withinHours HOUR
+       |  CAST(SUM(CASE WHEN next_purchase_ts <= ts + INTERVAL $FunnelWithinHours HOUR
        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,
-       |  CAST(SUM(CASE WHEN next_purchase_ts <= ts + INTERVAL $withinHours HOUR
+       |  CAST(SUM(CASE WHEN next_purchase_ts <= ts + INTERVAL $FunnelWithinHours HOUR
        |    THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS conversion_rate
        |FROM scored
        |WHERE event_type = 'click'
@@ -507,25 +515,27 @@ object Events {
       .orderBy("user_id")
   }
 
+  val DebounceSeconds = 5 // repeats within this many seconds collapse
+
   /** Debounce: drop events of the same (user, type) arriving within
-    * `withinSeconds` of the previous kept-or-dropped event (lag-based —
+    * `DebounceSeconds` of the previous kept-or-dropped event (lag-based —
     * the stateless form used for double-click/retry suppression in
     * event pipelines). One exchange on the (user, type) key; the lag
     * window never leaves its partition.
     */
-  def debounce(spark: SparkSession, sfDir: String,
-      withinSeconds: Int = 5): DataFrame = {
+  def debounce(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id", "event_type")
       .orderBy(col("ts"), col("event_id"))
     Tables.events(spark, sfDir)
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .filter(col("prev_ts").isNull ||
-        col("ts") >= col("prev_ts") + expr(s"INTERVAL $withinSeconds SECONDS"))
+        col("ts") >=
+          col("prev_ts") + expr(s"INTERVAL $DebounceSeconds SECONDS"))
       .select("event_id", "user_id", "event_type", "ts", "value")
       .orderBy("event_id")
   }
 
-  def debounceSql(withinSeconds: Int = 5): String =
+  def debounceSql: String =
     s"""SELECT event_id, user_id, event_type, ts, value
        |FROM (
        |  SELECT event_id, user_id, event_type,
@@ -534,40 +544,42 @@ object Events {
        |      PARTITION BY user_id, event_type
        |      ORDER BY CAST(ts AS TIMESTAMP), event_id) AS prev_ts
        |  FROM events)
-       |WHERE prev_ts IS NULL OR ts >= prev_ts + INTERVAL $withinSeconds SECOND
+       |WHERE prev_ts IS NULL OR ts >= prev_ts + INTERVAL $DebounceSeconds SECOND
        |ORDER BY event_id""".stripMargin
+
+  val ActiveUserWindowDays = 7 // active-user window, in days
 
   /** Rolling 7-day active users (the WAU-per-day product metric).
     * Exact distinct over a sliding window is NOT mergeable from daily
     * distinct counts, so the query keeps the (day, user) grain: dedup
     * to daily actives (one exchange), then a bounded range join against
-    * the calendar (the `days` side is calendar-sized — broadcast — so
-    * the "window" is a fan-out of at most 7 rows per daily-active
-    * entry, never a corpus self-join).
+    * the calendar (the `ActiveUserWindowDays` side is calendar-sized —
+    * broadcast — so the "window" is a fan-out of at most 7 rows per
+    * daily-active entry, never a corpus self-join).
     */
-  def rollingActiveUsers(spark: SparkSession, sfDir: String,
-      days: Int = 7): DataFrame = {
+  def rollingActiveUsers(spark: SparkSession, sfDir: String): DataFrame = {
     val du = Tables.events(spark, sfDir)
       .select(to_date(col("ts")).as("d"), col("user_id"))
       .distinct()
     val cal = du.select(col("d").as("day")).distinct()
     du.join(broadcast(cal),
-        col("d") >= date_sub(col("day"), days - 1) && col("d") <= col("day"))
+        col("d") >= date_sub(col("day"), ActiveUserWindowDays - 1) &&
+          col("d") <= col("day"))
       .groupBy("day")
-      .agg(countDistinct(col("user_id")).as(s"active_${days}d"),
+      .agg(countDistinct(col("user_id")).as(s"active_${ActiveUserWindowDays}d"),
         count(lit(1)).as("active_days_sum"))
       .orderBy("day")
   }
 
-  def rollingActiveUsersSql(days: Int = 7): String =
+  def rollingActiveUsersSql: String =
     s"""WITH du AS (
        |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d, user_id
        |  FROM events),
        |cal AS (SELECT DISTINCT d AS day FROM du)
        |SELECT day,
-       |  COUNT(DISTINCT user_id) AS active_${days}d,
+       |  COUNT(DISTINCT user_id) AS active_${ActiveUserWindowDays}d,
        |  COUNT(*) AS active_days_sum
-       |FROM du JOIN cal ON du.d >= day - ${days - 1} AND du.d <= day
+       |FROM du JOIN cal ON du.d >= day - ${ActiveUserWindowDays - 1} AND du.d <= day
        |GROUP BY day
        |ORDER BY day""".stripMargin
 
@@ -676,9 +688,8 @@ object Events {
     * prefix-sum multiset over an all-equal-delta tie group is
     * permutation-invariant, so the per-day MAX is deterministic.
     */
-  def concurrentSessions(spark: SparkSession, sfDir: String,
-      gapMinutes: Int = 30): DataFrame = {
-    val sess = sessions(spark, sfDir, gapMinutes)
+  def concurrentSessions(spark: SparkSession, sfDir: String): DataFrame = {
+    val sess = sessions(spark, sfDir)
       .select(col("session_start"), col("session_end"))
     val deltas = sess
       .select(col("session_start").as("ts"), lit(1).as("delta"))
@@ -695,8 +706,8 @@ object Events {
       .orderBy("day")
   }
 
-  def concurrentSessionsSql(gapMinutes: Int = 30): String = {
-    val gapSec = gapMinutes * 60
+  def concurrentSessionsSql: String = {
+    val gapSec = SessionGapMinutes * 60
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id
        |            FROM events),
        |flagged AS (
@@ -980,6 +991,9 @@ object Events {
       .orderBy("v_type")
   }
 
+  val EngagementHalfLifeDays = 7 // half-life of the engagement decay, in days
+  val TopEngaged = 100 // users kept by decayed engagement
+
   /** q188 — RECENCY-DECAYED engagement score (half-life decay): the
     * feature-engineering primitive behind "recent activity counts
     * more" user-value features, made ENGINE-EXACT by quantizing the
@@ -996,8 +1010,7 @@ object Events {
     * Scale shape: one narrow scan, one broadcast 1-row max-date, one
     * user-grain agg with map-side partials, top-k TakeOrdered.
     */
-  def decayedEngagement(spark: SparkSession, sfDir: String,
-      halfLifeDays: Int = 7, k: Int = 100): DataFrame = {
+  def decayedEngagement(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id"), to_date(col("ts")).as("d"),
         col("value"))
@@ -1005,16 +1018,16 @@ object Events {
     ev.crossJoin(mx)
       .select(col("user_id"),
         expr(s"""shiftright(CAST(floor(value * 100) AS BIGINT),
-                |  least(CAST(datediff(max_d, d) / $halfLifeDays AS INT),
+                |  least(CAST(datediff(max_d, d) / $EngagementHalfLifeDays AS INT),
                 |        62))""".stripMargin).as("contrib"))
       .groupBy("user_id")
       .agg(sum(col("contrib")).cast("long").as("decayed_cents"),
         count(lit(1)).as("n_events"))
       .orderBy(desc("decayed_cents"), asc("user_id"))
-      .limit(k)
+      .limit(TopEngaged)
   }
 
-  def decayedEngagementSql(halfLifeDays: Int = 7, k: Int = 100): String =
+  def decayedEngagementSql: String =
     s"""WITH mx AS (
        |  SELECT MAX(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS max_d
        |  FROM events),
@@ -1022,7 +1035,7 @@ object Events {
        |  SELECT user_id,
        |    CAST(floor(value * 100) AS BIGINT) >>
        |      LEAST(date_diff('day', CAST(CAST(ts AS TIMESTAMP) AS DATE),
-       |                      max_d) // $halfLifeDays, 62) AS contrib
+       |                      max_d) // $EngagementHalfLifeDays, 62) AS contrib
        |  FROM events, mx)
        |SELECT user_id,
        |  CAST(SUM(contrib) AS BIGINT) AS decayed_cents,
@@ -1030,7 +1043,9 @@ object Events {
        |FROM c
        |GROUP BY user_id
        |ORDER BY decayed_cents DESC, user_id
-       |LIMIT $k""".stripMargin
+       |LIMIT $TopEngaged""".stripMargin
+
+  val TopContextWindows = 100 // context patterns kept by frequency
 
   /** q186 — TRAINING-SEQUENCE context construction: for every event
     * with at least three predecessors in its user's timeline, the
@@ -1043,8 +1058,7 @@ object Events {
     * 100 TB the window shuffles once at user grain and the histogram
     * exchange carries ≤ |types|³⁺¹ rows.
     */
-  def contextWindows(spark: SparkSession, sfDir: String,
-      k: Int = 100): DataFrame = {
+  def contextWindows(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     Tables.events(spark, sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -1058,10 +1072,10 @@ object Events {
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"))
       .orderBy(desc("n"), asc("ctx"), asc("label"))
-      .limit(k)
+      .limit(TopContextWindows)
   }
 
-  def contextWindowsSql(k: Int = 100): String =
+  def contextWindowsSql: String =
     s"""WITH o AS (
        |  SELECT user_id, event_type,
        |    lag(event_type, 1) OVER w AS t1,
@@ -1077,7 +1091,7 @@ object Events {
        |FROM o WHERE t3 IS NOT NULL
        |GROUP BY 1, 2
        |ORDER BY n DESC, ctx, label
-       |LIMIT $k""".stripMargin
+       |LIMIT $TopContextWindows""".stripMargin
 
   val variantPathRollupSql: String =
     """SELECT event_type AS v_type, COUNT(*) AS n_events,

@@ -253,29 +253,31 @@ object Features {
     weightedPercentilesSql(grain, groupCols, "v", "w", ps)
   }
 
+  val DecileCount = 10 // quantile buckets of the value deciles
+
   /** Equi-depth (decile) binning of event values per type — the
     * rank-based feature transform. ntile over a per-type window with a
     * total order (value, event_id tiebreak), rolled up to bin
     * boundaries. The exchange is on event_type only; each type's sort
     * stays inside its partition.
     */
-  def valueDeciles(spark: SparkSession, sfDir: String, n: Int = 10): DataFrame = {
+  def valueDeciles(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("event_type")
       .orderBy(col("value"), col("event_id"))
     Tables.events(spark, sfDir)
-      .withColumn("decile", ntile(n).over(w))
+      .withColumn("decile", ntile(DecileCount).over(w))
       .groupBy("event_type", "decile")
       .agg(count(lit(1)).as("n_events"),
         min("value").as("min_value"), max("value").as("max_value"))
       .orderBy("event_type", "decile")
   }
 
-  def valueDecilesSql(n: Int = 10): String =
+  def valueDecilesSql: String =
     s"""SELECT event_type, decile, COUNT(*) AS n_events,
        |  MIN(value) AS min_value, MAX(value) AS max_value
        |FROM (
        |  SELECT event_type, event_id, value,
-       |    NTILE($n) OVER (PARTITION BY event_type
+       |    NTILE($DecileCount) OVER (PARTITION BY event_type
        |      ORDER BY value, event_id) AS decile
        |  FROM events)
        |GROUP BY event_type, decile
@@ -437,15 +439,16 @@ object Features {
       |GROUP BY l_returnflag
       |ORDER BY l_returnflag""".stripMargin
 
+  val PriceBinWidth = 50000L // price histogram bin width, in price units
+
   /** Fixed-width histogram of order totals in integer cents — bin
     * arithmetic entirely in BIGINT (cents div binWidthCents), so bin
     * edges are exact: no double rounding at the boundaries, identical
     * bins in every engine. One partial-agg pass; presentation converts
     * cents to dollars at the end.
     */
-  def priceHistogram(spark: SparkSession, sfDir: String,
-      binDollars: Long = 50000L): DataFrame = {
-    val binCents = binDollars * 100
+  def priceHistogram(spark: SparkSession, sfDir: String): DataFrame = {
+    val binCents = PriceBinWidth * 100
     // o_totalprice is a DOUBLE in the testdata: *100 can land at
     // x.9999…, so round() before the integer cast (Spark casts by
     // truncation, DuckDB by rounding — round() makes both exact)
@@ -454,16 +457,16 @@ object Features {
       .withColumn("bin", expr(s"cents div $binCents"))
       .groupBy("bin")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents"))
-      .select((col("bin") * binDollars).cast("long").as("bin_low"),
+      .select((col("bin") * PriceBinWidth).cast("long").as("bin_low"),
         col("n_orders"),
         (col("sum_cents").cast("double") / 100.0).as("sum_price"))
       .orderBy("bin_low")
   }
 
-  def priceHistogramSql(binDollars: Long = 50000L): String = {
-    val binCents = binDollars * 100
+  def priceHistogramSql: String = {
+    val binCents = PriceBinWidth * 100
     s"""SELECT CAST((CAST(round(o_totalprice * 100) AS BIGINT) // $binCents)
-       |    * $binDollars AS BIGINT) AS bin_low,
+       |    * $PriceBinWidth AS BIGINT) AS bin_low,
        |  COUNT(*) AS n_orders,
        |  CAST(CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
        |    / 100.0 AS DOUBLE) AS sum_price
@@ -471,6 +474,8 @@ object Features {
        |GROUP BY bin_low
        |ORDER BY bin_low""".stripMargin
   }
+
+  val MovingWindowDays = 7 // trailing window of the moving revenue, in days
 
   /** 7-day trailing revenue smoothing: daily grain first (decimal-exact
     * sums), then a RANGE window keyed on integer day number. The global
@@ -480,26 +485,26 @@ object Features {
     * The decimal window sum stays exact; the single decimal→double
     * conversion happens in the final projection.
     */
-  def movingRevenue(spark: SparkSession, sfDir: String, days: Int = 7): DataFrame = {
+  def movingRevenue(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = Tables.lineitem(spark, sfDir)
       .groupBy(to_date(col("l_shipdate")).as("ship_date"))
       .agg(Insights.revenueSum.as("rev"),
         count(lit(1)).as("n_items"))
       .withColumn("day_n", datediff(col("ship_date"),
         lit("1970-01-01").cast("date")))
-    val w = Window.orderBy("day_n").rangeBetween(-(days - 1), 0)
+    val w = Window.orderBy("day_n").rangeBetween(-(MovingWindowDays - 1), 0)
     daily
       .withColumn("mov_rev", sum("rev").over(w))
       .withColumn("mov_n", sum("n_items").over(w))
       .select(col("ship_date"),
         col("rev").cast("double").as("revenue"),
-        col("mov_rev").cast("double").as(s"revenue_${days}d"),
+        col("mov_rev").cast("double").as(s"revenue_${MovingWindowDays}d"),
         (col("mov_rev").cast("double") / col("mov_n"))
-          .as(s"avg_item_revenue_${days}d"))
+          .as(s"avg_item_revenue_${MovingWindowDays}d"))
       .orderBy("ship_date")
   }
 
-  def movingRevenueSql(days: Int = 7): String =
+  def movingRevenueSql: String =
     s"""WITH daily AS (
        |  SELECT CAST(l_shipdate AS DATE) AS ship_date,
        |    SUM(${Insights.revenueSql}) AS rev,
@@ -510,13 +515,15 @@ object Features {
        |  GROUP BY CAST(l_shipdate AS DATE))
        |SELECT ship_date,
        |  CAST(rev AS DOUBLE) AS revenue,
-       |  CAST(SUM(rev) OVER w AS DOUBLE) AS revenue_${days}d,
+       |  CAST(SUM(rev) OVER w AS DOUBLE) AS revenue_${MovingWindowDays}d,
        |  CAST(SUM(rev) OVER w AS DOUBLE)
-       |    / CAST(SUM(n_items) OVER w AS DOUBLE) AS avg_item_revenue_${days}d
+       |    / CAST(SUM(n_items) OVER w AS DOUBLE) AS avg_item_revenue_${MovingWindowDays}d
        |FROM daily
        |WINDOW w AS (ORDER BY day_n
-       |  RANGE BETWEEN ${days - 1} PRECEDING AND CURRENT ROW)
+       |  RANGE BETWEEN ${MovingWindowDays - 1} PRECEDING AND CURRENT ROW)
        |ORDER BY ship_date""".stripMargin
+
+  val MadCutoff = 3.0 // outlier cut, in median absolute deviations
 
   /** Robust outlier detection via Median Absolute Deviation per return
     * flag: med = median(price), mad = median(|price − med|), outlier ⇔
@@ -539,8 +546,7 @@ object Features {
     * hash(flag) stage: no joins, no broadcasts, three exchanges total
     * (grain, flag, final ORDER BY).
     */
-  def madOutliers(spark: SparkSession, sfDir: String,
-      k: Double = 3.0): DataFrame = {
+  def madOutliers(spark: SparkSession, sfDir: String): DataFrame = {
     val grain = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_returnflag"), col("l_extendedprice").as("price"))
       .agg(count(lit(1)).as("w"))
@@ -558,7 +564,7 @@ object Features {
       .agg(sum("w").as("n_rows"),
         max(col("med")).as("median_price"),
         max(col("mad")).as("mad"),
-        sum(when(col("adev") > lit(k) * col("mad"), col("w"))
+        sum(when(col("adev") > lit(MadCutoff) * col("mad"), col("w"))
           .otherwise(lit(0L))).as("n_outliers"))
       // materialization barrier (3 rows) so the ORDER BY's range
       // sampling doesn't re-execute the window chain (see
@@ -567,7 +573,7 @@ object Features {
       .orderBy("l_returnflag")
   }
 
-  def madOutliersSql(k: Double = 3.0): String = {
+  def madOutliersSql: String = {
     val medSql = weightedPercentilesSql("grain", Seq("l_returnflag"),
       "price", "w", Seq("med" -> 0.5))
     val madSql = weightedPercentilesSql("ag", Seq("l_returnflag"),
@@ -586,7 +592,7 @@ object Features {
        |  $madSql)
        |SELECT ag.l_returnflag, CAST(SUM(w) AS BIGINT) AS n_rows,
        |  MAX(ag.med) AS median_price, MAX(mad.mad) AS mad,
-       |  CAST(SUM(CASE WHEN adev > $k * mad.mad THEN w ELSE 0 END)
+       |  CAST(SUM(CASE WHEN adev > $MadCutoff * mad.mad THEN w ELSE 0 END)
        |    AS BIGINT) AS n_outliers
        |FROM ag JOIN mad ON ag.l_returnflag = mad.l_returnflag
        |GROUP BY ag.l_returnflag

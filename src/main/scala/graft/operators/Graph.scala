@@ -22,12 +22,15 @@ import graft.sources.Tables
   * (join on src) + one (groupBy dst) shuffle over the EDGE list only —
   * ranks and degrees are node-grain (≪ edges). N rides along as a
   * broadcast 1-row frame; nothing collects to the driver. The lazy
-  * plan grows linearly with `iters` (fixed, small) — the same chained
+  * plan grows linearly with `RankIters` (fixed, small) — the same chained
   * shape as [[Similarity.kmeans]].
   */
 object Graph {
 
   val Scale = 1000000000000L // rank unit: 1e-12
+
+  val DampPpm = 850000L // PageRank damping, in parts per million
+  val RankIters = 3 // PageRank iterations
 
   /** `edges`: two columns (src, dst). General directed graphs are fully
     * supported (round 7): the node set is src ∪ dst, and the rank mass
@@ -51,8 +54,8 @@ object Graph {
     * and degrees are node-grain ≪ edges, and D rides along as a
     * broadcast 1-row frame). Nothing collects to the driver.
     */
-  def pagerank(edges: DataFrame, iters: Int = 3,
-      dampPpm: Long = 850000L, assumeNoDangling: Boolean = false): DataFrame = {
+  def pagerank(edges: DataFrame, iters: Int = RankIters,
+      assumeNoDangling: Boolean = false): DataFrame = {
     // truncate the iterative lineage at the EDGE LIST (the
     // Dedup.dedupClusters idiom) — one checkpoint, materialized once,
     // so the (possibly expensive) edge construction never re-runs:
@@ -63,7 +66,7 @@ object Graph {
     // pair-generation stage).
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val keep = 1000000L - dampPpm
+    val keep = 1000000L - DampPpm
     val ed = e.join(deg, Seq("src")).localCheckpoint(true)
     if (assumeNoDangling) {
       // node set materialized ONCE (round-15): the lazy 3-iteration
@@ -82,7 +85,7 @@ object Graph {
           .agg(sum(expr("r div deg")).as("c"))
         ranks = contribs.crossJoin(n1)
           .select(col("node"), expr(
-            s"((${Scale}L div n) * $keep + c * $dampPpm)" +
+            s"((${Scale}L div n) * $keep + c * $DampPpm)" +
               " div 1000000").as("r"))
       }
       ranks
@@ -114,7 +117,7 @@ object Graph {
           .crossJoin(n1).crossJoin(dmass)
           .select(col("node"), expr(
             s"((${Scale}L div n) * $keep" +
-              s" + (coalesce(c, 0L) + dm div n) * $dampPpm)" +
+              s" + (coalesce(c, 0L) + dm div n) * $DampPpm)" +
               " div 1000000").as("r"))
           .localCheckpoint(true)
       }
@@ -122,44 +125,44 @@ object Graph {
     }
   }
 
+  val MinPairs = 2 // co-purchase count an edge needs to enter the product graph
+
   /** q129 — product importance by PageRank over the co-purchase graph:
-    * symmetrized q94 basket pairs (support ≥ `minPairs`) as edges,
-    * `iters` damped rounds, ranked output. The rank column stays in
+    * symmetrized q94 basket pairs (support ≥ `MinPairs`) as edges,
+    * `RankIters` damped rounds, ranked output. The rank column stays in
     * exact 1e-12 BIGINT units.
     */
-  def copurchaseRank(spark: SparkSession, sfDir: String,
-      minPairs: Int = 2, iters: Int = 3): DataFrame = {
+  def copurchaseRank(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = RetailBi.basketPairCounts(
       RetailBi.baskets(Tables.lineitem(spark, sfDir)),
-      minPairs = minPairs, maxItems = 64)
+      minPairs = MinPairs, maxItems = RetailBi.BasketMaxItems)
     val edges = pairs.select(col("part_a").as("src"), col("part_b").as("dst"))
       .unionByName(
         pairs.select(col("part_b").as("src"), col("part_a").as("dst")))
     // the mirror union makes every dst also a src BY CONSTRUCTION, so
     // the symmetrized fast path applies: no node-set union, no
     // per-iteration dangling-mass pass (~20% of the query at sf0.1).
-    pagerank(edges, iters, assumeNoDangling = true)
+    pagerank(edges, RankIters, assumeNoDangling = true)
       .select(col("node").as("part"), col("r").as("rank_e12"))
       .orderBy(desc("rank_e12"), asc("part"))
   }
 
   /** q135 — PageRank over a genuinely DIRECTED graph with dangling
     * nodes: co-purchase edges oriented low→high part key (support ≥
-    * `minPairs`), so the highest-keyed part of every basket family
+    * `MinPairs`), so the highest-keyed part of every basket family
     * receives mass but has no out-edge. Exercises the general-path
     * recurrence: src ∪ dst node set, per-iteration dangling-mass
     * redistribution, left-join rank refresh (nodes with no in-edge
     * keep receiving base + dangling share).
     */
-  def directedRank(spark: SparkSession, sfDir: String,
-      minPairs: Int = 2, iters: Int = 3): DataFrame = {
+  def directedRank(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = RetailBi.basketPairCounts(
       RetailBi.baskets(Tables.lineitem(spark, sfDir)),
-      minPairs = minPairs, maxItems = 64)
+      minPairs = MinPairs, maxItems = RetailBi.BasketMaxItems)
     val edges = pairs.select(col("part_a").as("src"), col("part_b").as("dst"))
     // the general path's ranks are a checkpoint: repartition so AQE
     // counts them
-    pagerank(edges, iters)
+    pagerank(edges, RankIters)
       .select(col("node").as("part"), col("r").as("rank_e12"))
       .repartition(col("rank_e12"), col("part"))
       .orderBy(desc("rank_e12"), asc("part"))
@@ -174,10 +177,9 @@ object Graph {
     * pipeline re-evaluates 2^iters times — observed as a >600 s sf1
     * timeout where the materialized form takes seconds.
     */
-  def directedRankSql(minPairs: Int = 2, iters: Int = 3,
-      dampPpm: Long = 850000L): String = {
-    val keep = 1000000L - dampPpm
-    val its = (1 to iters).map { i =>
+  def directedRankSql: String = {
+    val keep = 1000000L - DampPpm
+    val its = (1 to RankIters).map { i =>
       val prev = if (i == 1) "r0" else s"it${i - 1}"
       s"""dm$i AS MATERIALIZED (
          |  SELECT COALESCE(SUM(r), 0) AS dm
@@ -191,7 +193,7 @@ object Graph {
          |it$i AS MATERIALIZED (
          |  SELECT n.node,
          |    ((${Scale} // nn.n) * $keep
-         |      + (COALESCE(c.c, 0) + dm$i.dm // nn.n) * $dampPpm)
+         |      + (COALESCE(c.c, 0) + dm$i.dm // nn.n) * $DampPpm)
          |      // 1000000 AS r
          |  FROM nodes n
          |  LEFT JOIN c$i c ON c.node = n.node
@@ -204,12 +206,12 @@ object Graph {
        |    SELECT o, p,
        |      ROW_NUMBER() OVER (PARTITION BY o ORDER BY p) AS rn
        |    FROM di)
-       |  WHERE rn <= 64),
+       |  WHERE rn <= ${RetailBi.BasketMaxItems}),
        |pairs AS MATERIALIZED (
        |  SELECT a.p AS pa, b.p AS pb
        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
        |  GROUP BY a.p, b.p
-       |  HAVING COUNT(*) >= $minPairs),
+       |  HAVING COUNT(*) >= $MinPairs),
        |edges AS MATERIALIZED (
        |  SELECT pa AS src, pb AS dst FROM pairs),
        |deg AS MATERIALIZED (
@@ -225,7 +227,7 @@ object Graph {
        |r0 AS MATERIALIZED (
        |  SELECT node, ${Scale} // n AS r FROM nodes CROSS JOIN nn),
        |$its
-       |SELECT node AS part, CAST(r AS BIGINT) AS rank_e12 FROM it$iters
+       |SELECT node AS part, CAST(r AS BIGINT) AS rank_e12 FROM it$RankIters
        |ORDER BY rank_e12 DESC, part""".stripMargin
   }
 
@@ -253,11 +255,10 @@ object Graph {
     * sell together" — and the orientation is what a 100 TB pair graph
     * needs to enumerate them without a hub blowup.
     */
-  def triangleCounts(spark: SparkSession, sfDir: String,
-      minPairs: Int = 2): DataFrame = {
+  def triangleCounts(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = RetailBi.basketPairCounts(
         RetailBi.baskets(Tables.lineitem(spark, sfDir)),
-        minPairs = minPairs, maxItems = 64)
+        minPairs = MinPairs, maxItems = RetailBi.BasketMaxItems)
       .select(col("part_a").as("a"), col("part_b").as("b"))
     triangleCountsFromPairs(pairs,
       sizeProxy = Some(Tables.part(spark, sfDir)))
@@ -339,7 +340,7 @@ object Graph {
     * testdata regeneration produced wider baskets, instead of silently
     * relying on an undocumented data property.
     */
-  def triangleCountsSql(minPairs: Int = 2): String =
+  def triangleCountsSql: String =
     s"""WITH di AS (
        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
        |items AS (
@@ -347,12 +348,12 @@ object Graph {
        |    SELECT o, p,
        |      ROW_NUMBER() OVER (PARTITION BY o ORDER BY p) AS rn
        |    FROM di)
-       |  WHERE rn <= 64),
+       |  WHERE rn <= ${RetailBi.BasketMaxItems}),
        |pairs AS MATERIALIZED (
        |  SELECT a.p AS pa, b.p AS pb
        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
        |  GROUP BY a.p, b.p
-       |  HAVING COUNT(*) >= $minPairs),
+       |  HAVING COUNT(*) >= $MinPairs),
        |deg AS MATERIALIZED (
        |  SELECT node, COUNT(*) AS deg FROM (
        |    SELECT pa AS node FROM pairs
@@ -385,20 +386,19 @@ object Graph {
   /** DuckDB oracle for [[copurchaseRank]]: the identical integer
     * recurrence unrolled as one CTE per iteration.
     */
-  def copurchaseRankSql(minPairs: Int = 2, iters: Int = 3,
-      dampPpm: Long = 850000L): String = {
-    val keep = 1000000L - dampPpm
+  def copurchaseRankSql: String = {
+    val keep = 1000000L - DampPpm
     // every CTE MATERIALIZED (round-14): DuckDB inlines multi-referenced
     // CTEs here, re-expanding the ROW_NUMBER window + basket self-join
     // once per reference — at sf3 (30×) the inlined tree spilled past
     // 76 GB of duckdb_temp; materialized, the same query runs in ~14 s
     // with zero spill. Semantics identical.
-    val its = (1 to iters).map { i =>
+    val its = (1 to RankIters).map { i =>
       val prev = if (i == 1) "r0" else s"it${i - 1}"
       s"""it$i AS MATERIALIZED (
          |  SELECT e.dst AS node,
          |    ((${Scale} // nn.n) * $keep
-         |      + SUM($prev.r // d.deg) * $dampPpm) // 1000000 AS r
+         |      + SUM($prev.r // d.deg) * $DampPpm) // 1000000 AS r
          |  FROM edges e
          |  JOIN deg d ON e.src = d.src
          |  JOIN $prev ON $prev.node = e.src
@@ -412,12 +412,12 @@ object Graph {
        |    SELECT o, p,
        |      ROW_NUMBER() OVER (PARTITION BY o ORDER BY p) AS rn
        |    FROM di)
-       |  WHERE rn <= 64),
+       |  WHERE rn <= ${RetailBi.BasketMaxItems}),
        |pairs AS MATERIALIZED (
        |  SELECT a.p AS pa, b.p AS pb
        |  FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
        |  GROUP BY a.p, b.p
-       |  HAVING COUNT(*) >= $minPairs),
+       |  HAVING COUNT(*) >= $MinPairs),
        |edges AS MATERIALIZED (
        |  SELECT pa AS src, pb AS dst FROM pairs
        |  UNION ALL
@@ -428,15 +428,17 @@ object Graph {
        |r0 AS MATERIALIZED (
        |  SELECT node, ${Scale} // n AS r FROM nodes CROSS JOIN nn),
        |$its
-       |SELECT node AS part, CAST(r AS BIGINT) AS rank_e12 FROM it$iters
+       |SELECT node AS part, CAST(r AS BIGINT) AS rank_e12 FROM it$RankIters
        |ORDER BY rank_e12 DESC, part""".stripMargin
   }
+
+  val HierarchyTopNodes = 341 // node count of the hierarchy's top levels
 
   /** q198 — HIERARCHICAL SUBTREE ROLLUP (the recursive-CTE query shape,
     * which the engine lacked): parts form a synthetic 4-ary category
     * tree (parent(k) = (k−1) div 4, root 0 — a deterministic hierarchy
     * every key belongs to), and the query reports, for every node in
-    * the top `topNodes` ids (the first five levels of the tree), the
+    * the top `HierarchyTopNodes` ids (the first five levels of the tree), the
     * number of revenue-bearing parts in its SUBTREE and the subtree's
     * exact revenue cents.
     *
@@ -451,8 +453,7 @@ object Graph {
     * plan. The DuckDB oracle states the SAME relation with an actual
     * `WITH RECURSIVE` walk — matching proves the fold = the recursion.
     */
-  def hierarchyRollup(spark: SparkSession, sfDir: String,
-      topNodes: Long = 341): DataFrame = {
+  def hierarchyRollup(spark: SparkSession, sfDir: String): DataFrame = {
     val rev = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_partkey").as("node"))
       .agg(sum(floor(col("l_extendedprice") * 100).cast("long"))
@@ -463,7 +464,7 @@ object Graph {
           |  (acc, i) -> CASE WHEN element_at(acc, -1) > 0L
           |    THEN concat(acc, array((element_at(acc, -1) - 1L) div 4))
           |    ELSE acc END)""".stripMargin)))
-      .filter(col("ancestor") < topNodes)
+      .filter(col("ancestor") < HierarchyTopNodes)
       .groupBy(col("ancestor").as("node_id"))
       .agg(count(lit(1)).as("n_parts"),
         sum(col("cents")).cast("long").as("subtree_cents"))
@@ -474,7 +475,7 @@ object Graph {
     * part's (strictly decreasing, hence duplicate-free) ancestor chain
     * unioned level by level, then the identical rollup.
     */
-  def hierarchyRollupSql(topNodes: Long = 341): String =
+  def hierarchyRollupSql: String =
     s"""WITH RECURSIVE rev AS (
        |  SELECT l_partkey AS node,
        |    CAST(SUM(CAST(floor(l_extendedprice * 100) AS BIGINT))
@@ -488,7 +489,7 @@ object Graph {
        |SELECT ancestor AS node_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_parts,
        |  CAST(SUM(cents) AS BIGINT) AS subtree_cents
-       |FROM anc WHERE ancestor < $topNodes
+       |FROM anc WHERE ancestor < $HierarchyTopNodes
        |GROUP BY 1
        |ORDER BY node_id""".stripMargin
 }

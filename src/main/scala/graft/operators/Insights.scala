@@ -130,28 +130,30 @@ object Insights {
   private def sumRev: Column =
     revenueSum.cast("double").as("revenue")
 
+  val TopProducts = 5 // products kept by revenue (q01)
+
   /** Q1 — top-5 products by revenue (SQL Analysis docx Q1; SURVEY.md §2
     * E2+F1+G1+G3+B10). part broadcasts while it fits the session
     * threshold ([[Joins.broadcastIfSmall]] — part scales with the
     * dataset, so the hint must not be unconditional); the top-k plans as
     * TakeOrderedAndProject (no full sort of the groups).
     */
-  def topProductsByRevenue(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
+  def topProductsByRevenue(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
       .join(Joins.broadcastIfSmall(Tables.part(spark, sfDir)),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_name").as("product_name"))
       .agg(sumRev)
       .orderBy(desc("revenue"), asc("product_name"))
-      .limit(k)
+      .limit(TopProducts)
 
-  def topProductsByRevenueSql(k: Int = 5): String =
+  def topProductsByRevenueSql: String =
     s"""SELECT p_name AS product_name,
        |       CAST(SUM($revenueSql) AS DOUBLE) AS revenue
        |FROM lineitem JOIN part ON l_partkey = p_partkey
        |GROUP BY p_name
        |ORDER BY revenue DESC, product_name ASC
-       |LIMIT $k""".stripMargin
+       |LIMIT $TopProducts""".stripMargin
 
   /** Q2 — monthly revenue trend (SQL Analysis docx Q2; E3+F2+G2). The
     * date-dim join collapses to date-part extraction on the fact column —
@@ -305,6 +307,8 @@ object Insights {
        |FROM lineitem
        |JOIN orders ON l_orderkey = o_orderkey""".stripMargin
 
+  val ApproxRsd = 0.01 // relative standard deviation of the HLL distinct counts
+
   /** [[kpiSummary]] with the distinct-count KPIs flipped to the native
     * HLL sketch ([[graft.functions.HllAgg]]) — the extreme-cardinality
     * path the exact KPI's scaladoc points at. Exact COUNT DISTINCT must
@@ -324,8 +328,7 @@ object Insights {
     * sketch keeps registers as one opaque byte array and hashes in the
     * codegen'd projection; see HllAgg's scaladoc for the numbers.
     */
-  def kpiSummaryApprox(spark: SparkSession, sfDir: String,
-      rsd: Double = 0.01): DataFrame = {
+  def kpiSummaryApprox(spark: SparkSession, sfDir: String): DataFrame = {
     // ONE pass for all four KPIs (round 7): HLL tolerates duplicate
     // keys, so the customer KPI needs no pre-distinct hop — join every
     // line to its order's custkey through the size-gated broadcast and
@@ -341,8 +344,9 @@ object Insights {
         col("l_orderkey") === col("o_orderkey"))
       .agg(
         revenueSum.cast("double").as("total_revenue"),
-        HllAgg.countDistinct(col("l_orderkey"), rsd).as("n_orders_approx"),
-        HllAgg.countDistinct(col("o_custkey"), rsd)
+        HllAgg.countDistinct(col("l_orderkey"), ApproxRsd)
+          .as("n_orders_approx"),
+        HllAgg.countDistinct(col("o_custkey"), ApproxRsd)
           .as("n_customers_approx"),
         count(lit(1)).as("n_lines"))
       .select("total_revenue", "n_orders_approx", "n_customers_approx",
@@ -415,6 +419,11 @@ object Insights {
        |ORDER BY qy.l_returnflag""".stripMargin
   }
 
+  /** approx_percentile's accuracy dial: one of the dials q136 measured
+    * bounds for (100, 1000, 10000).
+    */
+  val PercentileAccuracy = 10000
+
   /** Approximate twin of [[percentileSummary]] for the 100 TB read
     * path: `approx_percentile` (t-digest sketch, accuracy parameter =
     * 1/eps) merges map-side like any partial aggregate — constant
@@ -424,12 +433,11 @@ object Insights {
     * tolerance against the exact q49 values is asserted in ScalaTest
     * instead (ApproxSpec).
     */
-  def approxPercentileSummary(spark: SparkSession, sfDir: String,
-      accuracy: Int = 10000): DataFrame =
+  def approxPercentileSummary(spark: SparkSession, sfDir: String): DataFrame =
     approxPercentileSummaryOn(
       Tables.lineitem(spark, sfDir)
         .select("l_returnflag", "l_quantity", "l_extendedprice"),
-      accuracy)
+      PercentileAccuracy)
 
   /** [[approxPercentileSummary]] over an explicit 3-column frame (the
     * [[percentileSummaryOn]] staging contract).
@@ -464,11 +472,7 @@ object Insights {
     * estimates stay available via [[approxPercentileSummary]]
     * (tolerance-asserted in ApproxSpec).
     */
-  def approxPercentileChecked(spark: SparkSession, sfDir: String,
-      accuracy: Int = 10000): DataFrame = {
-    require(accuracy == 10000,
-      s"unmeasured t-digest dial $accuracy: q136's enumerated bounds " +
-        "cover 100/1000/10000; the checked shape ships the default")
+  def approxPercentileChecked(spark: SparkSession, sfDir: String): DataFrame = {
     // stage the projected fact scan ONCE for both consumers (round-15):
     // the estimate aggregate and the exact prefix-sum path each
     // re-read + re-projected lineitem from parquet (~0.7 s warm per
@@ -477,7 +481,7 @@ object Insights {
     val li3 = Tables.lineitem(spark, sfDir)
       .select("l_returnflag", "l_quantity", "l_extendedprice")
       .localCheckpoint(true)
-    val est = approxPercentileSummaryOn(li3, accuracy)
+    val est = approxPercentileSummaryOn(li3, PercentileAccuracy)
       .select(col("l_returnflag"), col("median_qty").as("e_mq"),
         col("p90_qty").as("e_pq"), col("median_price").as("e_mp"))
     percentileSummaryOn(li3).join(est, "l_returnflag")
@@ -578,21 +582,6 @@ object Insights {
       count(lit(1)).as("xc"),
       hllDials.map(r =>
         HllAgg.countDistinct(col("o_custkey"), r).as("c" + dialCol(r))): _*)
-    // materialize the 1-row all-dials frame ONCE (eager, tiny): the
-    // per-dial selects below would otherwise each re-run both scans.
-    // Round-15: launched on a separate driver thread so the HLL
-    // materialization OVERLAPS the independent t-digest/exact one
-    // below (guide §2.6 — actions are only sequential because the
-    // driver calls them sequentially; the scheduler is thread-safe
-    // and job descriptions are thread-local). Serial before: ~1 s HLL
-    // + ~2.5 s digest/exact; overlapped they cost max(), not sum().
-    // daemon thread (round-15 ADVICE #2, Tables.overlapPool): if a
-    // main-thread action between submit and get throws, the pool must
-    // not keep the JVM from exiting — shutdown still runs in the
-    // finally below on the normal path
-    val hllPool = Tables.overlapPool(1)
-    val hllBaseF = Tables.submitJob(hllPool, spark, "q136: hll dials")(
-      ordAgg.crossJoin(custAgg).localCheckpoint(true))
     def hllRowsOf(hllBase: DataFrame) = hllDials.map { r =>
       val d = dialCol(r)
       val regs = HllAgg.registersForRsd(r)
@@ -639,10 +628,22 @@ object Insights {
         li.select("l_returnflag", "l_quantity", "l_extendedprice"))
       .select(col("l_returnflag"), col("median_qty").as("x_mq"),
         col("p90_qty").as("x_pq"), col("median_price").as("x_mp"))
-    // same once-only materialization for the |flags|-row all-dials frame
-    val joined = tdAgg.join(exact, "l_returnflag").localCheckpoint(true)
-    val hllRows =
-      try hllRowsOf(hllBaseF.get) finally hllPool.shutdown()
+    // materialize the 1-row HLL all-dials frame ONCE (eager, tiny): the
+    // per-dial selects would otherwise each re-run both scans.
+    // Round-15: launched on a separate driver thread so the HLL
+    // materialization OVERLAPS the independent t-digest/exact one
+    // (guide §2.6 — actions are only sequential because the driver
+    // calls them sequentially; the scheduler is thread-safe and job
+    // descriptions are thread-local). Serial before: ~1 s HLL + ~2.5 s
+    // digest/exact; overlapped they cost max(), not sum().
+    val (hllBase, joined) = Tables.overlapped(spark, threads = 1) { ov =>
+      val hllBaseF = ov.submit("q136: hll dials")(
+        ordAgg.crossJoin(custAgg).localCheckpoint(true))
+      // same once-only materialization for the |flags|-row frame
+      val joined = tdAgg.join(exact, "l_returnflag").localCheckpoint(true)
+      (hllBaseF.get(), joined)
+    }
+    val hllRows = hllRowsOf(hllBase)
     val tdRows = tdDials.map { a =>
       joined.agg(
         max(expr(
@@ -784,22 +785,21 @@ object Insights {
     * OVERSHOOTS the true distinct count. Rows-only registration (sketch
     * estimates are implementation-specific; the q45 contract).
     */
-  def sketchShardRollup(spark: SparkSession, sfDir: String,
-      rsd: Double = 0.01): DataFrame = {
+  def sketchShardRollup(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), year(col("l_shipdate")).as("shard"))
     val shards = li.groupBy("shard").agg(
-      HllAgg.sketch(col("l_orderkey"), rsd).as("sk"),
-      HllAgg.countDistinct(col("l_orderkey"), rsd).as("est_shard"))
+      HllAgg.sketch(col("l_orderkey"), ApproxRsd).as("sk"),
+      HllAgg.countDistinct(col("l_orderkey"), ApproxRsd).as("est_shard"))
       // eager, tiny (|years| rows): the merged and sum branches below
       // would otherwise each re-run the shard aggregation
       .localCheckpoint(true)
     val merged = shards.agg(
       count(lit(1)).as("n_shards"),
-      HllAgg.mergeEstimate(col("sk"), rsd).as("est_merged"),
+      HllAgg.mergeEstimate(col("sk"), ApproxRsd).as("est_merged"),
       sum(col("est_shard")).as("sum_shard_ests"))
     val direct = li.agg(
-      HllAgg.countDistinct(col("l_orderkey"), rsd).as("est_direct"))
+      HllAgg.countDistinct(col("l_orderkey"), ApproxRsd).as("est_direct"))
     merged.crossJoin(direct)
       .select(
         col("n_shards").cast("long").as("n_shards"),
@@ -808,6 +808,8 @@ object Insights {
         (col("est_merged") === col("est_direct")).as("merge_is_lossless"),
         col("sum_shard_ests").cast("long").as("sum_shard_ests"))
   }
+
+  val HistogramBins = 4096 // histogram cells of the percentile sketch
 
   /** q150 — MERGEABLE histogram percentile cells, the percentile
     * analog of q137's HLL shard pattern and the engine-exact
@@ -840,7 +842,7 @@ object Insights {
     * the fact size. The lo/hi grid bounds ride a broadcast 1-row agg.
     */
   def histogramPercentileCells(spark: SparkSession, sfDir: String,
-      nb: Int = 4096): DataFrame = {
+      nb: Int = HistogramBins): DataFrame = {
     val base = Tables.lineitem(spark, sfDir)
       .select(cents(col("l_extendedprice")).as("c"),
         year(col("l_shipdate")).as("shard"))
@@ -883,7 +885,7 @@ object Insights {
       .orderBy("pct")
   }
 
-  def histogramPercentileCellsSql(nb: Int = 4096): String =
+  def histogramPercentileCellsSql: String =
     s"""WITH base AS (
        |  SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
        |           AS c,
@@ -891,7 +893,7 @@ object Insights {
        |  FROM lineitem),
        |bounds AS (SELECT MIN(c) AS lo, MAX(c) AS hi FROM base),
        |cells AS (
-       |  SELECT shard, ((c - lo) * $nb) // (hi - lo + 1) AS bucket,
+       |  SELECT shard, ((c - lo) * $HistogramBins) // (hi - lo + 1) AS bucket,
        |         CAST(COUNT(*) AS BIGINT) AS n
        |  FROM base, bounds GROUP BY 1, 2),
        |meta AS (
@@ -913,15 +915,17 @@ object Insights {
        |  FROM pcts JOIN cum ON cum >= (nt * pct + 99) // 100
        |  GROUP BY pct)
        |SELECT pct, n_rows,
-       |  CAST(lo + ((2 * b + 1) * (hi - lo + 1)) // (2 * $nb) AS DOUBLE)
+       |  CAST(lo + ((2 * b + 1) * (hi - lo + 1)) // (2 * $HistogramBins) AS DOUBLE)
        |    / 100.0 AS est_price,
        |  n_shards, n_cells
        |FROM sel, bounds, meta
        |ORDER BY pct""".stripMargin
 
+  val KpiSamplePct = 1 // sample percentage of q139; divides 100
+
   /** q139 — sampled KPI with an error bar (approximate query
     * processing): the revenue/line-count KPIs answered from a
-    * deterministic `pctSample`% hash-sample with unbiased 1/p
+    * deterministic `GroupSamplePct`% hash-sample with unbiased 1/p
     * extrapolation and a 95% Horvitz-Thompson confidence half-width — the read path
     * when even ONE full scan of a 100 TB fact is too expensive and an
     * error-bounded answer suffices. Bernoulli-by-hash selection
@@ -942,7 +946,7 @@ object Insights {
     * for totals, documented for the CI).
     */
   def sampledKpi(spark: SparkSession, sfDir: String,
-      pctSample: Int = 1): DataFrame = {
+      pctSample: Int = KpiSamplePct): DataFrame = {
     // est_lines extrapolates by the integer 100/pctSample; a rate that
     // does not divide 100 would silently floor the multiplier
     require(100 % pctSample == 0,
@@ -976,9 +980,7 @@ object Insights {
       (lit(1.96) * sqrt((lit(1.0) - rate) * q) / rate).as("ci95_revenue"))
   }
 
-  def sampledKpiSql(pctSample: Int = 1): String = {
-    require(100 % pctSample == 0,
-      s"pctSample must divide 100, got $pctSample")
+  def sampledKpiSql: String = {
     val revE4 = """(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
       |(100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))"""
       .stripMargin
@@ -986,11 +988,11 @@ object Insights {
       "CAST(l_linenumber AS VARCHAR) || ':' || CAST(l_partkey AS VARCHAR)"
     val s = s"(${Features.decToDoubleSql("s_e4", 0)} / 10000.0)"
     val q = s"(${Features.decToDoubleSql("q_e8", 0)} / 100000000.0)"
-    val rate = s"(CAST($pctSample AS DOUBLE) / CAST(100 AS DOUBLE))"
+    val rate = s"(CAST($KpiSamplePct AS DOUBLE) / CAST(100 AS DOUBLE))"
     s"""WITH sampled AS (
        |  SELECT $revE4 AS rev_e4
        |  FROM lineitem
-       |  WHERE ${TextAnalysis.md5Hash60Sql(key)} % 100 < $pctSample),
+       |  WHERE ${TextAnalysis.md5Hash60Sql(key)} % 100 < $KpiSamplePct),
        |agg AS (
        |  SELECT CAST(COUNT(*) AS BIGINT) AS n_sampled,
        |         CAST(SUM(CAST(rev_e4 AS HUGEINT)) AS DECIMAL(38,0)) AS s_e4,
@@ -999,10 +1001,12 @@ object Insights {
        |  FROM sampled)
        |SELECT n_sampled,
        |  ($s / $rate) AS est_revenue,
-       |  CAST(n_sampled * ${100L / pctSample} AS BIGINT) AS est_lines,
+       |  CAST(n_sampled * ${100L / KpiSamplePct} AS BIGINT) AS est_lines,
        |  (1.96 * sqrt((1.0 - $rate) * $q) / $rate) AS ci95_revenue
        |FROM agg""".stripMargin
   }
+
+  val GroupSamplePct = 10 // sample percentage of q145; divides 100
 
   /** q145 — sampled GROUP-BY AQP: per-brand revenue estimates with
     * per-group Horvitz-Thompson 95% intervals, the dashboard-
@@ -1021,17 +1025,14 @@ object Insights {
     * split leaves too few rows per group for the CLT interval to be
     * honest (ApproxSpec measures coverage against the exact totals).
     */
-  def sampledGroupKpi(spark: SparkSession, sfDir: String,
-      pctSample: Int = 10): DataFrame = {
-    require(100 % pctSample == 0,
-      s"pctSample must divide 100, got $pctSample")
+  def sampledGroupKpi(spark: SparkSession, sfDir: String): DataFrame = {
     val sampled = Tables.lineitem(spark, sfDir)
       .select(col("l_partkey"),
         pmod(TextAnalysis.md5Hash60(concat_ws(":", lit("aqp"),
             col("l_orderkey"), col("l_linenumber"), col("l_partkey"))),
           lit(100)).as("b"),
         revenueE4.as("rev_e4"))
-      .filter(col("b") < pctSample)
+      .filter(col("b") < GroupSamplePct)
       .join(Joins.broadcastIfSmall(
           Tables.part(spark, sfDir).select("p_partkey", "p_brand")),
         col("l_partkey") === col("p_partkey"))
@@ -1042,7 +1043,7 @@ object Insights {
         .as("q_e8"))
     val s = Features.decToDouble(col("s_e4"), 0) / lit(10000.0)
     val q = Features.decToDouble(col("q_e8"), 0) / lit(100000000.0)
-    val rate = lit(pctSample.toDouble) / lit(100.0)
+    val rate = lit(GroupSamplePct.toDouble) / lit(100.0)
     agg.select(
       col("brand"),
       col("n_sampled"),
@@ -1051,9 +1052,7 @@ object Insights {
       .orderBy("brand")
   }
 
-  def sampledGroupKpiSql(pctSample: Int = 10): String = {
-    require(100 % pctSample == 0,
-      s"pctSample must divide 100, got $pctSample")
+  def sampledGroupKpiSql: String = {
     val revE4 = """(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
       |(100 - CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT)))"""
       .stripMargin
@@ -1061,11 +1060,11 @@ object Insights {
       "CAST(l_linenumber AS VARCHAR) || ':' || CAST(l_partkey AS VARCHAR)"
     val s = s"(${Features.decToDoubleSql("s_e4", 0)} / 10000.0)"
     val q = s"(${Features.decToDoubleSql("q_e8", 0)} / 100000000.0)"
-    val rate = s"(CAST($pctSample AS DOUBLE) / CAST(100 AS DOUBLE))"
+    val rate = s"(CAST($GroupSamplePct AS DOUBLE) / CAST(100 AS DOUBLE))"
     s"""WITH sampled AS (
        |  SELECT p_brand AS brand, $revE4 AS rev_e4
        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-       |  WHERE ${TextAnalysis.md5Hash60Sql(key)} % 100 < $pctSample),
+       |  WHERE ${TextAnalysis.md5Hash60Sql(key)} % 100 < $GroupSamplePct),
        |agg AS (
        |  SELECT brand, CAST(COUNT(*) AS BIGINT) AS n_sampled,
        |         CAST(SUM(CAST(rev_e4 AS HUGEINT)) AS DECIMAL(38,0)) AS s_e4,
@@ -1133,6 +1132,8 @@ object Insights {
         col("n_regionkey") === col("r_regionkey"))
       .select(col("s_suppkey"), col("r_name"))
 
+  val TopBrands = 3 // brands kept per region
+
   /** Top-k brands by revenue within each region — ranked window over a
     * partitioned group (G-family extension: per-group top-N, the
     * "dashboard drill-down" shape).
@@ -1144,7 +1145,7 @@ object Insights {
     * so Spark and DuckDB rank identically; the double cast is
     * presentation-only.
     */
-  def topBrandsPerRegion(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
+  def topBrandsPerRegion(spark: SparkSession, sfDir: String): DataFrame = {
     // round-16 A/B: the round-15 q44-shape scan spread (then a
     // projected round-robin exchange under the all-broadcast plan) measured a
     // LOSS here — best-of-6 1.32 s unspread vs 1.80 s spread on one
@@ -1166,13 +1167,13 @@ object Insights {
     val w = Window.partitionBy(col("region"))
       .orderBy(desc("rev"), asc("brand"))
     agg.withColumn("rank_in_region", row_number().over(w).cast("int"))
-      .filter(col("rank_in_region") <= k)
+      .filter(col("rank_in_region") <= TopBrands)
       .select(col("region"), col("brand"),
         col("rev").cast("double").as("revenue"), col("rank_in_region"))
       .orderBy("region", "rank_in_region")
   }
 
-  def topBrandsPerRegionSql(k: Int = 3): String =
+  def topBrandsPerRegionSql: String =
     s"""WITH a AS (
        |  SELECT r_name AS region, p_brand AS brand, SUM($revenueSql) AS rev
        |  FROM lineitem
@@ -1187,7 +1188,7 @@ object Insights {
        |           ORDER BY rev DESC, brand ASC) AS INT) AS rank_in_region
        |  FROM a)
        |SELECT region, brand, CAST(rev AS DOUBLE) AS revenue, rank_in_region
-       |FROM r WHERE rank_in_region <= $k
+       |FROM r WHERE rank_in_region <= $TopBrands
        |ORDER BY region, rank_in_region""".stripMargin
 
   /** Monthly revenue with a per-year running total and month-over-month
@@ -1329,18 +1330,19 @@ object Insights {
        |GROUP BY GROUPING SETS ((r_name, p_brand), (p_brand), ())
        |ORDER BY grouping_level, region, brand""".stripMargin
 
+  val HighValuePriceMin = 400000.0 // unit price of a high-value item
+
   /** Line items of high-value orders via [[Joins.bloomSemiJoin]]: the
     * bloom built over the qualifying orderkeys prunes the lineitem scan
     * map-side before the semi-join shuffle. The result is exactly the
     * plain semi join (bloom false positives are removed by the exact
     * join); the oracle is that plain form.
     */
-  def highValueItems(spark: SparkSession, sfDir: String,
-      priceMin: Double = 400000.0): DataFrame = {
+  def highValueItems(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
     val hv = Tables.orders(spark, sfDir)
-      .filter(col("o_totalprice").cast("double") > priceMin)
+      .filter(col("o_totalprice").cast("double") > HighValuePriceMin)
       .select("o_orderkey")
     Joins.bloomSemiJoin(li, "l_orderkey", hv, "o_orderkey",
         expectedItems = 100000L)
@@ -1466,13 +1468,13 @@ object Insights {
       |FROM (SELECT o_custkey FROM h1 EXCEPT SELECT o_custkey FROM h2)
       |ORDER BY cohort, o_custkey""".stripMargin
 
-  def highValueItemsSql(priceMin: Double = 400000.0): String =
+  def highValueItemsSql: String =
     s"""SELECT l_returnflag, COUNT(*) AS n_items,
        |  CAST(SUM(CAST(l_quantity AS DOUBLE)) AS DOUBLE) AS sum_qty
        |FROM lineitem
        |WHERE l_orderkey IN (
        |  SELECT o_orderkey FROM orders
-       |  WHERE CAST(o_totalprice AS DOUBLE) > $priceMin)
+       |  WHERE CAST(o_totalprice AS DOUBLE) > $HighValuePriceMin)
        |GROUP BY l_returnflag
        |ORDER BY l_returnflag""".stripMargin
 
@@ -1687,6 +1689,8 @@ object Insights {
        |FROM w2
        |ORDER BY p_type, p_brand""".stripMargin
 
+  val TopCustomers = 3 // customers kept per segment
+
   /** Top-k customers per market segment through the custom
     * [[graft.functions.TopKByValue]] Aggregator — the UDAF form of
     * per-group top-N. Unlike the ROW_NUMBER window (q42's shape), the
@@ -1696,9 +1700,9 @@ object Insights {
     * small. The oracle is the definitional window form; the unique
     * custkey tiebreak makes both engine-exact.
     */
-  def topCustomersPerSegment(spark: SparkSession, sfDir: String,
-      k: Int = 3): DataFrame = {
-    val topk = udaf(graft.functions.TopKByValue(k))
+  def topCustomersPerSegment(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val topk = udaf(graft.functions.TopKByValue(TopCustomers))
     Tables.customer(spark, sfDir)
       .groupBy("c_mktsegment")
       .agg(topk(col("c_acctbal"), col("c_custkey"), col("c_name"))
@@ -1739,7 +1743,7 @@ object Insights {
       |      AND CAST(l.l_discount AS DOUBLE) > 0.08)
       |ORDER BY o_orderkey""".stripMargin
 
-  def topCustomersPerSegmentSql(k: Int = 3): String =
+  def topCustomersPerSegmentSql: String =
     s"""WITH r AS (
        |  SELECT c_mktsegment, c_custkey, c_name, c_acctbal,
        |    ROW_NUMBER() OVER (PARTITION BY c_mktsegment
@@ -1747,6 +1751,6 @@ object Insights {
        |  FROM customer)
        |SELECT c_mktsegment, CAST(rank AS INT) AS rank,
        |  c_custkey, c_name, c_acctbal
-       |FROM r WHERE rank <= $k
+       |FROM r WHERE rank <= $TopCustomers
        |ORDER BY c_mktsegment, rank""".stripMargin
 }

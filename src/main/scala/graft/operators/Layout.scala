@@ -14,23 +14,27 @@ import graft.sources.Tables
   */
 object Layout {
 
-  /** Interleave the low `bits` bits of two non-negative ints into a
+  val ZBits = 16 // bits per coordinate of the z-order value
+
+  /** Interleave the low `ZBits` bits of two non-negative ints into a
     * Z-value (Morton code): bit i of x lands at position 2i, bit i of y
     * at 2i+1. Built from shift/and/multiply-by-power-of-two only, so it
     * is integer-exact, codegen'd, and expressible identically in any
     * ANSI engine (the [[zValueSql]] twin).
     */
-  def zValue(x: Column, y: Column, bits: Int = 16): Column =
-    (0 until bits).map { i =>
+  def zValue(x: Column, y: Column): Column =
+    (0 until ZBits).map { i =>
       (shiftright(x, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i))) +
         (shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1)))
     }.reduce(_ + _)
 
-  def zValueSql(x: String, y: String, bits: Int = 16): String =
-    (0 until bits).map { i =>
+  def zValueSql(x: String, y: String): String =
+    (0 until ZBits).map { i =>
       s"((($x >> $i) & 1) * ${1L << (2 * i)}" +
         s" + (($y >> $i) & 1) * ${1L << (2 * i + 1)})"
     }.mkString(" + ")
+
+  val ZOrderTopK = 100 // orders kept by the z-ordered read
 
   /** Registered query: the Z-key an order-layout job would sort by —
     * customer key × order date interleaved — for the first 100 orders
@@ -39,7 +43,7 @@ object Layout {
     * `orders.repartitionByRange(col("z")).sortWithinPartitions("z")`
     * feeding the parquet sink; the query checks the key math.
     */
-  def ordersZOrder(spark: SparkSession, sfDir: String, topK: Int = 100): DataFrame = {
+  def ordersZOrder(spark: SparkSession, sfDir: String): DataFrame = {
     val dateKey = date_format(col("o_orderdate"), "yyyyMMdd").cast("long")
     Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"),
@@ -47,16 +51,16 @@ object Layout {
         zValue(pmod(col("o_custkey"), lit(65536L)),
           pmod(dateKey, lit(65536L))).as("z"))
       .orderBy(col("z"), col("o_orderkey"))
-      .limit(topK)
+      .limit(ZOrderTopK)
   }
 
-  def ordersZOrderSql(topK: Int = 100): String = {
+  def ordersZOrderSql: String = {
     val dk = "CAST(strftime(o_orderdate, '%Y%m%d') AS BIGINT)"
     s"""SELECT o_orderkey, o_custkey, $dk AS date_key,
        |  ${zValueSql("(o_custkey % 65536)", s"($dk % 65536)")} AS z
        |FROM orders
        |ORDER BY z, o_orderkey
-       |LIMIT $topK""".stripMargin
+       |LIMIT $ZOrderTopK""".stripMargin
   }
 
   // ------------------------------------------------------------------
@@ -73,12 +77,13 @@ object Layout {
   // a reader's key predicate prunes directories AND row groups.
   // ------------------------------------------------------------------
 
+  val ExportBuckets = 16 // range buckets of the sorted export
+
   /** Write lineitem as a bucket-partitioned, within-file-sorted parquet
     * export; returns the export directory. Rebuilt per call (delete +
     * rewrite) so a testdata regen can never serve stale files.
     */
-  def writeSortedExport(spark: SparkSession, sfDir: String,
-      buckets: Int = 16): String = {
+  def writeSortedExport(spark: SparkSession, sfDir: String): String = {
     val dir = new java.io.File("/tmp/graft_sorted",
       Tables.pathKey(sfDir)).toString
     graft.etl.Catalog.deletePath(spark, dir)
@@ -88,10 +93,10 @@ object Layout {
     val bounds = broadcast(li.agg(min(col("l_partkey")).as("mn"),
       max(col("l_partkey")).as("mx")))
     li.crossJoin(bounds)
-      .withColumn("bucket", least(lit(buckets - 1),
-        expr(s"(l_partkey - mn) * $buckets div (mx - mn + 1)")))
+      .withColumn("bucket", least(lit(ExportBuckets - 1),
+        expr(s"(l_partkey - mn) * $ExportBuckets div (mx - mn + 1)")))
       .drop("mn", "mx")
-      .repartition(buckets, col("bucket"))
+      .repartition(ExportBuckets, col("bucket"))
       .sortWithinPartitions("bucket", "l_partkey", "l_orderkey",
         "l_linenumber")
       .write.partitionBy("bucket").parquet(dir)
@@ -105,9 +110,8 @@ object Layout {
     * right bucket (the q118/q164 sink-fidelity discipline); the
     * within-file sort order itself is pinned physically in LayoutSpec.
     */
-  def sortedExportManifest(spark: SparkSession, sfDir: String,
-      buckets: Int = 16): DataFrame = {
-    val dir = writeSortedExport(spark, sfDir, buckets)
+  def sortedExportManifest(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = writeSortedExport(spark, sfDir)
     spark.read.parquet(dir)
       .groupBy(col("bucket").cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_rows"),
@@ -131,9 +135,8 @@ object Layout {
     * within files) prune the rest. PlanSpec pins the directory-level
     * pruning.
     */
-  def readSortedExportRange(spark: SparkSession, dir: String,
-      lo: Long, hi: Long, mn: Long, mx: Long,
-      buckets: Int = 16): DataFrame = {
+  def readSortedExportRange(spark: SparkSession, dir: String, lo: Long,
+      hi: Long, mn: Long, mx: Long): DataFrame = {
     // A request entirely outside [mn, mx] is an empty read by
     // definition — return it as one instead of letting the bucket
     // arithmetic go negative (hi < mn would otherwise produce a
@@ -141,7 +144,8 @@ object Layout {
     if (hi < mn || lo > mx || lo > hi)
       return spark.read.parquet(dir).filter(lit(false))
     def bucketOf(k: Long): Long =
-      math.max(0L, math.min(buckets - 1L, (k - mn) * buckets / (mx - mn + 1)))
+      math.max(0L,
+        math.min(ExportBuckets - 1L, (k - mn) * ExportBuckets / (mx - mn + 1)))
     val bLo = bucketOf(math.max(lo, mn))
     val bHi = bucketOf(math.min(hi, mx))
     spark.read.parquet(dir)
@@ -232,11 +236,11 @@ object Layout {
       |GROUP BY 1
       |ORDER BY l_returnflag""".stripMargin
 
-  def sortedExportManifestSql(buckets: Int = 16): String =
+  def sortedExportManifestSql: String =
     s"""WITH b AS (
-       |  SELECT least($buckets - 1,
+       |  SELECT least($ExportBuckets - 1,
        |           (l_partkey - (SELECT min(l_partkey) FROM lineitem))
-       |             * $buckets
+       |             * $ExportBuckets
        |             // ((SELECT max(l_partkey) FROM lineitem)
        |                - (SELECT min(l_partkey) FROM lineitem) + 1))
        |           AS bucket,

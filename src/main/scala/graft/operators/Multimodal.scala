@@ -450,12 +450,13 @@ object Multimodal {
   // + reserved(2) = 18 bytes
   private val AudioHeaderBytes = 18
 
+  val AudioSampleRate = 16000 // sample rate of the encoded audio, in Hz
+
   /** Partition-wise container encoder: header + deflate body. One
     * [[java.util.zip.Deflater]] per partition, `reset()` between
     * elements.
     */
-  def audioEncode(media: Dataset[MediaRecord],
-      sampleRate: Int = 16000): Dataset[AudioMedia] = {
+  def audioEncode(media: Dataset[MediaRecord]): Dataset[AudioMedia] = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>
       val deflater = new java.util.zip.Deflater(
@@ -480,7 +481,7 @@ object Multimodal {
         buf.put('G'.toByte).put('A'.toByte) // magic
         buf.put(1: Byte)                    // container version
         buf.put(8: Byte)                    // bits per sample
-        buf.putInt(sampleRate)
+        buf.putInt(AudioSampleRate)
         buf.putInt(m.payload.length)        // sample count (1 byte/sample)
         buf.putInt((crc.getValue & 0xffffffffL).toInt) // CRC32 of samples
         buf.putShort(0)                     // reserved
@@ -606,12 +607,15 @@ object Multimodal {
   // O(source + thumbnail bytes) of real gather work.
   // ------------------------------------------------------------------
 
+  val ThumbWidth = 16 // thumbnail width, in pixels
+  val ThumbHeight = 16 // thumbnail height, in pixels
+
   /** Nearest-neighbor resize of [[bmpEncode]]-shaped BMPs to a
-    * `tw`×`th` thumbnail, emitted as a real BMP (re-encoded through
-    * [[bmpEncode]]'s layout via the gathered content bytes).
+    * `ThumbWidth`×`ThumbHeight` thumbnail, emitted as a real BMP
+    * (re-encoded through [[bmpEncode]]'s layout via the gathered content
+    * bytes).
     */
-  def bmpResize(bmps: Dataset[BmpMedia], tw: Int = 16,
-      th: Int = 16): Dataset[BmpMedia] = {
+  def bmpResize(bmps: Dataset[BmpMedia]): Dataset[BmpMedia] = {
     import bmps.sparkSession.implicits._
     val gathered = bmps.mapPartitions { it =>
       it.map { b =>
@@ -631,16 +635,16 @@ object Multimodal {
           s"media ${b.media_id}: pixel array does not fill the file")
         // gather in IMAGE coordinates; source image row r lives at
         // stored row sh-1-r (bottom-up), padding bytes read as stored
-        val out = new Array[Byte](tw * 3 * th)
+        val out = new Array[Byte](ThumbWidth * 3 * ThumbHeight)
         var y = 0
-        while (y < th) {
-          val sy = (y.toLong * sh / th).toInt
+        while (y < ThumbHeight) {
+          val sy = (y.toLong * sh / ThumbHeight).toInt
           val srcBase = dataOffset + (sh - 1 - sy) * srcRow
           var x = 0
-          while (x < tw) {
-            val sx = (x.toLong * sw / tw).toInt
+          while (x < ThumbWidth) {
+            val sx = (x.toLong * sw / ThumbWidth).toInt
             val si = srcBase + sx * 3
-            val di = (y * tw + x) * 3
+            val di = (y * ThumbWidth + x) * 3
             out(di) = p(si); out(di + 1) = p(si + 1); out(di + 2) = p(si + 2)
             x += 1
           }
@@ -649,7 +653,7 @@ object Multimodal {
         MediaRecord(b.media_id, "image", out, s"resize:${contentLen}")
       }
     }
-    bmpEncode(gathered, widthPx = tw)
+    bmpEncode(gathered, widthPx = ThumbWidth)
   }
 
   /** Registered q169: documents → BMP → nearest-neighbor 16×16
@@ -896,6 +900,8 @@ object Multimodal {
       |FROM frames
       |ORDER BY media_id, frame_idx""".stripMargin
 
+  val SceneCutThreshold = 1000L // frame difference of a scene cut
+
   /** q182 — SCENE-CHANGE detection over the decoded frame stream: the
     * canonical "decode, then analyze relationally" multimodal pipeline
     * shape. Every frame of each video container is inflated and
@@ -916,8 +922,7 @@ object Multimodal {
     * 134, p90 3524), so boundaries are a real minority signal, not
     * all-or-nothing.
     */
-  def sceneChanges(spark: SparkSession, sfDir: String,
-      threshold: Long = 1000): DataFrame = {
+  def sceneChanges(spark: SparkSession, sfDir: String): DataFrame = {
     val frames = videoSampleFrames(
       videoEncode(mediaSpread(spark, sfDir, Some("video"))), step = 1).toDF()
     val w = org.apache.spark.sql.expressions.Window
@@ -925,7 +930,7 @@ object Multimodal {
     frames
       .withColumn("delta", col("amp_sum") - lag(col("amp_sum"), 1).over(w))
       .withColumn("boundary",
-        (abs(col("delta")) > threshold).cast("long"))
+        (abs(col("delta")) > SceneCutThreshold).cast("long"))
       .groupBy("media_id")
       .agg(count(lit(1)).as("n_frames"),
         (coalesce(sum(col("boundary")), lit(0L)) + 1).as("n_scenes"),
@@ -939,7 +944,7 @@ object Multimodal {
     * threshold / rollup — cells only match if every frame's inflate
     * round-tripped exactly.
     */
-  def sceneChangesSql(threshold: Long = 1000): String =
+  def sceneChangesSql: String =
     s"""WITH videos AS (
        |  SELECT doc_id AS media_id, text FROM documents
        |  WHERE doc_id % 3 = 2),
@@ -961,9 +966,9 @@ object Multimodal {
        |  FROM amp)
        |SELECT media_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_frames,
-       |  CAST(1 + COALESCE(SUM(CASE WHEN ABS(delta) > $threshold
+       |  CAST(1 + COALESCE(SUM(CASE WHEN ABS(delta) > $SceneCutThreshold
        |    THEN 1 END), 0) AS BIGINT) AS n_scenes,
-       |  CAST(COALESCE(SUM(CASE WHEN ABS(delta) > $threshold
+       |  CAST(COALESCE(SUM(CASE WHEN ABS(delta) > $SceneCutThreshold
        |    THEN frame_idx ELSE 0 END), 0) AS BIGINT) AS boundary_idx_sum
        |FROM d
        |GROUP BY media_id

@@ -118,8 +118,11 @@ object RetailBi {
       |ORDER BY r_score, f_score, m_score""".stripMargin
   }
 
+  val BasketMinPairs = 2 // baskets a product pair must share to be reported
+  val BasketMaxItems = 64 // basket size above which a basket is skipped
+
   /** Market-basket pair affinity: for every pair of parts co-occurring
-    * in ≥`minPairs` orders, the co-occurrence count, each part's own
+    * in ≥`BasketMinPairs` orders, the co-occurrence count, each part's own
     * order count, and the lift
     * `P(a,b) / (P(a)·P(b)) = n_ab·N / (n_a·n_b)` — computed as IEEE
     * doubles over identical int64 operands with an identical operand
@@ -142,10 +145,9 @@ object RetailBi {
     * basket (reference carts are single-digit), so results are exact
     * until an order is degenerate.
     */
-  def basketPairs(spark: SparkSession, sfDir: String,
-      minPairs: Int = 2, maxItems: Int = 64): DataFrame =
+  def basketPairs(spark: SparkSession, sfDir: String): DataFrame =
     basketPairsFrom(Tables.lineitem(spark, sfDir),
-      Tables.part(spark, sfDir), minPairs, maxItems)
+      Tables.part(spark, sfDir), BasketMinPairs, BasketMaxItems)
 
   /** [[basketPairs]] over an explicit lineitem frame (testability:
     * the mega-basket cap is exercised on an adversarial fixture).
@@ -214,7 +216,7 @@ object RetailBi {
     * sorted distinct items, used ONLY by the pairs CTE. No-op at
     * current data (max basket ~7), exact at any data.
     */
-  def basketPairsSql(minPairs: Int = 2): String =
+  def basketPairsSql: String =
     // items/capped MATERIALIZED (round-14): multi-referenced CTEs that
     // DuckDB would otherwise inline per reference, re-running the
     // distinct + ROW_NUMBER window (measured fine at sf3 — 4.8 s —
@@ -229,12 +231,12 @@ object RetailBi {
        |    SELECT o, p,
        |      ROW_NUMBER() OVER (PARTITION BY o ORDER BY p) AS rn
        |    FROM items)
-       |  WHERE rn <= 64),
+       |  WHERE rn <= $BasketMaxItems),
        |pairs AS (
        |  SELECT a.p AS part_a, b.p AS part_b, COUNT(*) AS n_pair
        |  FROM capped a JOIN capped b ON a.o = b.o AND a.p < b.p
        |  GROUP BY a.p, b.p
-       |  HAVING COUNT(*) >= $minPairs),
+       |  HAVING COUNT(*) >= $BasketMinPairs),
        |ic AS (SELECT p, COUNT(*) AS n_item FROM items GROUP BY p),
        |n AS (SELECT COUNT(DISTINCT o) AS n_orders FROM items)
        |SELECT part_a, part_b, n_pair, ia.n_item AS n_a, ib.n_item AS n_b,

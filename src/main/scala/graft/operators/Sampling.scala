@@ -20,37 +20,41 @@ import TextAnalysis.{md5Hash60, md5Hash60Sql}
   */
 object Sampling {
 
+  val TrainPct = 80 // training share of the split, in percent
+  val ValPct = 10 // validation share of the split, in percent
+
   /** Deterministic train/val/test assignment by hash bucket: bucket =
     * md5(doc_id) mod 100, split by cumulative percentage. Adding docs
     * never reassigns existing ones (the property random() splits lack),
     * and the op is a narrow map-side projection — fuses into the scan
     * at 100 TB, no shuffle, no state.
     */
-  def trainSplit(spark: SparkSession, sfDir: String,
-      pctTrain: Int = 80, pctVal: Int = 10): DataFrame =
+  def trainSplit(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), col("source"),
         pmod(md5Hash60(col("doc_id").cast("string")), lit(100)).cast("int")
           .as("bucket"))
       .withColumn("split",
-        when(col("bucket") < pctTrain, lit("train"))
-          .when(col("bucket") < pctTrain + pctVal, lit("val"))
+        when(col("bucket") < TrainPct, lit("train"))
+          .when(col("bucket") < TrainPct + ValPct, lit("val"))
           .otherwise(lit("test")))
       .orderBy("doc_id")
 
-  def trainSplitSql(pctTrain: Int = 80, pctVal: Int = 10): String =
+  def trainSplitSql: String =
     s"""SELECT doc_id, lang, source,
        |  CAST(${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 100 AS INT)
        |    AS bucket,
        |  CASE
-       |    WHEN ${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 100 < $pctTrain
+       |    WHEN ${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 100 < $TrainPct
        |      THEN 'train'
        |    WHEN ${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % 100
-       |        < ${pctTrain + pctVal} THEN 'val'
+       |        < ${TrainPct + ValPct} THEN 'val'
        |    ELSE 'test'
        |  END AS split
        |FROM documents
        |ORDER BY doc_id""".stripMargin
+
+  val DomainCap = 10 // documents kept per domain
 
   /** Per-domain quota sampling: keep at most `cap` docs per source,
     * chosen by deterministic hash rank (the "cap over-represented
@@ -62,7 +66,8 @@ object Sampling {
     * hash-quantile cutoff per domain, then rank only the survivors —
     * same output, bounded partition size.
     */
-  def domainCaps(spark: SparkSession, sfDir: String, cap: Int = 10): DataFrame = {
+  def domainCaps(spark: SparkSession, sfDir: String,
+      cap: Int = DomainCap): DataFrame = {
     val w = Window.partitionBy("source").orderBy(col("h"), col("doc_id"))
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"),
@@ -74,7 +79,7 @@ object Sampling {
       .orderBy("source", "rk")
   }
 
-  def domainCapsSql(cap: Int = 10): String =
+  def domainCapsSql: String =
     s"""WITH ranked AS (
        |  SELECT doc_id, source,
        |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY
@@ -82,8 +87,10 @@ object Sampling {
        |      doc_id) AS rk
        |  FROM documents)
        |SELECT doc_id, source, CAST(rk AS INT) AS rk
-       |FROM ranked WHERE rk <= $cap
+       |FROM ranked WHERE rk <= $DomainCap
        |ORDER BY source, rk""".stripMargin
+
+  val PackBudget = 512 // token budget of one packed sequence
 
   /** Fixed-budget sequence packing: assign docs (in doc_id order) to
     * consecutive packs of ~`budget` whitespace tokens via an exclusive
@@ -96,7 +103,7 @@ object Sampling {
     * global window — so the same code holds on a 1000-executor corpus.
     */
   def seqPacking(spark: SparkSession, sfDir: String,
-      budget: Int = 512): DataFrame = {
+      budget: Int = PackBudget): DataFrame = {
     val toks = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
@@ -109,6 +116,8 @@ object Sampling {
         col("pack_tokens").cast("double") / budget.toDouble)
       .orderBy("pack_id")
   }
+
+  val WeightedK = 50 // rows drawn by the weighted sample
 
   /** Weighted sample without replacement via priority sampling
     * (Efraimidis-Spirakis order sampling with the monotone u/w key):
@@ -125,7 +134,7 @@ object Sampling {
     * shuffle of the corpus at 100 TB.
     */
   def weightedSample(spark: SparkSession, sfDir: String,
-      k: Int = 50): DataFrame =
+      k: Int = WeightedK): DataFrame =
     Tables.documents(spark, sfDir)
       .filter(col("n_chars") > 0)
       .select(col("doc_id"), col("n_chars").as("weight"),
@@ -135,14 +144,16 @@ object Sampling {
       .orderBy(col("priority"), col("doc_id"))
       .limit(k)
 
-  def weightedSampleSql(k: Int = 50): String =
+  def weightedSampleSql: String =
     s"""SELECT doc_id, n_chars AS weight,
        |  (CAST(${md5Hash60Sql("'ws:' || CAST(doc_id AS VARCHAR)")} AS DOUBLE)
        |     / CAST(1152921504606846976 AS DOUBLE))
        |    / CAST(n_chars AS DOUBLE) AS priority
        |FROM documents WHERE n_chars > 0
        |ORDER BY priority, doc_id
-       |LIMIT $k""".stripMargin
+       |LIMIT $WeightedK""".stripMargin
+
+  val StratumDenom = 5 // one row in this many is kept per stratum
 
   /** Stratified sample with exact per-stratum quotas: within each
     * language stratum, rank docs by a deterministic hash and keep
@@ -156,14 +167,14 @@ object Sampling {
     * never text; a pathologically hot stratum degrades like
     * [[domainCaps]] (documented two-phase cutoff path).
     */
-  def stratifiedSample(spark: SparkSession, sfDir: String,
-      denom: Int = 5): DataFrame = {
+  def stratifiedSample(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"),
         md5Hash60(concat(lit("strat:"), col("doc_id").cast("string")))
           .as("h"))
     val quotas = d.groupBy("lang")
-      .agg(expr(s"(count(1) + ${denom - 1}) div $denom").as("quota"))
+      .agg(expr(s"(count(1) + ${StratumDenom - 1}) div $StratumDenom")
+        .as("quota"))
     val w = Window.partitionBy("lang").orderBy(col("h"), col("doc_id"))
     d.withColumn("rk", row_number().over(w))
       .join(broadcast(quotas), Seq("lang"))
@@ -172,13 +183,13 @@ object Sampling {
       .orderBy("lang", "rk")
   }
 
-  def stratifiedSampleSql(denom: Int = 5): String =
+  def stratifiedSampleSql: String =
     s"""WITH d AS (
        |  SELECT doc_id, lang,
        |    ${md5Hash60Sql("'strat:' || CAST(doc_id AS VARCHAR)")} AS h
        |  FROM documents),
        |q AS (SELECT lang,
-       |    CAST((COUNT(*) + ${denom - 1}) // $denom AS BIGINT) AS quota
+       |    CAST((COUNT(*) + ${StratumDenom - 1}) // $StratumDenom AS BIGINT) AS quota
        |  FROM d GROUP BY lang),
        |r AS (SELECT doc_id, lang,
        |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rk
@@ -188,7 +199,7 @@ object Sampling {
        |WHERE rk <= quota
        |ORDER BY r.lang, rk""".stripMargin
 
-  def seqPackingSql(budget: Int = 512): String =
+  def seqPackingSql: String =
     s"""WITH t AS (
        |  SELECT doc_id,
        |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT)
@@ -200,13 +211,15 @@ object Sampling {
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
        |      AS cum_before
        |  FROM t)
-       |SELECT CAST(cum_before // $budget AS BIGINT) AS pack_id,
+       |SELECT CAST(cum_before // $PackBudget AS BIGINT) AS pack_id,
        |  COUNT(*) AS n_docs,
        |  CAST(SUM(toks) AS BIGINT) AS pack_tokens,
        |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
-       |  CAST(SUM(toks) AS DOUBLE) / $budget AS fill_ratio
+       |  CAST(SUM(toks) AS DOUBLE) / $PackBudget AS fill_ratio
        |FROM c GROUP BY pack_id
        |ORDER BY pack_id""".stripMargin
+
+  val StatShards = 16 // shards of the shard statistics
 
   /** Deterministic shard assignment + balance audit — the "write the
     * corpus as N stable shards" step before a training run, plus the
@@ -222,11 +235,10 @@ object Sampling {
     * 100 TB is `df.repartition(N, shard).write` — same expression, no
     * extra pass.
     */
-  def shardStats(spark: SparkSession, sfDir: String,
-      nShards: Int = 16): DataFrame = {
+  def shardStats(spark: SparkSession, sfDir: String): DataFrame = {
     val wAll = Window.partitionBy()
     Tables.documents(spark, sfDir)
-      .select(pmod(md5Hash60(col("doc_id").cast("string")), lit(nShards))
+      .select(pmod(md5Hash60(col("doc_id").cast("string")), lit(StatShards))
           .cast("int").as("shard"),
         col("n_chars"))
       .groupBy("shard")
@@ -234,14 +246,14 @@ object Sampling {
         sum("n_chars").cast("long").as("n_chars"))
       .withColumn("total_docs", sum("n_docs").over(wAll))
       .select(col("shard"), col("n_docs"), col("n_chars"),
-        expr(s"CAST(n_docs * $nShards * 1000000 div total_docs AS BIGINT)")
+        expr(s"CAST(n_docs * $StatShards * 1000000 div total_docs AS BIGINT)")
           .as("load_ppm"))
       .orderBy("shard")
   }
 
-  def shardStatsSql(nShards: Int = 16): String =
+  def shardStatsSql: String =
     s"""WITH s AS (
-       |  SELECT CAST(${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % $nShards
+       |  SELECT CAST(${md5Hash60Sql("CAST(doc_id AS VARCHAR)")} % $StatShards
        |      AS INT) AS shard,
        |    n_chars
        |  FROM documents),
@@ -251,10 +263,12 @@ object Sampling {
        |  FROM s GROUP BY shard),
        |t AS (SELECT SUM(n_docs) AS total_docs FROM g)
        |SELECT shard, n_docs, n_chars,
-       |  CAST(n_docs * $nShards * 1000000 // total_docs AS BIGINT)
+       |  CAST(n_docs * $StatShards * 1000000 // total_docs AS BIGINT)
        |    AS load_ppm
        |FROM g, t
        |ORDER BY shard""".stripMargin
+
+  val TokenBudget = 100000L // token budget apportioned across sources
 
   /** q201 — TOKEN-BUDGET APPORTIONMENT across sources (the training
     * mixture-design step after curation): a global token budget is
@@ -272,8 +286,7 @@ object Sampling {
     * (sources are a catalog, not data) — the global windows below rank
     * a handful of rows, documented as such.
     */
-  def tokenApportionment(spark: SparkSession, sfDir: String,
-      budget: Long = 100000L): DataFrame = {
+  def tokenApportionment(spark: SparkSession, sfDir: String): DataFrame = {
     // the ONE q83 gate battery (Corpus.withGateScore, shared with
     // q83/q194/q196/q202): all-four-gates-pass == score 4, so a future
     // threshold tweak changes every consumer together (round-12 ADVICE)
@@ -288,10 +301,10 @@ object Sampling {
     supply
       .withColumn("total_supply", sum("supply_tokens").over(wAll))
       .withColumn("quota_tokens",
-        expr(s"$budget * supply_tokens div total_supply"))
-      .withColumn("rem", expr(s"$budget * supply_tokens % total_supply"))
+        expr(s"$TokenBudget * supply_tokens div total_supply"))
+      .withColumn("rem", expr(s"$TokenBudget * supply_tokens % total_supply"))
       .withColumn("leftover",
-        lit(budget) - sum("quota_tokens").over(wAll))
+        lit(TokenBudget) - sum("quota_tokens").over(wAll))
       .withColumn("rem_rank", row_number().over(wRem).cast("long"))
       .select(col("source"), col("supply_tokens"), col("quota_tokens"),
         (col("rem_rank") <= col("leftover")).cast("long").as("extra"),
@@ -322,9 +335,8 @@ object Sampling {
     * tokens by construction — a schedule is small even when the corpus
     * is not.
     */
-  def interleavedSchedule(spark: SparkSession, sfDir: String,
-      budget: Long = 100000L): DataFrame = {
-    val quotas = tokenApportionment(spark, sfDir, budget)
+  def interleavedSchedule(spark: SparkSession, sfDir: String): DataFrame = {
+    val quotas = tokenApportionment(spark, sfDir)
       .select(col("source"), col("final_tokens"))
     val admitted = Corpus.withGateScore(
         Tables.spread(Tables.documents(spark, sfDir)))
@@ -341,7 +353,8 @@ object Sampling {
       .join(quotas, Seq("source"))
       .filter(col("cum") <= col("final_tokens"))
       .withColumn("pos_key", expr(
-        s"(2 * (rk - 1) + 1) * ${budget}L div (2 * greatest(final_tokens, 1))"))
+        s"(2 * (rk - 1) + 1) * ${TokenBudget}L div " +
+          "(2 * greatest(final_tokens, 1))"))
     // global numbering WITHOUT a single-partition window (round-12
     // verdict #2): the selected set is budget-bounded at the registered
     // dial, but the bound is a user parameter — a 100 B-token budget
@@ -365,7 +378,7 @@ object Sampling {
     * shuffle-rank/prefix-sum selection, ideal positions in BIGINT
     * `//`, same total tie-break.
     */
-  def interleavedScheduleSql(budget: Long = 100000L): String =
+  def interleavedScheduleSql: String =
     s"""WITH quotas AS (
        |  SELECT source, final_tokens FROM (@APPORTION@) qq),
        |adm AS (
@@ -396,7 +409,7 @@ object Sampling {
        |  FROM adm a JOIN quotas q ON a.source = q.source),
        |sel AS (
        |  SELECT *,
-       |    CAST((2 * (rk - 1) + 1) * $budget //
+       |    CAST((2 * (rk - 1) + 1) * $TokenBudget //
        |      (2 * greatest(final_tokens, 1)) AS BIGINT) AS pos_key
        |  FROM ranked WHERE cum <= final_tokens)
        |SELECT CAST(row_number() OVER (ORDER BY pos_key, source, rk)
@@ -404,12 +417,12 @@ object Sampling {
        |  source, doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, pos_key
        |FROM sel
        |ORDER BY schedule_pos""".stripMargin
-      .replace("@APPORTION@", tokenApportionmentSql(budget))
+      .replace("@APPORTION@", tokenApportionmentSql)
 
   /** Oracle for [[tokenApportionment]]: the identical gate filter,
     * supply rollup, and largest-remainder ranking in integer SQL.
     */
-  def tokenApportionmentSql(budget: Long = 100000L): String =
+  def tokenApportionmentSql: String =
     s"""WITH g AS (
        |  SELECT source, len(tks) AS n_tokens,
        |    CAST(list_sum(list_transform(tks, w -> length(w))) AS DOUBLE)
@@ -430,14 +443,14 @@ object Sampling {
        |  GROUP BY source),
        |q AS (
        |  SELECT source, supply_tokens,
-       |    CAST($budget * supply_tokens //
+       |    CAST($TokenBudget * supply_tokens //
        |      SUM(supply_tokens) OVER () AS BIGINT) AS quota_tokens,
-       |    CAST($budget * supply_tokens %
+       |    CAST($TokenBudget * supply_tokens %
        |      SUM(supply_tokens) OVER () AS BIGINT) AS rem
        |  FROM sup),
        |r AS (
        |  SELECT *,
-       |    CAST($budget - SUM(quota_tokens) OVER () AS BIGINT) AS leftover,
+       |    CAST($TokenBudget - SUM(quota_tokens) OVER () AS BIGINT) AS leftover,
        |    CAST(row_number() OVER (ORDER BY rem DESC, source) AS BIGINT)
        |      AS rem_rank
        |  FROM q)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.EventStreams
 
 /** Similarity search over the `embeddings` table (array<float>, 64-dim)
   * — SURVEY.md §7.5 / builder prompt: brute-force cosine top-k as the
@@ -137,6 +138,9 @@ object Similarity {
        |ORDER BY vec_id""".stripMargin
   }
 
+  val QueryBatch = 10 // vectors with vec_id below this are the queries
+  val TopK = 5 // neighbours kept per query by the kNN and ANN searches
+
   /** Brute-force cosine top-k: for each query vector (vec_id < nQueries),
     * rank ALL other vectors by cosine desc (tiebreak vec_id asc), keep k.
     *
@@ -145,8 +149,8 @@ object Similarity {
     * over ~N rows. The 100 TB variant swaps the ranking window for
     * TakeOrderedAndProject per query or the LSH bucketing below.
     */
-  def knnBruteForce(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame = {
+  def knnBruteForce(spark: SparkSession, sfDir: String,
+      nQueries: Int = QueryBatch, k: Int = TopK): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
@@ -163,9 +167,9 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  def knnBruteForceSql(nQueries: Int = 10, k: Int = 5): String =
+  def knnBruteForceSql: String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
-       |           FROM embeddings WHERE vec_id < $nQueries),
+       |           FROM embeddings WHERE vec_id < $QueryBatch),
        |scored AS (
        |  SELECT query_id, e.vec_id AS neighbor_id,
        |    ${cosineExprDuck("q_emb", "e.embedding")} AS cosine
@@ -177,7 +181,7 @@ object Similarity {
        |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
        |  FROM scored)
        |SELECT query_id, neighbor_id, rank, cosine
-       |FROM ranked WHERE rank <= $k
+       |FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
   /** Deterministic sign-hyperplane coefficients: plane p, dim d ->
@@ -222,6 +226,9 @@ object Similarity {
        |      (acc, v) -> acc + v) > 0
        |  THEN CAST(2 ** p AS BIGINT) ELSE 0 END))""".stripMargin
 
+  val LshBands = 4 // q24's LSH banding: bands of the 16-bit signature
+  val LshBitsPerBand = 4 // ...and bits per band
+
   /** LSH-bucketed approximate top-k (multi-band OR matching): the 16-bit
     * signature splits into 4 bands of 4 bits; a candidate is scored iff
     * it agrees with the query on at least one whole band. At scale each
@@ -230,11 +237,10 @@ object Similarity {
     * recall, more candidates). Recall is measured against
     * [[knnBruteForce]] in the test suite.
     */
-  def annLsh(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame =
+  def annLsh(spark: SparkSession, sfDir: String): DataFrame =
     lshTopK(spark, sfDir,
-      annLshCandidates(spark, sfDir, nQueries, nBands = 4, bitsPerBand = 4),
-      nQueries, k)
+      annLshCandidates(spark, sfDir, QueryBatch, LshBands, LshBitsPerBand),
+      QueryBatch, TopK)
 
   /** Banded candidate generation for a (nBands × bitsPerBand) split of
     * the 16-bit signature (nBands·bitsPerBand ≤ 16): distinct
@@ -268,6 +274,11 @@ object Similarity {
       .distinct()
   }
 
+  val KnnGraphK = 3 // rank-mutual neighbours per vector in the kNN graph
+  val KnnGraphBands = 2 // kNN graph LSH: bands of the signature
+  val KnnGraphBitsPerBand = 8 // ...and bits per band
+  val KnnGraphMaxCandPairs = 100L * 1000 * 1000 // kNN-graph candidate ceiling
+
   /** q203 — MUTUAL-kNN GRAPH construction (the SemDeDup / graph-
     * clustering substrate): an edge (a, b) exists when b is in a's
     * top-k AND a is in b's top-k — rank-mutuality, the robust
@@ -284,11 +295,9 @@ object Similarity {
     * dimension, commutative exact products), so one edge row carries
     * one cosine.
     */
-  def mutualKnnGraph(spark: SparkSession, sfDir: String, k: Int = 3,
-      nBands: Int = 2, bitsPerBand: Int = 8,
-      maxCandPairs: Long = 100L * 1000 * 1000): DataFrame = {
-    val (_, edges) = ensureKnnArtifacts(spark, sfDir, k, nBands,
-      bitsPerBand, maxCandPairs)
+  def mutualKnnGraph(spark: SparkSession, sfDir: String,
+      maxCandPairs: Long = KnnGraphMaxCandPairs): DataFrame = {
+    val (_, edges) = ensureKnnArtifacts(spark, sfDir, maxCandPairs)
     spark.read.parquet(edges).orderBy("vec_a", "vec_b")
   }
 
@@ -306,16 +315,15 @@ object Similarity {
     * every consumer would be the anti-pattern.
     */
   private def ensureKnnArtifacts(spark: SparkSession, sfDir: String,
-      k: Int, nBands: Int, bitsPerBand: Int,
-      maxCandPairs: Long = 100L * 1000 * 1000): (String, String) = {
+      maxCandPairs: Long = KnnGraphMaxCandPairs): (String, String) = {
     val base = Tables.freshStagedDir(
-      s"/tmp/graft_stage/mkg_${Tables.pathKey(sfDir)}_${k}_${nBands}_$bitsPerBand",
+      s"/tmp/graft_stage/mkg_${Tables.pathKey(sfDir)}_${KnnGraphK}_" +
+        s"${KnnGraphBands}_$KnnGraphBitsPerBand",
       Seq(new java.io.File(sfDir, "embeddings.parquet")), "knn",
       Seq("topk/_SUCCESS", "edges/_SUCCESS")) { dir =>
       // both products in one build: building them apart would run the
       // heavy banded ranking twice
-      val topk = computeKnnTopk(spark, sfDir, k, nBands, bitsPerBand,
-        maxCandPairs)
+      val topk = computeKnnTopk(spark, sfDir, maxCandPairs)
       topk.write.parquet(dir + "/topk")
       mutualEdgesOf(topk).write.parquet(dir + "/edges")
     }
@@ -342,9 +350,8 @@ object Similarity {
     * list, rank ties broken (cosine DESC, dst ASC).
     */
   private def computeKnnTopk(spark: SparkSession, sfDir: String,
-      k: Int, nBands: Int, bitsPerBand: Int,
-      maxCandPairs: Long = 100L * 1000 * 1000): DataFrame = {
-    val mask = (1 << bitsPerBand) - 1
+      maxCandPairs: Long): DataFrame = {
+    val mask = (1 << KnnGraphBitsPerBand) - 1
     // spread the scan (single-row-group inputs) and checkpoint the
     // ids-only banded frame: lsh_sig runs ONCE per vector instead of
     // once per self-join side, and the embeddings scan feeds the
@@ -352,9 +359,9 @@ object Similarity {
     val emb = Tables.spread(Tables.embeddings(spark, sfDir))
       .withColumn("sig", graft.functions.lsh_sig(col("embedding"), planeSigns))
     val bandExpr =
-      s"""transform(sequence(0, ${nBands - 1}),
+      s"""transform(sequence(0, ${KnnGraphBands - 1}),
          |  b -> concat(CAST(b AS STRING), ':',
-         |    CAST((sig >> (b * $bitsPerBand)) & $mask AS STRING)))""".stripMargin
+         |    CAST((sig >> (b * $KnnGraphBitsPerBand)) & $mask AS STRING)))""".stripMargin
     val banded = emb
       .select(col("vec_id"), explode(expr(bandExpr)).as("band_key"))
       .localCheckpoint(true)
@@ -406,7 +413,7 @@ object Similarity {
       .withColumn("cosine",
         graft.functions.cosine_sim(col("e_a"), col("e_b")))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= KnnGraphK)
       .select("src", "dst", "rank", "cosine")
       .localCheckpoint(true) // written + self-joined: rank once
     topk
@@ -415,8 +422,7 @@ object Similarity {
   /** Oracle for [[mutualKnnGraph]]: the banded candidates, per-vector
     * ranking, and mutual self-join restated.
     */
-  def mutualKnnGraphSql(k: Int = 3, nBands: Int = 2,
-      bitsPerBand: Int = 8): String =
+  def mutualKnnGraphSql: String =
     s"""WITH @TOPK@
        |SELECT t1.src AS vec_a, t1.dst AS vec_b,
        |  CAST(t1.rank AS BIGINT) AS rank_ab,
@@ -426,7 +432,7 @@ object Similarity {
        |  ON t1.src = t2.dst AND t1.dst = t2.src
        |WHERE t1.src < t1.dst
        |ORDER BY vec_a, vec_b""".stripMargin
-      .replace("@TOPK@", knnTopkCteSql(k, nBands, bitsPerBand))
+      .replace("@TOPK@", knnTopkCteSql)
 
   /** Shared DuckDB CTE chain ending in `topk` — the oracle twin of
     * [[computeKnnTopk]] (strict-dial band candidates, exact cosine,
@@ -434,15 +440,15 @@ object Similarity {
     * with post-stripMargin .replace (the lshBandedCte discipline: the
     * fragment contains `||`, which a second stripMargin truncates).
     */
-  private def knnTopkCteSql(k: Int, nBands: Int, bitsPerBand: Int): String = {
-    val mask = (1 << bitsPerBand) - 1
+  private def knnTopkCteSql: String = {
+    val mask = (1 << KnnGraphBitsPerBand) - 1
     s"""sigs AS (
        |  SELECT vec_id, embedding, ${lshSigExprDuck("embedding")} AS sig
        |  FROM embeddings),
        |banded AS (
        |  SELECT vec_id, embedding,
-       |    b || ':' || ((sig >> (b * $bitsPerBand)) & $mask) AS band_key
-       |  FROM sigs, (SELECT UNNEST(range(0, $nBands)) AS b)),
+       |    b || ':' || ((sig >> (b * $KnnGraphBitsPerBand)) & $mask) AS band_key
+       |  FROM sigs, (SELECT UNNEST(range(0, $KnnGraphBands)) AS b)),
        |cands AS (
        |  SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst,
        |    a.embedding AS e_a, b.embedding AS e_b
@@ -456,7 +462,7 @@ object Similarity {
        |    row_number() OVER (PARTITION BY src
        |      ORDER BY cosine DESC, dst ASC) AS rank
        |  FROM scored),
-       |topk AS (SELECT * FROM ranked WHERE rank <= $k)""".stripMargin
+       |topk AS (SELECT * FROM ranked WHERE rank <= $KnnGraphK)""".stripMargin
   }
 
   /** q206 — CONTRASTIVE TRIPLET MINING over the kNN-graph artifacts:
@@ -480,9 +486,8 @@ object Similarity {
     * stored index output and triplet mining stays a single pass over
     * it — never touching the vectors again.
     */
-  def tripletMining(spark: SparkSession, sfDir: String,
-      k: Int = 3): DataFrame = {
-    val (topkPath, edgesPath) = ensureKnnArtifacts(spark, sfDir, k, 2, 8)
+  def tripletMining(spark: SparkSession, sfDir: String): DataFrame = {
+    val (topkPath, edgesPath) = ensureKnnArtifacts(spark, sfDir)
     val topk = spark.read.parquet(topkPath)
     val mutualDirected = spark.read.parquet(edgesPath)
       .select(col("vec_a").as("src"), col("vec_b").as("dst"))
@@ -510,8 +515,7 @@ object Similarity {
   /** Oracle for [[tripletMining]]: the shared topk CTE, mutuality by
     * reciprocal self-join, per-anchor best pick on each side by rank.
     */
-  def tripletMiningSql(k: Int = 3, nBands: Int = 2,
-      bitsPerBand: Int = 8): String =
+  def tripletMiningSql: String =
     s"""WITH @TOPK@,
        |mut AS (
        |  SELECT t1.src, t1.dst FROM topk t1
@@ -537,7 +541,7 @@ object Similarity {
        |FROM pos p JOIN neg n ON p.src = n.src
        |WHERE p.rk = 1 AND n.rk = 1
        |ORDER BY anchor_id""".stripMargin
-      .replace("@TOPK@", knnTopkCteSql(k, nBands, bitsPerBand))
+      .replace("@TOPK@", knnTopkCteSql)
 
   /** q204 — the SEMANTIC-DEDUP ENDGAME (round-11 verdict #5): the full
     * SemDeDup pipeline composed from its three individually-proven
@@ -556,18 +560,17 @@ object Similarity {
     * corpus payload is never shuffled — the same story each stage
     * already proved alone, now as ONE registered query.
     */
-  def semanticDedupEndgame(spark: SparkSession, sfDir: String,
-      k: Int = 3, maxIters: Int = 25): DataFrame = {
+  def semanticDedupEndgame(spark: SparkSession, sfDir: String): DataFrame = {
     // read the committed edge artifact directly (shared with q203 —
     // the production topology: clustering consumes the kNN-graph job's
     // output, it does not re-run the job)
     val edges = spark.read
-      .parquet(ensureKnnArtifacts(spark, sfDir, k, 2, 8)._2)
+      .parquet(ensureKnnArtifacts(spark, sfDir)._2)
       .select(col("vec_a").as("s"), col("vec_b").as("d"))
     val und = edges
       .union(edges.select(col("d").as("s"), col("s").as("d")))
       .localCheckpoint(true)
-    val labels = Dedup.propagateMinLabels(und, maxIters)
+    val labels = Dedup.propagateMinLabels(und, Dedup.ClosureMaxIters)
     val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, "lbl")
       .join(Corpus.docGateScores(spark, sfDir)
@@ -587,7 +590,7 @@ object Similarity {
     * recursive-CTE closure, q194's windowed argmax — spliced with
     * post-stripMargin replace (the lshBandedCte discipline).
     */
-  def semanticDedupEndgameSql(k: Int = 3): String =
+  def semanticDedupEndgameSql: String =
     s"""WITH RECURSIVE mkg AS MATERIALIZED (
        |  SELECT vec_a, vec_b FROM (@EDGES@) e),
        |und AS MATERIALIZED (
@@ -618,7 +621,7 @@ object Similarity {
        |  CAST(cluster_size - 1 AS BIGINT) AS n_discarded
        |FROM ranked WHERE rk = 1
        |ORDER BY cluster_id""".stripMargin
-      .replace("@EDGES@", mutualKnnGraphSql(k))
+      .replace("@EDGES@", mutualKnnGraphSql)
       .replace("@SCORES@", Corpus.docGateScoresSql)
 
   /** Exact cosine top-k over a candidate id-pair list. */
@@ -644,20 +647,20 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  def annLshSql(nQueries: Int = 10, k: Int = 5): String =
+  def annLshSql: String =
     s"""WITH sigs AS (
        |  SELECT vec_id, embedding, ${lshSigExprDuck("embedding")} AS sig
        |  FROM embeddings),
        |banded AS (
        |  SELECT vec_id, embedding,
-       |    b || ':' || ((sig >> (b * 4)) & 15) AS band_key
-       |  FROM sigs, (SELECT UNNEST(range(0, 4)) AS b)),
+       |    b || ':' || ((sig >> (b * $LshBitsPerBand)) & ${(1 << LshBitsPerBand) - 1}) AS band_key
+       |  FROM sigs, (SELECT UNNEST(range(0, $LshBands)) AS b)),
        |cands AS (
        |  SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id,
        |    q.embedding AS q_emb, e.embedding AS c_emb
        |  FROM banded q JOIN banded e
        |    ON q.band_key = e.band_key AND e.vec_id <> q.vec_id
-       |  WHERE q.vec_id < $nQueries),
+       |  WHERE q.vec_id < $QueryBatch),
        |scored AS (
        |  SELECT query_id, neighbor_id,
        |    ${cosineExprDuck("q_emb", "c_emb")} AS cosine
@@ -668,12 +671,12 @@ object Similarity {
        |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
        |  FROM scored)
        |SELECT query_id, neighbor_id, rank, cosine
-       |FROM ranked WHERE rank <= $k
+       |FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
   /** IVF (inverted-file) approximate top-k: coarse-quantize the corpus
     * against k seed centroids, then search each query only in its
-    * `nprobe` nearest clusters. The second scale path next to LSH:
+    * `IvfProbe` nearest clusters. The second scale path next to LSH:
     * data-adaptive buckets (better recall on clustered corpora) than
     * fixed hyperplanes.
     *
@@ -733,12 +736,15 @@ object Similarity {
           (i, r.getAs[scala.collection.Seq[Float]]("embedding").toArray)
         })
 
-  def annIvf(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4): DataFrame = {
+  val IvfClusters = 16 // coarse quantizer cells (md5-ranked seeds)
+  val IvfProbe = 4 // quantizer cells each query probes
+
+  def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     // bounded k-row collect: the quantizer table (TakeOrderedAndProject),
     // computed once per (sfDir, embeddings mtime, nClusters) and memoized
-    val seeds: Array[(Int, Array[Float])] = ivfQuantizer(spark, sfDir, nClusters)
+    val seeds: Array[(Int, Array[Float])] =
+      ivfQuantizer(spark, sfDir, IvfClusters)
     val centroids = seeds.map(_._2)
     val assigned = emb.select(col("vec_id"), col("embedding"),
       graft.functions.argmax_cosine(col("embedding"), centroids).as("cluster"))
@@ -748,7 +754,7 @@ object Similarity {
       seeds.toSeq.map { case (i, c) => (i, c.toSeq) })
       .toDF("cluster", "centroid")
       .select(col("cluster"), col("centroid").cast("array<float>"))
-    val queries = emb.filter(col("vec_id") < nQueries)
+    val queries = emb.filter(col("vec_id") < QueryBatch)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val wProbe = Window.partitionBy("query_id")
       .orderBy(desc("c_sim"), asc("cluster"))
@@ -756,7 +762,7 @@ object Similarity {
       .withColumn("c_sim",
         graft.functions.cosine_sim(col("q_emb"), col("centroid")))
       .withColumn("probe_rank", row_number().over(wProbe))
-      .filter(col("probe_rank") <= nprobe)
+      .filter(col("probe_rank") <= IvfProbe)
       .select("query_id", "q_emb", "cluster")
 
     val w = Window.partitionBy("query_id")
@@ -766,7 +772,7 @@ object Similarity {
       .withColumn("cosine",
         graft.functions.cosine_sim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rank"),
         col("cosine"))
       .orderBy("query_id", "rank")
@@ -777,8 +783,7 @@ object Similarity {
     * SQL (assignment ties break toward the lowest cluster index, exactly
     * [[graft.functions.ArgMaxCosineExpr]]'s rule).
     */
-  def annIvfSql(nQueries: Int = 10, k: Int = 5, nClusters: Int = 16,
-      nprobe: Int = 4): String =
+  def annIvfSql: String =
     s"""WITH seeds AS (
        |  SELECT CAST(row_number() OVER (
        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT)
@@ -786,7 +791,7 @@ object Similarity {
        |         embedding AS centroid
        |  FROM embeddings
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nClusters),
+       |  LIMIT $IvfClusters),
        |assigned AS (
        |  SELECT vec_id, embedding, cluster FROM (
        |    SELECT e.vec_id, e.embedding, s.cluster,
@@ -802,8 +807,8 @@ object Similarity {
        |        ORDER BY ${cosineExprDuck("q.embedding", "s.centroid")} DESC,
        |                 s.cluster ASC) AS pr
        |    FROM embeddings q CROSS JOIN seeds s
-       |    WHERE q.vec_id < $nQueries)
-       |  WHERE pr <= $nprobe),
+       |    WHERE q.vec_id < $QueryBatch)
+       |  WHERE pr <= $IvfProbe),
        |scored AS (
        |  SELECT p.query_id, a.vec_id AS neighbor_id,
        |    ${cosineExprDuck("p.q_emb", "a.embedding")} AS cosine
@@ -815,7 +820,7 @@ object Similarity {
        |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
        |  FROM scored)
        |SELECT query_id, neighbor_id, rank, cosine
-       |FROM ranked WHERE rank <= $k
+       |FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
   /** q138 — product-quantization ANN (Jégou et al., TPAMI 2011), the
@@ -826,7 +831,7 @@ object Similarity {
     * candidate scan ranks by ASYMMETRIC DISTANCE (M lookups into a
     * per-query distance table — it reads the codes column, M small ints
     * instead of d floats, the ~32× memory win that is the point of PQ),
-    * and the top `shortlistK` per query are RE-RANKED with exact cosine
+    * and the top `PqShortlist` per query are RE-RANKED with exact cosine
     * on raw vectors — the standard ADC+re-rank deployment: raw vectors
     * are fetched for shortlistK rows per query, not N. Measured recall@5
     * vs exact kNN ≈ 0.76 at sf0.01 with shortlist 100 (0.5% of the
@@ -870,11 +875,13 @@ object Similarity {
     Array.tabulate(m)(s => normed.map(_.slice(s * subDim, (s + 1) * subDim)))
   }
 
-  def annPq(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nSeeds: Int = 16, m: Int = 8,
-      shortlistK: Int = 100): DataFrame =
-    pqSearch(spark, sfDir, sampleCodebooks(spark, sfDir, nSeeds, m),
-      nQueries, k, shortlistK)
+  val PqSeeds = 16 // PQ codebook entries per subspace
+  val PqSubspaces = 8 // PQ subspaces per vector
+  val PqShortlist = 100 // ADC candidates re-ranked by exact cosine per query
+
+  def annPq(spark: SparkSession, sfDir: String): DataFrame =
+    pqSearch(spark, sfDir, sampleCodebooks(spark, sfDir, PqSeeds, PqSubspaces),
+      QueryBatch, TopK, PqShortlist)
 
   /** Query → nprobe nearest coarse cells (the annIvf routing, shared
     * by q34 and the IVF×PQ composition): one crossJoin against the
@@ -924,11 +931,10 @@ object Similarity {
     * ExtensionsSpec measures the dial (monotone in nprobe) and the
     * pruning (candidate volume ≈ nprobe/nClusters of flat).
     */
-  def annIvfPq(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100): DataFrame =
-    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, nSeeds, m),
-      nQueries, k, shortlistK, coarse = Some((nClusters, nprobe)))
+  def annIvfPq(spark: SparkSession, sfDir: String,
+      nprobe: Int = IvfProbe): DataFrame =
+    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces),
+      QueryBatch, TopK, PqShortlist, coarse = Some((IvfClusters, nprobe)))
 
   /** q162 — ATTRIBUTE-FILTERED ANN, the retrieval shape every RAG /
     * curation pipeline actually runs (top-k "among vectors matching a
@@ -948,10 +954,10 @@ object Similarity {
     * candidates and true top-k alike. Oracle: the full routing +
     * filter + ranking restated in SQL — cell-exact, like q34.
     */
-  def annIvfFiltered(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4): DataFrame = {
+  def annIvfFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val seeds: Array[(Int, Array[Float])] = ivfQuantizer(spark, sfDir, nClusters)
+    val seeds: Array[(Int, Array[Float])] =
+      ivfQuantizer(spark, sfDir, IvfClusters)
     val centroids = seeds.map(_._2)
     val assigned = emb.select(col("vec_id"), col("embedding"), col("label"),
       graft.functions.argmax_cosine(col("embedding"), centroids).as("cluster"))
@@ -959,7 +965,7 @@ object Similarity {
       seeds.toSeq.map { case (i, c) => (i, c.toSeq) })
       .toDF("cluster", "centroid")
       .select(col("cluster"), col("centroid").cast("array<float>"))
-    val queries = emb.filter(col("vec_id") < nQueries)
+    val queries = emb.filter(col("vec_id") < QueryBatch)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("label"))
     val wProbe = Window.partitionBy("query_id")
@@ -968,7 +974,7 @@ object Similarity {
       .withColumn("c_sim",
         graft.functions.cosine_sim(col("q_emb"), col("centroid")))
       .withColumn("probe_rank", row_number().over(wProbe))
-      .filter(col("probe_rank") <= nprobe)
+      .filter(col("probe_rank") <= IvfProbe)
       .select("query_id", "q_emb", "label", "cluster")
     val w = Window.partitionBy("query_id")
       .orderBy(desc("cosine"), asc("vec_id"))
@@ -979,7 +985,7 @@ object Similarity {
       .withColumn("cosine",
         graft.functions.cosine_sim(col("q_emb"), col("embedding")))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopK)
       .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
         col("rank"), col("cosine"))
       .orderBy("query_id", "rank")
@@ -989,8 +995,7 @@ object Similarity {
     * label carried through and the equality folded into the scored
     * join.
     */
-  def annIvfFilteredSql(nQueries: Int = 10, k: Int = 5, nClusters: Int = 16,
-      nprobe: Int = 4): String =
+  def annIvfFilteredSql: String =
     s"""WITH seeds AS (
        |  SELECT CAST(row_number() OVER (
        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT)
@@ -998,7 +1003,7 @@ object Similarity {
        |         embedding AS centroid
        |  FROM embeddings
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nClusters),
+       |  LIMIT $IvfClusters),
        |assigned AS (
        |  SELECT vec_id, embedding, label, cluster FROM (
        |    SELECT e.vec_id, e.embedding, e.label, s.cluster,
@@ -1015,8 +1020,8 @@ object Similarity {
        |        ORDER BY ${cosineExprDuck("q.embedding", "s.centroid")} DESC,
        |                 s.cluster ASC) AS pr
        |    FROM embeddings q CROSS JOIN seeds s
-       |    WHERE q.vec_id < $nQueries)
-       |  WHERE pr <= $nprobe),
+       |    WHERE q.vec_id < $QueryBatch)
+       |  WHERE pr <= $IvfProbe),
        |scored AS (
        |  SELECT p.query_id, p.label, a.vec_id AS neighbor_id,
        |    ${cosineExprDuck("p.q_emb", "a.embedding")} AS cosine
@@ -1029,7 +1034,7 @@ object Similarity {
        |      ORDER BY cosine DESC, neighbor_id ASC) AS INT) AS rank
        |  FROM scored)
        |SELECT query_id, label, neighbor_id, rank, cosine
-       |FROM ranked WHERE rank <= $k
+       |FROM ranked WHERE rank <= $TopK
        |ORDER BY query_id, rank""".stripMargin
 
   /** q158 — the PQ codes as a PERSISTED stored index (q144 re-encodes
@@ -1050,13 +1055,11 @@ object Similarity {
     * ~M bytes per vector instead of 4·Dim), partitioned by coarse cell
     * so probes prune files before IO.
     */
-  def annIvfPqStored(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100): DataFrame = {
+  def annIvfPqStored(spark: SparkSession, sfDir: String): DataFrame = {
     val codes = spark.read.parquet(
-      pqCodesIndex(spark, sfDir, nSeeds, m, nClusters))
-    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, nSeeds, m),
-      nQueries, k, shortlistK, coarse = Some((nClusters, nprobe)),
+      pqCodesIndex(spark, sfDir, PqSeeds, PqSubspaces, IvfClusters))
+    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces),
+      QueryBatch, TopK, PqShortlist, coarse = Some((IvfClusters, IvfProbe)),
       storedCodes = Some(codes))
   }
 
@@ -1111,15 +1114,13 @@ object Similarity {
     * a real deployment compacts segments periodically — the same
     * economics the q159 dedup loop demonstrates on its side.
     */
-  def annIndexAppend(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100): DataFrame = {
+  def annIndexAppend(spark: SparkSession, sfDir: String): DataFrame = {
     val (baseDir, segDir) =
-      pqSegmentedIndex(spark, sfDir, nSeeds, m, nClusters)
+      pqSegmentedIndex(spark, sfDir, PqSeeds, PqSubspaces, IvfClusters)
     val codes = spark.read.parquet(baseDir)
       .unionByName(spark.read.parquet(segDir))
-    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, nSeeds, m),
-        nQueries, k, shortlistK, coarse = Some((nClusters, nprobe)),
+    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces),
+        QueryBatch, TopK, PqShortlist, coarse = Some((IvfClusters, IvfProbe)),
         storedCodes = Some(codes))
       .withColumn("from_appended",
         (pmod(col("neighbor_id"), lit(4)) === 3).cast("long"))
@@ -1129,14 +1130,12 @@ object Similarity {
     * append carries exactly the monolithic code set) with the segment
     * provenance restated from the fixture split.
     */
-  def annIndexAppendSql(nQueries: Int = 10, k: Int = 5, nClusters: Int = 16,
-      nprobe: Int = 4, nSeeds: Int = 16, m: Int = 8,
-      shortlistK: Int = 100): String =
+  def annIndexAppendSql: String =
     s"""SELECT query_id, neighbor_id, rank, cosine,
        |  CAST(CASE WHEN neighbor_id % 4 = 3 THEN 1 ELSE 0 END AS BIGINT)
        |    AS from_appended
        |FROM (
-       |${annIvfPqSql(nQueries, k, nClusters, nprobe, nSeeds, m, shortlistK)}
+       |${annIvfPqSql}
        |) t
        |ORDER BY query_id, rank""".stripMargin
 
@@ -1155,12 +1154,10 @@ object Similarity {
     * q137 merged==direct self-oracle idiom; `searches_equal` carries
     * the symmetric exceptAll count, so a 1 is computed, never assumed).
     */
-  def annIndexCompact(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nClusters: Int = 16, nprobe: Int = 4, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100): DataFrame = {
+  def annIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val (baseDir, segDir) =
-      pqSegmentedIndex(spark, sfDir, nSeeds, m, nClusters)
+      pqSegmentedIndex(spark, sfDir, PqSeeds, PqSubspaces, IvfClusters)
     val union = spark.read.parquet(baseDir)
       .unionByName(spark.read.parquet(segDir))
     val root = new java.io.File("/tmp/graft_index",
@@ -1169,10 +1166,10 @@ object Similarity {
     org.apache.commons.io.FileUtils.deleteQuietly(compactDir)
     union.write.parquet(compactDir.getPath) // pure copy, no pq_encode
     val compacted = spark.read.parquet(compactDir.getPath)
-    val cb = trainedCodebooks(spark, sfDir, nSeeds, m)
+    val cb = trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces)
     def search(codes: DataFrame): DataFrame =
-      pqSearch(spark, sfDir, cb, nQueries, k, shortlistK,
-        coarse = Some((nClusters, nprobe)), storedCodes = Some(codes))
+      pqSearch(spark, sfDir, cb, QueryBatch, TopK, PqShortlist,
+        coarse = Some((IvfClusters, IvfProbe)), storedCodes = Some(codes))
     // OVERLAP (round-16, guide §2.6): the two searches are independent
     // (same queries, compacted vs union codes) — materialize the
     // compacted-side search on a pool thread while the main thread
@@ -1180,20 +1177,19 @@ object Similarity {
     // code counts ride the pool while the equality diff runs. The two
     // exceptAll branches fuse into ONE count (union is bag semantics,
     // so count(a\b ∪ b\a) = count(a\b) + count(b\a)).
-    val pool = Tables.overlapPool()
-    val (nBase, nSeg, nComp, diff) = try {
-      val aF = Tables.submitJob(pool, spark, "q199: search compacted")(
+    val (nBase, nSeg, nComp, diff) = Tables.overlapped(spark) { ov =>
+      val aF = ov.submit("q199: search compacted")(
         search(compacted).localCheckpoint(true))
       val b = search(union).localCheckpoint(true)
       val a = aF.get()
-      val countsF = Tables.submitJob(pool, spark, "q199: code counts")(
+      val countsF = ov.submit("q199: code counts")(
         (spark.read.parquet(baseDir).count(),
           spark.read.parquet(segDir).count(),
           compacted.count()))
       val d = a.exceptAll(b).union(b.exceptAll(a)).count()
       val (nb, ns, nc) = countsF.get()
       (nb, ns, nc, d)
-    } finally pool.shutdown()
+    }
     Seq((nBase, nSeg, nComp, if (diff == 0) 1L else 0L))
       .toDF("n_codes_base", "n_codes_seg", "n_codes_compacted",
         "searches_equal")
@@ -1205,13 +1201,13 @@ object Similarity {
     * executed searches; the oracle stating 1 is the assertion that
     * compaction is lossless.
     */
-  def annIndexCompactSql(m: Int = 8): String =
+  def annIndexCompactSql: String =
     s"""SELECT
-       |  CAST($m * (SELECT COUNT(*) FROM embeddings WHERE vec_id % 4 <> 3)
+       |  CAST($PqSubspaces * (SELECT COUNT(*) FROM embeddings WHERE vec_id % 4 <> 3)
        |    AS BIGINT) AS n_codes_base,
-       |  CAST($m * (SELECT COUNT(*) FROM embeddings WHERE vec_id % 4 = 3)
+       |  CAST($PqSubspaces * (SELECT COUNT(*) FROM embeddings WHERE vec_id % 4 = 3)
        |    AS BIGINT) AS n_codes_seg,
-       |  CAST($m * (SELECT COUNT(*) FROM embeddings) AS BIGINT)
+       |  CAST($PqSubspaces * (SELECT COUNT(*) FROM embeddings) AS BIGINT)
        |    AS n_codes_compacted,
        |  CAST(1 AS BIGINT) AS searches_equal""".stripMargin
 
@@ -1368,6 +1364,8 @@ object Similarity {
     new java.util.concurrent.ConcurrentHashMap[
       (String, Long, Int, Int, Int), Array[Array[Array[Double]]]]()
 
+  val PqTrainIters = 1 // Lloyd iterations that train the PQ codebooks
+
   /** One Lloyd refinement of the sample sub-codebooks (q142's fit):
     * assign every normalized subvector to its nearest sample
     * sub-centroid, then replace each sub-centroid with the MEAN of its
@@ -1395,7 +1393,8 @@ object Similarity {
     * is — the oracle refits every round in SQL).
     */
   private[graft] def trainedCodebooks(spark: SparkSession, sfDir: String,
-      nSeeds: Int, m: Int, iters: Int = 1): Array[Array[Array[Double]]] =
+      nSeeds: Int, m: Int,
+      iters: Int = PqTrainIters): Array[Array[Array[Double]]] =
     trainedCbCache.computeIfAbsent(
       (sfDir, embeddingsMtime(sfDir), nSeeds, m, iters), _ => {
         require(iters >= 1, s"pq train: iters must be >= 1, got $iters")
@@ -1480,11 +1479,11 @@ object Similarity {
     * better reconstruction. The oracle restates fit AND search in SQL,
     * chaining one refit CTE block per round.
     */
-  def annPqTrained(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5, nSeeds: Int = 16, m: Int = 8,
-      shortlistK: Int = 100, iters: Int = 1): DataFrame =
-    pqSearch(spark, sfDir, trainedCodebooks(spark, sfDir, nSeeds, m, iters),
-      nQueries, k, shortlistK)
+  def annPqTrained(spark: SparkSession, sfDir: String,
+      iters: Int = PqTrainIters): DataFrame =
+    pqSearch(spark, sfDir,
+      trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces, iters),
+      QueryBatch, TopK, PqShortlist)
 
   /** DuckDB oracle for [[annPq]]: sample sub-codebooks, argmin encoding,
     * and the fixed-order ADC pivot stated directly in SQL. One shared
@@ -1493,23 +1492,21 @@ object Similarity {
     * query distance table is its `vec_id < nQueries` slice — the same
     * double fold in the same dimension order as the Spark side.
     */
-  def annPqSql(nQueries: Int = 10, k: Int = 5, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100): String =
-    pqSqlWith("", "cb", nQueries, k, nSeeds, m, shortlistK)
+  def annPqSql: String =
+    pqSqlWith("", "cb", QueryBatch, TopK, PqSeeds, PqSubspaces, PqShortlist)
 
   /** DuckDB oracle for [[annPqTrained]]: the sample-codebook chain plus
-    * `iters` chained Lloyd-round CTE blocks (argmin assignment against
-    * the previous round's codebook, floor(x*1e9) BIGINT sums, grid
+    * `PqTrainIters` chained Lloyd-round CTE blocks (argmin assignment
+    * against the previous round's codebook, floor(x*1e9) BIGINT sums, grid
     * LEFT JOIN with the previous-round fallback, the same
     * double-division mean) — then the identical search tail over the
-    * final `cbt{iters}`.
+    * final `cbt{PqTrainIters}`.
     */
-  def annPqTrainedSql(nQueries: Int = 10, k: Int = 5, nSeeds: Int = 16,
-      m: Int = 8, shortlistK: Int = 100, iters: Int = 1): String = {
-    require(iters >= 1, s"pq train: iters must be >= 1, got $iters")
-    val subDim = Dim / m
-    pqSqlWith(sptSql(subDim, m) + trainRoundsSql(iters, subDim),
-      s"cbt$iters", nQueries, k, nSeeds, m, shortlistK)
+  def annPqTrainedSql: String = {
+    val subDim = Dim / PqSubspaces
+    pqSqlWith(
+      sptSql(subDim, PqSubspaces) + trainRoundsSql(PqTrainIters, subDim),
+      s"cbt$PqTrainIters", QueryBatch, TopK, PqSeeds, PqSubspaces, PqShortlist)
   }
 
   /** Subvector-grain CTE shared by the Lloyd-round oracles. */
@@ -1569,13 +1566,11 @@ object Similarity {
     * argmax-cosine assignment, per-query nprobe routing — and the ADC
     * join restricted to probed cells.
     */
-  def annIvfPqSql(nQueries: Int = 10, k: Int = 5, nClusters: Int = 16,
-      nprobe: Int = 4, nSeeds: Int = 16, m: Int = 8,
-      shortlistK: Int = 100): String = {
-    val subDim = Dim / m
-    pqSqlWith(sptSql(subDim, m) + trainRoundsSql(1, subDim), "cbt1",
-      nQueries, k, nSeeds, m, shortlistK,
-      coarse = Some((nClusters, nprobe)))
+  def annIvfPqSql: String = {
+    val subDim = Dim / PqSubspaces
+    pqSqlWith(sptSql(subDim, PqSubspaces) + trainRoundsSql(1, subDim), "cbt1",
+      QueryBatch, TopK, PqSeeds, PqSubspaces, PqShortlist,
+      coarse = Some((IvfClusters, IvfProbe)))
   }
 
   /** Shared oracle body: normalization, seeds, the sample codebook
@@ -1706,6 +1701,9 @@ object Similarity {
        |ORDER BY query_id, rank""".stripMargin
   }
 
+  val SemDedupCap = 256 // vectors kept per quantizer cell
+  val SemDedupThreshold = 0.35 // same-cell duplicate cosine
+
   /** q140 — semantic deduplication, SemDeDup-style (Abbas et al.,
     * "SemDeDup: Data-efficient learning at web-scale through semantic
     * deduplication", 2023): cluster the embedding corpus, then score
@@ -1718,7 +1716,7 @@ object Similarity {
     * Clustering is the IVF sample quantizer ([[ivfQuantizer]] — same
     * deterministic md5-seeded centroids, same argmax assignment the
     * q34 oracle verifies), so the whole pipeline stays cell-exact
-    * SQL-expressible. `capPerCluster` is the candidate budget: each
+    * SQL-expressible. `SemDedupCap` is the candidate budget: each
     * cluster contributes at most its cap members (deterministic md5
     * rank — the q16 mega-bucket guard), bounding pair work at
     * k·cap²/2 REGARDLESS of corpus size; at 100 TB k scales with the
@@ -1728,10 +1726,10 @@ object Similarity {
     * anywhere.
     */
   def semanticDedup(spark: SparkSession, sfDir: String,
-      nClusters: Int = 16, capPerCluster: Int = 256,
-      threshold: Double = 0.35): DataFrame = {
+      capPerCluster: Int = SemDedupCap,
+      threshold: Double = SemDedupThreshold): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val centroids = ivfQuantizer(spark, sfDir, nClusters).map(_._2)
+    val centroids = ivfQuantizer(spark, sfDir, IvfClusters).map(_._2)
     val assigned = emb.select(col("vec_id"), col("embedding"),
       graft.functions.argmax_cosine(col("embedding"), centroids)
         .as("cluster"))
@@ -1760,8 +1758,7 @@ object Similarity {
     * cap rank, within-cluster pairs, and the cosine threshold stated
     * directly in SQL.
     */
-  def semanticDedupSql(nClusters: Int = 16, capPerCluster: Int = 256,
-      threshold: Double = 0.35): String =
+  def semanticDedupSql: String =
     s"""WITH seeds AS (
        |  SELECT CAST(row_number() OVER (
        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT)
@@ -1769,7 +1766,7 @@ object Similarity {
        |         embedding AS centroid
        |  FROM embeddings
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nClusters),
+       |  LIMIT $IvfClusters),
        |assigned AS (
        |  SELECT vec_id, embedding, cluster FROM (
        |    SELECT e.vec_id, e.embedding, s.cluster,
@@ -1784,7 +1781,7 @@ object Similarity {
        |      row_number() OVER (PARTITION BY cluster
        |        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rk
        |    FROM assigned)
-       |  WHERE rk <= $capPerCluster),
+       |  WHERE rk <= $SemDedupCap),
        |pairs AS (
        |  SELECT a.cluster, a.vec_id AS vec_a, b.vec_id AS vec_b,
        |    ${cosineExprDuck("a.embedding", "b.embedding")} AS cosine
@@ -1792,8 +1789,11 @@ object Similarity {
        |    ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
        |SELECT cluster, vec_a, vec_b, cosine
        |FROM pairs
-       |WHERE cosine >= CAST($threshold AS DOUBLE)
+       |WHERE cosine >= CAST($SemDedupThreshold AS DOUBLE)
        |ORDER BY cluster, vec_a, vec_b""".stripMargin
+
+  val DiversityQuota = 1024 // picks split across cells by size
+  val DiversityMinQuota = 8 // floor on any one cell's quota
 
   /** q155 — cluster-BALANCED diversity sampling, the subset-selection
     * op training-data curation runs after dedup: pick a fixed-size,
@@ -1825,10 +1825,10 @@ object Similarity {
     * broadcast join.
     */
   def diversitySample(spark: SparkSession, sfDir: String,
-      nClusters: Int = 16, totalQuota: Int = 1024,
-      minQuota: Int = 8): DataFrame = {
+      totalQuota: Int = DiversityQuota,
+      minQuota: Int = DiversityMinQuota): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val centroids = ivfQuantizer(spark, sfDir, nClusters).map(_._2)
+    val centroids = ivfQuantizer(spark, sfDir, IvfClusters).map(_._2)
     val assigned = emb.select(col("vec_id"),
       graft.functions.argmax_cosine(col("embedding"), centroids)
         .as("cluster"))
@@ -1858,8 +1858,7 @@ object Similarity {
   /** DuckDB oracle for [[diversitySample]]: seeds → assignment →
     * sizes → integer quota → hash-rank filter, verbatim.
     */
-  def diversitySampleSql(nClusters: Int = 16, totalQuota: Int = 1024,
-      minQuota: Int = 8): String =
+  def diversitySampleSql: String =
     s"""WITH seeds AS (
        |  SELECT CAST(row_number() OVER (
        |           ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS INT)
@@ -1867,7 +1866,7 @@ object Similarity {
        |         embedding AS centroid
        |  FROM embeddings
        |  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $nClusters),
+       |  LIMIT $IvfClusters),
        |assigned AS (
        |  SELECT vec_id, cluster FROM (
        |    SELECT e.vec_id, s.cluster,
@@ -1880,7 +1879,7 @@ object Similarity {
        |n AS (SELECT COUNT(*) AS n FROM assigned),
        |quotas AS (
        |  SELECT cluster, n_c,
-       |    GREATEST($minQuota, $totalQuota * n_c // n.n) AS quota
+       |    GREATEST($DiversityMinQuota, $DiversityQuota * n_c // n.n) AS quota
        |  FROM sizes CROSS JOIN n),
        |ranked AS (
        |  SELECT cluster, vec_id,
@@ -1941,6 +1940,9 @@ object Similarity {
     }
   }
 
+  val EmbNeardupThreshold = 0.95 // near-duplicate cosine (q25)
+  val EmbNeardupMaxCandPerVec: Long = 6144 // probe candidates per vector
+
   /** Embedding near-duplicate pairs: cosine >= threshold, candidates
     * restricted to pairs agreeing on at least one sign-LSH band (truly
     * near-identical vectors agree on nearly every hyperplane sign, so
@@ -1948,7 +1950,7 @@ object Similarity {
     * happens — only band-local pairs are scored, and the dial ADAPTS:
     * the loosest [[NeardupDialLadder]] rung whose predicted candidate
     * volume (from the O(n) signature histogram, computed BEFORE any
-    * pair is generated) fits `maxCandPerVec` is chosen per corpus.
+    * pair is generated) fits `EmbNeardupMaxCandPerVec` is chosen per corpus.
     * Round 11's fixed 4×4 dial ground a 464M-pair join at sf3 and then
     * refused; round 12 closes the loop — measured per-vector rates at
     * 4×4: sf0.1 ~258, sf1 ~2581, sf3 ~7736 > 6144 → sf3 now picks 2×8
@@ -1963,7 +1965,7 @@ object Similarity {
     * choice in SQL instead of hard-coding one.
     */
   def embeddingNeardup(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.95, maxCandPerVec: Long = 6144): DataFrame = {
+      threshold: Double = EmbNeardupThreshold): DataFrame = {
     // spread before banding: sig + the candidate join probe fuse into
     // the scan stage (single-row-group inputs = one task otherwise)
     val emb = Tables.spread(Tables.embeddings(spark, sfDir))
@@ -1978,7 +1980,7 @@ object Similarity {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val nVecs = hist.map(_._2).sum
     val ((nBands, bitsPerBand), predicted) =
-      chooseNeardupDial(hist, nVecs, maxCandPerVec)
+      chooseNeardupDial(hist, nVecs, EmbNeardupMaxCandPerVec)
     val mask = (1 << bitsPerBand) - 1
     val banded = sigFrame.select(col("vec_id"),
       explode(expr(
@@ -2046,8 +2048,7 @@ object Similarity {
     * ceiling, then bands with the chosen dial. All (bits, band) rungs
     * are enumerated as a VALUES list so no lateral UNNEST is needed.
     */
-  def embeddingNeardupSql(threshold: Double = 0.95,
-      maxCandPerVec: Long = 6144): String =
+  def embeddingNeardupSql(threshold: Double = EmbNeardupThreshold): String =
     s"""WITH sigs AS (
        |  SELECT vec_id, embedding, ${lshSigExprDuck("embedding")} AS sig
        |  FROM embeddings),
@@ -2062,7 +2063,7 @@ object Similarity {
        |vols AS (
        |  SELECT bits, SUM(n_bv * (n_bv - 1) // 2) AS vol
        |  FROM buckets GROUP BY 1),
-       |lim AS (SELECT $maxCandPerVec * COALESCE(SUM(c), 0) AS lim FROM hist),
+       |lim AS (SELECT $EmbNeardupMaxCandPerVec * COALESCE(SUM(c), 0) AS lim FROM hist),
        |dial AS (
        |  SELECT CASE
        |    WHEN v.vol4 <= l.lim THEN 4
@@ -2099,13 +2100,9 @@ object Similarity {
     * Threshold in e-notation so DuckDB keeps the comparison in the
     * same IEEE double tree Spark evaluates.
     */
-  def streamingEmbeddingNeardupSql(nBatches: Int = 2,
-      threshold: String = "0.35e0",
-      // banding dial mirrored from streamingEmbeddingNeardup's Scala
-      // defaults (round-14 ADVICE #3: the 2x8 rung was hardcoded here,
-      // so a q210 variant registered at another rung would silently
-      // hash-mismatch instead of banding identically)
-      nBandsDial: Int = 2, bitsPerBand: Int = 8): String = {
+  def streamingEmbeddingNeardupSql(
+      nBandsDial: Int = EventStreams.StreamEmbBands,
+      bitsPerBand: Int = EventStreams.StreamEmbBitsPerBand): String = {
     require(nBandsDial * bitsPerBand <= 16,
       s"dial ${nBandsDial}x$bitsPerBand exceeds the 16-bit signature")
     val mask = (1 << bitsPerBand) - 1
@@ -2115,7 +2112,7 @@ object Similarity {
        |mx AS (SELECT MAX(vec_id) + 1 AS m FROM sigs),
        |vb AS MATERIALIZED (
        |  SELECT s.vec_id,
-       |    CAST((s.vec_id * $nBatches) // mx.m AS BIGINT) AS batch_idx
+       |    CAST((s.vec_id * ${EventStreams.ReplayFiles}) // mx.m AS BIGINT) AS batch_idx
        |  FROM sigs s CROSS JOIN mx),
        |banded AS MATERIALIZED (
        |  SELECT vec_id, r.b AS band_idx,
@@ -2135,9 +2132,9 @@ object Similarity {
        |pv AS MATERIALIZED (
        |  SELECT vbb.batch_idx, s.vec_b,
        |    COUNT(*) AS n_pairs_b,
-       |    MAX(CASE WHEN s.cosine >= $threshold THEN 1 ELSE 0 END)
+       |    MAX(CASE WHEN s.cosine >= ${EventStreams.StreamEmbThreshold}e0 THEN 1 ELSE 0 END)
        |      AS is_dup,
-       |    MAX(CASE WHEN s.cosine >= $threshold
+       |    MAX(CASE WHEN s.cosine >= ${EventStreams.StreamEmbThreshold}e0
        |          AND vba.batch_idx < vbb.batch_idx
        |        THEN 1 ELSE 0 END) AS by_hist
        |  FROM sc s
@@ -2146,7 +2143,7 @@ object Similarity {
        |  GROUP BY 1, 2),
        |led AS (
        |  SELECT r.batch_idx, COUNT(vb.vec_id) AS n_vecs
-       |  FROM (SELECT unnest(range(0, $nBatches)) AS batch_idx) r
+       |  FROM (SELECT unnest(range(0, ${EventStreams.ReplayFiles})) AS batch_idx) r
        |  LEFT JOIN vb ON vb.batch_idx = r.batch_idx
        |  GROUP BY 1),
        |agg AS (
@@ -2174,11 +2171,10 @@ object Similarity {
     * a left join over the equally bounded approx side; in production
     * this runs on a sampled query panel, never the full corpus.
     */
-  def annRecall(spark: SparkSession, sfDir: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame = {
-    val truth = knnBruteForce(spark, sfDir, nQueries, k)
+  def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
+    val truth = knnBruteForce(spark, sfDir, QueryBatch, TopK)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val approx = annLsh(spark, sfDir, nQueries, k)
+    val approx = annLsh(spark, sfDir)
       .select("query_id", "neighbor_id")
     approx
       .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
@@ -2186,11 +2182,11 @@ object Similarity {
       .agg(count(lit(1)).as("n_returned"),
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hits"))
       .withColumn("recall_ppm",
-        floor(col("n_hits") * 1000000 / lit(k)).cast("long"))
+        floor(col("n_hits") * 1000000 / lit(TopK)).cast("long"))
       .orderBy("query_id")
   }
 
-  def annRecallSql(nQueries: Int = 10, k: Int = 5): String = {
+  def annRecallSql: String = {
     // per the SNIPPETS stripMargin rule: never stripMargin a template
     // with interpolated SQL inside — substitute AFTER stripMargin
     val template =
@@ -2200,14 +2196,14 @@ object Similarity {
          |  CAST(SUM(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_hits,
          |  CAST(FLOOR(SUM(CASE WHEN t.neighbor_id IS NOT NULL
-         |      THEN 1 ELSE 0 END) * 1000000 / $k) AS BIGINT) AS recall_ppm
+         |      THEN 1 ELSE 0 END) * 1000000 / $TopK) AS BIGINT) AS recall_ppm
          |FROM approx a LEFT JOIN truth t
          |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
          |GROUP BY a.query_id
          |ORDER BY a.query_id""".stripMargin
     template
-      .replace("@TRUTH@", knnBruteForceSql(nQueries, k))
-      .replace("@APPROX@", annLshSql(nQueries, k))
+      .replace("@TRUTH@", knnBruteForceSql)
+      .replace("@APPROX@", annLshSql)
   }
 
   /** The (bands × bits) sweep configurations: every full-coverage split
@@ -2230,17 +2226,16 @@ object Similarity {
     * contract); the truth side is k·nQueries rows broadcast once. The
     * sweep output is bounded by |configs|.
     */
-  def annConfigSweep(spark: SparkSession, sfDir: String,
-      nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def annConfigSweep(spark: SparkSession, sfDir: String): DataFrame = {
     // round-16 §2.4: the brute-force truth subtree fed FOUR broadcast
     // builds (one per sweep config); checkpoint its k·nQueries rows
     // once so every broadcast ships materialized blocks
-    val truth = knnBruteForce(spark, sfDir, nQueries, k)
+    val truth = knnBruteForce(spark, sfDir, QueryBatch, TopK)
       .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       .localCheckpoint(true)
     SweepConfigs.map { case (nb, bits) =>
-      val cand = annLshCandidates(spark, sfDir, nQueries, nb, bits)
-      val hits = lshTopK(spark, sfDir, cand, nQueries, k)
+      val cand = annLshCandidates(spark, sfDir, QueryBatch, nb, bits)
+      val hits = lshTopK(spark, sfDir, cand, QueryBatch, TopK)
         .join(broadcast(truth), Seq("query_id", "neighbor_id"), "left")
         // outer coalesce: a config with ZERO candidate pairs sums over
         // an empty frame -> NULL, and NULL ordering diverges between
@@ -2252,14 +2247,14 @@ object Similarity {
       hits.crossJoin(cost)
         .select(lit(nb).as("n_bands"), lit(bits).as("bits_per_band"),
           col("n_hits"),
-          expr(s"CAST(n_hits * 1000000 div ${nQueries * k} AS BIGINT)")
+          expr(s"CAST(n_hits * 1000000 div ${QueryBatch * TopK} AS BIGINT)")
             .as("recall_ppm"),
           col("n_cand_pairs"))
     }.reduce(_.unionByName(_))
       .orderBy(desc("recall_ppm"), asc("n_cand_pairs"), asc("n_bands"))
   }
 
-  def annConfigSweepSql(nQueries: Int = 10, k: Int = 5): String = {
+  def annConfigSweepSql: String = {
     val perConfig = SweepConfigs.map { case (nb, bits) =>
       s"""SELECT $nb AS n_bands, $bits AS bits_per_band,
          |  CAST(COALESCE((SELECT SUM(CASE WHEN t.neighbor_id IS NOT NULL
@@ -2270,7 +2265,7 @@ object Similarity {
          |          FROM scored_${nb}_$bits) tk
          |    LEFT JOIN truth t ON tk.query_id = t.query_id
          |      AND tk.neighbor_id = t.neighbor_id
-         |    WHERE tk.rank <= $k), 0) AS BIGINT) AS n_hits,
+         |    WHERE tk.rank <= $TopK), 0) AS BIGINT) AS n_hits,
          |  CAST(COALESCE((SELECT SUM(CASE WHEN t.neighbor_id IS NOT NULL
          |          THEN 1 ELSE 0 END)
          |    FROM (SELECT query_id, neighbor_id, ROW_NUMBER() OVER (
@@ -2279,7 +2274,7 @@ object Similarity {
          |          FROM scored_${nb}_$bits) tk
          |    LEFT JOIN truth t ON tk.query_id = t.query_id
          |      AND tk.neighbor_id = t.neighbor_id
-         |    WHERE tk.rank <= $k), 0) * 1000000 // ${nQueries * k} AS BIGINT)
+         |    WHERE tk.rank <= $TopK), 0) * 1000000 // ${QueryBatch * TopK} AS BIGINT)
          |    AS recall_ppm,
          |  (SELECT COUNT(*) FROM cands_${nb}_$bits) AS n_cand_pairs""".stripMargin
     }.mkString("\nUNION ALL\n")
@@ -2293,7 +2288,7 @@ object Similarity {
          |  SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id
          |  FROM banded_${nb}_$bits q JOIN banded_${nb}_$bits e
          |    ON q.band_key = e.band_key AND e.vec_id <> q.vec_id
-         |  WHERE q.vec_id < $nQueries),
+         |  WHERE q.vec_id < $QueryBatch),
          |scored_${nb}_$bits AS (
          |  SELECT c.query_id, c.neighbor_id,
          |    ${cosineExprDuck("qe.embedding", "ce.embedding")} AS cosine
@@ -2311,7 +2306,7 @@ object Similarity {
        |$perConfig)
        |ORDER BY recall_ppm DESC, n_cand_pairs ASC, n_bands ASC"""
       .stripMargin
-      .replace("@TRUTH@", knnBruteForceSql(nQueries, k))
+      .replace("@TRUTH@", knnBruteForceSql)
   }
 
   // ---------------------------------------------------------------- kmeans
@@ -2356,6 +2351,9 @@ object Similarity {
     best.select(out: _*)
   }
 
+  val KmeansK = 8 // clusters fitted by the k-means query
+  val KmeansIters = 1 // Lloyd iterations of the k-means query
+
   /** Distributed Lloyd k-means over the embedding column (q128) — the
     * trained-quantizer completion of [[annIvf]]'s sample seeding, and
     * the clustering deliverable itself: per cluster, size, mean cosine
@@ -2384,8 +2382,8 @@ object Similarity {
     * bounded TakeOrdered the IVF quantizer does, and iteration state
     * lives in the lazy plan, not the driver.
     */
-  def kmeans(spark: SparkSession, sfDir: String, k: Int = 8,
-      iters: Int = 1): DataFrame = {
+  def kmeans(spark: SparkSession, sfDir: String, k: Int = KmeansK,
+      iters: Int = KmeansIters): DataFrame = {
     // materialize the vectors once (MLlib's iterative-input persist,
     // the Graph.pagerank idiom): the lazy iteration chain otherwise
     // re-decodes the parquet scan on every one of the iters+2 passes
@@ -2457,7 +2455,7 @@ object Similarity {
     * iteration), final reassign, summarize — the full iterative fit
     * restated in SQL.
     */
-  def kmeansSql(k: Int = 8, iters: Int = 1): String = {
+  def kmeansSql(iters: Int = KmeansIters): String = {
     val assign = (centCte: String) =>
       s"""SELECT vec_id, embedding, label, cluster, cos FROM (
          |    SELECT e.vec_id, e.embedding, e.label, c.cluster,
@@ -2487,7 +2485,7 @@ object Similarity {
        |    SELECT vec_id, embedding, row_number() OVER (
        |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
        |    FROM embeddings)
-       |  WHERE rn <= $k),
+       |  WHERE rn <= $KmeansK),
        |dims AS (SELECT CAST(unnest(range(1, $Dim + 1)) AS INT) AS dim),
        |$iterCtes,
        |afin AS (
@@ -2507,6 +2505,10 @@ object Similarity {
        |FROM stats s JOIN maj m ON s.cluster = m.cluster
        |ORDER BY s.cluster""".stripMargin
   }
+
+  val HybridQueryVec = 0L // the query vector of the hybrid search
+  val HybridDepth = 50 // depth of each rank list the hybrid search fuses
+  val HybridK = 20 // fused results kept by the hybrid search
 
   /** q184 — HYBRID retrieval with RECIPROCAL RANK FUSION: the standard
     * production search stack (lexical BM25 + dense vector ranking fused
@@ -2531,15 +2533,14 @@ object Similarity {
     * q24/q34/q144 ladder — rank lists are interchangeable above the
     * fusion); the fusion itself joins two ≤N-row frames.
     */
-  def hybridRrfSearch(spark: SparkSession, sfDir: String,
-      terms: Seq[String] = Seq("scan", "join", "hash"),
-      queryVec: Long = 0, n: Int = 50, k: Int = 20): DataFrame = {
+  def hybridRrfSearch(spark: SparkSession, sfDir: String): DataFrame = {
     val wText = Window.orderBy(desc("score"), asc("doc_id"))
-    val text = TextAnalysis.bm25Search(spark, sfDir, terms, n)
+    val text = TextAnalysis
+      .bm25Search(spark, sfDir, TextAnalysis.SearchTerms, HybridDepth)
       .withColumn("text_rank", row_number().over(wText).cast("long"))
       .select(col("doc_id"), col("text_rank"))
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") === queryVec)
+    val q = emb.filter(col("vec_id") === HybridQueryVec)
       .select(col("embedding").as("q_emb"))
     // Distributed top-n FIRST (TakeOrderedAndProject, the q01 idiom),
     // THEN rank the <=n-row frame: ranking 1..n of the global
@@ -2549,13 +2550,13 @@ object Similarity {
     // exchange. (Round-10 verdict: the old global un-partitioned window
     // funneled the whole embeddings scan through one task.)
     val wVec = Window.orderBy(desc("cosine"), asc("vec_id"))
-    val vec = emb.filter(col("vec_id") =!= queryVec)
+    val vec = emb.filter(col("vec_id") =!= HybridQueryVec)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         graft.functions.cosine_sim(col("q_emb"), col("embedding"))
           .as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
-      .limit(n)
+      .limit(HybridDepth)
       .withColumn("vec_rank", row_number().over(wVec).cast("long"))
       .select(col("vec_id").as("doc_id"), col("vec_rank"))
     val tTerm = when(col("text_rank").isNull, lit(0.0))
@@ -2568,16 +2569,15 @@ object Similarity {
         coalesce(col("vec_rank"), lit(-1L)).as("vec_rank"),
         (tTerm + vTerm).as("rrf"))
       .orderBy(desc("rrf"), asc("doc_id"))
-      .limit(k)
+      .limit(HybridK)
   }
 
   /** Oracle for [[hybridRrfSearch]]: both rank lists restated (the q171
     * BM25 tree verbatim, the q23 fold cosine), the same outer fusion and
     * RRF arithmetic — e-notation literals so DuckDB keeps the IEEE tree.
     */
-  def hybridRrfSearchSql(terms: Seq[String] = Seq("scan", "join", "hash"),
-      queryVec: Long = 0, n: Int = 50, k: Int = 20): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
+  def hybridRrfSearchSql: String = {
+    val inList = TextAnalysis.SearchTerms.map(t => s"'$t'").mkString(", ")
     s"""WITH tk AS (
        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tks
        |  FROM documents),
@@ -2600,20 +2600,20 @@ object Similarity {
        |  FROM postings p JOIN w ON p.t = w.t),
        |bm AS (
        |  SELECT doc_id, SUM(contrib) AS score FROM scored GROUP BY doc_id
-       |  ORDER BY score DESC, doc_id LIMIT $n),
+       |  ORDER BY score DESC, doc_id LIMIT $HybridDepth),
        |trank AS (
        |  SELECT doc_id, CAST(row_number() OVER (
        |    ORDER BY score DESC, doc_id) AS BIGINT) AS text_rank FROM bm),
        |qv AS (SELECT embedding AS q_emb FROM embeddings
-       |       WHERE vec_id = $queryVec),
+       |       WHERE vec_id = $HybridQueryVec),
        |vs AS (
        |  SELECT e.vec_id AS doc_id,
        |    ${cosineExprDuck("q_emb", "e.embedding")} AS cosine
-       |  FROM embeddings e, qv WHERE e.vec_id <> $queryVec),
+       |  FROM embeddings e, qv WHERE e.vec_id <> $HybridQueryVec),
        |vrank AS (
        |  SELECT doc_id, CAST(row_number() OVER (
        |    ORDER BY cosine DESC, doc_id) AS BIGINT) AS vec_rank
-       |  FROM vs QUALIFY vec_rank <= $n)
+       |  FROM vs QUALIFY vec_rank <= $HybridDepth)
        |SELECT COALESCE(t.doc_id, v.doc_id) AS doc_id,
        |  COALESCE(t.text_rank, -1) AS text_rank,
        |  COALESCE(v.vec_rank, -1) AS vec_rank,
@@ -2623,6 +2623,6 @@ object Similarity {
        |          ELSE 1.0e0 / (6.0e1 + CAST(v.vec_rank AS DOUBLE)) END)
        |    AS rrf
        |FROM trank t FULL OUTER JOIN vrank v ON t.doc_id = v.doc_id
-       |ORDER BY rrf DESC, doc_id LIMIT $k""".stripMargin
+       |ORDER BY rrf DESC, doc_id LIMIT $HybridK""".stripMargin
   }
 }

@@ -134,12 +134,13 @@ object Star {
         .select(col("p_partkey").as("product_id")), "product_id", "product_key"),
       ("store", Tables.supplier(spark, sfDir)
         .select(col("s_suppkey").as("store_id")), "store_id", "store_key"))
-    val pool = Tables.overlapPool(keySources.size)
-    val Seq(cust, prod, store) = try Tables.joinAll(keySources.map {
-      case (dim, df, id, key) =>
-        Tables.submitJob(pool, spark, s"fact_sales: rank $dim keys")(
-          ScalableKeys.withRankByKey(df, id, key))
-    }) finally pool.shutdown()
+    val Seq(cust, prod, store) =
+      Tables.overlapped(spark, keySources.size) { ov =>
+        keySources.map { case (dim, df, id, key) =>
+          ov.submit(s"fact_sales: rank $dim keys")(
+            ScalableKeys.withRankByKey(df, id, key))
+        }.map(_.get())
+      }
 
     // The rank-keyed dims pass through an RDD hop, so their own plans
     // carry no size statistics; each gate sizes on the dim's source

@@ -146,19 +146,20 @@ object StatQa {
       |FROM m
       |ORDER BY c_mktsegment, r_name""".stripMargin
 
+  val AnomalyZ = 3.0 // z-score beyond which a day is anomalous
+
   /** Daily revenue anomaly flags: each ship-day's revenue z-scored
     * against the corpus-wide daily mean/stddev, computed from exact
     * decimal moment sums at day grain (the [[Features.exactCorr]]
     * reproducible-statistics pattern — no double partial sums). Days
-    * with |z| > `zCut` flag as anomalies.
+    * with |z| > `AnomalyZ` flag as anomalies.
     *
     * Scale shape: the fact collapses to day grain in one exchange;
     * moments and z-scores live on the bounded day frame (windows over
     * ~thousands of rows, partitioned arbitrarily — here a grand-total
     * window documented dim-sized like q06).
     */
-  def dailyAnomalies(spark: SparkSession, sfDir: String,
-      zCut: Double = 3.0): DataFrame = {
+  def dailyAnomalies(spark: SparkSession, sfDir: String): DataFrame = {
     // Moments on SCALED INTEGERS + Features.decToDouble keep every
     // value engine-identical at any sf (a decimal square would get
     // different result scales in Spark vs DuckDB, and raw sums overflow
@@ -190,12 +191,12 @@ object StatQa {
         (col("s1fd") * col("s1fd")) / col("n").cast("double")) /
         col("n").cast("double")))
       .withColumn("z", (col("revenue") - col("mean")) / col("sd"))
-      .withColumn("is_anomaly", (abs(col("z")) > zCut).cast("int"))
+      .withColumn("is_anomaly", (abs(col("z")) > AnomalyZ).cast("int"))
       .select("day", "revenue", "mean", "sd", "z", "is_anomaly")
       .orderBy("day")
   }
 
-  def dailyAnomaliesSql(zCut: Double = 3.0): String =
+  def dailyAnomaliesSql: String =
     s"""WITH daily AS (
        |  SELECT CAST(l_shipdate AS DATE) AS day,
        |    SUM(${Insights.revenueSql}) AS rev_dec
@@ -224,7 +225,7 @@ object StatQa {
        |  FROM m)
        |SELECT day, revenue, mean, sd,
        |  (revenue - mean) / sd AS z,
-       |  CAST(abs((revenue - mean) / sd) > $zCut AS INT) AS is_anomaly
+       |  CAST(abs((revenue - mean) / sd) > $AnomalyZ AS INT) AS is_anomaly
        |FROM z
        |ORDER BY day""".stripMargin
 
@@ -294,6 +295,8 @@ object StatQa {
        |FROM agg
        |ORDER BY p_type""".stripMargin
 
+  val HeavyHitterN = 20 // heavy hitters reported
+
   /** Heavy-hitter key audit: the top-N event users by row count with
     * their corpus share in exact ppm — the skew-diagnosis input that
     * decides whether a key needs [[Salting]] or an AQE skew-join hint
@@ -302,8 +305,7 @@ object StatQa {
     * no second events scan) and rides along as a 1-row broadcast.
     * Integer ppm (bigint div) keeps shares engine-exact.
     */
-  def heavyHitters(spark: SparkSession, sfDir: String,
-      topN: Int = 20): DataFrame = {
+  def heavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     val g = Tables.events(spark, sfDir)
       .groupBy("user_id").agg(count(lit(1)).as("cnt"))
     val total = g.agg(sum("cnt").as("total_events"))
@@ -312,10 +314,10 @@ object StatQa {
         expr("CAST(cnt * 1000000 div total_events AS BIGINT)")
           .as("share_ppm"))
       .orderBy(col("cnt").desc, col("user_id"))
-      .limit(topN)
+      .limit(HeavyHitterN)
   }
 
-  def heavyHittersSql(topN: Int = 20): String =
+  def heavyHittersSql: String =
     s"""WITH g AS (
        |  SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id),
        |t AS (SELECT SUM(cnt) AS total_events FROM g)
@@ -323,7 +325,9 @@ object StatQa {
        |  CAST(cnt * 1000000 // total_events AS BIGINT) AS share_ppm
        |FROM g, t
        |ORDER BY cnt DESC, user_id
-       |LIMIT $topN""".stripMargin
+       |LIMIT $HeavyHitterN""".stripMargin
+
+  val HeavyHitterCapacity = 1024 // candidates the approximate sketch keeps
 
   /** Approximate heavy hitters — the 100 TB twin of [[heavyHitters]]
     * for key domains too large to count exactly (exact needs a
@@ -331,10 +335,10 @@ object StatQa {
     * billion-row exchange just to find 20 keys). Candidate+verify
     * shape:
     *
-    *   1. per-partition Misra-Gries summaries (bounded `capacity`
-    *      counters, amortized O(1)/row — the one justified
-    *      `mapPartitions`: genuinely imperative bounded-state
-    *      streaming). Any key with global count > n/capacity is
+    *   1. per-partition Misra-Gries summaries (bounded
+    *      `HeavyHitterCapacity` counters, amortized O(1)/row — the
+    *      one justified `mapPartitions`: genuinely imperative
+    *      bounded-state streaming). Any key with global count > n/capacity is
     *      GUARANTEED to survive some partition's summary (averaging
     *      argument), so candidate recall is provable, not heuristic.
     *   2. one exact re-count of the ≤ partitions×capacity candidates
@@ -361,10 +365,9 @@ object StatQa {
     * units), so the classical n/capacity bound is implied; the Σd_p
     * form is far tighter on real data (64 vs 97.66 at sf0.1).
     */
-  def approxHeavyHitters(spark: SparkSession, sfDir: String,
-      topN: Int = 20, capacity: Int = 1024): DataFrame = {
+  def approxHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
-    approxHeavyHittersFrom(ev, "user_id", topN, capacity)
+    approxHeavyHittersFrom(ev, "user_id", HeavyHitterN, HeavyHitterCapacity)
   }
 
   /** [[approxHeavyHitters]] over an explicit frame/key (testability:
@@ -460,6 +463,10 @@ object StatQa {
     }
   }
 
+  val CmsDepth = 4 // count-min sketch rows
+  val CmsWidth = 1024 // count-min sketch columns
+  val CmsTopK = 10 // keys reported from the count-min cells
+
   /** q161 — mergeable COUNT-MIN shard cells, the q137/q150 pattern for
     * point-frequency queries (q137 = distinct counts, q150 =
     * percentiles, this = per-key counts): every ingest shard (here:
@@ -486,10 +493,10 @@ object StatQa {
     * grid; query keys broadcast. Error: overcount ≤ e·N/width w.h.p. —
     * width is the dial, counters are BIGINTs, cells shard-parallel.
     */
-  def cmsShardCells(spark: SparkSession, sfDir: String, depth: Int = 4,
-      width: Int = 1024, topK: Int = 10): DataFrame = {
+  def cmsShardCells(spark: SparkSession, sfDir: String,
+      width: Int = CmsWidth): DataFrame = {
     val bucketExpr = (keyCol: String) =>
-      s"""transform(sequence(0, ${depth - 1}), i ->
+      s"""transform(sequence(0, ${CmsDepth - 1}), i ->
          |  pmod(CAST(conv(substring(md5(CAST(concat(CAST(i AS STRING),
          |    '|', CAST($keyCol AS STRING)) AS BINARY)), 1, 15), 16, 10)
          |    AS BIGINT), ${width}L))""".stripMargin
@@ -508,7 +515,7 @@ object StatQa {
     val exact = Tables.events(spark, sfDir)
       .groupBy("user_id").agg(count(lit(1)).as("exact_cnt"))
       .orderBy(desc("exact_cnt"), asc("user_id"))
-      .limit(topK)
+      .limit(CmsTopK)
     val qcoords = exact
       .select(col("user_id"), col("exact_cnt"),
         posexplode(expr(bucketExpr("user_id"))).as(Seq("i", "b")))
@@ -523,8 +530,7 @@ object StatQa {
   /** DuckDB oracle for [[cmsShardCells]]: the identical grid — same
     * md5 buckets, same shard cells, same merge, same min.
     */
-  def cmsShardCellsSql(depth: Int = 4, width: Int = 1024,
-      topK: Int = 10): String =
+  def cmsShardCellsSql: String =
     s"""WITH ev AS (
        |  SELECT user_id,
        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS shard
@@ -532,8 +538,8 @@ object StatQa {
        |coords AS (
        |  SELECT user_id, shard, CAST(t.i AS INT) AS i,
        |    CAST(('0x' || substr(md5(t.i || '|' || user_id), 1, 15))
-       |      AS BIGINT) % $width AS b
-       |  FROM ev CROSS JOIN range(0, $depth) t(i)),
+       |      AS BIGINT) % $CmsWidth AS b
+       |  FROM ev CROSS JOIN range(0, $CmsDepth) t(i)),
        |cells AS (
        |  SELECT shard, i, b, COUNT(*) AS cnt FROM coords GROUP BY 1, 2, 3),
        |merged AS (
@@ -541,18 +547,20 @@ object StatQa {
        |  FROM cells GROUP BY 1, 2),
        |exact AS (
        |  SELECT user_id, COUNT(*) AS exact_cnt FROM events
-       |  GROUP BY 1 ORDER BY exact_cnt DESC, user_id LIMIT $topK),
+       |  GROUP BY 1 ORDER BY exact_cnt DESC, user_id LIMIT $CmsTopK),
        |qc AS (
        |  SELECT e.user_id, e.exact_cnt, CAST(t.i AS INT) AS i,
        |    CAST(('0x' || substr(md5(t.i || '|' || e.user_id), 1, 15))
-       |      AS BIGINT) % $width AS b
-       |  FROM exact e CROSS JOIN range(0, $depth) t(i))
+       |      AS BIGINT) % $CmsWidth AS b
+       |  FROM exact e CROSS JOIN range(0, $CmsDepth) t(i))
        |SELECT q.user_id, CAST(q.exact_cnt AS BIGINT) AS exact_cnt,
        |  CAST(MIN(m.cnt) AS BIGINT) AS cms_est,
        |  CAST(MIN(m.cnt) - q.exact_cnt AS BIGINT) AS overcount
        |FROM qc q JOIN merged m ON q.i = m.i AND q.b = m.b
        |GROUP BY q.user_id, q.exact_cnt
        |ORDER BY exact_cnt DESC, user_id""".stripMargin
+
+  val KmvK = 256 // bottom-k size of the KMV distinct cells
 
   /** q178 — mergeable K-MINIMUM-VALUES distinct sketch cells: the
     * fourth member of the sketch-shard family (q137 HLL, q150
@@ -575,7 +583,7 @@ object StatQa {
     * exact semantics (any engine with md5 reproduces it bit-for-bit).
     */
   def kmvShardCells(spark: SparkSession, sfDir: String,
-      k: Int = 256): DataFrame = {
+      k: Int = KmvK): DataFrame = {
     val hashExpr =
       "CAST(conv(substring(md5(CAST(CAST(user_id AS STRING) AS BINARY))" +
         ", 1, 15), 16, 10) AS BIGINT)"
@@ -610,7 +618,7 @@ object StatQa {
     * merge, direct bottom-K and estimate arithmetic — merged_kth ==
     * direct_kth in the output IS the merge-property proof.
     */
-  def kmvShardCellsSql(k: Int = 256): String =
+  def kmvShardCellsSql: String =
     s"""WITH ev AS (
        |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS shard,
        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
@@ -621,13 +629,13 @@ object StatQa {
        |    SELECT shard, h,
        |      row_number() OVER (PARTITION BY shard ORDER BY h) AS rk
        |    FROM ev) r
-       |  WHERE rk <= $k),
+       |  WHERE rk <= $KmvK),
        |mergedk AS (
        |  SELECT h FROM (SELECT DISTINCT h FROM cells) u
-       |  ORDER BY h LIMIT $k),
+       |  ORDER BY h LIMIT $KmvK),
        |directk AS (
        |  SELECT h FROM (SELECT DISTINCT h FROM ev) u
-       |  ORDER BY h LIMIT $k)
+       |  ORDER BY h LIMIT $KmvK)
        |SELECT
        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM cells) AS n_cells,
        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM mergedk) AS k_used,
@@ -638,6 +646,8 @@ object StatQa {
        |    / CAST((SELECT MAX(h) FROM mergedk) AS DOUBLE) AS distinct_est,
        |  (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM events)
        |    AS exact_distinct""".stripMargin
+
+  val DistinctWindowDays = 7 // rolling distinct window, in days
 
   /** q183 — ROLLING-WINDOW distinct users from the persisted daily KMV
     * cells: the production dashboard query the q178 cell table exists
@@ -659,8 +669,7 @@ object StatQa {
     * is computed here only as the self-check and stays a broadcast
     * range join + one distinct exchange.
     */
-  def rollingDistinctCells(spark: SparkSession, sfDir: String,
-      k: Int = 256, windowDays: Int = 7): DataFrame = {
+  def rollingDistinctCells(spark: SparkSession, sfDir: String): DataFrame = {
     val hashExpr =
       "CAST(conv(substring(md5(CAST(CAST(user_id AS STRING) AS BINARY))" +
         ", 1, 15), 16, 10) AS BIGINT)"
@@ -670,29 +679,29 @@ object StatQa {
     val cells = ev
       .withColumn("rk",
         row_number().over(Window.partitionBy("shard").orderBy("h")))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= KmvK)
       .select("shard", "h")
     val days = broadcast(ev.select(col("shard").as("day")).distinct())
     def windowed(src: DataFrame): DataFrame = days
       .join(src, col("shard").between(
-        date_sub(col("day"), windowDays - 1), col("day")))
+        date_sub(col("day"), DistinctWindowDays - 1), col("day")))
       .select("day", "h").distinct()
     val wByDay = Window.partitionBy("day").orderBy("h")
     val fromCells = windowed(cells)
       .withColumn("rk", row_number().over(wByDay))
       .groupBy("day")
-      .agg(sum((col("rk") <= k).cast("long")).as("k_used"),
-        max(when(col("rk") <= k, col("h"))).as("cell_kth"),
+      .agg(sum((col("rk") <= KmvK).cast("long")).as("k_used"),
+        max(when(col("rk") <= KmvK, col("h"))).as("cell_kth"),
         count(lit(1)).as("n_cell_keys"))
     val direct = windowed(ev)
       .withColumn("rk", row_number().over(wByDay))
       .groupBy("day")
-      .agg(max(when(col("rk") <= k, col("h"))).as("direct_kth"),
+      .agg(max(when(col("rk") <= KmvK, col("h"))).as("direct_kth"),
         count(lit(1)).as("exact_distinct"))
     fromCells.join(direct, Seq("day"))
       .select(col("day"), col("k_used"),
         col("cell_kth"), col("direct_kth"),
-        when(col("k_used") < k, col("k_used").cast("double"))
+        when(col("k_used") < KmvK, col("k_used").cast("double"))
           .otherwise(expr("""CAST(k_used - 1 AS DOUBLE)
             | * CAST(1152921504606846976 AS DOUBLE)
             | / CAST(cell_kth AS DOUBLE)""".stripMargin))
@@ -705,7 +714,7 @@ object StatQa {
     * merge, bottom-K and estimate arithmetic — cell_kth == direct_kth
     * on every row IS the per-window merge-property proof.
     */
-  def rollingDistinctCellsSql(k: Int = 256, windowDays: Int = 7): String =
+  def rollingDistinctCellsSql: String =
     s"""WITH ev AS (
        |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS shard,
        |    CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
@@ -716,45 +725,48 @@ object StatQa {
        |    SELECT shard, h,
        |      row_number() OVER (PARTITION BY shard ORDER BY h) AS rk
        |    FROM ev) r
-       |  WHERE rk <= $k),
+       |  WHERE rk <= $KmvK),
        |days AS (SELECT DISTINCT shard AS day FROM ev),
        |wcell AS (
        |  SELECT DISTINCT d.day, c.h
        |  FROM days d JOIN cells c
-       |    ON c.shard BETWEEN d.day - ${windowDays - 1} AND d.day),
+       |    ON c.shard BETWEEN d.day - ${DistinctWindowDays - 1} AND d.day),
        |rc AS (
        |  SELECT day, h,
        |    row_number() OVER (PARTITION BY day ORDER BY h) AS rk
        |  FROM wcell),
        |kc AS (
        |  SELECT day,
-       |    CAST(SUM(CASE WHEN rk <= $k THEN 1 ELSE 0 END) AS BIGINT)
+       |    CAST(SUM(CASE WHEN rk <= $KmvK THEN 1 ELSE 0 END) AS BIGINT)
        |      AS k_used,
-       |    MAX(CASE WHEN rk <= $k THEN h END) AS cell_kth
+       |    MAX(CASE WHEN rk <= $KmvK THEN h END) AS cell_kth
        |  FROM rc GROUP BY day),
        |wdir AS (
        |  SELECT DISTINCT d.day, e.h
        |  FROM days d JOIN ev e
-       |    ON e.shard BETWEEN d.day - ${windowDays - 1} AND d.day),
+       |    ON e.shard BETWEEN d.day - ${DistinctWindowDays - 1} AND d.day),
        |rd AS (
        |  SELECT day, h,
        |    row_number() OVER (PARTITION BY day ORDER BY h) AS rk
        |  FROM wdir),
        |kd AS (
        |  SELECT day,
-       |    MAX(CASE WHEN rk <= $k THEN h END) AS direct_kth,
+       |    MAX(CASE WHEN rk <= $KmvK THEN h END) AS direct_kth,
        |    CAST(COUNT(*) AS BIGINT) AS exact_distinct
        |  FROM rd GROUP BY day)
        |SELECT kc.day, kc.k_used,
        |  CAST(kc.cell_kth AS BIGINT) AS cell_kth,
        |  CAST(kd.direct_kth AS BIGINT) AS direct_kth,
-       |  CASE WHEN kc.k_used < $k THEN CAST(kc.k_used AS DOUBLE)
+       |  CASE WHEN kc.k_used < $KmvK THEN CAST(kc.k_used AS DOUBLE)
        |       ELSE CAST(kc.k_used - 1 AS DOUBLE)
        |         * CAST(1152921504606846976 AS DOUBLE)
        |         / CAST(kc.cell_kth AS DOUBLE) END AS distinct_est,
        |  kd.exact_distinct
        |FROM kc JOIN kd ON kc.day = kd.day
        |ORDER BY kc.day""".stripMargin
+
+  val DriftBins = 20 // histogram bins of the value-drift check
+  val DriftBinWidth = 25.0 // bin width of the value-drift histogram
 
   /** q152 — distribution DRIFT between two halves of the event
     * stream, the screen every training-data pipeline runs before
@@ -781,8 +793,7 @@ object StatQa {
     * frame. At 100 TB this is the cheapest possible shape: drift
     * needs no sort, no window, no sample.
     */
-  def valueDrift(spark: SparkSession, sfDir: String,
-      nBins: Int = 20, width: Double = 25.0): DataFrame = {
+  def valueDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("value"),
         expr("unix_micros(ts)").as("us"))
@@ -795,8 +806,8 @@ object StatQa {
         // (a wrapped-positive extreme value would mis-bin past the
         // greatest(0,...) guard) while the DuckDB oracle's INT cast
         // throws — BIGINT on both sides keeps extremes divergence-free
-        least(lit(nBins - 1L), greatest(lit(0L),
-          floor(col("value") / lit(width)).cast("long"))).as("bin"))
+        least(lit(DriftBins - 1L), greatest(lit(0L),
+          floor(col("value") / lit(DriftBinWidth)).cast("long"))).as("bin"))
     val grid = binned.groupBy("event_type", "period", "bin")
       .agg(count(lit(1)).as("n"))
     val totals = grid.groupBy("event_type", "period")
@@ -827,7 +838,7 @@ object StatQa {
   /** DuckDB oracle for [[valueDrift]]: identical integer pipeline —
     * epoch_us midpoint, same binning expression, same ppm floor-divs.
     */
-  def valueDriftSql(nBins: Int = 20, width: Double = 25.0): String =
+  def valueDriftSql: String =
     s"""WITH ev AS (
        |  SELECT event_type, value,
        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -836,8 +847,8 @@ object StatQa {
        |binned AS (
        |  SELECT event_type,
        |    CASE WHEN us <= mid THEN 0 ELSE 1 END AS period,
-       |    LEAST($nBins - 1, GREATEST(0,
-       |      CAST(FLOOR(value / $width) AS BIGINT))) AS bin
+       |    LEAST($DriftBins - 1, GREATEST(0,
+       |      CAST(FLOOR(value / $DriftBinWidth) AS BIGINT))) AS bin
        |  FROM ev CROSS JOIN mid),
        |grid AS (
        |  SELECT event_type, period, bin, COUNT(*) AS n

@@ -157,6 +157,8 @@ object TextAnalysis {
        |ORDER BY doc_id""".stripMargin
   }
 
+  val VocabSize = 100 // tokens kept by frequency
+
   /** Corpus vocabulary — the word-count shape every training pipeline
     * runs to build token statistics: explode to token grain, aggregate
     * term frequency and document frequency, keep the top of the
@@ -167,29 +169,31 @@ object TextAnalysis {
     * top-k is TakeOrderedAndProject. Ordering (tf desc, term asc) is
     * total, so the cutoff is deterministic.
     */
-  def vocabulary(spark: SparkSession, sfDir: String, topK: Int = 100): DataFrame =
+  def vocabulary(spark: SparkSession, sfDir: String): DataFrame =
     spreadDocs(spark, sfDir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .filter(col("term") =!= "")
       .groupBy("term")
       .agg(count(lit(1)).as("tf"), countDistinct(col("doc_id")).as("df"))
       .orderBy(desc("tf"), asc("term"))
-      .limit(topK)
+      .limit(VocabSize)
 
-  def vocabularySql(topK: Int = 100): String =
+  def vocabularySql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, unnest($tokensSql) AS term FROM documents)
        |SELECT term, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
        |FROM toks WHERE term <> ''
        |GROUP BY term
        |ORDER BY tf DESC, term ASC
-       |LIMIT $topK""".stripMargin
+       |LIMIT $VocabSize""".stripMargin
+
+  val TfidfTopK = 3 // terms kept per document by tf-idf
 
   /** TF-IDF-style term salience, log-free: score = tf × N / df (the
     * rational idf — monotone in the classic log form, so top-k per doc
     * is identical, and exactly reproducible: integer counts composed
     * with two IEEE ops, no transcendental whose last ulp could differ
-    * between libm and DuckDB). Keep the `topK` most salient terms per
+    * between libm and DuckDB). Keep the `TfidfTopK` most salient terms per
     * doc.
     *
     * Scale shape: tf is a (doc, term)-grain partial→final agg; df
@@ -197,7 +201,7 @@ object TextAnalysis {
     * 1-row broadcast; the per-doc top-k is a window partitioned by
     * doc_id with a total order.
     */
-  def tfidf(spark: SparkSession, sfDir: String, topK: Int = 3): DataFrame = {
+  def tfidf(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = spreadDocs(spark, sfDir)
     val toks = docs
@@ -213,12 +217,12 @@ object TextAnalysis {
       .withColumn("score",
         col("tf").cast("double") * col("n_docs") / col("df"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= TfidfTopK)
       .select("doc_id", "rank", "term", "tf", "df", "score")
       .orderBy("doc_id", "rank")
   }
 
-  def tfidfSql(topK: Int = 3): String =
+  def tfidfSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, unnest($tokensSql) AS term FROM documents),
        |tf AS (
@@ -236,7 +240,7 @@ object TextAnalysis {
        |    ORDER BY score DESC, term ASC) AS rank
        |  FROM scored)
        |SELECT doc_id, CAST(rank AS INT) AS rank, term, tf, df, score
-       |FROM ranked WHERE rank <= $topK
+       |FROM ranked WHERE rank <= $TfidfTopK
        |ORDER BY doc_id, rank""".stripMargin
 
   /** Language ID by stopword-hit voting: per language, count tokens in
@@ -296,37 +300,39 @@ object TextAnalysis {
         graft.functions.mingram_fp(col("text")).as("min_gram_fp"))
       .orderBy("doc_id")
 
+  val ChunkSize = 200 // chunk length, in characters
+  val ChunkStride = 150 // stride between chunk starts, in characters
+
   /** Fixed-window document chunking with overlap (the RAG/pretraining
-    * chunker): windows of `size` chars at `stride` intervals (overlap =
-    * size - stride). Map-side generate — posexplode over a per-row
+    * chunker): windows of `ChunkSize` chars at `ChunkStride` intervals
+    * (overlap = size - stride). Map-side generate — posexplode over a per-row
     * sequence, no shuffle except the presentation sort; at 100 TB the
     * chunk table never materializes doc text twice because the
     * substring is computed inside the generator's projection.
     */
-  def chunkDocs(spark: SparkSession, sfDir: String,
-      size: Int = 200, stride: Int = 150): DataFrame =
+  def chunkDocs(spark: SparkSession, sfDir: String): DataFrame =
     spreadDocs(spark, sfDir)
       .select(col("doc_id"),
         posexplode(expr(
-          s"""transform(sequence(0, greatest(length(text) - 1, 0) div $stride),
-             |  i -> substring(text, i * $stride + 1, $size))""".stripMargin))
+          s"""transform(sequence(0, greatest(length(text) - 1, 0) div $ChunkStride),
+             |  i -> substring(text, i * $ChunkStride + 1, $ChunkSize))""".stripMargin))
           .as(Seq("chunk_idx", "chunk")))
       .select(col("doc_id"), col("chunk_idx").cast("long").as("chunk_idx"),
         length(col("chunk")).as("chunk_len"),
         md5(col("chunk").cast("binary")).as("chunk_md5"))
       .orderBy("doc_id", "chunk_idx")
 
-  def chunkDocsSql(size: Int = 200, stride: Int = 150): String =
+  def chunkDocsSql: String =
     s"""SELECT doc_id, chunk_idx, CAST(length(chunk) AS INT) AS chunk_len,
        |  md5(chunk) AS chunk_md5
        |FROM (
        |  SELECT doc_id,
        |    unnest(range(0, nch)) AS chunk_idx,
        |    unnest(list_transform(range(0, nch),
-       |      i -> substr(text, CAST(i * $stride + 1 AS INT), $size))) AS chunk
+       |      i -> substr(text, CAST(i * $ChunkStride + 1 AS INT), $ChunkSize))) AS chunk
        |  FROM (
        |    SELECT doc_id, text,
-       |      greatest(length(text) - 1, 0) // $stride + 1 AS nch
+       |      greatest(length(text) - 1, 0) // $ChunkStride + 1 AS nch
        |    FROM documents))
        |ORDER BY doc_id, chunk_idx""".stripMargin
 
@@ -474,9 +480,11 @@ object TextAnalysis {
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
+  val TopBigrams = 200 // bigrams kept by frequency
+
   /** Bigram-coverage quality score — the integer-exact stand-in for an
     * LM-based quality filter: how much of each document's adjacent-word
-    * mass falls inside the corpus' own top-`topK` bigram vocabulary.
+    * mass falls inside the corpus' own top-`TopBigrams` bigram vocabulary.
     * Low coverage flags word-soup/mojibake/boilerplate-free-floating
     * text the way low LM likelihood would, with no transcendental in
     * sight (logprob sums differ in the last ulp between libm builds;
@@ -489,8 +497,7 @@ object TextAnalysis {
     * a per-doc partial-agg count. Docs with fewer than two tokens have
     * no bigram mass and are excluded (coverage is undefined there).
     */
-  def bigramCoverage(spark: SparkSession, sfDir: String,
-      topK: Int = 200): DataFrame = {
+  def bigramCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     // round-16 §2.4: both consumers (global top list, per-doc
     // coverage) explode the SAME tokenized frame — previously each ran
     // its own regex tokenize pass over every doc. Checkpoint the
@@ -510,7 +517,7 @@ object TextAnalysis {
         .as("bg"))
     val top = bigrams.groupBy("bg").agg(count(lit(1)).as("tf"))
       .orderBy(desc("tf"), asc("bg"))
-      .limit(topK)
+      .limit(TopBigrams)
       .select(col("bg"), lit(1).as("hit"))
     bigrams
       .join(broadcast(top), Seq("bg"), "left")
@@ -523,7 +530,7 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  def bigramCoverageSql(topK: Int = 200): String =
+  def bigramCoverageSql: String =
     s"""WITH tk AS (
        |  SELECT doc_id, list_filter($tokensSql, w -> w <> '') AS tks
        |  FROM documents),
@@ -535,7 +542,7 @@ object TextAnalysis {
        |top AS (
        |  SELECT bg FROM (
        |    SELECT bg, COUNT(*) AS tf FROM bg GROUP BY bg
-       |    ORDER BY tf DESC, bg ASC LIMIT $topK)),
+       |    ORDER BY tf DESC, bg ASC LIMIT $TopBigrams)),
        |cov AS (
        |  SELECT b.doc_id, COUNT(*) AS n_bigrams,
        |    CAST(SUM(CASE WHEN t.bg IS NOT NULL THEN 1 ELSE 0 END)
@@ -546,6 +553,9 @@ object TextAnalysis {
        |  CAST(n_covered * 1000000 // n_bigrams AS BIGINT) AS coverage_ppm
        |FROM cov
        |ORDER BY doc_id""".stripMargin
+
+  val SearchTerms = Seq("scan", "join", "hash") // keyword and BM25 query
+  val SearchK = 20 // documents each search returns
 
   /** q165 — KEYWORD SEARCH over the corpus, the sparse-retrieval
     * complement to the dense ANN family (q23/q24/q34/q138…): given a
@@ -564,14 +574,12 @@ object TextAnalysis {
     * query terms| rows; top-k is TakeOrderedAndProject, never a global
     * sort.
     */
-  def keywordSearch(spark: SparkSession, sfDir: String,
-      terms: Seq[String] = Seq("scan", "join", "hash"),
-      k: Int = 20): DataFrame = {
+  def keywordSearch(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spreadDocs(spark, sfDir)
     val postings = docs
       .select(col("doc_id"),
         explode(expr("split(lower(trim(text)), '\\\\s+')")).as("t"))
-      .filter(col("t").isInCollection(terms))
+      .filter(col("t").isInCollection(SearchTerms))
       .groupBy("doc_id", "t")
       .agg(count(lit(1)).as("tf"))
     val dfq = postings.groupBy("t").agg(count(lit(1)).as("df_t"))
@@ -583,15 +591,14 @@ object TextAnalysis {
       .agg(sum(col("tf") * col("w")).cast("long").as("score"),
         count(lit(1)).as("n_hit_terms"))
       .orderBy(desc("score"), asc("doc_id"))
-      .limit(k)
+      .limit(SearchK)
   }
 
   /** DuckDB oracle for [[keywordSearch]]: postings, rarity weights and
     * the scored top-k restated verbatim.
     */
-  def keywordSearchSql(terms: Seq[String] = Seq("scan", "join", "hash"),
-      k: Int = 20): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
+  def keywordSearchSql: String = {
+    val inList = SearchTerms.map(t => s"'$t'").mkString(", ")
     s"""WITH toks AS (
        |  SELECT doc_id,
        |    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
@@ -607,7 +614,7 @@ object TextAnalysis {
        |  CAST(COUNT(*) AS BIGINT) AS n_hit_terms
        |FROM postings p JOIN w ON p.t = w.t
        |GROUP BY p.doc_id
-       |ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
+       |ORDER BY score DESC, doc_id LIMIT $SearchK""".stripMargin
   }
 
   /** q171 — BM25 ranking, the retrieval family's third shape (q165
@@ -635,8 +642,8 @@ object TextAnalysis {
     * broadcast weights/avgdl, doc-grain agg, top-k TakeOrdered.
     */
   def bm25Search(spark: SparkSession, sfDir: String,
-      terms: Seq[String] = Seq("scan", "join", "hash"),
-      k: Int = 20): DataFrame = {
+      terms: Seq[String] = SearchTerms,
+      k: Int = SearchK): DataFrame = {
     val docs = spreadDocs(spark, sfDir)
     val toks = docs.select(col("doc_id"),
       expr("split(lower(trim(text)), '\\\\s+')").as("tks"))
@@ -669,9 +676,8 @@ object TextAnalysis {
     * weights, the identical IEEE saturation tree, per-term floor
     * quantization, and the scored top-k restated verbatim.
     */
-  def bm25SearchSql(terms: Seq[String] = Seq("scan", "join", "hash"),
-      k: Int = 20): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
+  def bm25SearchSql: String = {
+    val inList = SearchTerms.map(t => s"'$t'").mkString(", ")
     s"""WITH tk AS (
        |  SELECT doc_id, $tokensSql AS tks FROM documents),
        |postings AS (
@@ -697,8 +703,10 @@ object TextAnalysis {
        |  CAST(COUNT(*) AS BIGINT) AS n_hit_terms
        |FROM scored
        |GROUP BY doc_id
-       |ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
+       |ORDER BY score DESC, doc_id LIMIT $SearchK""".stripMargin
   }
+
+  val SearchPhrase = Seq("hash", "join") // query phrase of the phrase search
 
   /** q167 — PHRASE search over a POSITIONAL inverted index (the q165
     * retrieval family's second shape): tokens are exploded with their
@@ -717,7 +725,7 @@ object TextAnalysis {
     * (the q158 idiom) and skip the scan entirely.
     */
   def phraseSearch(spark: SparkSession, sfDir: String,
-      phrase: Seq[String] = Seq("hash", "join"), k: Int = 20): DataFrame = {
+      phrase: Seq[String] = SearchPhrase, k: Int = SearchK): DataFrame = {
     require(phrase.nonEmpty, "phrase must have at least one term")
     val docs = spreadDocs(spark, sfDir)
     val postings = docs
@@ -746,10 +754,9 @@ object TextAnalysis {
     * over the same empty-filtered token list) and the adjacency join
     * chain restated verbatim.
     */
-  def phraseSearchSql(phrase: Seq[String] = Seq("hash", "join"),
-      k: Int = 20): String = {
-    val inList = phrase.distinct.map(w => s"'$w'").mkString(", ")
-    val joins = phrase.zipWithIndex.drop(1).map { case (w, i) =>
+  def phraseSearchSql: String = {
+    val inList = SearchPhrase.distinct.map(w => s"'$w'").mkString(", ")
+    val joins = SearchPhrase.zipWithIndex.drop(1).map { case (w, i) =>
       s"JOIN p p$i ON p$i.doc_id = p0.doc_id AND p$i.pos = p0.pos + $i" +
         s" AND p$i.t = '$w'"
     }.mkString("\n")
@@ -765,8 +772,8 @@ object TextAnalysis {
        |  CAST(MIN(p0.pos) AS BIGINT) AS first_pos
        |FROM p p0
        |$joins
-       |WHERE p0.t = '${phrase.head}'
+       |WHERE p0.t = '${SearchPhrase.head}'
        |GROUP BY p0.doc_id
-       |ORDER BY n_matches DESC, p0.doc_id LIMIT $k""".stripMargin
+       |ORDER BY n_matches DESC, p0.doc_id LIMIT $SearchK""".stripMargin
   }
 }

@@ -147,8 +147,10 @@ object Validation {
     ).mkString("", "\nUNION ALL\n", "\nORDER BY table_name")
   }
 
+  val TombstoneMod = 97 // one customer in this many is erased
+
   /** Right-to-erasure (GDPR Art. 17) cascade audit: a deterministic
-    * tombstone set of customers (c_custkey ≡ 0 mod `tombMod`) must be
+    * tombstone set of customers (c_custkey ≡ 0 mod `TombstoneMod`) must be
     * erased together with their orders and those orders' line items —
     * this reports, per table, how many rows the cascade removes. The
     * deletes themselves are the anti-joins of these semi-joins; the
@@ -161,12 +163,11 @@ object Validation {
     * shuffle — the same runtime-filter shape Spark's own DPP/runtime
     * filters use, made explicit.
     */
-  def gdprErasure(spark: SparkSession, sfDir: String,
-      tombMod: Int = 97): DataFrame = {
+  def gdprErasure(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = Tables.customer(spark, sfDir)
     val orders = Tables.orders(spark, sfDir)
     val li = Tables.lineitem(spark, sfDir)
-    val tomb = cust.filter(pmod(col("c_custkey"), lit(tombMod)) === 0)
+    val tomb = cust.filter(pmod(col("c_custkey"), lit(TombstoneMod)) === 0)
       .select("c_custkey")
     val deadOrders = orders
       .join(Joins.broadcastIfSmall(tomb, cust),
@@ -185,9 +186,9 @@ object Validation {
       .orderBy("table_name")
   }
 
-  def gdprErasureSql(tombMod: Int = 97): String =
+  def gdprErasureSql: String =
     s"""WITH tomb AS (
-       |  SELECT c_custkey FROM customer WHERE c_custkey % $tombMod = 0),
+       |  SELECT c_custkey FROM customer WHERE c_custkey % $TombstoneMod = 0),
        |dead_orders AS (
        |  SELECT o_orderkey FROM orders
        |  WHERE o_custkey IN (SELECT c_custkey FROM tomb)),

@@ -643,8 +643,10 @@ object Tables {
   def overwriteParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
+  val CompactTargetBytes = 128L * 1024 * 1024 // compacted file size
+
   /** Small-files compaction: rewrite a parquet directory into
-    * ~`targetBytes` output files (the operational fix for the
+    * ~`CompactTargetBytes` output files (the operational fix for the
     * accumulate-tiny-appends problem that kills scan parallelism
     * bookkeeping at 100 TB). Sizing comes from the optimized plan's
     * statistics (file footers — no job), the rewrite is one
@@ -656,11 +658,10 @@ object Tables {
     * (True single-op atomicity needs a table format's metadata commit;
     * this is the best a bare filesystem offers.)
     */
-  def compactParquet(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024): Int = {
+  def compactParquet(spark: SparkSession, path: String): Int = {
     val df = spark.read.parquet(path)
     val inputBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nFiles = ((inputBytes + targetBytes - 1) / targetBytes)
+    val nFiles = ((inputBytes + CompactTargetBytes - 1) / CompactTargetBytes)
       .max(BigInt(1)).min(BigInt(1 << 20)).toInt
     val tmp = path + "_compact_tmp"
     writeParquetFiles(df, tmp, nFiles)
@@ -686,6 +687,8 @@ object Tables {
   // `etl/etl.py:143-160,266-269`, `etl/config.ini:26`)
   // --------------------------------------------------------------------
 
+  val JdbcFetchSize = 5000 // rows per JDBC fetch
+
   /** JDBC table scan (A5). For large tables pass `partitionColumn` +
     * bounds so the read parallelizes into `numPartitions` range-bounded
     * queries — a single-connection JDBC read is the classic 100 TB
@@ -693,14 +696,12 @@ object Tables {
     */
   def readJdbc(spark: SparkSession, url: String, table: String,
       props: Map[String, String] = Map.empty,
-      fetchSize: Int = 5000,
-      partitionColumn: Option[String] = None,
-      lowerBound: Long = 0L, upperBound: Long = 0L,
-      numPartitions: Int = 8): DataFrame = {
+      partitionColumn: Option[String] = None, lowerBound: Long = 0L,
+      upperBound: Long = 0L, numPartitions: Int = 8): DataFrame = {
     val base = spark.read.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
-      .option("fetchsize", fetchSize)
+      .option("fetchsize", JdbcFetchSize)
       .options(props)
     partitionColumn.fold(base) { c =>
       base.option("partitionColumn", c)
@@ -766,45 +767,73 @@ object Tables {
     df.repartition(n,
       df.columns.toSeq.map(c => df.col("`" + c.replace("`", "``") + "`")): _*)
 
-  /** Daemon-thread pool for overlapping INDEPENDENT driver actions
-    * inside one query (guide §2.6: jobs are only sequential because
-    * the caller invokes them sequentially; the scheduler is
-    * thread-safe and job descriptions are thread-local). Daemon
-    * threads so a failure between submit and get can never keep the
-    * JVM from exiting; callers still `shutdown()` in a finally.
+  /** Scope for overlapping INDEPENDENT driver actions inside one query
+    * (guide §2.6: jobs are only sequential because the caller invokes
+    * them sequentially; the scheduler is thread-safe and job
+    * descriptions are thread-local). `body` submits jobs through
+    * [[Overlap.submit]]; they run on `threads` daemon threads named
+    * `graft-overlap`, so no failure can keep the JVM from exiting.
+    *
+    * The scope waits for EVERY submitted job before it returns or
+    * throws: a job left running after its query failed (q205's segment
+    * commit after a probe guard's `require`) would keep reading
+    * checkpoint blocks the janitor frees. A failure the body raised
+    * itself wins; otherwise the first failed job in submission order
+    * is rethrown, unwrapped from its `ExecutionException`.
     */
-  def overlapPool(threads: Int = 2): java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(threads,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-overlap")
-        t.setDaemon(true)
-        t
-      })
-
-  /** Submit a thunk to an [[overlapPool]] with its own job description. */
-  def submitJob[T](pool: java.util.concurrent.ExecutorService,
-      spark: SparkSession, desc: String)(thunk: => T)
-      : java.util.concurrent.Future[T] =
-    pool.submit(new java.util.concurrent.Callable[T] {
-      def call(): T = {
-        spark.sparkContext.setJobDescription(desc)
-        thunk
+  def overlapped[T](spark: SparkSession, threads: Int = 2)(
+      body: Overlap => T): T = {
+    val ov = new Overlap(spark, threads)
+    try {
+      val out = try Right(body(ov)) catch { case e: Throwable => Left(e) }
+      val failed = ov.join()
+      out match {
+        case Left(e) if !failed.exists(_ eq e) => throw e
+        case _ => failed.headOption.foreach(e => throw e)
       }
-    })
+      out.toOption.get
+    } finally ov.pool.shutdown()
+  }
 
-  /** Wait for EVERY future, then rethrow the first failure in
-    * submission order (unwrapped from its `ExecutionException`), so no
-    * job submitted to an [[overlapPool]] is still running when the
-    * caller returns or throws. Returns the results in order.
-    */
-  def joinAll[T](futures: Seq[java.util.concurrent.Future[_ <: T]]): Seq[T] = {
-    val done = futures.map(f => scala.util.Try(f.get()))
-    done.collectFirst { case scala.util.Failure(e) => e }.foreach {
-      case e: java.util.concurrent.ExecutionException if e.getCause != null =>
-        throw e.getCause
-      case e => throw e
+  /** The jobs of one [[overlapped]] scope; submit from the body's thread. */
+  final class Overlap private[Tables] (spark: SparkSession, threads: Int) {
+    private[Tables] val pool =
+      java.util.concurrent.Executors.newFixedThreadPool(threads,
+        (r: Runnable) => {
+          val t = new Thread(r, "graft-overlap")
+          t.setDaemon(true)
+          t
+        })
+    private val jobs =
+      scala.collection.mutable.ArrayBuffer.empty[Job[_]]
+
+    /** Run `thunk` on a pool thread under its own job description. */
+    def submit[T](desc: String)(thunk: => T): Job[T] = {
+      val job = new Job(pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = {
+          spark.sparkContext.setJobDescription(desc)
+          thunk
+        }
+      }))
+      jobs += job
+      job
     }
-    done.map(_.get)
+
+    /** Wait for every job; their failures in submission order. */
+    private[Tables] def join(): Seq[Throwable] =
+      jobs.toSeq.flatMap { j =>
+        try { j.get(); None } catch { case e: Throwable => Some(e) }
+      }
+  }
+
+  /** A submitted job; `get` waits and rethrows the job's own failure. */
+  final class Job[T] private[Tables] (
+      f: java.util.concurrent.Future[T]) {
+    def get(): T =
+      try f.get() catch {
+        case e: java.util.concurrent.ExecutionException
+            if e.getCause != null => throw e.getCause
+      }
   }
 
   /** Collision-free /tmp directory key for a source path: md5 of the

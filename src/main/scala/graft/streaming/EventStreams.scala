@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.operators.Events
+
 /** Structured Streaming form of the event analytics (SURVEY.md §7.5):
   * the same windowed aggregations as [[graft.operators.Events]], plus
   * watermarked late-data handling, session windows, and a custom
@@ -270,7 +272,9 @@ object EventStreams {
   def sessionWindows(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .groupBy(
+        session_window(col("ts"), s"${Events.SessionGapMinutes} minutes"),
+        col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
           .as("sum_value"))
@@ -285,10 +289,9 @@ object EventStreams {
     * window bounds). EventTimeTimeout + watermark evicts state for
     * quiet users.
     */
-  def sessionizeStateful(events: Dataset[Event],
-      gapMinutes: Int = 30): Dataset[SessionOut] = {
+  def sessionizeStateful(events: Dataset[Event]): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60 * 1000000L
+    val gapUs = Events.SessionGapMinutes * 60 * 1000000L
     events
       .withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
@@ -363,11 +366,11 @@ object EventStreams {
     * (the operator's sequential accumulation — same IEEE sequence),
     * keeping sessions that are either not the user's last or whose
     * ms-grain timeout `(end_us + gap_us) div 1000` fell strictly below
-    * the final watermark `max_us div 1000 - delay_ms` (DevStream
-    * verified the emitted set equals this full-row at sf0.01).
+    * the final watermark `max_us div 1000 - delay_ms` (the emitted set
+    * was verified to equal this full-row at sf0.01).
     */
   val sessionizeStatefulAvailableNowSql: String = {
-    val gapUs = 30L * 60 * 1000000
+    val gapUs = Events.SessionGapMinutes * 60L * 1000000
     val delayMs = 10L * 60 * 1000
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   value FROM events),
@@ -400,20 +403,20 @@ object EventStreams {
        |ORDER BY a.user_id, session_start""".stripMargin
   }
 
+  val DedupKeys = Seq("event_id") // columns that identify a duplicate event
+
   /** Streaming exact dedup — the streaming twin of
     * [[graft.operators.Dedup.exactDedup]]'s keep-one semantics, for
     * at-least-once ingest (re-delivered events collapse to one).
     * `dropDuplicatesWithinWatermark` keeps one state entry per key seen
     * within the watermark delay and evicts it as event time advances —
     * unlike plain `dropDuplicates` on a stream, state cannot grow
-    * unboundedly. Keys default to the natural event id; pass
-    * content-hash columns for document-style dedup.
+    * unboundedly. The key is the natural event id ([[DedupKeys]]).
     */
-  def dedupStream(events: DataFrame,
-      keyCols: Seq[String] = Seq("event_id")): DataFrame =
+  def dedupStream(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark(keyCols)
+      .dropDuplicatesWithinWatermark(DedupKeys)
 
   /** q132 — streaming dedup made driver-visible: replay the events
     * file UNIONED WITH ITSELF (every event delivered twice — the
@@ -451,24 +454,26 @@ object EventStreams {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
+  val ErrorClickWindowMinutes = 5 // error-to-click join window
+
   /** Stream-stream interval join — the streaming twin of
     * [[graft.operators.RangeJoin.clicksNearErrors]]: every (error,
-    * click) pair where the click lands in the `windowMinutes` after the
-    * error. Watermarks on BOTH sides plus the time-range predicate let
-    * Spark bound the join state: an error row is evicted once the click
-    * watermark passes error_ts + window + delay, so state is
-    * O(events per watermark horizon), not O(stream). This is the join
+    * click) pair where the click lands in the `ErrorClickWindowMinutes`
+    * after the error. Watermarks on BOTH sides plus the time-range
+    * predicate let Spark bound the join state: an error row is evicted
+    * once the click watermark passes error_ts + window + delay, so state
+    * is O(events per watermark horizon), not O(stream). This is the join
     * shape Structured Streaming requires for unbounded×unbounded —
     * without the range condition the state would grow forever.
     */
   def errorClickPairsStream(events: DataFrame,
-      windowMinutes: Int = 5, joinType: String = "inner"): DataFrame = {
+      joinType: String = "inner"): DataFrame = {
     // Spark rejects stream-stream joins with no equality predicate — the
     // chunked-time key from RangeJoin doubles as that equi-key: each
     // error replicates to the (at most 2) chunks its window overlaps,
     // each click belongs to exactly one chunk, so pairs stay unique and
     // the join is hash-partitionable by chunk across executors.
-    val chunkUs = windowMinutes.toLong * 60 * 1000000
+    val chunkUs = ErrorClickWindowMinutes.toLong * 60 * 1000000
     val errors = events.filter(col("event_type") === "error")
       .select(col("event_id").as("error_id"), col("ts").as("error_ts"))
       .withWatermark("error_ts", "10 minutes")
@@ -481,7 +486,7 @@ object EventStreams {
       .withColumn("click_chunk", expr(s"unix_micros(click_ts) div $chunkUs"))
     errors.join(clicks, expr(
       s"""err_chunk = click_chunk AND click_ts >= error_ts AND
-         |click_ts < error_ts + interval $windowMinutes minutes""".stripMargin),
+         |click_ts < error_ts + interval $ErrorClickWindowMinutes minutes""".stripMargin),
       joinType)
       .drop("err_chunk", "click_chunk")
   }
@@ -566,7 +571,7 @@ object EventStreams {
     * None-vs-NaN differently across the driver's two readers).
     */
   def errorClickLeftOuterAvailableNow(spark: SparkSession,
-      sfDir: String, windowMinutes: Int = 5): DataFrame = {
+      sfDir: String): DataFrame = {
     // durable parquet sink (the q133 round-13 note: the match log is
     // stream-scaled; a memory sink driver-collects it)
     val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
@@ -574,7 +579,7 @@ object EventStreams {
     // files (no driver-local table re-shipped per action — the old
     // localCheckpoint workaround is obsolete with a durable sink)
     val (_, sink) = drain(
-      errorClickPairsStream(ev, windowMinutes, joinType = "left_outer")
+      errorClickPairsStream(ev, joinType = "left_outer")
         .select(col("error_id"), col("click_id")),
       parquetSink(streamSinkDir(sfDir, "louter")), stateWidth(spark, 4, sfDir))
     val matched = sink.filter(col("click_id").isNotNull)
@@ -600,8 +605,8 @@ object EventStreams {
     * immediately (inner rows are watermark-independent in the bounded
     * single-batch replay).
     */
-  def errorClickLeftOuterAvailableNowSql(windowMinutes: Int = 5): String = {
-    val winUs = windowMinutes * 60L * 1000000
+  def errorClickLeftOuterAvailableNowSql: String = {
+    val winUs = ErrorClickWindowMinutes * 60L * 1000000
     val delayMs = 10L * 60 * 1000
     s"""WITH mx AS (
        |  SELECT least(
@@ -618,7 +623,7 @@ object EventStreams {
        |    ON c.event_type = 'click'
        |   AND CAST(c.ts AS TIMESTAMP) >= CAST(e.ts AS TIMESTAMP)
        |   AND CAST(c.ts AS TIMESTAMP) <
-       |       CAST(e.ts AS TIMESTAMP) + INTERVAL $windowMinutes MINUTE
+       |       CAST(e.ts AS TIMESTAMP) + INTERVAL $ErrorClickWindowMinutes MINUTE
        |  WHERE e.event_type = 'error')
        |SELECT error_id, COALESCE(click_id, -1) AS click_id
        |FROM pairs, mx
@@ -641,7 +646,7 @@ object EventStreams {
     * across the driver's two readers).
     */
   def errorClickFullOuterAvailableNow(spark: SparkSession,
-      sfDir: String, windowMinutes: Int = 5): DataFrame = {
+      sfDir: String): DataFrame = {
     // durable parquet sink (the q133 round-13 note: the match log is
     // stream-scaled; a memory sink driver-collects it — at sf3 the old
     // memory sink blew spark.driver.maxResultSize)
@@ -650,7 +655,7 @@ object EventStreams {
     // committed files (the round-9 localCheckpoint workaround for the
     // driver-local memory table is obsolete with a durable sink)
     val (_, sink) = drain(
-      errorClickPairsStream(ev, windowMinutes, joinType = "full_outer")
+      errorClickPairsStream(ev, joinType = "full_outer")
         .select(col("error_id"), col("click_id")),
       parquetSink(streamSinkDir(sfDir, "fouter")), stateWidth(spark, 4, sfDir))
     val matched = sink
@@ -678,8 +683,8 @@ object EventStreams {
     * future error at or above the watermark can satisfy
     * error_ts <= click_ts).
     */
-  def errorClickFullOuterAvailableNowSql(windowMinutes: Int = 5): String = {
-    val winUs = windowMinutes * 60L * 1000000
+  def errorClickFullOuterAvailableNowSql: String = {
+    val winUs = ErrorClickWindowMinutes * 60L * 1000000
     val delayMs = 10L * 60 * 1000
     s"""WITH mx AS (
        |  SELECT (least(
@@ -729,14 +734,14 @@ object EventStreams {
     * multiplied).
     */
   def errorClickSemiAvailableNow(spark: SparkSession,
-      sfDir: String, windowMinutes: Int = 5): DataFrame = {
+      sfDir: String): DataFrame = {
     val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
     // LEFT SEMI emits a left row the moment a match arrives (data
     // batches); eviction of never-matched rows emits NOTHING — unlike
     // ANTI (q177), where eviction IS the emission. Finalization is
     // therefore pure machinery here ([[start]]'s skipFinalBatch).
     val (_, sink) = drain(
-      errorClickPairsStream(ev, windowMinutes, joinType = "left_semi")
+      errorClickPairsStream(ev, joinType = "left_semi")
         .select(col("error_id")),
       memorySink("semi"), stateWidth(spark, 4, sfDir), skipFinalBatch = true)
     sink.distinct().orderBy("error_id")
@@ -745,7 +750,7 @@ object EventStreams {
   /** Oracle for [[errorClickSemiAvailableNow]]: the batch EXISTS
     * predicate — every error with at least one click in its window.
     */
-  def errorClickSemiAvailableNowSql(windowMinutes: Int = 5): String =
+  def errorClickSemiAvailableNowSql: String =
     s"""SELECT e.event_id AS error_id
        |FROM events e
        |WHERE e.event_type = 'error' AND EXISTS (
@@ -753,7 +758,7 @@ object EventStreams {
        |  WHERE c.event_type = 'click'
        |    AND CAST(c.ts AS TIMESTAMP) >= CAST(e.ts AS TIMESTAMP)
        |    AND CAST(c.ts AS TIMESTAMP) <
-       |        CAST(e.ts AS TIMESTAMP) + INTERVAL $windowMinutes MINUTE)
+       |        CAST(e.ts AS TIMESTAMP) + INTERVAL $ErrorClickWindowMinutes MINUTE)
        |ORDER BY error_id""".stripMargin
 
   /** q172 — [[LifetimeProcessor]] (the Spark 4 transformWithState API)
@@ -813,8 +818,8 @@ object EventStreams {
     * as a live deployment withholds them (the q131 cutoff discipline,
     * re-derived for the v2 API).
     */
-  def inactivityDigestAvailableNow(spark: SparkSession, sfDir: String,
-      gapMinutes: Int = 30): DataFrame = {
+  def inactivityDigestAvailableNow(spark: SparkSession,
+      sfDir: String): DataFrame = {
     import spark.implicits._
     val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       .select("event_id", "ts", "user_id", "event_type", "value")
@@ -823,7 +828,8 @@ object EventStreams {
     // the timers fire in the finalization batch: it must run
     val (_, sink) = drain(
       ev.groupByKey(_.user_id)
-        .transformWithState(new InactivityDigestProcessor(gapMinutes),
+        .transformWithState(
+          new InactivityDigestProcessor(Events.SessionGapMinutes),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Update())
         .toDF(),
@@ -846,8 +852,8 @@ object EventStreams {
     * below the final watermark (ms-truncated max event time minus the
     * 10-minute delay).
     */
-  def inactivityDigestAvailableNowSql(gapMinutes: Int = 30): String = {
-    val gapMs = gapMinutes * 60L * 1000
+  def inactivityDigestAvailableNowSql: String = {
+    val gapMs = Events.SessionGapMinutes * 60L * 1000
     val delayMs = 10L * 60 * 1000
     s"""WITH ev AS (
        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id
@@ -1190,6 +1196,17 @@ object EventStreams {
   private[graft] def dataBatches(q: StreamingQuery): Int =
     q.recentProgress.count(_.numInputRows > 0)
 
+  /** Read back a replay's per-batch outputs: the `b<batchId>`
+    * directories under `outBase`, listed here and read together. A
+    * glob path instead makes Spark probe it for a sink metadata log,
+    * which logs a FileNotFoundException trace per read.
+    */
+  private def readBatchOutputs(spark: SparkSession,
+      outBase: java.io.File): DataFrame =
+    spark.read.parquet(outBase.listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.matches("b\\d+"))
+      .map(_.getPath).sorted: _*)
+
   /** q124 — the streaming engine made driver-visible: runs
     * [[hourlyByType]] as a REAL Structured Streaming job (file source
     * → watermark → stateful windowed aggregation → memory sink) under
@@ -1236,7 +1253,7 @@ object EventStreams {
     * engines.
     */
   val sessionWindowsAvailableNowSql: String = {
-    val gapUs = 30L * 60 * 1000000
+    val gapUs = Events.SessionGapMinutes * 60L * 1000000
     val delayMs = 10L * 60 * 1000
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   value FROM events),
@@ -1264,9 +1281,11 @@ object EventStreams {
        |ORDER BY user_id, session_start""".stripMargin
   }
 
+  val ReplayFiles = 2 // input files (= micro-batches) of a bounded replay
+
   /** q134 — MULTI-micro-batch watermark advancement made driver-visible
     * (round 7; every other AvailableNow replay arrives as ONE data
-    * batch by design): the events table is staged into `nFiles`
+    * batch by design): the events table is staged into `ReplayFiles`
     * chronological single-file parquets with strictly increasing
     * mtimes, and [[sessionWindows]] replays them with
     * `maxFilesPerTrigger = 1` — so the watermark advances BETWEEN data
@@ -1285,12 +1304,12 @@ object EventStreams {
     *
     * Staging is rebuilt per invocation (delete + rewrite) so a testdata
     * regeneration at the same path can never serve stale files; the
-    * driver-side loop is bounded by `nFiles` (a replay-harness
+    * driver-side loop is bounded by `ReplayFiles` (a replay-harness
     * constant, not data-scaled).
     */
-  def sessionWindowsBatchedReplay(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def sessionWindowsBatchedReplay(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     // ---- replay: one file per trigger, real watermark advancement ----
     val (q, sink) = drain(
       sessionWindows(readEventStream(spark, staging, maxFilesPerTrigger = Some(1))),
@@ -1311,7 +1330,7 @@ object EventStreams {
     * vary, chronology is what matters. Reused through
     * [[graft.sources.Tables.freshStagedDir]] until the events file or
     * the code changes. Shared by [[sessionWindowsBatchedReplay]] (q134)
-    * and the soak prober (graft.devtools.DevStream).
+    * and the soak prober ([[graft.devtools.SoakStream]]).
     */
   def stageChronologicalEvents(spark: SparkSession, sfDir: String,
       nFiles: Int, lateTail: Boolean = false): String = {
@@ -1399,9 +1418,10 @@ object EventStreams {
     * except the bounded per-source rollup); at 100 TB this is the
     * "curation keeps up with ingest" path — cost strictly ∝ new bytes.
     */
-  def corpusGateStreamAvailableNow(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageIdBatches(spark, sfDir, "documents", "doc_id", nFiles)
+  def corpusGateStreamAvailableNow(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging =
+      stageIdBatches(spark, sfDir, "documents", "doc_id", ReplayFiles)
     val outBase = new java.io.File(streamSinkDir(sfDir, "corpgate"), "out")
     outBase.mkdirs()
     val stream = spark.readStream
@@ -1430,7 +1450,7 @@ object EventStreams {
     require(nData >= 2,
       s"corpus-gate replay ran $nData data batches - the per-batch " +
         "ledger path was not exercised")
-    spark.read.parquet(new java.io.File(outBase, "b*").getPath)
+    readBatchOutputs(spark, outBase)
       .groupBy("source")
       .agg(sum("n_docs").cast("long").as("n_docs"),
         sum("n_admitted").cast("long").as("n_admitted"),
@@ -1664,10 +1684,13 @@ object EventStreams {
     }
   }
 
+  val FoldTargetBytes = 64L << 20 // segment size the near-dup replays fold to
+  val MaxProbePairs = 64L << 20 // probe-pair ceiling of one near-dup batch
+
   def streamingNeardupAdmission(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2, maxLiveSegments: Int = 1,
-      foldTargetBytes: Long = 64L << 20,
-      maxProbePairs: Long = 64L << 20): DataFrame = {
+      nFiles: Int = ReplayFiles, maxLiveSegments: Int = 1,
+      foldTargetBytes: Long = FoldTargetBytes,
+      maxProbePairs: Long = MaxProbePairs): DataFrame = {
     val staging = stageIdBatches(spark, sfDir, "documents", "doc_id", nFiles)
     // dir keyed by the dials too: the registered q205 (fold every
     // batch) and q209 (amortized, maxLive=2) variants must not share
@@ -1698,18 +1721,17 @@ object EventStreams {
       // 1 MiB/batch measured q205 ~1 s SLOWER at sf0.1 (the
       // recompute cost is fixed shuffle machinery, not data size,
       // so the checkpoint wins at every scale)
-      val pool = graft.sources.Tables.overlapPool()
-      try {
+      graft.sources.Tables.overlapped(spark) { ov =>
       val scored = graft.operators.Corpus.withGateScore(
           graft.sources.Tables.spread(
-            batch.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
+            batch.filter(
+              pmod(col("doc_id"), lit(graft.operators.Corpus.EvalMod)) =!= 0)))
         .localCheckpoint(true)
       // OVERLAP 1 (round-16, guide §2.6): the ledger-stats agg and
       // the band construction both read the scored checkpoint
       // blocks and are independent — run the tiny agg on the pool
       // thread while the main thread builds+checkpoints the bands
-      val trainStatsF = graft.sources.Tables.submitJob(pool, spark,
-          s"neardup b$batchId: train stats") {
+      val trainStatsF = ov.submit(s"neardup b$batchId: train stats") {
         scored.agg(count(lit(1)),
             coalesce(min("doc_id"), lit(Long.MaxValue)),
             sum((col("score") === 4).cast("long")))
@@ -1744,8 +1766,7 @@ object EventStreams {
       // admits × Bands by construction, so the probe guard below
       // can bound the join without any extra scan (overwrite mode
       // clears the dir, so a re-delivered batch rewrites it too)
-      val segF = graft.sources.Tables.submitJob(pool, spark,
-          s"neardup b$batchId: segment commit") {
+      val segF = ov.submit(s"neardup b$batchId: segment commit") {
         val segParts = math.max(1L, math.min(64L,
           nGate * graft.operators.Dedup.Bands / 500000L + 1L)).toInt
         graft.sources.Tables.writeParquetFiles(batchBands,
@@ -1815,8 +1836,7 @@ object EventStreams {
       // this (the embedding path's ledger reads probed segment
       // files when the guard's tier 0 clears, so there the ledger
       // must complete before the fold deletes them).
-      val ledgerF = graft.sources.Tables.submitJob(pool, spark,
-          s"neardup b$batchId: ledger") {
+      val ledgerF = ov.submit(s"neardup b$batchId: ledger") {
         dropped
           .agg(count(lit(1)).as("n_dup_dropped"),
             coalesce(sum("by_hist"), lit(0L))
@@ -1836,7 +1856,7 @@ object EventStreams {
       foldLiveSegmentsPastDial(spark, segBase, batchId,
         maxLiveSegments, foldTargetBytes)
       ledgerF.get()
-      } finally pool.shutdown()
+      }
     }, width = 8)
     // SOAK diagnostic (stderr-only): per-batch wall times, the
     // flat-across-batches evidence the compaction exists to provide
@@ -1848,9 +1868,12 @@ object EventStreams {
     require(nData >= 2,
       s"neardup admission replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
-    spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .orderBy("batch_idx")
+    readBatchOutputs(spark, outBase).orderBy("batch_idx")
   }
+
+  val StreamEmbThreshold = 0.35 // near-duplicate cosine (q210)
+  val StreamEmbBands = 2 // q210's LSH banding: bands of the 16-bit signature
+  val StreamEmbBitsPerBand = 8 // ...and bits per band
 
   /** q210 — STREAMING EMBEDDING NEAR-DUP ADMISSION: the sign-LSH
     * dedup family's live path, the exact counterpart of [[
@@ -1884,16 +1907,15 @@ object EventStreams {
     * drops (split out: dropped by a HISTORY partner), final admits.
     */
   def streamingEmbeddingNeardup(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2, maxLiveSegments: Int = 1,
-      foldTargetBytes: Long = 64L << 20,
-      maxProbePairs: Long = 64L << 20,
-      threshold: Double = 0.35,
+      nFiles: Int = ReplayFiles, maxLiveSegments: Int = 1,
+      maxProbePairs: Long = MaxProbePairs,
       // the banding rung (q25 ladder grain): candidates scale with
       // history·batch / 2^bits, so a denser inflow takes a tighter
       // rung — the registered row pins 2×8 (the oracle bands
       // identically); the sf10 soak demonstrates 1×16 as the
       // dense-corpus operating point (SOAK.md round-14)
-      nBandsDial: Int = 2, bitsPerBand: Int = 8): DataFrame = {
+      nBandsDial: Int = StreamEmbBands,
+      bitsPerBand: Int = StreamEmbBitsPerBand): DataFrame = {
     require(nBandsDial * bitsPerBand <= 16,
       s"dial ${nBandsDial}x$bitsPerBand exceeds the 16-bit signature")
     val mask = (1 << bitsPerBand) - 1
@@ -1942,10 +1964,8 @@ object EventStreams {
       // text path the LEDGER here is not overlapped with the
       // fold: when tier 0 clears, its lineage reads the probed
       // segment parquet the fold would delete.
-      val pool = graft.sources.Tables.overlapPool()
-      try {
-      val segF = graft.sources.Tables.submitJob(pool, spark,
-          s"embneardup b$batchId: segment commit") {
+      graft.sources.Tables.overlapped(spark) { ov =>
+      val segF = ov.submit(s"embneardup b$batchId: segment commit") {
         val segParts = math.max(1L,
           math.min(64L, bandRows / 500000L + 1L)).toInt
         graft.sources.Tables.writeParquetFiles(bands,
@@ -1988,9 +2008,9 @@ object EventStreams {
       scoredPairs
         .groupBy(col("vec_b"))
         .agg(count(lit(1)).as("n_pairs_b"),
-          max((col("cosine") >= threshold).cast("long"))
+          max((col("cosine") >= StreamEmbThreshold).cast("long"))
             .as("is_dup"),
-          max((col("cosine") >= threshold &&
+          max((col("cosine") >= StreamEmbThreshold &&
             col("vec_a") < batchLo).cast("long")).as("by_hist"))
         .agg(coalesce(sum("n_pairs_b"), lit(0L)).as("n_cand_pairs"),
           coalesce(sum("is_dup"), lit(0L)).as("n_dup_dropped"),
@@ -2007,8 +2027,8 @@ object EventStreams {
       // batch's segment committed, so join the segment future
       segF.get()
       foldLiveSegmentsPastDial(spark, segBase, batchId,
-        maxLiveSegments, foldTargetBytes)
-      } finally pool.shutdown()
+        maxLiveSegments, FoldTargetBytes)
+      }
     }, width = 8)
     System.err.println("embneardup-batch-ms: " + q.recentProgress
       .filter(_.numInputRows > 0)
@@ -2018,9 +2038,10 @@ object EventStreams {
     require(nData >= 2,
       s"embedding neardup replay ran $nData data batches - the " +
         "batch-vs-history probe path was not exercised")
-    spark.read.parquet(new java.io.File(outBase, "b*").getPath)
-      .orderBy("batch_idx")
+    readBatchOutputs(spark, outBase).orderBy("batch_idx")
   }
+
+  val RestartAttempts = 3 // query restarts q143 allows
 
   /** q143 — DURABLE sink + checkpoint-recovery restart, the
     * production promise every memory-sink replay leaves unexercised:
@@ -2055,9 +2076,9 @@ object EventStreams {
     * + WAL entry per partition, the sink log compacting every 10
     * batches (`spark.sql.streaming.fileSink.log.compactInterval`).
     */
-  def sessionWindowsDurableRestart(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2, maxAttempts: Int = 3): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def sessionWindowsDurableRestart(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     val stream = sessionWindows(
       readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
     val width = stateWidth(spark, 8, sfDir)
@@ -2090,13 +2111,16 @@ object EventStreams {
       require(d1 >= 1, s"restart harness: first run committed $d1 data " +
         "batches before the stop - recovery was not exercised")
       if (d2 >= 1) recovered = true
-      else require(attempt < maxAttempts,
+      else require(attempt < RestartAttempts,
         s"restart harness: the kill landed after the replay already " +
-          s"drained in all $maxAttempts attempts - recovery never exercised")
+          s"drained in all $RestartAttempts attempts - recovery never " +
+          "exercised")
     }
     // batch read of the sink: committed files only, via _spark_metadata
     sink.rows(spark).orderBy("user_id", "session_start")
   }
+
+  val LateReplayFiles = 3 // q154's input files; the last is the late tail
 
   /** q146 — watermark ENFORCEMENT made driver-visible (q134 proves the
     * watermark advances across batches; this proves it DROPS): the
@@ -2111,8 +2135,8 @@ object EventStreams {
     * therefore exactly q125's final-watermark cutoff over the ORIGINAL
     * events — same oracle SQL; the fixture's rows must leave no trace.
     */
-  def sessionWindowsLateReplay(spark: SparkSession, sfDir: String,
-      nFiles: Int = 3): DataFrame = {
+  def sessionWindowsLateReplay(spark: SparkSession,
+      sfDir: String): DataFrame = {
     // nFiles MUST stay >= 3: the late-row filter for batch N uses the
     // watermark as of batch N-1, which was computed from data through
     // batch N-2 (one more lag than the eviction watermark — measured
@@ -2121,7 +2145,7 @@ object EventStreams {
     // gap+delay of bucket 0's end MERGED into live sessions and
     // doubled their counts). The middle file is the pacer that pushes
     // the filter watermark past the whole copied bucket.
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles,
+    val staging = stageChronologicalEvents(spark, sfDir, LateReplayFiles,
       lateTail = true)
     val (q, sink) = drain(
       sessionWindows(readEventStream(spark, staging, maxFilesPerTrigger = Some(1))),
@@ -2161,9 +2185,9 @@ object EventStreams {
     * updated across batches, i.e. the mode was exercised, not merely
     * configured.
     */
-  def hourlyByTypeUpdateReplay(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def hourlyByTypeUpdateReplay(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     // Update mode emits only on data; the finalization batch would
     // only evict state. Two chronological files are the minimal
     // cross-batch-update fixture (the fold and oracle are
@@ -2194,14 +2218,15 @@ object EventStreams {
     // is assertion input, not query output)
     val spanningKeys = spanningKeyMemo.computeIfAbsent(
       (sfDir, new java.io.File(sfDir, "events.parquet").lastModified,
-        nFiles), { _ =>
+        ReplayFiles), { _ =>
       val ev = graft.sources.Tables.events(spark, sfDir)
       val bounds = ev.agg(min(expr("unix_micros(ts)")).as("lo"),
         max(expr("unix_micros(ts)")).as("hi")).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
       val span = hi - lo + 1
       ev.select(window(col("ts"), "1 hour").as("w"), col("event_type"),
-          expr(s"CAST(((unix_micros(ts) - ${lo}L) * $nFiles) div ${span}L AS INT)")
+          expr(s"CAST(((unix_micros(ts) - ${lo}L) * $ReplayFiles) " +
+            s"div ${span}L AS INT)")
             .as("b"))
         .groupBy("w", "event_type")
         .agg(countDistinct(col("b")).as("nb"))
@@ -2239,9 +2264,8 @@ object EventStreams {
     * (the dim is fixed for the whole replay, so batch boundaries
     * cannot affect the Complete-mode rollup).
     */
-  def segmentRollupStream(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def segmentRollupStream(spark: SparkSession, sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     val dim = graft.sources.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val (q, sink) = drain(
@@ -2288,9 +2312,8 @@ object EventStreams {
     * at segment grain; the per-batch output dirs are the idempotent
     * version-chain idiom shared with q154.
     */
-  def dimSwapEnrichReplay(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def dimSwapEnrichReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     val base = streamSinkDir(sfDir, "dimswap")
     val dimDir = new java.io.File(base, "dim").getPath
     val outBase = new java.io.File(base, "out")
@@ -2336,8 +2359,7 @@ object EventStreams {
     require(nData >= 2,
       s"dim-swap replay ran $nData data batches - the version bump " +
         "could not be exercised")
-    val folded = spark.read.parquet(
-        new java.io.File(outBase, "b*").getPath)
+    val folded = readBatchOutputs(spark, outBase)
       .groupBy("segment")
       .agg(sum(col("n_events")).cast("long").as("n_events"),
         sum(col("sum_dec")).cast("double").as("sum_value"))
@@ -2355,7 +2377,7 @@ object EventStreams {
     * rollup folds exact decimals before one double cast, exactly as
     * the per-batch contributions do.
     */
-  def dimSwapEnrichReplaySql(nFiles: Int = 2): String =
+  def dimSwapEnrichReplaySql: String =
     s"""WITH ev AS (
        |  SELECT user_id, value,
        |    epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -2363,7 +2385,7 @@ object EventStreams {
        |b AS (SELECT MIN(us) AS lo, MAX(us) AS hi FROM ev),
        |tagged AS (
        |  SELECT user_id, value,
-       |    CAST(((us - lo) * $nFiles) // (hi - lo + 1) AS INT) AS bucket
+       |    CAST(((us - lo) * $ReplayFiles) // (hi - lo + 1) AS INT) AS bucket
        |  FROM ev CROSS JOIN b),
        |joined AS (
        |  SELECT CASE WHEN bucket = 0 THEN c_mktsegment
@@ -2407,6 +2429,8 @@ object EventStreams {
             col("kth_hash").cast("double")))
       .drop("kmv")
 
+  val HourlyKmvK = 256 // bottom-k size of the hourly KMV distinct sketch
+
   /** q141 — distinct users per hourly window, STREAMING, via the KMV
     * bottom-k sketch ([[graft.functions.KmvAgg]]): the k-long sorted
     * hash array IS the per-(window, type) state row — constant
@@ -2428,17 +2452,17 @@ object EventStreams {
     * choice where portability doesn't matter (q45/q136/q137).
     */
   def hourlyDistinctKmvAvailableNow(spark: SparkSession,
-      sfDir: String, k: Int = 256): DataFrame = {
+      sfDir: String): DataFrame = {
     val (_, sink) = drain(
       withKmvScalars(
         readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .withColumn("h", expr(kmvUserHashExpr))
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(graft.functions.KmvAgg.bottomK(col("h"), k).as("kmv"),
+          .agg(graft.functions.KmvAgg.bottomK(col("h"), HourlyKmvK).as("kmv"),
             count(lit(1)).as("n_events"))
           .select(col("window.start").as("window_start"),
-            col("event_type"), col("kmv"), col("n_events")), k)
+            col("event_type"), col("kmv"), col("n_events")), HourlyKmvK)
         .select("window_start", "event_type", "n_events", "k_used",
           "kth_hash", "distinct_est"),
       memorySink("kmvdist"), stateWidth(spark, 8, sfDir), OutputMode.Complete)
@@ -2451,7 +2475,7 @@ object EventStreams {
     * k-th smallest, and the (k−1)·2^60/h_k estimate (exact count
     * below k), all integer/IEEE-exact in both engines.
     */
-  def hourlyDistinctKmvSql(k: Int = 256): String =
+  def hourlyDistinctKmvSql: String =
     s"""WITH ev AS (
        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
        |    event_type,
@@ -2470,11 +2494,11 @@ object EventStreams {
        |  SELECT window_start, event_type,
        |    CAST(COUNT(*) AS BIGINT) AS k_used,
        |    CAST(MAX(h) AS BIGINT) AS kth_hash
-       |  FROM ranked WHERE rk <= $k GROUP BY 1, 2)
+       |  FROM ranked WHERE rk <= $HourlyKmvK GROUP BY 1, 2)
        |SELECT c.window_start, c.event_type, n.n_events,
        |  c.k_used, c.kth_hash,
-       |  CASE WHEN c.k_used < $k THEN CAST(c.k_used AS DOUBLE)
-       |    ELSE CAST(${k - 1} AS DOUBLE)
+       |  CASE WHEN c.k_used < $HourlyKmvK THEN CAST(c.k_used AS DOUBLE)
+       |    ELSE CAST(${HourlyKmvK - 1} AS DOUBLE)
        |      * CAST(1152921504606846976 AS DOUBLE)
        |      / CAST(c.kth_hash AS DOUBLE) END AS distinct_est
        |FROM cells c JOIN counts n
@@ -2507,9 +2531,9 @@ object EventStreams {
     * (round 12; the HLL predecessor was rows-only). StreamingSpec
     * additionally asserts streaming == batch cell-exactly.
     */
-  def hourlyDistinctKmvUpdateReplay(spark: SparkSession, sfDir: String,
-      k: Int = 256, nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def hourlyDistinctKmvUpdateReplay(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     // Update mode emits only on data; eviction (the asserted
     // numRowsRemoved) happens on the LATER DATA batches — each batch
     // evicts with the watermark computed from the previous batch's max
@@ -2520,10 +2544,10 @@ object EventStreams {
           .withColumn("h", expr(kmvUserHashExpr))
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(graft.functions.KmvAgg.bottomK(col("h"), k).as("kmv"),
+          .agg(graft.functions.KmvAgg.bottomK(col("h"), HourlyKmvK).as("kmv"),
             count(lit(1)).as("n_events"))
           .select(col("window.start").as("window_start"),
-            col("event_type"), col("kmv"), col("n_events")), k)
+            col("event_type"), col("kmv"), col("n_events")), HourlyKmvK)
         .select("window_start", "event_type", "n_events", "k_used",
           "kth_hash", "distinct_est"),
       memorySink("kmvevict"), stateWidth(spark, 8, sfDir), OutputMode.Update,
@@ -2578,9 +2602,9 @@ object EventStreams {
     * Self-check: ≥2 data batches (the merge genuinely folded across
     * batches; one batch would make the merge path trivial).
     */
-  def latestByUserUpsertReplay(spark: SparkSession, sfDir: String,
-      nFiles: Int = 2): DataFrame = {
-    val staging = stageChronologicalEvents(spark, sfDir, nFiles)
+  def latestByUserUpsertReplay(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     // md5 of the full path, not String.hashCode: 32-bit hash collisions
     // between two sfDirs would interleave their version chains (ADVICE r8)
     val base = streamSinkDir(sfDir, "upsert")

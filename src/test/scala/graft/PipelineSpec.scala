@@ -135,6 +135,24 @@ class PipelineSpec extends SparkSpec {
     settled()
   }
 
+  test("Tables.overlapped: a throwing body returns only after its running job finished") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val e = intercept[IllegalStateException] {
+      Tables.overlapped(spark) { ov =>
+        ov.submit("overlap spec: slow job") {
+          started.countDown()
+          Thread.sleep(500)
+          finished.set(true)
+        }
+        started.await()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    assert(finished.get, "the scope returned while its job was still running")
+  }
+
   test("staged CSVs are written and re-readable (A2 roundtrip)") {
     wh
     val staged = Tables.readCsv(spark, s"$base/staging/stg_customer",

@@ -4,11 +4,12 @@
 # run while sbt keeps compiling/testing). Round-13/14 idiom.
 #
 #   SPARK_GRAFT_CPUS=28 dev/spark_java.sh -Xmx32g graft.Verify /tmp/sf10 /tmp/out q33_ngram_jaccard
-#   dev/spark_java.sh graft.devtools.SoakKnn /tmp/sf10 1024000000 256
-#   dev/spark_java.sh -Dspark.sql.shuffle.partitions=8 graft.devtools.Prof /tmp/sf1 q124
+#   dev/spark_java.sh graft.devtools.Soak knn /tmp/sf10 1024000000 256
+#   dev/spark_java.sh -Dspark.sql.autoBroadcastJoinThreshold=-1 graft.devtools.Prof /tmp/sf1 q124
 #
 # Leading -Xmx… and -D… arguments go to the JVM; SparkConf reads the
-# -Dspark.* system properties as confs.
+# -Dspark.* system properties as confs. A conf the session builder sets
+# itself wins: set the shuffle width with SPARK_GRAFT_CPUS instead.
 #
 # CAUTION: do NOT `sbt compile` while one of these JVMs is running —
 # it reads classfiles from target/scala-2.13/classes lazily.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 
 /** Driver-run benchmark: one JSON line with per-query and total seconds
   * over SparkEntry.queries at SPARK_GRAFT_SF_DIR.
@@ -13,13 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Tables.graftSession(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.cliSession(defaultCpus = 32, "WARN")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -29,27 +23,7 @@ object Bench {
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => -1.0 }
-      // outside the timed section: drop the query's checkpointed blocks
-      // so a 133-query sweep doesn't bleed storage memory into later
-      // queries (see Tables.freeTransientBlocks). Janitor contract: no
-      // streaming query may be mid-flight (registered streams are
-      // AvailableNow and complete inside the timed section).
-      assert(spark.streams.active.isEmpty,
-        s"janitor with active streaming queries after $name: " +
-          spark.streams.active.map(_.name).mkString(","))
-      graft.sources.Tables.freeTransientBlocks(spark)
-      graft.sources.Tables.dropDrainedStreamTables(spark)
-      // Shuffle files and broadcasts are cleaned only after their
-      // dependency objects are GC'd (ContextCleaner weak refs); with the
-      // 60 s periodic GC alone, a fast sweep accumulates hundreds of
-      // shuffles whose cleanup RPCs + file deletes then land INSIDE
-      // later queries' timed sections (the sf1 late-sweep residue,
-      // SOAK.md). Nudge a GC here — outside the timed window — and give
-      // the cleaner thread a beat to drain, so each query starts from a
-      // clean block manager. A real cluster sheds this via executor
-      // lifecycle; this is bench-harness hygiene, not plan cost.
-      System.gc()
-      Thread.sleep(50)
+      Tables.janitor(spark, name)
       elapsed
     }
 
@@ -65,7 +39,7 @@ object Bench {
     // interleaved (full sweep, then again) so co-scheduled noise does
     // not hit both runs of the same query.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    // dev loop: SPARK_GRAFT_BENCH_ONLY=q94_basket_pairs,q85_revenue_cube
+    // dev loop: SPARK_GRAFT_BENCH_ONLY=<name>,<name> (registered names)
     // restricts the sweep while iterating on one plan (driver leaves it unset)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -80,30 +54,12 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = r3(results.map(_._2).filter(_ >= 0).sum)
-    // Diagnostics family: queries that MEASURE the engine (sweep every
-    // sketch dial / LSH split against exact twins, grade ANN recall) —
-    // bench weight with no analytic payload. They stay in the sweep and
-    // in `value` (driver comparability across rounds), but the split
-    // lets the headline track analytic capability separately.
-    val diagnostics = Set("q136_sketch_sweep", "q121_ann_config_sweep",
-      "q105_ann_recall",
-      // q199 executes the q144 search TWICE (compacted vs union) to
-      // prove compaction lossless - an audit of the index lifecycle,
-      // not an analytic payload
-      "q199_ann_compact")
-    // Harness family: multi-batch streaming replays whose cost is the
-    // replay harness (state-store + sink-log commits × batches, kill/
-    // restart cycles), not the operator — each operator is separately
-    // oracle-checked by its batch twin (q26/q28/q66/q141). Keeping them
-    // out of `analytic` keeps the headline meaningful as the roster
-    // grows (round-8 verdict "What's wrong" #2).
-    val harness = Set("q143_streaming_restart", "q146_streaming_late",
-      "q148_streaming_update", "q154_streaming_upsert",
-      "q157_streaming_evict", "q160_stream_dim_swap")
-    val diagTotal = r3(results.collect {
-      case (k, v) if diagnostics(k) && v >= 0 => v }.sum)
-    val harnessTotal = r3(results.collect {
-      case (k, v) if harness(k) && v >= 0 => v }.sum)
+    // the bench families (SparkEntry.Family) split the total
+    val family = SparkEntry.roster.map(q => q.name -> q.family).toMap
+    def familyTotal(f: SparkEntry.Family): Double = r3(results.collect {
+      case (k, v) if family(k) == f && v >= 0 => v }.sum)
+    val diagTotal = familyTotal(SparkEntry.Diagnostic)
+    val harnessTotal = familyTotal(SparkEntry.Harness)
     val analyticTotal = r3(total - diagTotal - harnessTotal)
     val split = s""""analytic":$analyticTotal,"diagnostics":$diagTotal,"harness":$harnessTotal"""
     // Machine-drift self-normalization (round-15, the round-14 verdict's

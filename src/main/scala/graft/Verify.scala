@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import graft.sources.Tables
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,12 +12,7 @@ object Verify {
     // dev-only third arg: run just the named queries (comma-separated);
     // the driver always passes exactly two args
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.Tables.graftSession(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.cliSession(defaultCpus = 4, "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -24,19 +22,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // between queries: release checkpointed blocks (Tables.freeTransientBlocks).
-      // The janitor unpersists EVERY persistent RDD, so it must only run
-      // when no streaming query is mid-flight (all registered streaming
-      // queries run AvailableNow to completion inside fn).
-      assert(spark.streams.active.isEmpty,
-        s"janitor with active streaming queries after $name: " +
-          spark.streams.active.map(_.name).mkString(","))
-      graft.sources.Tables.freeTransientBlocks(spark)
-      graft.sources.Tables.dropDrainedStreamTables(spark)
-      // nudge shuffle/broadcast cleanup between queries (see Bench.run:
-      // ContextCleaner is GC-driven; without this a long sweep carries
-      // every prior query's shuffle files into the next one)
-      System.gc()
+      Tables.janitor(spark, name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

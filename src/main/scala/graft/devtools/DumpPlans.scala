@@ -2,7 +2,6 @@ package graft.devtools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.SparkEntry
@@ -23,14 +22,7 @@ object DumpPlans {
     val tag = args(2)
     val names = if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables.graftSession(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-dump-plans")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.cliSession(defaultCpus = 32, "ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (n <- names) {
       try {
@@ -60,10 +52,7 @@ object DumpPlans {
         case e: Throwable =>
           println(s"[dumpplans] $n FAILED: ${e.getMessage}")
       }
-      assert(spark.streams.active.isEmpty)
-      Tables.freeTransientBlocks(spark)
-      Tables.dropDrainedStreamTables(spark)
-      System.gc()
+      Tables.janitor(spark, n)
     }
     spark.stop()
   }

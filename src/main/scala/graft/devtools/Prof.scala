@@ -1,12 +1,12 @@
 package graft.devtools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
 /** Stage-level profiler for registered queries (dev-only): runs each
-  * named query `passes` times with the Bench janitor between runs and
+  * named query `passes` times with [[Tables.janitor]] between runs and
   * prints, per run, the wall time and per-stage task counts with
   * summed task run/deserialize/GC times.
   *
@@ -27,14 +27,7 @@ object Prof {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("q01_top_products"))
     val passes = args.drop(2).headOption.map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = Tables.graftSession(builder)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.cliSession(defaultCpus = 32, "WARN")
 
     val stages =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long, Long, Long, Long)]()
@@ -85,10 +78,7 @@ object Prof {
           println(s"PROF   stage $id: $n tasks, wall $ms ms, " +
             s"taskRunSum $run ms, deserSum $deser ms, gcSum $gc ms")
       }
-      assert(spark.streams.active.isEmpty)
-      Tables.freeTransientBlocks(spark)
-      Tables.dropDrainedStreamTables(spark)
-      System.gc()
+      Tables.janitor(spark, name)
     }
 
     time("warmup")(Tables.lineitem(spark, sfDir)

@@ -3,17 +3,15 @@ package graft.etl
 /** Layered configuration (SURVEY.md §2 L; `etl/hybrid_settings.py:44-91`,
   * `etl/config.ini`): defaults <- properties file <- environment, with
   * validation on load. The reference's DB credentials become Spark
-  * paths/knobs; its `batch_size=5000` maps to the parquet write batch.
+  * paths/knobs.
   */
 final case class GraftConfig(
   inputDir: String,
   stagingDir: String,
   warehouseDir: String,
-  shufflePartitions: Int,
-  writeBatchSize: Int) {
+  shufflePartitions: Int) {
 
   require(shufflePartitions > 0, "shufflePartitions must be positive")
-  require(writeBatchSize > 0, "writeBatchSize must be positive")
   require(inputDir.nonEmpty && stagingDir.nonEmpty && warehouseDir.nonEmpty,
     "directories must be non-empty")
 }
@@ -24,8 +22,7 @@ object GraftConfig {
     "graft.input.dir" -> "/tmp/graft_retail/raw",
     "graft.staging.dir" -> "/tmp/graft_retail/staging",
     "graft.warehouse.dir" -> "/tmp/graft_retail/warehouse",
-    "graft.shuffle.partitions" -> "32",
-    "graft.write.batch.size" -> "5000")
+    "graft.shuffle.partitions" -> "32")
 
   /** Layering: defaults <- `props` (config-file stand-in) <- env vars
     * (GRAFT_INPUT_DIR etc.), mirroring .env-over-ini precedence
@@ -41,7 +38,6 @@ object GraftConfig {
       inputDir = get("graft.input.dir"),
       stagingDir = get("graft.staging.dir"),
       warehouseDir = get("graft.warehouse.dir"),
-      shufflePartitions = get("graft.shuffle.partitions").toInt,
-      writeBatchSize = get("graft.write.batch.size").toInt)
+      shufflePartitions = get("graft.shuffle.partitions").toInt)
   }
 }

@@ -970,7 +970,7 @@ object Dedup {
     // 1,323,932, sf3 18,703,894, sf10 269,130,714 pairs — the 64M
     // default clears the densest intended corpus ~3.4× and refuses the
     // quadratic regime LOUDLY, with the dial in the message
-    // (graft.devtools.SoakJaccard is the escape hatch run).
+    // (`graft.devtools.Soak jaccard` is the escape hatch run).
     val blockStats = base.groupBy("block").agg(count(lit(1)).as("n"))
       .agg(coalesce(max("n"), lit(0L)),
         coalesce(sum(expr("n * (n - 1) div 2")), lit(0L))).head()

@@ -376,7 +376,7 @@ object Similarity {
     // sf1 3,709,398, sf3 33,054,520, sf10 365,987,486 — the 100M
     // default clears the densest intended corpus ~3× and refuses
     // loudly with the dial in the message
-    // (graft.devtools.SoakKnn is the escape-hatch run; production
+    // (`graft.devtools.Soak knn` is the escape-hatch run; production
     // raises bitsPerBand instead, shrinking buckets geometrically).
     val candVolume = banded.groupBy("band_key")
       .agg(count(lit(1)).as("c"))

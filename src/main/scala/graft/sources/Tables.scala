@@ -87,6 +87,20 @@ object Tables {
     spark
   }
 
+  /** The graft session of a command-line main: `local[n]` with `n`
+    * shuffle partitions and no UI, where `n` is `SPARK_GRAFT_CPUS` or
+    * else the main's `defaultCpus`, logging at `logLevel`.
+    */
+  def cliSession(defaultCpus: Int, logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = graftSession(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Drop every persisted / eager-localCheckpointed RDD block in the
     * session. Iterative operators (PageRank, k-means, connected
     * components, the shingle grain) checkpoint intermediates whose
@@ -122,6 +136,35 @@ object Tables {
     spark.catalog.listTables().collect()
       .filter(_.name.startsWith(StreamTablePrefix))
       .foreach(t => spark.catalog.dropTempView(t.name))
+
+  /** Clean up between two queries of a sweep (Bench, Verify and the dev
+    * mains), outside any timed section: drop the finished query's
+    * persisted and checkpointed blocks ([[freeTransientBlocks]]) and its
+    * drained stream tables ([[dropDrainedStreamTables]]), so a long
+    * sweep does not bleed storage memory and driver heap into later
+    * queries. Both unpersist what a running stream may still read, so no
+    * streaming query may be active: registered streams are AvailableNow
+    * and finish inside their query.
+    *
+    * Shuffle files and broadcasts are cleaned only after their
+    * dependency objects are GC'd (ContextCleaner weak refs). With the
+    * 60 s periodic GC alone, a fast sweep accumulates hundreds of
+    * shuffles whose cleanup RPCs and file deletes then land inside later
+    * queries' timed sections (the sf1 late-sweep residue, SOAK.md). So
+    * the janitor nudges a GC and gives the cleaner thread 50 ms to
+    * drain, and each query starts from a clean block manager. A real
+    * cluster sheds this via executor lifecycle; it is sweep hygiene, not
+    * plan cost. `after` names the finished query in the assert message.
+    */
+  def janitor(spark: SparkSession, after: String): Unit = {
+    assert(spark.streams.active.isEmpty,
+      s"janitor with active streaming queries after $after: " +
+        spark.streams.active.map(_.name).mkString(","))
+    freeTransientBlocks(spark)
+    dropDrainedStreamTables(spark)
+    System.gc()
+    Thread.sleep(50)
+  }
 
   /** Run `body` with every `key -> Some(value)` set on the session,
     * then put each of those keys back exactly, also when `body`

@@ -255,12 +255,19 @@ object EventStreams {
     t
   }
 
+  /** Watermark delay of every event-time replay, in minutes: an event
+    * more than this late is dropped, which bounds per-key state lifetime.
+    * The oracles of watermark-cut replays subtract the same delay.
+    */
+  val WatermarkDelayMinutes = 10
+  private val watermarkDelay = s"$WatermarkDelayMinutes minutes"
+
   /** Tumbling 1-hour windowed counts/sums per event type with a
     * 10-minute watermark (drops events >10 min late, bounds state).
     */
   def hourlyByType(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(28,10)")).cast("double")
@@ -271,7 +278,7 @@ object EventStreams {
   /** Built-in session windows: 30-minute gap, watermarked. */
   def sessionWindows(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", watermarkDelay)
       .groupBy(
         session_window(col("ts"), s"${Events.SessionGapMinutes} minutes"),
         col("user_id"))
@@ -293,7 +300,7 @@ object EventStreams {
     import events.sparkSession.implicits._
     val gapUs = Events.SessionGapMinutes * 60 * 1000000L
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -371,7 +378,7 @@ object EventStreams {
     */
   val sessionizeStatefulAvailableNowSql: String = {
     val gapUs = Events.SessionGapMinutes * 60L * 1000000
-    val delayMs = 10L * 60 * 1000
+    val delayMs = WatermarkDelayMinutes * 60L * 1000
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   value FROM events),
        |mx AS (SELECT max(epoch_us(ts)) AS max_us FROM ev),
@@ -415,7 +422,7 @@ object EventStreams {
     */
   def dedupStream(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(DedupKeys)
 
   /** q132 — streaming dedup made driver-visible: replay the events
@@ -476,13 +483,13 @@ object EventStreams {
     val chunkUs = ErrorClickWindowMinutes.toLong * 60 * 1000000
     val errors = events.filter(col("event_type") === "error")
       .select(col("event_id").as("error_id"), col("ts").as("error_ts"))
-      .withWatermark("error_ts", "10 minutes")
+      .withWatermark("error_ts", watermarkDelay)
       .withColumn("err_chunk", explode(expr(
         s"""sequence(unix_micros(error_ts) div $chunkUs,
            |(unix_micros(error_ts) + $chunkUs - 1) div $chunkUs)""".stripMargin)))
     val clicks = events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
+      .withWatermark("click_ts", watermarkDelay)
       .withColumn("click_chunk", expr(s"unix_micros(click_ts) div $chunkUs"))
     errors.join(clicks, expr(
       s"""err_chunk = click_chunk AND click_ts >= error_ts AND
@@ -607,7 +614,7 @@ object EventStreams {
     */
   def errorClickLeftOuterAvailableNowSql: String = {
     val winUs = ErrorClickWindowMinutes * 60L * 1000000
-    val delayMs = 10L * 60 * 1000
+    val delayMs = WatermarkDelayMinutes * 60L * 1000
     s"""WITH mx AS (
        |  SELECT least(
        |    max(CASE WHEN event_type = 'error'
@@ -685,7 +692,7 @@ object EventStreams {
     */
   def errorClickFullOuterAvailableNowSql: String = {
     val winUs = ErrorClickWindowMinutes * 60L * 1000000
-    val delayMs = 10L * 60 * 1000
+    val delayMs = WatermarkDelayMinutes * 60L * 1000
     s"""WITH mx AS (
        |  SELECT (least(
        |    max(CASE WHEN event_type = 'error'
@@ -823,7 +830,7 @@ object EventStreams {
     import spark.implicits._
     val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
       .select("event_id", "ts", "user_id", "event_type", "value")
-      .withWatermark("ts", "10 minutes")
+      .withWatermark("ts", watermarkDelay)
       .as[Event]
     // the timers fire in the finalization batch: it must run
     val (_, sink) = drain(
@@ -854,7 +861,7 @@ object EventStreams {
     */
   def inactivityDigestAvailableNowSql: String = {
     val gapMs = Events.SessionGapMinutes * 60L * 1000
-    val delayMs = 10L * 60 * 1000
+    val delayMs = WatermarkDelayMinutes * 60L * 1000
     s"""WITH ev AS (
        |  SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id
        |  FROM events),
@@ -1207,18 +1214,6 @@ object EventStreams {
       .filter(d => d.isDirectory && d.getName.matches("b\\d+"))
       .map(_.getPath).sorted: _*)
 
-  /** q124 — the streaming engine made driver-visible: runs
-    * [[hourlyByType]] as a REAL Structured Streaming job (file source
-    * → watermark → stateful windowed aggregation → memory sink) under
-    * an available-now trigger, waits for it to drain, and returns the
-    * sink table. Complete output mode emits every window (append would
-    * withhold windows the final watermark hasn't passed), and the
-    * bounded replay arrives as one micro-batch (single source file),
-    * so no row is watermark-dropped — the result must equal the batch
-    * query cell-exactly, and the oracle IS the q26 batch SQL. This
-    * turns batch/stream parity from a unit-tested property
-    * (StreamingSpec's MemoryStream diff) into a driver-checked row.
-    */
   /** q125 — watermark semantics made driver-visible: runs
     * [[sessionWindows]] as a real streaming job in APPEND mode, where
     * a session row is emitted only once the watermark passes its
@@ -1254,7 +1249,7 @@ object EventStreams {
     */
   val sessionWindowsAvailableNowSql: String = {
     val gapUs = Events.SessionGapMinutes * 60L * 1000000
-    val delayMs = 10L * 60 * 1000
+    val delayMs = WatermarkDelayMinutes * 60L * 1000
     s"""WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
        |                   value FROM events),
        |mx AS (SELECT max(epoch_us(ts)) AS max_us FROM ev),
@@ -1330,7 +1325,7 @@ object EventStreams {
     * vary, chronology is what matters. Reused through
     * [[graft.sources.Tables.freshStagedDir]] until the events file or
     * the code changes. Shared by [[sessionWindowsBatchedReplay]] (q134)
-    * and the soak prober ([[graft.devtools.SoakStream]]).
+    * and the `stream` probe of [[graft.devtools.Soak]].
     */
   def stageChronologicalEvents(spark: SparkSession, sfDir: String,
       nFiles: Int, lateTail: Boolean = false): String = {
@@ -1490,76 +1485,6 @@ object EventStreams {
        |FROM p GROUP BY source
        |ORDER BY source""".stripMargin
 
-  /** q205 — STREAMING NEAR-DUP ADMISSION (round-11 verdict #6): q196's
-    * batch stage 2 on the LIVE path, wired through q159's versioned-
-    * segment index idiom. The staged document batches (ascending
-    * doc_id ranges — [[stageIdBatches]]) replay one file per
-    * trigger; each micro-batch (a) gates its train-split docs with the
-    * SHARED battery ([[graft.operators.Corpus.withGateScore]]),
-    * (b) bands its gate admits with the SHARED stage-2 banding
-    * ([[graft.operators.Corpus.bandsOf]]), (c) probes the UNION of all
-    * prior batches' committed band segments plus its own bands for
-    * candidates, verifies them at the shared shingle grain, and drops
-    * the larger id of every duplicate pair — exactly q196's "b
-    * compares against all admits below it" rule, because the staged
-    * ranges make every earlier-batch doc_id smaller — then (d) commits
-    * its own gate admits' band rows as a `_SUCCESS` segment and its
-    * admit/drop ledger to an idempotent per-batch dir. History is
-    * never re-banded: per-batch cost is O(batch) + one probe join.
-    *
-    * The fold of the per-batch ledgers therefore reconstructs q196
-    * stage 2 EXACTLY on the same data (StreamingSpec asserts the
-    * admitted total against `corpusPipeline`'s near_dup row, and a
-    * controlled fixture pins a genuinely CROSS-batch drop). The DuckDB
-    * oracle restates the whole replay per batch — batch membership is
-    * the deterministic `doc_id·n div (max+1)` range split.
-    *
-    * SEGMENT COMPACTION (round-13, the q199 transplant the round-12
-    * verdict asked for): the probe no longer folds every prior batch
-    * segment — after committing its own segment, a batch whose live
-    * `_SUCCESS` segment count exceeds `maxLiveSegments` folds them all
-    * into ONE `gen<batchId>` generation as a PURE band-row copy (the
-    * lineage is parquet reads ∪ parquet write — no re-gate, no
-    * re-shingle, no re-minhash) and then deletes the inputs, so
-    * per-batch history cost is O(maxLiveSegments), not O(batches).
-    * The commit order makes a crash harmless: the generation is
-    * `_SUCCESS`-committed BEFORE its inputs are removed, and a
-    * double-listed band row only duplicates candidate pairs the probe
-    * `distinct()`s away — admissions are identical either way
-    * (StreamingSpec pins never-compact == compact-every-batch on the
-    * cross-batch fixture; q208 carries the batch-side oracle of the
-    * same property). Probing a compacted GENERATION is driver-checked
-    * by q209 (maxLiveSegments = 2, whose last batch probes the folded
-    * generation); a production deployment sets the dial higher
-    * (compacting every K batches
-    * amortizes the fold to corpus/K per batch — the single-level
-    * scheme q199 uses; size-tiered folding would make total rewrite
-    * O(n log n) and drops in without changing the probe, which just
-    * lists live segments).
-    *
-    * Registered dials (round 14): q205 runs the MINIMAL incremental
-    * fixture — 2 staged batches, fold every batch — so the driver row
-    * pins per-batch admission, the cross-batch history drop, and one
-    * executed fold; q209 (nFiles = 4, maxLiveSegments = 2) carries the
-    * production-amortization properties on its own oracle: a batch
-    * probing TWO live segments, a batch probing the folded GENERATION,
-    * and a replay that ends amortized (live = {generation, tail}).
-    *
-    * PROBE-VOLUME GUARD (round 14): the per-batch band probe is a
-    * join this loop runs forever, so it gets the q185/q33 discipline —
-    * bound BEFORE materializing. Tier 0 is action-free (exact history
-    * row counts from per-segment `_graft_rows` sidecars × the known
-    * batch band rows, worst-case single-bucket product vs
-    * `maxProbePairs`); only when that can't clear does tier 1 pay one
-    * bucket-grain agg for the exact pre-filter join cardinality and
-    * refuse loudly above the cap. A degenerate near-identical inflow
-    * is therefore refused with the dial in the message instead of
-    * spilling the executor (StreamingSpec pins refusal AND
-    * dial-equality: the forced-through run admits identically).
-    *
-    * Output per batch: docs seen (train split), gate admits, dup drops
-    * (split out: dropped by a HISTORY partner), final admits.
-    */
   /** The committed, not-yet-folded segments of a band-index dir:
     * every `_SUCCESS`-marked child (batch segments `b<id>` and folded
     * generations `gen<id>` alike — the probe does not care which).
@@ -1687,6 +1612,73 @@ object EventStreams {
   val FoldTargetBytes = 64L << 20 // segment size the near-dup replays fold to
   val MaxProbePairs = 64L << 20 // probe-pair ceiling of one near-dup batch
 
+  /** q205 — STREAMING NEAR-DUP ADMISSION: q196's batch stage 2 on the
+    * LIVE path, wired through q159's versioned-segment index idiom.
+    * The staged document batches (ascending doc_id ranges —
+    * [[stageIdBatches]]) replay one file per trigger; each micro-batch (a) gates its train-split docs with the
+    * SHARED battery ([[graft.operators.Corpus.withGateScore]]),
+    * (b) bands its gate admits with the SHARED stage-2 banding
+    * ([[graft.operators.Corpus.bandsOf]]), (c) probes the UNION of all
+    * prior batches' committed band segments plus its own bands for
+    * candidates, verifies them at the shared shingle grain, and drops
+    * the larger id of every duplicate pair — exactly q196's "b
+    * compares against all admits below it" rule, because the staged
+    * ranges make every earlier-batch doc_id smaller — then (d) commits
+    * its own gate admits' band rows as a `_SUCCESS` segment and its
+    * admit/drop ledger to an idempotent per-batch dir. History is
+    * never re-banded: per-batch cost is O(batch) + one probe join.
+    *
+    * The fold of the per-batch ledgers therefore reconstructs q196
+    * stage 2 EXACTLY on the same data (StreamingSpec asserts the
+    * admitted total against `corpusPipeline`'s near_dup row, and a
+    * controlled fixture pins a genuinely CROSS-batch drop). The DuckDB
+    * oracle restates the whole replay per batch — batch membership is
+    * the deterministic `doc_id·n div (max+1)` range split.
+    *
+    * SEGMENT COMPACTION (q199's scheme, transplanted): the probe does
+    * not fold every prior batch segment — after committing its own segment, a batch whose live
+    * `_SUCCESS` segment count exceeds `maxLiveSegments` folds them all
+    * into ONE `gen<batchId>` generation as a PURE band-row copy (the
+    * lineage is parquet reads ∪ parquet write — no re-gate, no
+    * re-shingle, no re-minhash) and then deletes the inputs, so
+    * per-batch history cost is O(maxLiveSegments), not O(batches).
+    * The commit order makes a crash harmless: the generation is
+    * `_SUCCESS`-committed BEFORE its inputs are removed, and a
+    * double-listed band row only duplicates candidate pairs the probe
+    * `distinct()`s away — admissions are identical either way
+    * (StreamingSpec pins never-compact == compact-every-batch on the
+    * cross-batch fixture; q208 carries the batch-side oracle of the
+    * same property). Probing a compacted GENERATION is driver-checked
+    * by q209 (maxLiveSegments = 2, whose last batch probes the folded
+    * generation); a production deployment sets the dial higher
+    * (compacting every K batches amortizes the fold to corpus/K per batch — the single-level
+    * scheme q199 uses; size-tiered folding would make total rewrite
+    * O(n log n) and drops in without changing the probe, which just
+    * lists live segments).
+    *
+    * Registered dials: q205 runs the MINIMAL incremental
+    * fixture — 2 staged batches, fold every batch — so the driver row
+    * pins per-batch admission, the cross-batch history drop, and one
+    * executed fold; q209 (nFiles = 4, maxLiveSegments = 2) carries the
+    * production-amortization properties on its own oracle: a batch
+    * probing TWO live segments, a batch probing the folded GENERATION,
+    * and a replay that ends amortized (live = {generation, tail}).
+    *
+    * PROBE-VOLUME GUARD: the per-batch band probe is a
+    * join this loop runs forever, so it gets the q185/q33 discipline —
+    * bound BEFORE materializing. Tier 0 is action-free (exact history
+    * row counts from per-segment `_graft_rows` sidecars × the known
+    * batch band rows, worst-case single-bucket product vs
+    * `maxProbePairs`); only when that can't clear does tier 1 pay one
+    * bucket-grain agg for the exact pre-filter join cardinality and
+    * refuse loudly above the cap. A degenerate near-identical inflow
+    * is therefore refused with the dial in the message instead of
+    * spilling the executor (StreamingSpec pins refusal AND
+    * dial-equality: the forced-through run admits identically).
+    *
+    * Output per batch: docs seen (train split), gate admits, dup drops
+    * (split out: dropped by a HISTORY partner), final admits.
+    */
   def streamingNeardupAdmission(spark: SparkSession, sfDir: String,
       nFiles: Int = ReplayFiles, maxLiveSegments: Int = 1,
       foldTargetBytes: Long = FoldTargetBytes,
@@ -2158,6 +2150,18 @@ object EventStreams {
     sink.orderBy("user_id", "session_start")
   }
 
+  /** q124 — the streaming engine made driver-visible: runs
+    * [[hourlyByType]] as a REAL Structured Streaming job (file source
+    * → watermark → stateful windowed aggregation → memory sink) under
+    * an available-now trigger, waits for it to drain, and returns the
+    * sink table. Complete output mode emits every window (append would
+    * withhold windows the final watermark hasn't passed), and the
+    * bounded replay arrives as one micro-batch (single source file),
+    * so no row is watermark-dropped — the result must equal the batch
+    * query cell-exactly, and the oracle IS the q26 batch SQL. This
+    * turns batch/stream parity from a unit-tested property
+    * (StreamingSpec's MemoryStream diff) into a driver-checked row.
+    */
   def hourlyByTypeAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, sink) = drain(
       hourlyByType(readEventStream(spark, sfDir, glob = Some("events.parquet"))),
@@ -2457,7 +2461,7 @@ object EventStreams {
       withKmvScalars(
         readEventStream(spark, sfDir, glob = Some("events.parquet"))
           .withColumn("h", expr(kmvUserHashExpr))
-          .withWatermark("ts", "10 minutes")
+          .withWatermark("ts", watermarkDelay)
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(graft.functions.KmvAgg.bottomK(col("h"), HourlyKmvK).as("kmv"),
             count(lit(1)).as("n_events"))
@@ -2542,7 +2546,7 @@ object EventStreams {
       withKmvScalars(
         readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
           .withColumn("h", expr(kmvUserHashExpr))
-          .withWatermark("ts", "10 minutes")
+          .withWatermark("ts", watermarkDelay)
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(graft.functions.KmvAgg.bottomK(col("h"), HourlyKmvK).as("kmv"),
             count(lit(1)).as("n_events"))

@@ -519,14 +519,14 @@ class PlanSpec extends SparkSpec {
 
   test("config layering: env beats props beats defaults; validation rejects junk") {
     val c1 = graft.etl.GraftConfig.load(env = Map.empty)
-    assert(c1.writeBatchSize === 5000)
+    assert(c1.stagingDir === "/tmp/graft_retail/staging")
     val c2 = graft.etl.GraftConfig.load(
-      props = Map("graft.write.batch.size" -> "100"), env = Map.empty)
-    assert(c2.writeBatchSize === 100)
+      props = Map("graft.staging.dir" -> "/p/staging"), env = Map.empty)
+    assert(c2.stagingDir === "/p/staging")
     val c3 = graft.etl.GraftConfig.load(
-      props = Map("graft.write.batch.size" -> "100"),
-      env = Map("GRAFT_WRITE_BATCH_SIZE" -> "7"))
-    assert(c3.writeBatchSize === 7)
+      props = Map("graft.staging.dir" -> "/p/staging"),
+      env = Map("GRAFT_STAGING_DIR" -> "/e/staging"))
+    assert(c3.stagingDir === "/e/staging")
     intercept[IllegalArgumentException] {
       graft.etl.GraftConfig.load(
         props = Map("graft.shuffle.partitions" -> "-1"), env = Map.empty)

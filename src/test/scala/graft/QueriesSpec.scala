@@ -14,6 +14,14 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("every registered name appears once in the roster") {
+    // `queries` and `oracleSql` are maps built from the roster, so a
+    // second entry under a taken name would silently replace the first
+    val dup = SparkEntry.roster.groupBy(_.name)
+      .collect { case (name, qs) if qs.size > 1 => name }
+    assert(dup.isEmpty, s"names registered more than once: ${dup.toSeq.sorted}")
+  }
+
   test("every oracleSql key has a matching query") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracleSql without query: $extra")

@@ -52,7 +52,7 @@ import graft.streaming.EventStreams
   *    >60 GB), with a broadcast threshold wide enough for the vector
   *    table, so the size gate plans map-side lookups instead of sorting
   *    the candidate stream with embedding payloads. The artifacts are
-  *    keyed on the embeddings mtime, the (k, bands, bits) dial and the
+  *    keyed on the embeddings files, the (k, bands, bits) dial and the
   *    build fingerprint, not on the candidate ceiling, so a dialed build
   *    is then served to q203/q204/q206 verbatim: the registered queries
   *    complete at sf10 against the identical index.
@@ -136,8 +136,7 @@ object Soak {
     val srcDir =
       if (keyMult <= 1) sfDir
       else {
-        val d = new java.io.File("/tmp/graft_stage",
-          s"mult${keyMult}_" + Tables.pathKey(sfDir))
+        val d = Tables.Stage.scratch(s"mult${keyMult}_", sfDir)
         val ev = Tables.events(spark, sfDir)
         (0 until keyMult).map(k => ev
             .withColumn("user_id", col("user_id") + lit(k * 100000000L))

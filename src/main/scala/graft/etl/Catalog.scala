@@ -33,12 +33,6 @@ object Catalog {
       .delete(p, true)
   }
 
-  /** CREATE TABLE ... USING parquet if absent (J1 + I2). */
-  def createTableIfAbsent(spark: SparkSession, name: String,
-      df: DataFrame): Unit =
-    if (!tableExists(spark, name))
-      df.write.format("parquet").saveAsTable(name)
-
   /** DROP TABLE (J5; `sql/ddl_oracle.sql:103-110`). */
   def dropTable(spark: SparkSession, name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $name")

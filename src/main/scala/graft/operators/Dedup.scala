@@ -263,10 +263,7 @@ object Dedup {
     * set is (even corpus) ∪ (round-1 odd docs with no round-1 match).
     */
   def incrementalDedupLoop(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new java.io.File("/tmp/graft_index",
-      "loop_" + Tables.pathKey(sfDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
-    root.mkdirs()
+    val root = Tables.Index.scratch("loop_", sfDir)
     val seg0 = spark.read.parquet(corpusBandIndex(spark, sfDir))
       .select(col("doc_id").as("corpus_id"),
         col("band_idx"), col("band_key"))
@@ -397,10 +394,7 @@ object Dedup {
     * parallel, scheduled every K ingests.
     */
   def bandIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = new java.io.File("/tmp/graft_index",
-      "compact_" + Tables.pathKey(sfDir))
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
-    root.mkdirs()
+    val root = Tables.Index.scratch("compact_", sfDir)
     val seg0 = spark.read.parquet(corpusBandIndex(spark, sfDir))
     val sh = distinctShingles(spark, sfDir)
     def batchBands(residue: Int): DataFrame = bandedFromSigs(
@@ -472,11 +466,11 @@ object Dedup {
   /** Build (or reuse) the persisted corpus band index: the even-doc_id
     * half's (doc_id, band_idx, band_key) rows as parquet under
     * /tmp/graft_index, keyed through [[Tables.freshStagedDir]] on the
-    * documents parquet mtime + the LSH dials.
+    * documents parquet files + the LSH dials.
     */
   private def corpusBandIndex(spark: SparkSession, sfDir: String): String =
-    Tables.freshStagedDir("/tmp/graft_index/bands_" + Tables.pathKey(sfDir),
-      Seq(new java.io.File(sfDir, "documents.parquet")),
+    Tables.freshStagedDir(spark, Tables.Index.dir("bands_", sfDir),
+      Seq(s"$sfDir/documents.parquet"),
       s"$NumHashes#$Bands#$RowsPerBand", Seq("bands/_SUCCESS")) { dir =>
       bandedFromSigs(
         minhashSignaturesRaw(spark, sfDir)

@@ -84,9 +84,7 @@ object Layout {
     * rewrite) so a testdata regen can never serve stale files.
     */
   def writeSortedExport(spark: SparkSession, sfDir: String): String = {
-    val dir = new java.io.File("/tmp/graft_sorted",
-      Tables.pathKey(sfDir)).toString
-    graft.etl.Catalog.deletePath(spark, dir)
+    val dir = Tables.Sorted.scratch("", sfDir).getPath
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_quantity"))
@@ -99,7 +97,7 @@ object Layout {
       .repartition(ExportBuckets, col("bucket"))
       .sortWithinPartitions("bucket", "l_partkey", "l_orderkey",
         "l_linenumber")
-      .write.partitionBy("bucket").parquet(dir)
+      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
     dir
   }
 

@@ -1,31 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for shuffle joins (builder prompt: "salting for
-  * skew"; complements AQE's runtime skew-join splitting when a key's
-  * skew is known a priori).
-  *
-  * Pattern: the large, skewed side gets a uniform salt in [0, n); the
-  * small side is replicated n times (one copy per salt). The join key
-  * becomes (key, salt), so a hot key's rows spread over n reducers.
-  * Join RESULTS are independent of the salt values, so the
-  * nondeterministic `rand` is safe here.
+/** Skew mitigation for a key whose skew is known a priori (AQE's
+  * runtime skew-join splitting covers the rest): a uniform salt in
+  * [0, n) spreads each key's rows over n groups. Results are
+  * independent of the salt values, so the nondeterministic `rand` is
+  * safe here.
   */
 object Salting {
-
-  /** Inner equi-join of a skewed `large` side with a replicable
-    * `small` side on `key`, salted `numSalts` ways.
-    */
-  def saltedEquiJoin(large: DataFrame, small: DataFrame, key: String,
-      numSalts: Int): DataFrame = {
-    val salted = large.withColumn("_salt",
-      (rand(42) * numSalts).cast("int"))
-    val replicated = small.withColumn("_salt",
-      explode(sequence(lit(0), lit(numSalts - 1))))
-    salted.join(replicated, Seq(key, "_salt")).drop("_salt")
-  }
 
   /** Salted groupBy-sum: two-phase aggregation where the first phase
     * groups on (key, salt) to spread a hot key, the second merges the

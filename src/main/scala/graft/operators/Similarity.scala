@@ -305,7 +305,7 @@ object Similarity {
     * top-k list and the rank-mutual edge list derived from it — as
     * artifacts under /tmp/graft_stage and return their paths. The
     * directory name carries every dial and [[Tables.freshStagedDir]]
-    * keys it on the embeddings mtime and the running build, so a
+    * keys it on the embeddings files and the running build, so a
     * testdata regen, a code change or a different (k, bands, bits)
     * rebuilds while repeat consumers in one session (q203's
     * presentation, q204's component stage, q206's triplet miner,
@@ -316,10 +316,9 @@ object Similarity {
     */
   private def ensureKnnArtifacts(spark: SparkSession, sfDir: String,
       maxCandPairs: Long = KnnGraphMaxCandPairs): (String, String) = {
-    val base = Tables.freshStagedDir(
-      s"/tmp/graft_stage/mkg_${Tables.pathKey(sfDir)}_${KnnGraphK}_" +
-        s"${KnnGraphBands}_$KnnGraphBitsPerBand",
-      Seq(new java.io.File(sfDir, "embeddings.parquet")), "knn",
+    val base = Tables.freshStagedDir(spark, Tables.Stage.dir("mkg_", sfDir,
+        s"_${KnnGraphK}_${KnnGraphBands}_$KnnGraphBitsPerBand"),
+      Seq(s"$sfDir/embeddings.parquet"), "knn",
       Seq("topk/_SUCCESS", "edges/_SUCCESS")) { dir =>
       // both products in one build: building them apart would run the
       // heavy banded ranking twice
@@ -696,36 +695,19 @@ object Similarity {
     * pairs, each cluster ~N/k vectors. Swapping the sample quantizer for
     * trained KMeans centroids changes ONLY the `seeds` collect.
     */
-  /** Quantizer tables by (dataset, nClusters): the seed collect is a
-    * model FIT — run once per corpus and reused by every subsequent
-    * query construction (query builders are re-invoked freely by tests
-    * and benchmarks; without this cache each construction re-scanned the
-    * embeddings at PLAN time). The in-process map is the model-store
-    * analog; a cluster deployment would persist the centroid table.
-    */
-  // Keyed by (sfDir, embeddings-parquet mtime, nClusters) — the "fetch
-  // the trained model once" analog, invalidated when the corpus file is
-  // rewritten in place (an in-place regen within one JVM previously
-  // served stale centroids; recall-only effect, but silent). Within an
-  // immutable layout the mtime is constant, so the fit still runs once.
-  private val quantizerCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int),
-      Array[(Int, Array[Float])]]()
-
-  /** mtime fingerprint of the embeddings parquet under `sfDir` (0 for
-    * non-local URIs → per-JVM memoization, the pre-round-7 behavior). */
-  private def embeddingsMtime(sfDir: String): Long =
-    try new java.io.File(s"$sfDir/embeddings.parquet").lastModified
-    catch { case _: Exception => 0L }
-
-  /** The memoized quantizer fit: nClusters seed centroids picked by a
-    * deterministic md5 shuffle of vec_ids. Package-private so the
-    * mtime-invalidation contract is unit-testable (IvfCacheSpec).
+  /** The quantizer fit: nClusters seed centroids picked by a
+    * deterministic md5 shuffle of vec_ids. The seed collect is a model
+    * FIT, run once per corpus through [[Tables.memo]] (the model-store
+    * analog; a cluster deployment would persist the centroid table) and
+    * reused by every later query construction, which tests and
+    * benchmarks re-invoke freely. A rewritten embeddings table fits
+    * again (MtimeCacheSpec).
     */
   private[graft] def ivfQuantizer(spark: SparkSession, sfDir: String,
       nClusters: Int): Array[(Int, Array[Float])] =
-    quantizerCache.computeIfAbsent((sfDir, embeddingsMtime(sfDir), nClusters),
-      _ => Tables.embeddings(spark, sfDir)
+    Tables.memo(spark, s"$sfDir/embeddings.parquet",
+        s"ivfQuantizer#$nClusters") {
+      Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), col("embedding"),
           md5(col("vec_id").cast("string").cast("binary")).as("seed_key"))
         .orderBy(asc("seed_key"), asc("vec_id"))
@@ -734,7 +716,8 @@ object Similarity {
         .zipWithIndex
         .map { case (r, i) =>
           (i, r.getAs[scala.collection.Seq[Float]]("embedding").toArray)
-        })
+        }
+    }
 
   val IvfClusters = 16 // coarse quantizer cells (md5-ranked seeds)
   val IvfProbe = 4 // quantizer cells each query probes
@@ -742,7 +725,7 @@ object Similarity {
   def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     // bounded k-row collect: the quantizer table (TakeOrderedAndProject),
-    // computed once per (sfDir, embeddings mtime, nClusters) and memoized
+    // computed once per (embeddings files, nClusters) and memoized
     val seeds: Array[(Int, Array[Float])] =
       ivfQuantizer(spark, sfDir, IvfClusters)
     val centroids = seeds.map(_._2)
@@ -843,7 +826,7 @@ object Similarity {
     *
     * Everything is relational and cell-exact oracle-checkable:
     *  - sub-codebooks: the SAME md5-sample quantizer as IVF
-    *    ([[ivfQuantizer]], memoized + mtime-keyed), normalized then
+    *    ([[ivfQuantizer]], memoized per corpus), normalized then
     *    sliced into M subvectors — deterministic, SQL-expressible;
     *    swapping in trained per-subspace k-means (the q128 Lloyd
     *    machinery) would change only the codebook collect;
@@ -1065,13 +1048,13 @@ object Similarity {
 
   /** Build (or reuse) the persisted PQ codes index: (vec_id, cluster,
     * s, j) parquet under /tmp/graft_index, keyed through
-    * [[Tables.freshStagedDir]] on the embeddings mtime + every dial
+    * [[Tables.freshStagedDir]] on the embeddings files + every dial
     * that shapes the codes.
     */
   private def pqCodesIndex(spark: SparkSession, sfDir: String,
       nSeeds: Int, m: Int, nClusters: Int): String =
-    Tables.freshStagedDir("/tmp/graft_index/pq_" + Tables.pathKey(sfDir),
-      Seq(new java.io.File(sfDir, "embeddings.parquet")),
+    Tables.freshStagedDir(spark, Tables.Index.dir("pq_", sfDir),
+      Seq(s"$sfDir/embeddings.parquet"),
       s"$nSeeds#$m#$nClusters#iters1", Seq("codes/_SUCCESS")) { dir =>
       pqEncoded(spark, sfDir, nSeeds, m, nClusters,
         Tables.embeddings(spark, sfDir)).write.parquet(dir + "/codes")
@@ -1160,11 +1143,9 @@ object Similarity {
       pqSegmentedIndex(spark, sfDir, PqSeeds, PqSubspaces, IvfClusters)
     val union = spark.read.parquet(baseDir)
       .unionByName(spark.read.parquet(segDir))
-    val root = new java.io.File("/tmp/graft_index",
-      "pqseg_" + Tables.pathKey(sfDir))
-    val compactDir = new java.io.File(root, "compacted")
-    org.apache.commons.io.FileUtils.deleteQuietly(compactDir)
-    union.write.parquet(compactDir.getPath) // pure copy, no pq_encode
+    val compactDir = Tables.Index.scratch("pqseg_", sfDir, "/compacted")
+    // pure copy, no pq_encode
+    union.write.mode("overwrite").parquet(compactDir.getPath)
     val compacted = spark.read.parquet(compactDir.getPath)
     val cb = trainedCodebooks(spark, sfDir, PqSeeds, PqSubspaces)
     def search(codes: DataFrame): DataFrame =
@@ -1222,9 +1203,8 @@ object Similarity {
       nSeeds: Int, m: Int, nClusters: Int): (String, String) = {
     def encode(batch: DataFrame): DataFrame =
       pqEncoded(spark, sfDir, nSeeds, m, nClusters, batch)
-    val root = Tables.freshStagedDir(
-      "/tmp/graft_index/pqseg_" + Tables.pathKey(sfDir),
-      Seq(new java.io.File(sfDir, "embeddings.parquet")),
+    val root = Tables.freshStagedDir(spark, Tables.Index.dir("pqseg_", sfDir),
+      Seq(s"$sfDir/embeddings.parquet"),
       s"$nSeeds#$m#$nClusters#iters1#mod4", Seq("base/_SUCCESS")) { dir =>
       encode(Tables.embeddings(spark, sfDir)
           .filter(pmod(col("vec_id"), lit(4)) =!= 3))
@@ -1357,13 +1337,6 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  // Trained codebooks by (sfDir, embeddings mtime, nSeeds, m, iters):
-  // the Lloyd fit is a model FIT like ivfQuantizer — computed once per
-  // corpus, reused by every query construction, invalidated on rewrite.
-  private val trainedCbCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long, Int, Int, Int), Array[Array[Array[Double]]]]()
-
   val PqTrainIters = 1 // Lloyd iterations that train the PQ codebooks
 
   /** One Lloyd refinement of the sample sub-codebooks (q142's fit):
@@ -1395,84 +1368,84 @@ object Similarity {
   private[graft] def trainedCodebooks(spark: SparkSession, sfDir: String,
       nSeeds: Int, m: Int,
       iters: Int = PqTrainIters): Array[Array[Array[Double]]] =
-    trainedCbCache.computeIfAbsent(
-      (sfDir, embeddingsMtime(sfDir), nSeeds, m, iters), _ => {
-        require(iters >= 1, s"pq train: iters must be >= 1, got $iters")
-        val subDim = Dim / m
-        val sample = sampleCodebooks(spark, sfDir, nSeeds, m)
-        val en = Tables.embeddings(spark, sfDir)
-          .withColumn("nr", expr(
-            """aggregate(embedding, CAST(0 AS DOUBLE),
-              |  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""
-              .stripMargin))
-          .withColumn("e_n", expr(
-            """transform(embedding, x -> CAST(x AS DOUBLE) /
-              |  (CASE WHEN nr = CAST(0 AS DOUBLE) THEN CAST(1 AS DOUBLE)
-              |        ELSE sqrt(nr) END))""".stripMargin))
-          .select(col("vec_id"), col("e_n"))
-        val subpoints = en.select(col("vec_id"), explode(expr(
-            s"""transform(sequence(0, ${m - 1}), s ->
-               |  struct(s AS s,
-               |    slice(e_n, s * $subDim + 1, $subDim) AS subvec))"""
-              .stripMargin)).as("p"))
-          .select(col("vec_id"), col("p.s").as("s"),
-            col("p.subvec").as("subvec"))
-          // materialized once: every Lloyd round re-reads the subvector
-          // grain; without this the chain re-normalizes the parquet
-          // scan per round (the kmeans iterative-input idiom)
-          .localCheckpoint(true)
-        var current = sample
-        for (_ <- 1 to iters) {
-          val cb0 = spark.createDataFrame(
-              for (s <- 0 until m; j <- current(s).indices)
-                yield (s, j, current(s)(j).toSeq))
-            .toDF("s", "j", "subvec")
-            .select(col("s"), col("j"), col("subvec").cast("array<double>"))
-          // argmin assignment: (d2, j) struct-min; j unique -> the
-          // subvec payload is never compared (assignToCentroids idiom)
-          val best = subpoints
-            .join(broadcast(cb0.withColumnRenamed("subvec", "cent")), Seq("s"))
-            .withColumn("d2", expr(
-              """aggregate(zip_with(subvec, cent,
-                |    (x, c) -> (x - c) * (x - c)),
-                |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin))
-            .groupBy("vec_id", "s")
-            .agg(min(struct(col("d2"), col("j"), col("subvec"))).as("b"))
-            .select(col("s"), col("b.j").as("j"), col("b.subvec").as("subvec"))
-          val sums = best
-            .select(col("s"), col("j"),
-              posexplode(col("subvec")).as(Seq("dim", "x")))
-            .groupBy("s", "j", "dim")
-            .agg(sum(floor(col("x") * lit(1e9)).cast("bigint")).as("sf"),
-              count(lit(1)).as("n"))
-            // 2^53 fence (the kmeans idiom): beyond ~9e6 members per code
-            // the BIGINT->double cast stops being exact — fail loudly
-            .withColumn("sf", when(
-              assert_true(abs(col("sf")) < lit(9000000000000000L),
-                lit("pq train: |centroid-dim sum| >= 9e15 - the" +
-                  " bigint->double cast is no longer exact; shard the" +
-                  " code or add a hi/lo split")).isNull,
-              col("sf")))
-          val grid = cb0.select(col("s"), col("j"),
-            posexplode(col("subvec")).as(Seq("dim", "c0")))
-          val trained = grid.join(sums, Seq("s", "j", "dim"), "left")
-            .withColumn("c", coalesce(
-              col("sf").cast("double") / lit(1e9) / col("n").cast("double"),
-              col("c0")))
-            .groupBy("s", "j")
-            .agg(expr("transform(sort_array(collect_list(struct(dim, c)))," +
-              " p -> p.c)").as("subvec"))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1),
-              r.getAs[scala.collection.Seq[Double]]("subvec").toArray))
-          val k = sample(0).length
-          val out = Array.tabulate(m, k)((_, _) => Array.empty[Double])
-          trained.foreach { case (s, j, v) => out(s)(j) = v }
-          require(out.forall(_.forall(_.nonEmpty)), "pq train: missing cell")
-          current = out
-        }
-        current
-      })
+    Tables.memo(spark, s"$sfDir/embeddings.parquet",
+        s"trainedCodebooks#$nSeeds#$m#$iters") {
+      require(iters >= 1, s"pq train: iters must be >= 1, got $iters")
+      val subDim = Dim / m
+      val sample = sampleCodebooks(spark, sfDir, nSeeds, m)
+      val en = Tables.embeddings(spark, sfDir)
+        .withColumn("nr", expr(
+          """aggregate(embedding, CAST(0 AS DOUBLE),
+            |  (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""
+            .stripMargin))
+        .withColumn("e_n", expr(
+          """transform(embedding, x -> CAST(x AS DOUBLE) /
+            |  (CASE WHEN nr = CAST(0 AS DOUBLE) THEN CAST(1 AS DOUBLE)
+            |        ELSE sqrt(nr) END))""".stripMargin))
+        .select(col("vec_id"), col("e_n"))
+      val subpoints = en.select(col("vec_id"), explode(expr(
+          s"""transform(sequence(0, ${m - 1}), s ->
+             |  struct(s AS s,
+             |    slice(e_n, s * $subDim + 1, $subDim) AS subvec))"""
+            .stripMargin)).as("p"))
+        .select(col("vec_id"), col("p.s").as("s"),
+          col("p.subvec").as("subvec"))
+        // materialized once: every Lloyd round re-reads the subvector
+        // grain; without this the chain re-normalizes the parquet
+        // scan per round (the kmeans iterative-input idiom)
+        .localCheckpoint(true)
+      var current = sample
+      for (_ <- 1 to iters) {
+        val cb0 = spark.createDataFrame(
+            for (s <- 0 until m; j <- current(s).indices)
+              yield (s, j, current(s)(j).toSeq))
+          .toDF("s", "j", "subvec")
+          .select(col("s"), col("j"), col("subvec").cast("array<double>"))
+        // argmin assignment: (d2, j) struct-min; j unique -> the
+        // subvec payload is never compared (assignToCentroids idiom)
+        val best = subpoints
+          .join(broadcast(cb0.withColumnRenamed("subvec", "cent")), Seq("s"))
+          .withColumn("d2", expr(
+            """aggregate(zip_with(subvec, cent,
+              |    (x, c) -> (x - c) * (x - c)),
+              |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin))
+          .groupBy("vec_id", "s")
+          .agg(min(struct(col("d2"), col("j"), col("subvec"))).as("b"))
+          .select(col("s"), col("b.j").as("j"), col("b.subvec").as("subvec"))
+        val sums = best
+          .select(col("s"), col("j"),
+            posexplode(col("subvec")).as(Seq("dim", "x")))
+          .groupBy("s", "j", "dim")
+          .agg(sum(floor(col("x") * lit(1e9)).cast("bigint")).as("sf"),
+            count(lit(1)).as("n"))
+          // 2^53 fence (the kmeans idiom): beyond ~9e6 members per code
+          // the BIGINT->double cast stops being exact — fail loudly
+          .withColumn("sf", when(
+            assert_true(abs(col("sf")) < lit(9000000000000000L),
+              lit("pq train: |centroid-dim sum| >= 9e15 - the" +
+                " bigint->double cast is no longer exact; shard the" +
+                " code or add a hi/lo split")).isNull,
+            col("sf")))
+        val grid = cb0.select(col("s"), col("j"),
+          posexplode(col("subvec")).as(Seq("dim", "c0")))
+        val trained = grid.join(sums, Seq("s", "j", "dim"), "left")
+          .withColumn("c", coalesce(
+            col("sf").cast("double") / lit(1e9) / col("n").cast("double"),
+            col("c0")))
+          .groupBy("s", "j")
+          .agg(expr("transform(sort_array(collect_list(struct(dim, c)))," +
+            " p -> p.c)").as("subvec"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1),
+            r.getAs[scala.collection.Seq[Double]]("subvec").toArray))
+        val k = sample(0).length
+        val out = Array.tabulate(m, k)((_, _) => Array.empty[Double])
+        trained.foreach { case (s, j, v) => out(s)(j) = v }
+        require(out.forall(_.forall(_.nonEmpty)), "pq train: missing cell")
+        current = out
+      }
+      current
+    }
 
   /** q142 — PQ ANN over the TRAINED sub-codebooks (`iters` Lloyd
     * rounds, [[trainedCodebooks]]): identical search pipeline to q138,

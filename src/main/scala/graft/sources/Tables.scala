@@ -284,49 +284,76 @@ object Tables {
       glob.forall(g => new GlobFilter(g).accept(f.getPath))).flatMap(files)
   }
 
-  private val footerRowCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
+  /** A cache source's identity: each visible file's qualified path,
+    * length and mtime, from the [[parquetFiles]] listing. It changes
+    * when any file is added, removed or rewritten, also a part file
+    * rewritten in place under a directory whose own mtime stays put. A
+    * missing or empty source fails: with no file, the key never changes.
+    */
+  private def sourceId(s: SparkSession, path: String,
+      glob: Option[String] = None): Seq[(String, Long, Long)] = {
+    val files = try parquetFiles(s, path, glob)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    require(files.nonEmpty, s"cache source missing: $path " +
+      "(mtime 0 would freeze the artifact key)")
+    files.map(idOf)
+  }
+
+  private def idOf(f: org.apache.hadoop.fs.FileStatus) =
+    (f.getPath.toString, f.getLen, f.getModificationTime)
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[
+    (Seq[(String, Long, Long)], String), Any]()
+
+  /** The one per-JVM value memo: `compute` once per [[sourceId]] of
+    * `path` and caller `key`, of which it must be a pure function.
+    * `compute` runs outside the map because it may call the memo again
+    * (a codebook fit starts from the quantizer fit, and any job may
+    * reach [[parquetRows]] through [[PresentationSort]]), which
+    * `computeIfAbsent` refuses as a recursive update. Racing misses
+    * both compute; every caller gets the first value stored.
+    */
+  def memo[V](s: SparkSession, path: String, key: String,
+      glob: Option[String] = None)(compute: => V): V =
+    memoOn(sourceId(s, path, glob), key)(compute)
+
+  private def memoOn[V](id: Seq[(String, Long, Long)], key: String)(
+      compute: => V): V =
+    Option(memos.get((id, key))).getOrElse {
+      val v = compute
+      Option(memos.putIfAbsent((id, key), v)).getOrElse(v)
+    }.asInstanceOf[V]
 
   /** Row count of parquet `files`, summed from their footers on the
-    * driver with no Spark job. Each file's count is memoized on its
-    * path, length and mtime, so a rewritten file is read again.
+    * driver with no Spark job. Each file's count is memoized on that
+    * file alone, so a rewritten file is read again.
     */
   private[sources] def parquetRows(s: SparkSession,
       files: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
     val conf = s.sparkContext.hadoopConfiguration
     files.map { f =>
-      footerRowCounts.computeIfAbsent(
-        (f.getPath.toString, f.getLen, f.getModificationTime), _ => {
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-          try reader.getRecordCount finally reader.close()
-        }).longValue
+      memoOn(Seq(idOf(f)), "footerRows") {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount finally reader.close()
+      }
     }.sum
   }
 
-  private val eventsTsNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Whether the events parquet at `path` (filtered by `glob`) stores
     * `ts` as TIMESTAMP(NANOS) (inferred as LongType under nanosAsLong)
-    * rather than TIMESTAMP(MICROS). Sniffed once per file set, keyed on
-    * each file's path, length and mtime: testdata REGENERATED at the
-    * same path may flip the encoding, and a stale answer silently
-    * applies the wrong ts branch (1970 or year-56k timestamps). A
-    * directory's mtime does not change when a file in it is rewritten
-    * in place, so the key names the files themselves.
+    * rather than TIMESTAMP(MICROS). Sniffed once per file set through
+    * [[memo]]: testdata REGENERATED at the same path may flip the
+    * encoding, and a stale answer silently applies the wrong ts branch
+    * (1970 or year-56k timestamps).
     */
   def eventsTsIsNanos(s: SparkSession, path: String,
-      glob: Option[String] = None): Boolean = {
-    val key = parquetFiles(s, path, glob)
-      .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
-      .mkString(s"$path#${glob.getOrElse("")}#", ",", "")
-    eventsTsNanos.computeIfAbsent(key, _ => {
+      glob: Option[String] = None): Boolean =
+    memo(s, path, "eventsTsIsNanos", glob) {
       val r = s.read
       glob.foreach(g => r.option("pathGlobFilter", g))
       r.parquet(path).schema("ts").dataType == LongType
-    })
-  }
+    }
 
   /** Rows of the events table under `sfDir`, from its footers. */
   def eventsRows(s: SparkSession, sfDir: String): Long =
@@ -454,25 +481,53 @@ object Tables {
       schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
+  /** A root of graft's on-disk artifacts, whose entry for one input
+    * directory is `<root>/<tag><pathKey(sfDir)><suffix>`.
+    */
+  final class ArtifactRoot private[Tables] (val path: String) {
+    def dir(tag: String, sfDir: String, suffix: String = ""): String =
+      s"$path/$tag${pathKey(sfDir)}$suffix"
+
+    /** [[dir]] deleted and made again, fresh for one call. */
+    def scratch(tag: String, sfDir: String,
+        suffix: String = ""): java.io.File = {
+      val d = new java.io.File(dir(tag, sfDir, suffix))
+      org.apache.commons.io.FileUtils.deleteQuietly(d)
+      d.mkdirs()
+      d
+    }
+  }
+
+  /** The artifact roots: staged splits, kNN artifacts and fixtures;
+    * indexes; streaming sinks and checkpoints; the sorted export.
+    */
+  val Stage = new ArtifactRoot("/tmp/graft_stage")
+  val Index = new ArtifactRoot("/tmp/graft_index")
+  val StreamSink = new ArtifactRoot("/tmp/graft_stream_sink")
+  val Sorted = new ArtifactRoot("/tmp/graft_sorted")
+
   /** The one freshness rule for every on-disk artifact (staged stream
     * splits, kNN artifacts, PQ and band indexes, roundtrip fixtures):
     * reuse `dir` only when its `_graft_stage_key` marker equals the
-    * current key — every source's mtime, the caller's dial string and
+    * current key — every source's [[sourceId]] (the identity the value
+    * [[memo]] keys on), the caller's dial string and
     * [[buildFingerprint]] — and every `required` path under it still
     * exists (a marker alone is not proof the data survived a /tmp
     * cleaner). Otherwise delete `dir`, run `build(dir)` and write the
     * marker LAST, so a build that dies midway leaves no marker and the
     * next call rebuilds. A missing source fails before anything is
-    * deleted. Freshness is re-checked on every call (a few file stats),
-    * so no per-JVM memo can serve a stale artifact. The underscore
-    * prefix keeps Spark's file sources from reading the marker as data.
+    * deleted. Freshness is re-checked on every call (one listing per
+    * source), so no per-JVM memo can serve a stale artifact. The
+    * underscore prefix keeps Spark's file sources from reading the
+    * marker as data.
     */
-  def freshStagedDir(dir: String, sources: Seq[java.io.File], key: String,
-      required: Seq[String])(build: String => Unit): String = {
+  def freshStagedDir(s: SparkSession, dir: String, sources: Seq[String],
+      key: String, required: Seq[String])(build: String => Unit): String = {
     val root = new java.io.File(dir)
     val marker = new java.io.File(root, "_graft_stage_key")
-    val full = (sources.map(sourceMtime) :+ key :+ buildFingerprint)
-      .mkString("#")
+    val full = (sources.map(p => sourceId(s, p)
+        .map { case (f, len, mtime) => s"$f:$len:$mtime" }.mkString(","))
+      :+ key :+ buildFingerprint).mkString("#")
     val fresh = marker.exists && {
       try new String(java.nio.file.Files.readAllBytes(marker.toPath),
         "UTF-8") == full
@@ -487,9 +542,11 @@ object Tables {
     dir
   }
 
-  /** mtime of a cache source file. `File.lastModified` is 0 for a
-    * missing path, which would freeze an artifact key, so a missing
-    * source fails loudly instead.
+  /** mtime of a local source file, for q187's catalog table names
+    * (`Layout.bucketedJoinRollup`), whose reuse guard is the session
+    * catalog rather than a [[freshStagedDir]] marker.
+    * `File.lastModified` is 0 for a missing path, which would freeze
+    * the name, so a missing source fails loudly instead.
     */
   def sourceMtime(f: java.io.File): Long = {
     val mt = f.lastModified
@@ -528,19 +585,18 @@ object Tables {
     md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 
-  private def srcParquet(sfDir: String, table: String): java.io.File =
-    new java.io.File(sfDir, table + ".parquet")
+  private def srcParquet(sfDir: String, table: String): String =
+    s"$sfDir/$table.parquet"
 
   /** q48 — JSONL roundtrip fidelity: stage `documents` as JSONL (once
-    * per dataset, mtime-keyed — the staging analog of a one-time
+    * per source version — the staging analog of a one-time
     * export), read it back with the declared schema, and fingerprint
     * the text. The oracle reads the original parquet directly, so equal
     * md5s prove the JSON encode/decode preserved every document
     * byte-exactly.
     */
   def documentsJsonlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = freshStagedDir(
-      "/tmp/graft_stage/jsonl_docs_" + pathKey(sfDir),
+    val path = freshStagedDir(spark, Stage.dir("jsonl_docs_", sfDir),
       Seq(srcParquet(sfDir, "documents")), "jsonl", Seq("_SUCCESS")) { p =>
       writeJsonl(documents(spark, sfDir), p)
     }
@@ -564,11 +620,10 @@ object Tables {
     * preserved every cell: doubles survive the CSV hop via Java's
     * shortest-roundtrip formatting, and the timestamp is presented at
     * DATE grain on both sides (the q97 date contract). Staging is
-    * mtime-keyed per dataset like the q48 JSONL stage.
+    * keyed per source version like the q48 JSONL stage.
     */
   def ordersSinkRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = freshStagedDir(
-      "/tmp/graft_stage/sink_orders_" + pathKey(sfDir),
+    val base = freshStagedDir(spark, Stage.dir("sink_orders_", sfDir),
       Seq(srcParquet(sfDir, "orders")), "sink",
       Seq("pq/_SUCCESS", "csv/_SUCCESS")) { p =>
       val o = orders(spark, sfDir)
@@ -595,11 +650,10 @@ object Tables {
     * JSONL q48, JDBC, this). DuckDB cannot read ORC, so the oracle
     * reads the ORIGINAL table — equality proves the ORC hop preserved
     * every cell (the q118 discipline: the sink is judged by what comes
-    * back). Declared-schema read, staged once per source mtime.
+    * back). Declared-schema read, staged once per source version.
     */
   def ordersOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = freshStagedDir(
-      "/tmp/graft_stage/orc_orders_" + pathKey(sfDir),
+    val base = freshStagedDir(spark, Stage.dir("orc_orders_", sfDir),
       Seq(srcParquet(sfDir, "orders")), "orc", Seq("_SUCCESS")) { p =>
       orders(spark, sfDir).write.mode("overwrite").orc(p)
     }
@@ -636,8 +690,7 @@ object Tables {
   def ordersEvolvedRead(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val cut = evolveCutover(spark, sfDir)
-    val base = freshStagedDir(
-      "/tmp/graft_stage/evolve_orders_" + pathKey(sfDir),
+    val base = freshStagedDir(spark, Stage.dir("evolve_orders_", sfDir),
       Seq(srcParquet(sfDir, "orders")), s"evolve#$cut",
       Seq("seg=v1/_SUCCESS", "seg=v2/_SUCCESS")) { p =>
       val o = orders(spark, sfDir)
@@ -883,8 +936,7 @@ object Tables {
     * FULL path (String.hashCode is 32-bit — two sfDirs can collide and
     * concurrent sessions would clobber each other's staging / index /
     * sink version chains; safe before only because the sbt project lock
-    * serialized runs). Shared by the streaming staging dirs, the dedup
-    * band index, and the durable-sink harnesses.
+    * serialized runs). Every [[ArtifactRoot]] entry name carries it.
     */
   def pathKey(path: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.operators.Events
+import graft.sources.Tables
 
 /** Structured Streaming form of the event analytics (SURVEY.md §7.5):
   * the same windowed aggregations as [[graft.operators.Events]], plus
@@ -524,25 +525,9 @@ object EventStreams {
     // finalization batch would only evict join state, never emit
     val (_, sink) = drain(
       errorClickPairsStream(ev).select(col("error_id"), col("click_id")),
-      parquetSink(streamSinkDir(sfDir, "pairs")),
+      parquetSink(Tables.StreamSink.scratch("pairs_", sfDir)),
       stateWidth(spark, 4, sfDir), skipFinalBatch = true)
     sink.orderBy("error_id", "click_id")
-  }
-
-  /** Fresh per-invocation durable-sink base for a streaming query,
-    * `/tmp/graft_stream_sink/<tag>_<pathKey(sfDir)><dials>` (sink,
-    * checkpoint and any per-batch outputs live together; deleted up
-    * front so each call exercises the full cycle — the q143
-    * discipline). `dials` keeps variants of one query on one sfDir
-    * apart.
-    */
-  private def streamSinkDir(sfDir: String, tag: String,
-      dials: String = ""): java.io.File = {
-    val base = new java.io.File("/tmp/graft_stream_sink",
-      tag + "_" + graft.sources.Tables.pathKey(sfDir) + dials)
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    base
   }
 
   /** Oracle for [[errorClickPairsAvailableNow]]: the plain batch
@@ -588,7 +573,8 @@ object EventStreams {
     val (_, sink) = drain(
       errorClickPairsStream(ev, joinType = "left_outer")
         .select(col("error_id"), col("click_id")),
-      parquetSink(streamSinkDir(sfDir, "louter")), stateWidth(spark, 4, sfDir))
+      parquetSink(Tables.StreamSink.scratch("louter_", sfDir)),
+      stateWidth(spark, 4, sfDir))
     val matched = sink.filter(col("click_id").isNotNull)
       .select("error_id", "click_id")
     val unmatched = sink.groupBy("error_id")
@@ -664,7 +650,8 @@ object EventStreams {
     val (_, sink) = drain(
       errorClickPairsStream(ev, joinType = "full_outer")
         .select(col("error_id"), col("click_id")),
-      parquetSink(streamSinkDir(sfDir, "fouter")), stateWidth(spark, 4, sfDir))
+      parquetSink(Tables.StreamSink.scratch("fouter_", sfDir)),
+      stateWidth(spark, 4, sfDir))
     val matched = sink
       .filter(col("error_id").isNotNull && col("click_id").isNotNull)
       .select("error_id", "click_id")
@@ -901,7 +888,7 @@ object EventStreams {
   def userLifetimeBootstrapAvailableNow(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val ev = graft.sources.Tables.events(spark, sfDir)
+    val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
     val Row(mn: Long, mx: Long) = ev.agg(
@@ -1008,7 +995,7 @@ object EventStreams {
     // happen to contain no AUTOMOBILE custkeys at all, which made the
     // single-segment blocklist VACUOUS there (caught by the QueriesSpec
     // subgroup audit, round 11) — MACHINERY is present at every scale
-    val blocked = graft.sources.Tables.customer(spark, sfDir)
+    val blocked = Tables.customer(spark, sfDir)
       .filter(col("c_mktsegment").isin("AUTOMOBILE", "MACHINERY"))
       .select(col("c_custkey").as("user_id"))
     val ev = readEventStream(spark, sfDir, glob = Some("events.parquet"))
@@ -1046,10 +1033,10 @@ object EventStreams {
       "set spark.sql.legacy.parquet.nanosAsLong=true at session build")
     // sniff the stored ts encoding (nanos-as-long vs plain micros) from
     // one batch footer read; the streaming schema must match the files
-    val nanos = graft.sources.Tables.eventsTsIsNanos(spark, dir, glob)
+    val nanos = Tables.eventsTsIsNanos(spark, dir, glob)
     val reader = spark.readStream
-      .schema(if (nanos) graft.sources.Tables.eventsSchema
-              else graft.sources.Tables.eventsMicrosSchema)
+      .schema(if (nanos) Tables.eventsSchema
+              else Tables.eventsMicrosSchema)
     // the file source lists a DIRECTORY; a single-file table is selected
     // by globbing within its parent, never by passing the file path
     glob.foreach(g => reader.option("pathGlobFilter", g))
@@ -1063,12 +1050,6 @@ object EventStreams {
   }
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** q148's boundary-spanning-key count, keyed by (sfDir, events
-    * mtime, nFiles) — see the inline note at its one use site.
-    */
-  private val spanningKeyMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), Long]()
 
   /** Source rows per state partition. Round 12 measured 8 partitions
     * as best for the 100,000 sf0.1 events (4 serialized the per-row
@@ -1095,7 +1076,7 @@ object EventStreams {
     * the source rows come from that table's footers.
     */
   private def stateWidth(spark: SparkSession, n: Int, sfDir: String): Int =
-    statePartitions(n, graft.sources.Tables.eventsRows(spark, sfDir))
+    statePartitions(n, Tables.eventsRows(spark, sfDir))
 
   /** Where a bounded replay writes, and what [[drain]] hands back once
     * it has drained: the sink's rows for a memory or parquet sink, `()`
@@ -1110,7 +1091,7 @@ object EventStreams {
     * between queries by [[graft.sources.Tables.dropDrainedStreamTables]].
     */
   private[graft] def memorySink(tag: String): Sink[DataFrame] = {
-    val name = graft.sources.Tables.StreamTablePrefix + tag + "_" +
+    val name = Tables.StreamTablePrefix + tag + "_" +
       runCounter.incrementAndGet()
     new Sink(_.format("memory").queryName(name), _.table(name))
   }
@@ -1174,7 +1155,7 @@ object EventStreams {
       "Complete mode runs no finalization batch to skip")
     val transformsWithState = stream.queryExecution.logical.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.TransformWithState])
-    graft.sources.Tables.withConfs(stream.sparkSession,
+    Tables.withConfs(stream.sparkSession,
       "spark.sql.shuffle.partitions" -> Some(width.toString),
       "spark.sql.streaming.stateStore.providerClass" ->
         Option.when(transformsWithState)(RocksDbProvider),
@@ -1337,9 +1318,10 @@ object EventStreams {
     // dir name carries the dials: callers on different splits (a spec's
     // explicit 4-file shape vs the registered 3) must not thrash one
     // shared entry (round-13)
-    stagedBuckets(sfDir, "events", s"_n$nFiles" + (if (lateTail) "_late" else ""),
+    stagedBuckets(spark, sfDir, "events",
+        s"_n$nFiles" + (if (lateTail) "_late" else ""),
         buckets) {
-      val evAll = graft.sources.Tables.events(spark, sfDir)
+      val evAll = Tables.events(spark, sfDir)
       val bounds = evAll.agg(
         min(expr("unix_micros(ts)")).as("lo"),
         max(expr("unix_micros(ts)")).as("hi")).head()
@@ -1357,8 +1339,8 @@ object EventStreams {
     */
   def stageIdBatches(spark: SparkSession, sfDir: String, table: String,
       idCol: String, nFiles: Int): String =
-    stagedBuckets(sfDir, table, s"_n$nFiles", 0 until nFiles) {
-      val t = graft.sources.Tables.load(spark, sfDir, table)
+    stagedBuckets(spark, sfDir, table, s"_n$nFiles", 0 until nFiles) {
+      val t = Tables.load(spark, sfDir, table)
       val maxId = t.agg(max(idCol)).head().getLong(0)
       t.withColumn("_b",
         expr(s"CAST(($idCol * $nFiles) div ${maxId + 1}L AS INT)"))
@@ -1372,14 +1354,13 @@ object EventStreams {
     * batch order == bucket order even when the writes land within one
     * filesystem timestamp tick.
     */
-  private def stagedBuckets(sfDir: String, table: String, dials: String,
-      buckets: Seq[Int])(bucketed: => DataFrame): String = {
+  private def stagedBuckets(spark: SparkSession, sfDir: String,
+      table: String, dials: String, buckets: Seq[Int])(
+      bucketed: => DataFrame): String = {
     val names = buckets.indices.map(i => f"b$i%04d.parquet")
-    graft.sources.Tables.freshStagedDir(
-      "/tmp/graft_stage/batched_" + table + "_" +
-        graft.sources.Tables.pathKey(sfDir) + dials,
-      Seq(new java.io.File(sfDir, table + ".parquet")), "buckets",
-      names) { dir =>
+    Tables.freshStagedDir(spark,
+      Tables.Stage.dir(s"batched_${table}_", sfDir, dials),
+      Seq(s"$sfDir/$table.parquet"), "buckets", names) { dir =>
       val staged = bucketed.localCheckpoint(true) // one scan, every bucket
       buckets.zipWithIndex.foreach { case (b, i) =>
         val tmp = new java.io.File(dir, s"_w$i")
@@ -1417,10 +1398,11 @@ object EventStreams {
       sfDir: String): DataFrame = {
     val staging =
       stageIdBatches(spark, sfDir, "documents", "doc_id", ReplayFiles)
-    val outBase = new java.io.File(streamSinkDir(sfDir, "corpgate"), "out")
+    val outBase =
+      new java.io.File(Tables.StreamSink.scratch("corpgate_", sfDir), "out")
     outBase.mkdirs()
     val stream = spark.readStream
-      .schema(graft.sources.Tables.documentsSchema)
+      .schema(Tables.documentsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
     // the document/embedding replays keep no streaming state: their
@@ -1432,7 +1414,7 @@ object EventStreams {
       // 32-core session, Prof round-14), not defaultParallelism —
       // Tables.spread applies to foreachBatch frames too
       graft.operators.Corpus.withGateScore(
-          graft.sources.Tables.spread(batch))
+          Tables.spread(batch))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum((col("score") === 4).cast("long")).as("n_admitted"),
@@ -1600,7 +1582,7 @@ object EventStreams {
         (liveBytes + foldTargetBytes - 1) / foldTargetBytes).toInt
       val folded = live.map(d => spark.read.parquet(d.getPath))
         .reduce(_ unionByName _) // pure band-row copy
-      graft.sources.Tables.writeParquetFiles(folded, gen.getPath, nOut)
+      Tables.writeParquetFiles(folded, gen.getPath, nOut)
       val liveMetas = live.map(segRowMeta)
       writeSegRowMeta(gen,
         if (liveMetas.exists(_ >= Long.MaxValue / 8)) Long.MaxValue / 8
@@ -1687,13 +1669,14 @@ object EventStreams {
     // dir keyed by the dials too: the registered q205 (fold every
     // batch) and q209 (amortized, maxLive=2) variants must not share
     // scratch — a later run deletes the base dir at start
-    val base = streamSinkDir(sfDir, "neardup", s"_n${nFiles}m$maxLiveSegments")
+    val base = Tables.StreamSink.scratch("neardup_", sfDir,
+      s"_n${nFiles}m$maxLiveSegments")
     val outBase = new java.io.File(base, "out")
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
     val stream = spark.readStream
-      .schema(graft.sources.Tables.documentsSchema)
+      .schema(Tables.documentsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
     val (q, _) = drain(stream, batchSink { (batch, batchId) =>
@@ -1713,9 +1696,9 @@ object EventStreams {
       // 1 MiB/batch measured q205 ~1 s SLOWER at sf0.1 (the
       // recompute cost is fixed shuffle machinery, not data size,
       // so the checkpoint wins at every scale)
-      graft.sources.Tables.overlapped(spark) { ov =>
+      Tables.overlapped(spark) { ov =>
       val scored = graft.operators.Corpus.withGateScore(
-          graft.sources.Tables.spread(
+          Tables.spread(
             batch.filter(
               pmod(col("doc_id"), lit(graft.operators.Corpus.EvalMod)) =!= 0)))
         .localCheckpoint(true)
@@ -1761,7 +1744,7 @@ object EventStreams {
       val segF = ov.submit(s"neardup b$batchId: segment commit") {
         val segParts = math.max(1L, math.min(64L,
           nGate * graft.operators.Dedup.Bands / 500000L + 1L)).toInt
-        graft.sources.Tables.writeParquetFiles(batchBands,
+        Tables.writeParquetFiles(batchBands,
           segDir.getPath, segParts)
         writeSegRowMeta(segDir, nGate * graft.operators.Dedup.Bands)
       }
@@ -1800,8 +1783,8 @@ object EventStreams {
       // 8 tasks at sf10 — the repartition only moves the few
       // surviving candidate docs' text
       val sh = graft.operators.Corpus.shinglesOf(
-        graft.sources.Tables.spread(
-          graft.sources.Tables.documents(spark, sfDir)
+        Tables.spread(
+          Tables.documents(spark, sfDir)
             .join(ids, Seq("doc_id"), "left_semi")))
       val dropped = pairs
         .join(sh.select(col("doc_id").as("doc_a"),
@@ -1912,13 +1895,14 @@ object EventStreams {
       s"dial ${nBandsDial}x$bitsPerBand exceeds the 16-bit signature")
     val mask = (1 << bitsPerBand) - 1
     val staging = stageIdBatches(spark, sfDir, "embeddings", "vec_id", nFiles)
-    val base = streamSinkDir(sfDir, "embneardup", s"_n${nFiles}m$maxLiveSegments")
+    val base = Tables.StreamSink.scratch("embneardup_", sfDir,
+      s"_n${nFiles}m$maxLiveSegments")
     val outBase = new java.io.File(base, "out")
     val segBase = new java.io.File(base, "seg")
     outBase.mkdirs()
     segBase.mkdirs()
     val stream = spark.readStream
-      .schema(graft.sources.Tables.embeddingsSchema)
+      .schema(Tables.embeddingsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staging)
     val (q, _) = drain(stream, batchSink { (batch, batchId) =>
@@ -1927,7 +1911,7 @@ object EventStreams {
       // scale — the round-14 foreachBatch parallelism rule), then
       // ONE checkpoint feeds the stats agg, the segment write, and
       // both sides of the probe join
-      val bands = graft.sources.Tables.spread(batch)
+      val bands = Tables.spread(batch)
         .select(col("vec_id"),
           graft.functions.lsh_sig(col("embedding"),
             graft.operators.Similarity.planeSigns)
@@ -1956,11 +1940,11 @@ object EventStreams {
       // text path the LEDGER here is not overlapped with the
       // fold: when tier 0 clears, its lineage reads the probed
       // segment parquet the fold would delete.
-      graft.sources.Tables.overlapped(spark) { ov =>
+      Tables.overlapped(spark) { ov =>
       val segF = ov.submit(s"embneardup b$batchId: segment commit") {
         val segParts = math.max(1L,
           math.min(64L, bandRows / 500000L + 1L)).toInt
-        graft.sources.Tables.writeParquetFiles(bands,
+        Tables.writeParquetFiles(bands,
           segDir.getPath, segParts)
         writeSegRowMeta(segDir, bandRows)
       }
@@ -1987,7 +1971,7 @@ object EventStreams {
       // consumers), the ledger agg is its only consumer and it
       // runs BEFORE the fold deletes any probed segment
       val vecs = graft.operators.Joins.broadcastIfSmall(
-        graft.sources.Tables.embeddings(spark, sfDir)
+        Tables.embeddings(spark, sfDir)
           .select(col("vec_id"), col("embedding")))
       val scoredPairs = pairs
         .join(vecs.select(col("vec_id").as("vec_a"),
@@ -2074,7 +2058,7 @@ object EventStreams {
     val stream = sessionWindows(
       readEventStream(spark, staging, maxFilesPerTrigger = Some(1)))
     val width = stateWidth(spark, 8, sfDir)
-    var sink = parquetSink(streamSinkDir(sfDir, "restart"))
+    var sink = parquetSink(Tables.StreamSink.scratch("restart_", sfDir))
     // the kill is a race by design (stop() vs the replay draining);
     // if run 1 commits every batch before the stop lands, nothing is
     // left to recover — rebuild the dirs and re-race (bounded retries,
@@ -2084,7 +2068,8 @@ object EventStreams {
     var recovered = false
     while (!recovered) {
       attempt += 1
-      if (attempt > 1) sink = parquetSink(streamSinkDir(sfDir, "restart"))
+      if (attempt > 1)
+        sink = parquetSink(Tables.StreamSink.scratch("restart_", sfDir))
       val (d1, d2) = start(stream, sink, width) { run =>
         // ---- run 1: kill after the first committed data batch ----
         val q1 = run()
@@ -2217,13 +2202,12 @@ object EventStreams {
     // more than once in the update log; if the fixture is too sparse
     // for any key to span a boundary (sf0.001), there is nothing to
     // assert — the check is structural, not fixture-tuned. A pure
-    // function of (events content, nFiles), so it is memoized per JVM
-    // on the source mtime (the q187 staging-memo economics: the probe
-    // is assertion input, not query output)
-    val spanningKeys = spanningKeyMemo.computeIfAbsent(
-      (sfDir, new java.io.File(sfDir, "events.parquet").lastModified,
-        ReplayFiles), { _ =>
-      val ev = graft.sources.Tables.events(spark, sfDir)
+    // function of (events files, nFiles), so it goes through the value
+    // memo (the q187 staging-memo economics: the probe is assertion
+    // input, not query output)
+    val spanningKeys = Tables.memo(spark,
+        s"$sfDir/events.parquet", s"q148SpanningKeys#$ReplayFiles") {
+      val ev = Tables.events(spark, sfDir)
       val bounds = ev.agg(min(expr("unix_micros(ts)")).as("lo"),
         max(expr("unix_micros(ts)")).as("hi")).head()
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -2236,7 +2220,7 @@ object EventStreams {
         .agg(countDistinct(col("b")).as("nb"))
         .filter(col("nb") > 1)
         .count()
-    })
+    }
     require(spanningKeys == 0 || logRows > keyRows,
       s"$spanningKeys keys span a file boundary but the update log has " +
         s"$logRows rows for $keyRows keys - cross-batch updates were " +
@@ -2270,7 +2254,7 @@ object EventStreams {
     */
   def segmentRollupStream(spark: SparkSession, sfDir: String): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
-    val dim = graft.sources.Tables.customer(spark, sfDir)
+    val dim = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val (q, sink) = drain(
       readEventStream(spark, staging, maxFilesPerTrigger = Some(1))
@@ -2318,11 +2302,11 @@ object EventStreams {
     */
   def dimSwapEnrichReplay(spark: SparkSession, sfDir: String): DataFrame = {
     val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
-    val base = streamSinkDir(sfDir, "dimswap")
+    val base = Tables.StreamSink.scratch("dimswap_", sfDir)
     val dimDir = new java.io.File(base, "dim").getPath
     val outBase = new java.io.File(base, "out")
     outBase.mkdirs()
-    val dimV1 = graft.sources.Tables.customer(spark, sfDir)
+    val dimV1 = Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment").as("segment"))
     dimV1.write.mode("overwrite").parquet(dimDir)
     val (q, _) = drain(readEventStream(spark, staging, maxFilesPerTrigger = Some(1)),
@@ -2611,7 +2595,7 @@ object EventStreams {
     val staging = stageChronologicalEvents(spark, sfDir, ReplayFiles)
     // md5 of the full path, not String.hashCode: 32-bit hash collisions
     // between two sfDirs would interleave their version chains (ADVICE r8)
-    val base = streamSinkDir(sfDir, "upsert")
+    val base = Tables.StreamSink.scratch("upsert_", sfDir)
     def versionsBelow(limit: Long): Seq[(Long, java.io.File)] = {
       val fs = Option(base.listFiles()).getOrElse(Array.empty)
       fs.filter(f => f.isDirectory && f.getName.startsWith("v") &&

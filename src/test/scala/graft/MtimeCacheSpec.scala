@@ -5,21 +5,54 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.Tables
 
-/** Pins the round-7 mtime-keyed memo contract: both JVM-lifetime caches
-  * that sniff on-disk state (the IVF quantizer fit and the events ts
-  * encoding) must refresh when the file at the same path is rewritten —
-  * the driver regenerates /root/testdata in place between (and once,
-  * during) rounds, and a stale entry silently serves wrong centroids /
-  * the wrong timestamp branch (CLAUDE.md round-6 notes; ADVICE r6).
+/** Pins the source-identity contract of the per-JVM value memo,
+  * [[Tables.memo]]: every value memoized from on-disk state (the IVF
+  * quantizer and PQ codebook fits, the events ts encoding, footer row
+  * counts) must refresh when a source file is rewritten at the same
+  * path — testdata can be regenerated in place, and a stale entry
+  * silently serves wrong centroids / the wrong timestamp branch. That
+  * holds for a `file:` URI, for a directory-form table whose part file
+  * is rewritten in place, and for memo computes that nest.
   * Also pins the on-disk artifact cache, [[Tables.freshStagedDir]]:
-  * build-fingerprint, deleted-output, crashed-build and missing-source
-  * cases, and q187's one-pair-per-sfDir warehouse cleanup.
+  * build-fingerprint, deleted-output, crashed-build, missing-source and
+  * rewritten-part-file cases, and q187's one-pair-per-sfDir warehouse
+  * cleanup.
   */
-class MtimeCacheSpec extends SparkSpec {
+class MtimeCacheSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
 
+  private val made = scala.collection.mutable.ArrayBuffer.empty[File]
+
+  /** A fresh temp dir, deleted after the test together with the
+    * artifact entries keyed on it.
+    */
   private def tmpDir(tag: String): File = {
     val d = File.createTempFile(s"graft-$tag", "")
-    d.delete(); d.mkdirs(); d
+    d.delete(); d.mkdirs(); made += d; d
+  }
+
+  override def afterEach(): Unit =
+    try {
+      val keys = made.map(d => Tables.pathKey(d.getPath)).toSet
+      Seq(Tables.Stage, Tables.Index, Tables.StreamSink, Tables.Sorted)
+        .flatMap(r => Option(new File(r.path).listFiles).toSeq.flatten)
+        .filter(e => keys.exists(e.getName.contains))
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      made.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      made.clear()
+    } finally super.afterEach()
+
+  /** Overwrite `file`'s bytes with `from`'s in place (a truncate and
+    * write: the directory entry, and so the directory's mtime, stays)
+    * and force a strictly newer mtime.
+    */
+  private def rewriteInPlace(file: File, from: File): Unit = {
+    val dirMtime = file.getParentFile.lastModified
+    val prevMtime = file.lastModified
+    java.nio.file.Files.write(file.toPath,
+      java.nio.file.Files.readAllBytes(from.toPath))
+    file.setLastModified(math.max(System.currentTimeMillis, prevMtime + 1001))
+    assert(file.getParentFile.lastModified === dirMtime,
+      "an in-place write must not touch the directory")
   }
 
   /** Overwrite a single-file parquet "table" at `dir/name.parquet` and
@@ -38,27 +71,73 @@ class MtimeCacheSpec extends SparkSpec {
     dest
   }
 
-  test("ivfQuantizer refreshes when embeddings.parquet is rewritten in place") {
+  /** A 32-vector corpus of [[Similarity.Dim]]-wide embeddings whose
+    * coordinates all lie at or above `shift`.
+    */
+  private def corpus(shift: Float) = {
     val s = spark
     import s.implicits._
-    val dir = tmpDir("ivf")
-    def corpus(shift: Float) = (0 until 32).map(i =>
-      (i.toLong, Array.tabulate(8)(j => shift + i * 0.1f + j), i % 3))
+    (0 until 32).map(i => (i.toLong,
+        Array.tabulate(Similarity.Dim)(j => shift + i * 0.1f + j), i % 3))
       .toDF("vec_id", "embedding", "label")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
         $"label".cast("int").as("label"))
+  }
 
-    val f1 = writeTable(dir, "embeddings", corpus(0.0f), 0L)
-    val seeds1 = Similarity.ivfQuantizer(spark, dir.getPath, 4)
-    // same mtime -> memo hit (identity: the exact same array object)
-    assert(Similarity.ivfQuantizer(spark, dir.getPath, 4) eq seeds1,
-      "same path+mtime must be a cache hit")
+  test("ivfQuantizer refreshes when embeddings.parquet is rewritten in place") {
+    def refreshes(sfDir: String)(rewrite: () => Unit): Unit = {
+      val seeds1 = Similarity.ivfQuantizer(spark, sfDir, 4)
+      val cb1 = Similarity.trainedCodebooks(spark, sfDir, 4, 8)
+      // same files -> memo hit (identity: the exact same array object)
+      assert(Similarity.ivfQuantizer(spark, sfDir, 4) eq seeds1,
+        s"$sfDir: unchanged source must be a cache hit")
+      assert(Similarity.trainedCodebooks(spark, sfDir, 4, 8) eq cb1,
+        s"$sfDir: unchanged source must be a codebook cache hit")
+      rewrite()
+      val seeds2 = Similarity.ivfQuantizer(spark, sfDir, 4)
+      assert(!(seeds2 eq seeds1), s"$sfDir: rewrite must be a cache miss")
+      assert(seeds2.head._2.head >= 100.0f, s"$sfDir: fresh centroids must " +
+        s"come from the rewritten corpus, got ${seeds2.head._2.head}")
+      val cb2 = Similarity.trainedCodebooks(spark, sfDir, 4, 8)
+      assert(!(cb2 eq cb1) && !java.util.Arrays.deepEquals(
+          cb2.asInstanceOf[Array[AnyRef]], cb1.asInstanceOf[Array[AnyRef]]),
+        s"$sfDir: rewrite must refit the trained codebooks")
+    }
 
-    writeTable(dir, "embeddings", corpus(100.0f), f1.lastModified)
-    val seeds2 = Similarity.ivfQuantizer(spark, dir.getPath, 4)
-    assert(!(seeds2 eq seeds1), "rewrite must be a cache miss")
-    assert(seeds2.head._2.head >= 100.0f,
-      s"fresh centroids must come from the rewritten corpus, got ${seeds2.head._2.head}")
+    // a single-file table, named by a plain path and by a file: URI
+    for (uri <- Seq(false, true)) {
+      val dir = tmpDir("ivf")
+      val f1 = writeTable(dir, "embeddings", corpus(0.0f), 0L)
+      refreshes((if (uri) "file:" else "") + dir.getPath) { () =>
+        writeTable(dir, "embeddings", corpus(100.0f), f1.lastModified)
+      }
+    }
+
+    // a directory-form table whose part file is rewritten in place: the
+    // directory's own mtime does not move
+    val dir = tmpDir("ivf-dir")
+    val table = new File(dir, "embeddings.parquet")
+    corpus(0.0f).coalesce(1).write.parquet(table.getPath)
+    // no checksum sidecars: the rewrite would leave them stale
+    table.listFiles.filter(_.getName.endsWith(".crc")).foreach(_.delete())
+    val part = table.listFiles.filter(_.getName.endsWith(".parquet")).head
+    val regen =
+      writeTable(tmpDir("ivf-regen"), "embeddings", corpus(100.0f), 0L)
+    refreshes(dir.getPath)(() => rewriteInPlace(part, regen))
+  }
+
+  test("a cold trainedCodebooks call fits the quantizer it nests") {
+    // the codebook fit starts from the quantizer fit, and both go
+    // through the one memo: the nested miss must not be refused as a
+    // recursive update
+    val dir = tmpDir("cb-cold")
+    writeTable(dir, "embeddings", corpus(0.0f), 0L)
+    val cb = Similarity.trainedCodebooks(spark, dir.getPath, 4, 8)
+    assert(cb.length === 8 && cb.forall(_.length === 4))
+    assert(Similarity.trainedCodebooks(spark, dir.getPath, 4, 8) eq cb)
+    val seeds = Similarity.ivfQuantizer(spark, dir.getPath, 4)
+    assert(Similarity.ivfQuantizer(spark, dir.getPath, 4) eq seeds,
+      "the nested quantizer fit must be memoized too")
   }
 
   test("q134 staging reuses the split until events.parquet is rewritten") {
@@ -104,19 +183,24 @@ class MtimeCacheSpec extends SparkSpec {
     assert(ids.forall(_ >= 100L), "rebuilt staging must hold the new rows")
   }
 
-  /** A scratch source file plus a [[Tables.freshStagedDir]] call over it
-    * whose build writes `part/_SUCCESS` and counts its runs.
+  /** A scratch source plus a [[Tables.freshStagedDir]] call over it
+    * whose build writes `part/_SUCCESS` and counts its runs. The source
+    * is the file `src.bin`, or with `dirForm` the directory `src`
+    * holding the one file `part-0.bin`.
     */
-  private class Staged(tag: String) {
+  private class Staged(tag: String, dirForm: Boolean = false) {
     val dir: File = tmpDir(tag)
-    val src: File = new File(dir, "src.bin")
-    java.nio.file.Files.write(src.toPath, "v1".getBytes("UTF-8"))
+    val src: File = new File(dir, if (dirForm) "src" else "src.bin")
+    val srcFile: File = if (dirForm) new File(src, "part-0.bin") else src
+    srcFile.getParentFile.mkdirs()
+    java.nio.file.Files.write(srcFile.toPath, "v1".getBytes("UTF-8"))
     val out: File = new File(dir, "out")
     val marker: File = new File(out, "_graft_stage_key")
     val success: File = new File(out, "part/_SUCCESS")
     var builds = 0
     def stage(): String =
-      Tables.freshStagedDir(out.getPath, Seq(src), "dial", Seq("part/_SUCCESS")) { p =>
+      Tables.freshStagedDir(spark, out.getPath, Seq(src.getPath), "dial",
+          Seq("part/_SUCCESS")) { p =>
         builds += 1
         new File(p, "part").mkdirs()
         java.nio.file.Files.write(new File(p, "part/_SUCCESS").toPath,
@@ -149,8 +233,8 @@ class MtimeCacheSpec extends SparkSpec {
   test("freshStagedDir: a build that throws leaves no marker; the next call rebuilds") {
     val st = new Staged("crash")
     intercept[IllegalStateException] {
-      Tables.freshStagedDir(st.out.getPath, Seq(st.src), "dial",
-          Seq("part/_SUCCESS")) { p =>
+      Tables.freshStagedDir(spark, st.out.getPath, Seq(st.src.getPath),
+          "dial", Seq("part/_SUCCESS")) { p =>
         new File(p, "part").mkdirs()
         java.nio.file.Files.write(new File(p, "part/_SUCCESS").toPath,
           Array.emptyByteArray)
@@ -173,6 +257,18 @@ class MtimeCacheSpec extends SparkSpec {
     assert(st.success.exists && st.marker.exists,
       "a missing source must fail before anything is deleted")
     assert(st.builds === 1)
+  }
+
+  test("freshStagedDir rebuilds when a directory source's part file is rewritten in place") {
+    val st = new Staged("dirsrc", dirForm = true)
+    st.stage(); st.stage()
+    assert(st.builds === 1, "an unchanged directory source must reuse")
+    val regen = new File(tmpDir("dirsrc-regen"), "part-0.bin")
+    java.nio.file.Files.write(regen.toPath, "v2".getBytes("UTF-8"))
+    rewriteInPlace(st.srcFile, regen)
+    st.stage()
+    assert(st.builds === 2,
+      "a part file rewritten under an unchanged directory must rebuild")
   }
 
   test("codeFingerprint changes when one class file's bytes change") {
@@ -263,12 +359,8 @@ class MtimeCacheSpec extends SparkSpec {
     // regenerate elsewhere, then truncate-and-write the same file: its
     // directory entry is untouched, so only the file's own length and
     // mtime say it changed
-    val regen = writeTable(tmpDir("events-rows-regen"), "events", events(35), 0L)
-    val dirMtime = dir.lastModified
-    val prevMtime = f.lastModified
-    java.nio.file.Files.write(f.toPath, java.nio.file.Files.readAllBytes(regen.toPath))
-    f.setLastModified(math.max(System.currentTimeMillis, prevMtime + 1001))
-    assert(dir.lastModified === dirMtime, "an in-place write must not touch the directory")
+    rewriteInPlace(f,
+      writeTable(tmpDir("events-rows-regen"), "events", events(35), 0L))
     assert(Tables.eventsRows(spark, dir.getPath) === 35,
       "the regenerated file's footer must be read again")
   }

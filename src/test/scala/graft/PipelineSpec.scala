@@ -203,18 +203,16 @@ class PipelineSpec extends SparkSpec {
     assert(kpiFact.getLong(1) === kpiDirect.getLong(1))
   }
 
-  test("catalog ops: create-if-absent, exists guard, drop, script runner") {
+  test("catalog ops: exists guard, drop, script runner") {
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     Catalog.dropTable(spark, "graft_cat_test")
     // a dropped managed table can leave its location behind if a prior
-    // run died mid-create; clear it so create-if-absent is exercisable
+    // run died mid-create; clear it so the table can be created again
     Catalog.deletePath(spark,
       spark.conf.get("spark.sql.warehouse.dir") + "/graft_cat_test")
     assert(!Catalog.tableExists(spark, "graft_cat_test"))
-    Catalog.createTableIfAbsent(spark, "graft_cat_test", df)
+    df.write.format("parquet").saveAsTable("graft_cat_test")
     assert(Catalog.tableExists(spark, "graft_cat_test"))
-    Catalog.createTableIfAbsent(spark, "graft_cat_test", df.limit(1)) // no-op
-    assert(spark.table("graft_cat_test").count() === 2)
     val results = Catalog.runScript(spark,
       """-- comment
         |SELECT COUNT(*) AS n FROM graft_cat_test;
@@ -265,16 +263,9 @@ class PipelineSpec extends SparkSpec {
     assert(ids.distinct.length === 10000)
   }
 
-  test("Salting: salted join and salted sum equal their unsalted twins") {
+  test("Salting: salted sum equals its unsalted twin") {
     val large = spark.range(0, 5000)
       .select((col("id") % 10).as("k"), col("id").as("v"))
-    val small = Seq((0L, "x"), (1L, "y"), (2L, "z")).toDF("k", "name")
-    val plain = large.join(small, "k")
-    val salted = Salting.saltedEquiJoin(large, small, "k", 4)
-    assert(salted.count() === plain.count())
-    assert(salted.agg(sum("v")).head().getLong(0) ===
-      plain.agg(sum("v")).head().getLong(0))
-
     val plainSum = large.groupBy("k").agg(sum("v").as("sum_v"))
       .orderBy("k").collect()
     val saltedSum = Salting.saltedSum(large, "k", "v", 4)
